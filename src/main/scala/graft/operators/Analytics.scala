@@ -45,6 +45,11 @@ object Analytics {
     * otherwise re-drawn per action). */
   def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
                       rankCol: String = "rn"): DataFrame = {
+    // the codegen path numbers rows through this temp column; an input
+    // column of the same name (Spark resolves names case-insensitively)
+    // would be overwritten and then dropped
+    require(!df.columns.exists(_.equalsIgnoreCase("__grank_mid")),
+      "globalRowNumber: input must not carry a column named __grank_mid")
     val spark = df.sparkSession
     val nPart = math.max(1, spark.sparkContext.defaultParallelism)
     val sorted = df.repartitionByRange(nPart, sortCols: _*)

@@ -548,21 +548,13 @@ object Similarity {
     requireNotFused(spark, indexDir, "ivfRetrainIndex", "ivfPqRetrainIndex")
     val vecs = spark.read.parquet(s"$indexDir/vectors").drop("ivf_list")
     val centroids = ivfTrainDistributed(vecs, vecCol, k, iters, seed)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = live.getFileSystem(conf)
     val next = new org.apache.hadoop.fs.Path(indexDir + "_next")
-    val bak = new org.apache.hadoop.fs.Path(indexDir + "_bak")
+    val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(next, true)
     // builds next/ while READING the live index — distinct paths, no
     // read-own-input hazard, no checkpoint of the corpus
     ivfWriteIndex(vecs, vecCol, centroids, next.toString)
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"ivfRetrainIndex: $what failed")
-    fs.delete(bak, true)
-    must(fs.rename(live, bak), s"rename $live -> $bak")
-    must(fs.rename(next, live), s"rename $next -> $live")
-    fs.delete(bak, true)
+    graft.sources.IO.swapIn(fs, next, indexDir, "ivfRetrainIndex")
   }
 
   /** Crash-recovery sweep for [[ivfRetrainIndex]]'s two-rename swap
@@ -1620,20 +1612,12 @@ object Similarity {
     ivfRecoverSwap(spark, indexDir)
     val vecs = spark.read.parquet(s"$indexDir/vectors").drop("ivf_list")
     val centroids = ivfTrainDistributed(vecs, vecCol, k, iters, seed)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = live.getFileSystem(conf)
     val next = new org.apache.hadoop.fs.Path(indexDir + "_next")
-    val bak = new org.apache.hadoop.fs.Path(indexDir + "_bak")
+    val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(next, true)
     ivfPqWriteIndex(vecs, idCol, vecCol, centroids, dim, next.toString,
       m, kSub, iters = iters, seed = seed)
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"ivfPqRetrainIndex: $what failed")
-    fs.delete(bak, true)
-    must(fs.rename(live, bak), s"rename $live -> $bak")
-    must(fs.rename(next, live), s"rename $next -> $live")
-    fs.delete(bak, true)
+    graft.sources.IO.swapIn(fs, next, indexDir, "ivfPqRetrainIndex")
   }
 
   /** Embedding near-dup buckets: sign-LSH signature histogram — bucket id,

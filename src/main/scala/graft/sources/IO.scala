@@ -1,9 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType,
+  StructField, StructType, TimestampType}
 
 /** Source/sink pack (SURVEY.md §2.A). The reference's connector surface —
   * Kafka topics between layers, MySQL-CDC ingest, HBase dim store, Doris
@@ -110,7 +112,7 @@ object IO {
     * Streaming's file sink commits atomically per micro-batch via the
     * checkpointed file-sink log. */
   def parquetSink(df: DataFrame, outDir: String, checkpointDir: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     df.writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
@@ -123,11 +125,23 @@ object IO {
     * consumer to read committed only. `format` is the same test seam. */
   def kafkaSink(df: DataFrame, bootstrapServers: String, topic: String,
                 checkpointDir: String, format: String = "kafka")
-      : DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     df.writeStream.format(format)
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("topic", topic)
       .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+
+  /** The skeleton every batch-body sink below shares: `body` runs once
+    * per micro-batch over the checkpointed stream, in the backfill
+    * (`AvailableNow`) trigger shape; callers may re-trigger the returned
+    * writer. */
+  private def foreachBatchSink(df: DataFrame, checkpointDir: String)
+                              (body: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
       .trigger(Trigger.AvailableNow())
 
   /** Streaming IVF index maintenance: each micro-batch of embeddings is
@@ -141,14 +155,10 @@ object IO {
     * retrain is picked up at the next micro-batch. */
   def ivfIndexSink(vecs: DataFrame, indexDir: String, checkpointDir: String,
                    idCol: String, vecCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity.ivfAppendIndex(batch, idCol, vecCol, indexDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    foreachBatchSink(vecs, checkpointDir) { (batch, _) =>
+      graft.operators.Similarity.ivfAppendIndex(batch, idCol, vecCol, indexDir)
+    }
 
   /** Streaming FUSED (IVF-PQ) index ingest — the vector twin of
     * [[nearDupDedupSink]] (VERDICT r12 #8): each micro-batch of
@@ -180,21 +190,17 @@ object IO {
   def ivfPqIndexSink(vecs: DataFrame, indexDir: String, checkpointDir: String,
                      idCol: String, vecCol: String,
                      splitSkewFactor: Double = 4.0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$indexDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          graft.operators.Similarity.ivfPqAppendIndex(
-            batch, idCol, vecCol, indexDir)
-          if (graft.operators.Similarity.ivfNeedsRetrain(
-              spark, indexDir, splitSkewFactor))
-            graft.operators.Similarity.ivfSplitOversizedLists(
-              spark, indexDir, idCol, vecCol, splitSkewFactor)
-          ()
+      : DataStreamWriter[Row] =
+    foreachBatchSink(vecs, checkpointDir)(
+      idempotentForeachBatch(s"$indexDir/_markers") { (batch, _) =>
+        val spark = batch.sparkSession
+        graft.operators.Similarity.ivfPqAppendIndex(
+          batch, idCol, vecCol, indexDir)
+        if (graft.operators.Similarity.ivfNeedsRetrain(
+            spark, indexDir, splitSkewFactor))
+          graft.operators.Similarity.ivfSplitOversizedLists(
+            spark, indexDir, idCol, vecCol, splitSkewFactor)
       })
-      .trigger(Trigger.AvailableNow())
 
   /** Streaming corpus ingest with incremental NEAR-dup dedup: each
     * micro-batch dedups against the persisted MinHash band index
@@ -210,19 +216,15 @@ object IO {
   def nearDupDedupSink(docs: DataFrame, indexDir: String, outDir: String,
                        checkpointDir: String, idCol: String, textCol: String,
                        threshold: Double)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val survivors = graft.operators.Dedup
-          .nearDupAgainstIndex(batch, idCol, textCol, indexDir, threshold)
-          .localCheckpoint(true) // one computation feeds both appends
-        survivors.write.mode("append").parquet(outDir)
-        graft.operators.Dedup.appendNearDupIndex(
-          survivors, idCol, textCol, indexDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    foreachBatchSink(docs, checkpointDir) { (batch, _) =>
+      val survivors = graft.operators.Dedup
+        .nearDupAgainstIndex(batch, idCol, textCol, indexDir, threshold)
+        .localCheckpoint(true) // one computation feeds both appends
+      survivors.write.mode("append").parquet(outDir)
+      graft.operators.Dedup.appendNearDupIndex(
+        survivors, idCol, textCol, indexDir)
+    }
 
   /** Streaming corpus ingest with benchmark DECONTAMINATION at the
     * gate — the streaming twin of the batch `q_decontaminate` pass:
@@ -246,24 +248,20 @@ object IO {
                               outDir: String, quarantineDir: String,
                               checkpointDir: String, idCol: String,
                               textCol: String, n: Int = 5)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$outDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          val probe = spark.read.parquet(probeDir)
-          val b = batch.localCheckpoint(true) // one scan feeds both routes
-          val flagged = graft.operators.Dedup
-            .contaminatedIds(b, probe, idCol, textCol, n)
-            .localCheckpoint(true)
-          b.join(flagged, Seq(idCol), "left_semi")
-            .write.mode("append").parquet(quarantineDir)
-          b.join(flagged, Seq(idCol), "left_anti")
-            .write.mode("append").parquet(outDir)
-          ()
+      : DataStreamWriter[Row] =
+    foreachBatchSink(docs, checkpointDir)(
+      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
+        val spark = batch.sparkSession
+        val probe = spark.read.parquet(probeDir)
+        val b = batch.localCheckpoint(true) // one scan feeds both routes
+        val flagged = graft.operators.Dedup
+          .contaminatedIds(b, probe, idCol, textCol, n)
+          .localCheckpoint(true)
+        b.join(flagged, Seq(idCol), "left_semi")
+          .write.mode("append").parquet(quarantineDir)
+        b.join(flagged, Seq(idCol), "left_anti")
+          .write.mode("append").parquet(outDir)
       })
-      .trigger(Trigger.AvailableNow())
 
   /** Streaming corpus ingest with SURGICAL decontamination at the gate
     * — the excision twin of [[decontaminateIngestSink]] (live
@@ -285,30 +283,26 @@ object IO {
                             outDir: String, auditDir: String,
                             checkpointDir: String, idCol: String,
                             textCol: String, n: Int = 5)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$outDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          val probe = spark.read.parquet(probeDir)
-          val b = batch.localCheckpoint(true) // feeds excision + re-join
-          val cleaned = graft.operators.Dedup
-            .removeContaminatedSpans(b, probe, idCol, textCol, n)
-            .withColumnRenamed("id", idCol)
-            .localCheckpoint(true) // one excision feeds audit + admit
-          cleaned.filter(col("n_removed") > 0)
-            .select(col(idCol), col("n_tokens"), col("n_removed"),
-              (col("clean_text") === "").as("emptied"))
-            .write.mode("append").parquet(auditDir)
-          b.drop(textCol)
-            .join(cleaned.filter(col("clean_text") =!= "")
-              .select(col(idCol), col("clean_text").as(textCol)),
-              Seq(idCol))
-            .write.mode("append").parquet(outDir)
-          ()
+      : DataStreamWriter[Row] =
+    foreachBatchSink(docs, checkpointDir)(
+      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
+        val spark = batch.sparkSession
+        val probe = spark.read.parquet(probeDir)
+        val b = batch.localCheckpoint(true) // feeds excision + re-join
+        val cleaned = graft.operators.Dedup
+          .removeContaminatedSpans(b, probe, idCol, textCol, n)
+          .withColumnRenamed("id", idCol)
+          .localCheckpoint(true) // one excision feeds audit + admit
+        cleaned.filter(col("n_removed") > 0)
+          .select(col(idCol), col("n_tokens"), col("n_removed"),
+            (col("clean_text") === "").as("emptied"))
+          .write.mode("append").parquet(auditDir)
+        b.drop(textCol)
+          .join(cleaned.filter(col("clean_text") =!= "")
+            .select(col(idCol), col("clean_text").as(textCol)),
+            Seq(idCol))
+          .write.mode("append").parquet(outDir)
       })
-      .trigger(Trigger.AvailableNow())
 
   /** Streaming QUALITY gate — the live form of the DSIR selection pair
     * (`q_dsir_hashed` weights, `q_dsir_select` cut): each micro-batch
@@ -331,41 +325,37 @@ object IO {
     * leave audit rows without corpus rows — but a crash BETWEEN an
     * append's job commit and the marker write replays the whole batch,
     * duplicating already-appended rows (at-least-once for torn
-    * batches, the mixDriftAuditSink caveat). Decisions replay
+    * batches). Decisions replay
     * bit-for-bit, so readers needing exactly-once dedup on (id) at
     * read time — duplicates are identical rows. */
   def dsirGateSink(docs: DataFrame, lmDir: String, outDir: String,
                    auditDir: String, checkpointDir: String,
                    idCol: String, textCol: String,
                    thresholdPicoPerToken: Long, buckets: Int = 4096)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$outDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          val lm = spark.read.parquet(lmDir).select("b", "ratio_pico")
-          val b = batch.localCheckpoint(true) // feeds scoring + admit join
-          val scored = graft.operators.Sampling
-            .dsirScore(b, idCol, textCol, lm, buckets)
-            .withColumn("admitted",
-              col("weight_pico") >= lit(thresholdPicoPerToken) * col("n_tokens"))
-            .localCheckpoint(true) // one scoring pass feeds audit + admit
-          // token-less docs never reach the explode — audit them as
-          // rejected (0 tokens, 0 weight) so every input has a decision
-          val unscored = b.select(col(idCol))
-            .join(scored.select(idCol), Seq(idCol), "left_anti")
-            .select(col(idCol), lit(0L).as("n_tokens"),
-              lit(0L).as("weight_pico"), lit(false).as("admitted"))
-          scored.select(col(idCol), col("n_tokens"), col("weight_pico"),
-              col("admitted"))
-            .union(unscored)
-            .write.mode("append").parquet(auditDir)
-          b.join(scored.filter(col("admitted")).select(idCol), Seq(idCol))
-            .write.mode("append").parquet(outDir)
-          ()
+      : DataStreamWriter[Row] =
+    foreachBatchSink(docs, checkpointDir)(
+      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
+        val spark = batch.sparkSession
+        val lm = spark.read.parquet(lmDir).select("b", "ratio_pico")
+        val b = batch.localCheckpoint(true) // feeds scoring + admit join
+        val scored = graft.operators.Sampling
+          .dsirScore(b, idCol, textCol, lm, buckets)
+          .withColumn("admitted",
+            col("weight_pico") >= lit(thresholdPicoPerToken) * col("n_tokens"))
+          .localCheckpoint(true) // one scoring pass feeds audit + admit
+        // token-less docs never reach the explode — audit them as
+        // rejected (0 tokens, 0 weight) so every input has a decision
+        val unscored = b.select(col(idCol))
+          .join(scored.select(idCol), Seq(idCol), "left_anti")
+          .select(col(idCol), lit(0L).as("n_tokens"),
+            lit(0L).as("weight_pico"), lit(false).as("admitted"))
+        scored.select(col(idCol), col("n_tokens"), col("weight_pico"),
+            col("admitted"))
+          .union(unscored)
+          .write.mode("append").parquet(auditDir)
+        b.join(scored.filter(col("admitted")).select(idCol), Seq(idCol))
+          .write.mode("append").parquet(outDir)
       })
-      .trigger(Trigger.AvailableNow())
 
   /** Streaming DIVERSITY gate — the EIGHTH ingest gate (exact-dup,
     * near-dup, winnow, semantic, decontaminate ×2, quality — and now
@@ -406,59 +396,55 @@ object IO {
   def diversityGateSink(vecs: DataFrame, indexDir: String, outDir: String,
                         checkpointDir: String, idCol: String,
                         vecCol: String, cap: Int, buckets: Int = 64)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$outDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          val b = batch.localCheckpoint(true) // feeds ranking + admit join
-          val ranked = graft.operators.Sampling
-            .diversityCapRanked(b, idCol, vecCol, cap)
-            .select(col("bucket"), col("rn"), col(idCol))
-          // occupancy from the CENSUS sidecar (≤ 2^planes rows), never a
-          // per-batch scan of the id-attributed index (ADVICE r16: that
-          // fold's input grew with the admitted corpus). A pre-census
-          // index derives once and materializes below; a missing index
-          // is zero occupancy (cold start). Pinned: the filtered census
-          // feeds the admission AND the advance below, and the advance's
-          // swap must not re-read the dir it is replacing.
-          val occ = graft.operators.Sampling
-            .readBucketOccupancy(spark, indexDir)
-            .localCheckpoint(true)
-          val admitted = ranked
-            .join(broadcast(occ), Seq("bucket"), "left")
-            .na.fill(0L, Seq("n_occ"))
-            .filter(col("rn") + col("n_occ") <= cap.toLong)
-            .localCheckpoint(true) // feeds the corpus append + the delta
-          // zero-admission batches (empty micro-batch, or every bucket
-          // at cap) must not write: an EMPTY partitioned append creates
-          // a schema-less dir (only _SUCCESS) that poisons the next
-          // batch's occupancy read with UNABLE_TO_INFER_SCHEMA
-          if (!admitted.isEmpty) {
-            b.join(admitted.select(idCol), Seq(idCol), "left_semi")
-              .write.mode("append").parquet(outDir)
-            val bkts = readBucketCount(spark, indexDir).getOrElse(buckets)
-            val delta = admitted
-              .select(col("bucket"), col(idCol).cast("long").as("id"))
-              .withColumn("__bucket",
-                pmod(xxhash64(col("bucket")), lit(bkts.toLong)))
-            alignToPartitions(delta, "__bucket")
-              .write.mode("append").partitionBy("__bucket").parquet(indexDir)
-            if (readBucketCount(spark, indexDir).isEmpty)
-              writeBucketCount(spark, indexDir, bkts)
-            // census advance LAST (corpus → index → census): a crash
-            // before this line replays the batch against the old census
-            // — identical decisions, duplicate-but-identical corpus/index
-            // rows (countDistinct census semantics absorb them); a crash
-            // after it self-bills the replay (admits nothing extra) —
-            // the conservative direction, as before
-            graft.operators.Sampling.advanceBucketCensus(
-              occ, admitted.select("bucket"), indexDir)
-          }
-          ()
+      : DataStreamWriter[Row] =
+    foreachBatchSink(vecs, checkpointDir)(
+      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
+        val spark = batch.sparkSession
+        val b = batch.localCheckpoint(true) // feeds ranking + admit join
+        val ranked = graft.operators.Sampling
+          .diversityCapRanked(b, idCol, vecCol, cap)
+          .select(col("bucket"), col("rn"), col(idCol))
+        // occupancy from the CENSUS sidecar (≤ 2^planes rows), never a
+        // per-batch scan of the id-attributed index (ADVICE r16: that
+        // fold's input grew with the admitted corpus). A pre-census
+        // index derives once and materializes below; a missing index
+        // is zero occupancy (cold start). Pinned: the filtered census
+        // feeds the admission AND the advance below, and the advance's
+        // swap must not re-read the dir it is replacing.
+        val occ = graft.operators.Sampling
+          .readBucketOccupancy(spark, indexDir)
+          .localCheckpoint(true)
+        val admitted = ranked
+          .join(broadcast(occ), Seq("bucket"), "left")
+          .na.fill(0L, Seq("n_occ"))
+          .filter(col("rn") + col("n_occ") <= cap.toLong)
+          .localCheckpoint(true) // feeds the corpus append + the delta
+        // zero-admission batches (empty micro-batch, or every bucket
+        // at cap) must not write: an EMPTY partitioned append creates
+        // a schema-less dir (only _SUCCESS) that poisons the next
+        // batch's occupancy read with UNABLE_TO_INFER_SCHEMA
+        if (!admitted.isEmpty) {
+          b.join(admitted.select(idCol), Seq(idCol), "left_semi")
+            .write.mode("append").parquet(outDir)
+          val bkts = readBucketCount(spark, indexDir).getOrElse(buckets)
+          val delta = admitted
+            .select(col("bucket"), col(idCol).cast("long").as("id"))
+            .withColumn("__bucket",
+              pmod(xxhash64(col("bucket")), lit(bkts.toLong)))
+          alignToPartitions(delta, "__bucket")
+            .write.mode("append").partitionBy("__bucket").parquet(indexDir)
+          if (readBucketCount(spark, indexDir).isEmpty)
+            writeBucketCount(spark, indexDir, bkts)
+          // census advance LAST (corpus → index → census): a crash
+          // before this line replays the batch against the old census
+          // — identical decisions, duplicate-but-identical corpus/index
+          // rows (countDistinct census semantics absorb them); a crash
+          // after it self-bills the replay (admits nothing extra) —
+          // the conservative direction, as before
+          graft.operators.Sampling.advanceBucketCensus(
+            occ, admitted.select("bucket"), indexDir)
+        }
       })
-      .trigger(Trigger.AvailableNow())
 
   /** Streaming embedding ingest with SEMANTIC dedup at the gate — the
     * vector twin of [[nearDupDedupSink]]: each micro-batch drops
@@ -488,25 +474,21 @@ object IO {
   def semanticDedupSink(vecs: DataFrame, indexDir: String, outDir: String,
                         checkpointDir: String, idCol: String, vecCol: String,
                         threshold: Double, nprobe: Int = 4)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$outDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val intra = graft.operators.Similarity
-            .semanticCollapseBatch(batch, idCol, vecCol, indexDir,
-              threshold, nprobe)
-            .localCheckpoint(true) // feeds the index-gate join twice
-          val novel = graft.operators.Similarity
-            .semanticDedupAgainstIndex(intra, idCol, vecCol, indexDir,
-              threshold, nprobe)
-            .localCheckpoint(true) // one computation feeds both appends
-          novel.write.mode("append").parquet(outDir)
-          graft.operators.Similarity.ivfAppendIndex(
-            novel.select(col(idCol), col(vecCol)), idCol, vecCol, indexDir)
-          ()
+      : DataStreamWriter[Row] =
+    foreachBatchSink(vecs, checkpointDir)(
+      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
+        val intra = graft.operators.Similarity
+          .semanticCollapseBatch(batch, idCol, vecCol, indexDir,
+            threshold, nprobe)
+          .localCheckpoint(true) // feeds the index-gate join twice
+        val novel = graft.operators.Similarity
+          .semanticDedupAgainstIndex(intra, idCol, vecCol, indexDir,
+            threshold, nprobe)
+          .localCheckpoint(true) // one computation feeds both appends
+        novel.write.mode("append").parquet(outDir)
+        graft.operators.Similarity.ivfAppendIndex(
+          novel.select(col(idCol), col(vecCol)), idCol, vecCol, indexDir)
       })
-      .trigger(Trigger.AvailableNow())
 
   /** Streaming corpus ingest with a WINNOWING substring gate — the
     * local-guarantee sibling of [[nearDupDedupSink]] (MinHash gates on
@@ -550,62 +532,58 @@ object IO {
                        flaggedDir: String, checkpointDir: String,
                        idCol: String, textCol: String,
                        minShared: Long = 2L)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$outDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val b = batch.localCheckpoint(true) // one scan feeds both routes
-          // ONE winnow pass serves the intra gate, the index gate and
-          // the final index append
-          val fps = graft.operators.Dedup
-            .winnowFingerprints(b, idCol, textCol)
-            .localCheckpoint(true)
-          def bestOf(m: DataFrame): DataFrame = m
-            .groupBy(idCol)
-            .agg(max(struct(col("n_shared"), col("score"), col("match_id")))
-              .as("m"))
-            .select(col(idCol), col("m.match_id").as("match_id"),
-              col("m.n_shared").as("n_shared"), col("m.score").as("score"))
-          // gate 1: intra-batch collapse, min-id canonical per family
-          val intraPairs = graft.operators.Dedup
-            .winnowPairsFromFps(fps, minShared = minShared)
-            .localCheckpoint(true) // feeds keepCanonical + the audit rows
-          val intra = graft.operators.Dedup
-            .keepCanonical(b, intraPairs, idCol)
-            .localCheckpoint(true) // feeds the index gate + both appends
-          val intraFlag = bestOf(intraPairs
-              .select(col("id_a").as(idCol), col("id_b").as("match_id"),
-                col("n_shared"), col("score"))
-              .unionAll(intraPairs
-                .select(col("id_b").as(idCol), col("id_a").as("match_id"),
-                  col("n_shared"), col("score"))))
-            .join(intra.select(idCol), Seq(idCol), "left_anti")
-          // gate 2: the index gate, on intra-survivors' fingerprints
-          // only; the batch's own ids are excluded from matches so a
-          // replayed torn batch (index append landed, marker didn't)
-          // reproduces the original decisions instead of self-flagging
-          val matches = graft.operators.Dedup
-            .matchFpsAgainstWinnowIndex(
-              fps.join(intra.select(col(idCol).as("id")), Seq("id"),
-                "left_semi"),
-              idCol, indexDir, minShared = minShared)
-            .join(b.select(col(idCol).as("match_id")), Seq("match_id"),
-              "left_anti")
-            .localCheckpoint(true) // feeds the audit rows + the anti-join
-          b.join(intraFlag.unionAll(bestOf(matches)), Seq(idCol), "inner")
-            .write.mode("append").parquet(flaggedDir)
-          val novel = intra
-            .join(matches.select(idCol), Seq(idCol), "left_anti")
-            .localCheckpoint(true) // feeds the corpus append AND the index
-          novel.write.mode("append").parquet(outDir)
-          graft.operators.Dedup.appendWinnowFps(
-            fps.join(novel.select(col(idCol).as("id")), Seq("id"),
+      : DataStreamWriter[Row] =
+    foreachBatchSink(docs, checkpointDir)(
+      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
+        val b = batch.localCheckpoint(true) // one scan feeds both routes
+        // ONE winnow pass serves the intra gate, the index gate and
+        // the final index append
+        val fps = graft.operators.Dedup
+          .winnowFingerprints(b, idCol, textCol)
+          .localCheckpoint(true)
+        def bestOf(m: DataFrame): DataFrame = m
+          .groupBy(idCol)
+          .agg(max(struct(col("n_shared"), col("score"), col("match_id")))
+            .as("m"))
+          .select(col(idCol), col("m.match_id").as("match_id"),
+            col("m.n_shared").as("n_shared"), col("m.score").as("score"))
+        // gate 1: intra-batch collapse, min-id canonical per family
+        val intraPairs = graft.operators.Dedup
+          .winnowPairsFromFps(fps, minShared = minShared)
+          .localCheckpoint(true) // feeds keepCanonical + the audit rows
+        val intra = graft.operators.Dedup
+          .keepCanonical(b, intraPairs, idCol)
+          .localCheckpoint(true) // feeds the index gate + both appends
+        val intraFlag = bestOf(intraPairs
+            .select(col("id_a").as(idCol), col("id_b").as("match_id"),
+              col("n_shared"), col("score"))
+            .unionAll(intraPairs
+              .select(col("id_b").as(idCol), col("id_a").as("match_id"),
+                col("n_shared"), col("score"))))
+          .join(intra.select(idCol), Seq(idCol), "left_anti")
+        // gate 2: the index gate, on intra-survivors' fingerprints
+        // only; the batch's own ids are excluded from matches so a
+        // replayed torn batch (index append landed, marker didn't)
+        // reproduces the original decisions instead of self-flagging
+        val matches = graft.operators.Dedup
+          .matchFpsAgainstWinnowIndex(
+            fps.join(intra.select(col(idCol).as("id")), Seq("id"),
               "left_semi"),
-            indexDir)
-          ()
+            idCol, indexDir, minShared = minShared)
+          .join(b.select(col(idCol).as("match_id")), Seq("match_id"),
+            "left_anti")
+          .localCheckpoint(true) // feeds the audit rows + the anti-join
+        b.join(intraFlag.unionAll(bestOf(matches)), Seq(idCol), "inner")
+          .write.mode("append").parquet(flaggedDir)
+        val novel = intra
+          .join(matches.select(idCol), Seq(idCol), "left_anti")
+          .localCheckpoint(true) // feeds the corpus append AND the index
+        novel.write.mode("append").parquet(outDir)
+        graft.operators.Dedup.appendWinnowFps(
+          fps.join(novel.select(col(idCol).as("id")), Seq("id"),
+            "left_semi"),
+          indexDir)
       })
-      .trigger(Trigger.AvailableNow())
 
   /** The COMPOSED live ingest chain — every hygiene gate in ONE
     * streaming sink (VERDICT r16 #1): per micro-batch, exact-dedup →
@@ -637,32 +615,27 @@ object IO {
   def composedIngestSink(docs: DataFrame, outDir: String,
                          checkpointDir: String,
                          cfg: graft.operators.ChainConfig)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$outDir/_markers") {
-        (batch: DataFrame, batchId: Long) =>
-          val spark = batch.sparkSession
-          val b = batch.localCheckpoint(true) // one consume, all stages
-          if (!b.isEmpty) {
-            val walPath = s"$outDir/_decisions/__batch=$batchId"
-            val fs = new org.apache.hadoop.fs.Path(walPath)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            // a COMMITTED WAL (job-commit _SUCCESS) marks the batch as
-            // mid-apply when it crashed — skip decide, re-apply from it;
-            // a torn WAL write (no _SUCCESS) is pre-commit: recompute
-            // (nothing was mutated) and overwrite
-            val isReplay = fs.exists(
-              new org.apache.hadoop.fs.Path(s"$walPath/_SUCCESS"))
-            if (!isReplay)
-              graft.operators.CorpusBuild.chainDecide(b, cfg)
-                .write.mode("overwrite").parquet(walPath)
-            graft.operators.CorpusBuild.chainApply(b,
-              spark.read.parquet(walPath), outDir, cfg, batchId, isReplay)
-          }
-          ()
+      : DataStreamWriter[Row] =
+    foreachBatchSink(docs, checkpointDir)(
+      idempotentForeachBatch(s"$outDir/_markers") { (batch, batchId) =>
+        val spark = batch.sparkSession
+        val b = batch.localCheckpoint(true) // one consume, all stages
+        if (!b.isEmpty) {
+          val walPath = s"$outDir/_decisions/__batch=$batchId"
+          val fs = new Path(walPath)
+            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          // a COMMITTED WAL (job-commit _SUCCESS) marks the batch as
+          // mid-apply when it crashed — skip decide, re-apply from it;
+          // a torn WAL write (no _SUCCESS) is pre-commit: recompute
+          // (nothing was mutated) and overwrite
+          val isReplay = fs.exists(new Path(s"$walPath/_SUCCESS"))
+          if (!isReplay)
+            graft.operators.CorpusBuild.chainDecide(b, cfg)
+              .write.mode("overwrite").parquet(walPath)
+          graft.operators.CorpusBuild.chainApply(b,
+            spark.read.parquet(walPath), outDir, cfg, batchId, isReplay)
+        }
       })
-      .trigger(Trigger.AvailableNow())
 
   /** Streaming INCREMENTAL connected components: each micro-batch of
     * edges folds into a persisted (id, label) component labeling via
@@ -680,41 +653,29 @@ object IO {
   def componentsSink(edges: DataFrame, labelsDir: String,
                      checkpointDir: String,
                      idA: String = "id_a", idB: String = "id_b")
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    edges.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val dst = new org.apache.hadoop.fs.Path(labelsDir)
-        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bak = new org.apache.hadoop.fs.Path(labelsDir + "_bak")
-        val tmp = new org.apache.hadoop.fs.Path(labelsDir + "_tmp")
-        val readFrom =
-          if (fs.exists(dst)) dst else if (fs.exists(bak)) bak else null
-        val labelSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("label",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        val existing =
-          if (readFrom == null)
-            spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), labelSchema)
-          else spark.read.schema(labelSchema).parquet(readFrom.toString)
-        // the _tmp write fully consumes the read of the live snapshot
-        // BEFORE any rename touches it — no read-own-input hazard and no
-        // node-sized checkpoint needed
-        graft.operators.Dedup.componentsMerge(existing, batch, idA, idB)
-          .write.mode("overwrite").parquet(tmp.toString)
-        def must(ok: Boolean, what: String): Unit =
-          if (!ok) throw new java.io.IOException(s"componentsSink: $what failed")
-        fs.delete(bak, true)
-        if (fs.exists(dst)) must(fs.rename(dst, bak), s"rename $dst -> $bak")
-        must(fs.rename(tmp, dst), s"rename $tmp -> $dst")
-        fs.delete(bak, true)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    foreachBatchSink(edges, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      val dst = new Path(labelsDir)
+      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bak = new Path(labelsDir + "_bak")
+      val tmp = new Path(labelsDir + "_tmp")
+      val readFrom =
+        if (fs.exists(dst)) dst else if (fs.exists(bak)) bak else null
+      val labelSchema = StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("label", LongType, nullable = false)))
+      val existing =
+        if (readFrom == null)
+          spark.createDataFrame(new java.util.ArrayList[Row](), labelSchema)
+        else spark.read.schema(labelSchema).parquet(readFrom.toString)
+      // the _tmp write fully consumes the read of the live snapshot
+      // BEFORE any rename touches it — no read-own-input hazard and no
+      // node-sized checkpoint needed
+      graft.operators.Dedup.componentsMerge(existing, batch, idA, idB)
+        .write.mode("overwrite").parquet(tmp.toString)
+      swapIn(fs, tmp, labelsDir, "componentsSink")
+    }
 
   /** Streaming incremental connected components over the BUCKETED
     * store: [[componentsSink]]'s swap rewrites the whole labeling per
@@ -738,15 +699,11 @@ object IO {
                           idA: String = "id_a", idB: String = "id_b",
                           maxFlatRows: Long =
                             graft.operators.Dedup.ComponentsStoreMaxFlatRows)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    edges.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.mergeComponentsStore(
-          batch, storeDir, idA, idB, buckets, maxFlatRows)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    foreachBatchSink(edges, checkpointDir) { (batch, _) =>
+      graft.operators.Dedup.mergeComponentsStore(
+        batch, storeDir, idA, idB, buckets, maxFlatRows)
+    }
 
   /** Keyed upsert sink (the HBase dim-writer analog): every micro-batch is
     * merged into the keyed snapshot directory with last-writer-wins
@@ -755,42 +712,30 @@ object IO {
     * stand-in for HBase put/delete RPCs. */
   def upsertSink(df: DataFrame, snapshotDir: String, checkpointDir: String,
                  keyCol: String, snapshotSchema: StructType)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val dst = new org.apache.hadoop.fs.Path(snapshotDir)
-        // resolve the snapshot path's OWN filesystem (s3a://, hdfs://, …),
-        // not the default FS
-        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bak = new org.apache.hadoop.fs.Path(snapshotDir + "_bak")
-        val tmp = new org.apache.hadoop.fs.Path(snapshotDir + "_tmp")
-        // recover from a crash between the renames below: the previous
-        // snapshot lives on at _bak until the new one is in place
-        val readFrom =
-          if (fs.exists(dst)) dst else if (fs.exists(bak)) bak else null
-        val existing =
-          if (readFrom == null)
-            spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), snapshotSchema)
-          else spark.read.schema(snapshotSchema).parquet(readFrom.toString)
-        val merged = graft.streaming.Cdc.applyChangelog(existing, batch, keyCol)
-        // write-then-swap, never a moment without a readable snapshot:
-        // write _tmp → move current to _bak → move _tmp in → drop _bak
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        // Hadoop rename/delete report most failures via `false`, not an
-        // exception — a swallowed failure here would let the checkpoint
-        // commit a batch whose merge was silently stranded at _tmp
-        def must(ok: Boolean, what: String): Unit =
-          if (!ok) throw new java.io.IOException(s"upsertSink: $what failed")
-        fs.delete(bak, true) // best-effort pre-clean; verified below
-        if (fs.exists(dst)) must(fs.rename(dst, bak), s"rename $dst -> $bak")
-        must(fs.rename(tmp, dst), s"rename $tmp -> $dst")
-        fs.delete(bak, true)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    foreachBatchSink(df, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      val dst = new Path(snapshotDir)
+      // resolve the snapshot path's OWN filesystem (s3a://, hdfs://, …),
+      // not the default FS
+      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bak = new Path(snapshotDir + "_bak")
+      val tmp = new Path(snapshotDir + "_tmp")
+      // recover from a crash between the renames below: the previous
+      // snapshot lives on at _bak until the new one is in place
+      val readFrom =
+        if (fs.exists(dst)) dst else if (fs.exists(bak)) bak else null
+      val existing =
+        if (readFrom == null)
+          spark.createDataFrame(
+            new java.util.ArrayList[Row](), snapshotSchema)
+        else spark.read.schema(snapshotSchema).parquet(readFrom.toString)
+      val merged = graft.streaming.Cdc.applyChangelog(existing, batch, keyCol)
+      // write-then-swap, never a moment without a readable snapshot:
+      // write _tmp → move current to _bak → move _tmp in → drop _bak
+      merged.write.mode("overwrite").parquet(tmp.toString)
+      swapIn(fs, tmp, snapshotDir, "upsertSink")
+    }
 
   /** Exactly-once to a NON-idempotent sink: wrap the per-batch action
     * with a committed-batch marker. Spark's checkpoint guarantees each
@@ -804,9 +749,9 @@ object IO {
   def idempotentForeachBatch(markerDir: String)
                             (f: (DataFrame, Long) => Unit)
       : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
-    val dir = new org.apache.hadoop.fs.Path(markerDir)
+    val dir = new Path(markerDir)
     val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(dir, batchId.toString)
+    val marker = new Path(dir, batchId.toString)
     if (!fs.exists(marker)) {
       f(batch, batchId)
       fs.mkdirs(dir)
@@ -836,18 +781,15 @@ object IO {
   def versionedUpsertSink(df: DataFrame, baseDir: String, checkpointDir: String,
                           keyCol: String, snapshotSchema: StructType,
                           retain: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(retain >= 1, "retain must be >= 1")
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        versionedUpsertBatch(batch, baseDir, keyCol, snapshotSchema, retain)
-      }
-      .trigger(Trigger.AvailableNow())
+    foreachBatchSink(df, checkpointDir) { (batch, _) =>
+      versionedUpsertBatch(batch, baseDir, keyCol, snapshotSchema, retain)
+    }
   }
 
   /** One versioned-upsert commit (the [[versionedUpsertSink]] batch
-    * body, shared with [[windowedMetricsStoreSink]]): merge the
+    * body, shared with [[auditStoreSink]]): merge the
     * changelog batch into the latest complete `v=<n>` snapshot, write
     * the result as the next immutable version, GC beyond `retain`. */
   private def versionedUpsertBatch(batch: DataFrame, baseDir: String,
@@ -859,159 +801,219 @@ object IO {
     val existing = versions.lastOption match {
       case Some(v) => readSnapshotVersion(spark, baseDir, v, snapshotSchema)
       case None => spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), snapshotSchema)
+        new java.util.ArrayList[Row](), snapshotSchema)
     }
     val merged = graft.streaming.Cdc.applyChangelog(existing, batch, keyCol)
     val next = versions.lastOption.getOrElse(0L) + 1
     merged.write.mode("overwrite").parquet(f"$baseDir/v=$next%05d")
     // GC strictly-older versions beyond the retention window
-    val base = new org.apache.hadoop.fs.Path(baseDir)
+    val base = new Path(baseDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     snapshotVersions(spark, baseDir).dropRight(retain).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(f"$baseDir/v=$v%05d"), true)
+      fs.delete(new Path(f"$baseDir/v=$v%05d"), true)
     }
     ()
+  }
+
+  /** Epoch millis of a row's `window_start` — the audit stores'
+    * data-derived changelog clock (`ts_ms`) and the time half of their
+    * by-source `wkey`. */
+  private def windowMs: Column =
+    (col("window_start").cast("double") * 1000).cast("long")
+
+  /** A persisted FIRST-SEEN index an audit store advances per batch:
+    * `(key, first_window)` rows under `__bucket = pmod(bucketHash, n)`
+    * partitions, `n` pinned in the bucket-count sidecar (`buckets`
+    * seeds a new index; maintenance rides [[compactPartitionedDir]]
+    * like every bucketed artifact). */
+  private case class FirstSeenIndex(dir: String, key: String,
+                                    keyType: DataType, buckets: Int,
+                                    bucketHash: Column)
+
+  /** The shared batch body of the per-window AUDIT STORES below — the
+    * Doris-analog DWS sinks: finalized windowed-aggregate micro-batches
+    * fold into one row per window (or per (window, source)) and upsert
+    * into the versioned time-travel snapshot under `baseDir`
+    * ([[versionedUpsertBatch]]), keyed by `keyCol`. Per micro-batch:
+    *
+    *   1. the committed-batch marker ([[idempotentForeachBatch]],
+    *      `<baseDir>/_markers`): a redelivered batch (checkpoint
+    *      rollback, restart from a fresh checkpoint) writes NOTHING — no
+    *      new version, no duplicate rows, no index growth;
+    *   2. the eager pin BEFORE the empty check: the checkpoint consumes
+    *      every partition, which is what commits the stateful upstream's
+    *      state stores (a short-circuiting `isEmpty` on the raw batch
+    *      fails Spark's per-batch commit validation), and it feeds the
+    *      fold and the index delta from one scan;
+    *   3. a batch that finalizes no window writes only its marker — no
+    *      `v=<n>` version, no index dir;
+    *   4. `fold(pinned, known)` builds the store rows; `known` is the
+    *      `index`'s (key, first_window) relation, read ONCE per batch
+    *      before the append (an empty frame for index-less stores);
+    *   5. `op = "u"` and `ts_ms` = the window's own epoch millis, never
+    *      wall clock — replay determinism needs the payload to be a pure
+    *      function of the data (windows finalize once in append mode,
+    *      so rows are pure inserts in steady state). A `keyCol` of
+    *      `wkey` is synthesized as `<window epoch ms>|<source>`: the
+    *      versioned merge keys on one column, and the key is a pure
+    *      function of the row's own grain, so replays regenerate it;
+    *   6. the upsert, then the first-seen append (store before index);
+    *   7. the pinned blocks are dropped — unpersist does NOT free
+    *      localCheckpoint blocks, and a long-running query would
+    *      otherwise keep one batch-sized block set per micro-batch.
+    *
+    * Torn batches (some effects landed, marker didn't) replay with
+    * stable decisions: the folds are pure functions of (batch, inputs),
+    * an indexed key whose `first_window` falls inside the batch is
+    * attributed to that window again, and the append's anti-join delta
+    * lands empty on the second pass — the live rows and the index
+    * converge to the un-torn outcome; the only scar is a possible extra
+    * snapshot version with identical live rows. Time travel: any
+    * retained `v=<n>` reproduces the store at that commit
+    * ([[readSnapshotVersion]] + [[graft.streaming.Cdc.liveView]]). */
+  private def auditStoreSink(hist: DataFrame, baseDir: String,
+                             checkpointDir: String, keyCol: String,
+                             schema: StructType, retain: Int,
+                             index: Option[FirstSeenIndex] = None)
+                            (fold: (DataFrame, DataFrame) => DataFrame)
+      : DataStreamWriter[Row] =
+    foreachBatchSink(hist, checkpointDir)(
+      idempotentForeachBatch(s"$baseDir/_markers") { (batch, _) =>
+        val pinned = batch.localCheckpoint(eager = true)
+        try {
+          if (!pinned.isEmpty) {
+            val spark = pinned.sparkSession
+            val known =
+              index.fold(spark.emptyDataFrame)(readFirstSeen(spark, _))
+            val rows = fold(pinned, known)
+            val keyed =
+              if (keyCol != "wkey") rows
+              else rows.withColumn("wkey",
+                concat(windowMs.cast("string"), lit("|"), col("source")))
+            versionedUpsertBatch(
+              keyed.withColumn("op", lit("u")).withColumn("ts_ms", windowMs),
+              baseDir, keyCol, schema, retain)
+            index.foreach(appendFirstSeen(pinned, known, _))
+          }
+        } finally graft.operators.Checkpoints.drop(pinned)
+      })
+
+  /** The index's (key, first_window) relation; a missing index is empty
+    * (cold start). */
+  private def readFirstSeen(spark: SparkSession,
+                            idx: FirstSeenIndex): DataFrame = {
+    val p = new Path(idx.dir)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.parquet(idx.dir).select(idx.key, "first_window")
+    else spark.createDataFrame(new java.util.ArrayList[Row](),
+      StructType(Seq(StructField(idx.key, idx.keyType),
+        StructField("first_window", TimestampType))))
+  }
+
+  /** Append the keys a batch introduced, stamped with their earliest
+    * window: an anti-join delta against `known`, so the cost is ∝ NEW
+    * keys, never key history (the
+    * [[graft.operators.Dedup.appendFingerprintIndex]] discipline — the
+    * delta is materialized so the append never scans its own output). */
+  private def appendFirstSeen(pinned: DataFrame, known: DataFrame,
+                              idx: FirstSeenIndex): Unit = {
+    val spark = pinned.sparkSession
+    val b = readBucketCount(spark, idx.dir).getOrElse(idx.buckets)
+    val delta = pinned.groupBy(idx.key)
+      .agg(min(col("window_start")).as("first_window"))
+      .join(known.select(idx.key), Seq(idx.key), "left_anti")
+      .withColumn("__bucket", pmod(idx.bucketHash, lit(b.toLong)))
+      .localCheckpoint(eager = true)
+    try {
+      if (!delta.isEmpty) {
+        alignToPartitions(delta, "__bucket")
+          .write.mode("append").partitionBy("__bucket").parquet(idx.dir)
+        if (readBucketCount(spark, idx.dir).isEmpty)
+          writeBucketCount(spark, idx.dir, b)
+      }
+    } finally graft.operators.Checkpoints.drop(delta)
   }
 
   /** Snapshot schema of the [[windowedMetricsStoreSink]] store: one wide
     * metrics row per finalized window, plus the changelog bookkeeping
     * columns the versioned merge orders by. */
   val WindowedMetricsSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("n_pos", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_neg", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("auc", org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("avg_prec", org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("window_start", TimestampType),
+    StructField("n_pos", LongType),
+    StructField("n_neg", LongType),
+    StructField("auc", DoubleType),
+    StructField("avg_prec", DoubleType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted per-window EVAL-METRICS store — the Doris-analog sink
     * for the eval pack (VERDICT r10 #6): finalized
     * [[graft.streaming.Jobs.windowedClassHistogram]] micro-batches fold
     * into ONE wide metrics row per window (ROC-AUC + average precision —
     * the literal q_auc / q_avg_precision folds, so batch/stream parity
-    * is inherited, not re-proven) and upsert into the versioned
-    * time-travel snapshot, keyed by `window_start`.
-    *
-    * EXACTLY-ONCE across replays: the fold+merge runs under
-    * [[idempotentForeachBatch]], so a redelivered micro-batch
-    * (checkpoint rollback, restart-from-scratch) writes NOTHING — no
-    * new version, no duplicate rows (StreamingSpec golden). Changelog
-    * ordering rides `ts_ms` = the window's own epoch millis, never wall
-    * clock — replay determinism requires the payload to be a pure
-    * function of the data. Windows finalize once in append mode, so
-    * rows are pure inserts in steady state; one-class windows carry no
-    * AUC and are dropped (the q_auc contract). Time-travel: any
-    * retained `v=<n>` reproduces the metric state at that commit
-    * ([[readSnapshotVersion]] + [[graft.streaming.Cdc.liveView]]). */
+    * is inherited, not re-proven), keyed by `window_start`. One-class
+    * windows carry no AUC and are dropped (the q_auc contract).
+    * Exactly-once replay, changelog ordering and time travel are
+    * [[auditStoreSink]]'s (StreamingSpec golden). */
   def windowedMetricsStoreSink(hist: DataFrame, baseDir: String,
                                checkpointDir: String, retain: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          // pin BEFORE the empty check: the eager checkpoint consumes
-          // every partition, which is what commits the stateful
-          // operator's state stores (a short-circuiting isEmpty on the
-          // raw batch fails Spark's per-batch commit validation); it
-          // also feeds the two metric folds once
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val metrics = graft.streaming.Jobs.aucPerWindow(pinned)
-                .join(graft.streaming.Jobs.apPerWindow(pinned)
-                    .select(col("window_start"), col("avg_prec")),
-                  Seq("window_start"))
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "window_start",
-                WindowedMetricsSchema, retain)
-            }
-            // unpersist does NOT free localCheckpoint blocks: drop the
-            // pinned RDD once the upsert has consumed it, or a
-            // long-running query accumulates one batch-sized block set
-            // per micro-batch for its whole lifetime (takedownSink
-            // discipline)
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "window_start",
+        WindowedMetricsSchema, retain) { (pinned, _) =>
+      graft.streaming.Jobs.aucPerWindow(pinned)
+        .join(graft.streaming.Jobs.apPerWindow(pinned)
+            .select(col("window_start"), col("avg_prec")),
+          Seq("window_start"))
+    }
 
   /** Snapshot schema of the [[corpusAuditStoreSink]] store: one
     * contamination row per finalized ingest window plus the changelog
     * bookkeeping columns. */
   val CorpusAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("n_shingles", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_hit", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("contam_ppm", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("window_start", TimestampType),
+    StructField("n_shingles", LongType),
+    StructField("n_hit", LongType),
+    StructField("contam_ppm", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted per-window CORPUS-AUDIT metrics store — the corpus-
     * monitoring twin of [[windowedMetricsStoreSink]] (VERDICT r13 #5):
     * finalized [[graft.streaming.Jobs.windowedShingleHits]] micro-
     * batches fold through the LITERAL batch ppm fold
     * ([[graft.streaming.Jobs.contaminationFracPerWindow]] —
-    * `q_contamination_frac` parity by construction) and upsert into the
-    * versioned time-travel snapshot keyed by `window_start`. Same
-    * guarantees as the eval store, inherited from the same machinery:
-    * exactly-once under replay (committed-batch markers — a redelivered
-    * batch writes nothing), data-derived changelog ordering
-    * (`ts_ms = window_start·1000`), time travel via retained `v=<n>`
-    * snapshots. What an ingest operator watches to catch a benchmark
-    * leak the moment a window closes. */
+    * `q_contamination_frac` parity by construction), keyed by
+    * `window_start`. What an ingest operator watches to catch a
+    * benchmark leak the moment a window closes. */
   def corpusAuditStoreSink(hist: DataFrame, baseDir: String,
                            checkpointDir: String, retain: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val metrics = graft.streaming.Jobs
-                .contaminationFracPerWindow(pinned)
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "window_start",
-                CorpusAuditSchema, retain)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "window_start",
+      CorpusAuditSchema, retain)(
+      (pinned, _) => graft.streaming.Jobs.contaminationFracPerWindow(pinned))
 
   /** Snapshot schema of the [[noveltyAuditSink]] store: one novelty
     * row per finalized ingest window plus the changelog bookkeeping
     * columns. */
   val NoveltyAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("n_grams", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_novel", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("novelty_ppm", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("window_start", TimestampType),
+    StructField("n_grams", LongType),
+    StructField("n_novel", LongType),
+    StructField("novelty_ppm", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted per-window NOVELTY monitor — the live twin of the batch
     * `q_ngram_novelty` id, completing the corpus-audit monitoring trio
     * (contamination, boilerplate, novelty): finalized
     * [[graft.streaming.Jobs.windowedGramDocFreq]] micro-batches fold
     * through [[graft.streaming.Jobs.noveltyPerWindow]] against a
-    * PERSISTED first-seen gram index (`__bucket=pmod(sh, buckets)`
-    * layout — the fingerprint-index partitioning; maintenance rides
-    * [[compactPartitionedDir]] like every bucketed artifact), upsert
-    * into the versioned time-travel snapshot keyed by `window_start`,
-    * then append the window's first-seen grams to the index (anti-join
-    * delta — append cost ∝ NEW grams, never gram history; the
-    * [[graft.operators.Dedup.appendFingerprintIndex]] discipline:
-    * delta materialized before the write so appended files never join
-    * their own input scan). A falling `novelty_ppm` curve is the
-    * "crawl started re-reading itself" alarm, live.
+    * PERSISTED first-seen gram index at `gramIndexDir` ((sh,
+    * first_window), `__bucket=pmod(sh, buckets)` — the
+    * fingerprint-index partitioning), keyed by `window_start`; the
+    * batch's first-seen grams then append to the index. A falling
+    * `novelty_ppm` curve is the "crawl started re-reading itself"
+    * alarm, live.
     *
     * TAKEDOWN POSITION (deliberate, not a missing verb): the gram
     * index carries only 8-byte one-way hashes of 3-token windows with
@@ -1031,75 +1033,15 @@ object IO {
     * from the retired docs' own text, cost ∝ the retirement batch
     * (delete == rebuild law in ScalePathSpec;
     * [[graft.operators.Dedup.firstSeenFromCounted]] serves this sink's
-    * (sh, first_window) relation from it).
-    *
-    * Replay semantics (honest torn-window statement, the
-    * decontaminateIngestSink convention): a batch whose marker
-    * committed replays as a no-op. A TORN batch (some effects landed,
-    * marker didn't) replays with STABLE decisions — the fold attributes
-    * an indexed gram whose `first_window` falls inside the batch to
-    * that window, and the index append's anti-join delta is empty on
-    * the second pass — so the store's live content and the index
-    * converge to exactly the un-torn outcome; the only scar is a
-    * possible extra snapshot version with identical live rows. */
+    * (sh, first_window) relation from it). */
   def noveltyAuditSink(hist: DataFrame, gramIndexDir: String,
                        baseDir: String, checkpointDir: String,
                        retain: Int = 3, buckets: Int = 64)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val idxPath = new org.apache.hadoop.fs.Path(gramIndexDir)
-              val fs = idxPath.getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-              val known =
-                if (fs.exists(idxPath))
-                  spark.read.parquet(gramIndexDir)
-                    .select("sh", "first_window")
-                else spark.createDataFrame(
-                  new java.util.ArrayList[org.apache.spark.sql.Row](),
-                  StructType(Seq(
-                    org.apache.spark.sql.types.StructField("sh",
-                      org.apache.spark.sql.types.LongType),
-                    org.apache.spark.sql.types.StructField("first_window",
-                      org.apache.spark.sql.types.TimestampType))))
-              val metrics = graft.streaming.Jobs
-                .noveltyPerWindow(pinned, known)
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "window_start",
-                NoveltyAuditSchema, retain)
-              val b = readBucketCount(spark, gramIndexDir)
-                .getOrElse(buckets)
-              // first-seen delta: grams this batch introduced, stamped
-              // with their attributed window; materialized so the
-              // append never scans its own output
-              val delta = pinned.groupBy("sh")
-                .agg(min(col("window_start")).as("first_window"))
-                .join(known.select("sh"), Seq("sh"), "left_anti")
-                .withColumn("__bucket", pmod(col("sh"), lit(b.toLong)))
-                .localCheckpoint(eager = true)
-              try {
-                if (!delta.isEmpty) {
-                  alignToPartitions(delta, "__bucket")
-                    .write.mode("append")
-                    .partitionBy("__bucket").parquet(gramIndexDir)
-                  if (readBucketCount(spark, gramIndexDir).isEmpty)
-                    writeBucketCount(spark, gramIndexDir, b)
-                }
-              } finally graft.operators.Checkpoints.drop(delta)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "window_start",
+      NoveltyAuditSchema, retain, Some(FirstSeenIndex(gramIndexDir, "sh",
+        LongType, buckets, col("sh"))))(
+      graft.streaming.Jobs.noveltyPerWindow)
 
   /** Snapshot schema of the [[noveltyBySourceAuditSink]] store: one
     * novelty row per finalized (ingest window, source) plus the
@@ -1108,14 +1050,14 @@ object IO {
     * keys on one column; the key is a pure function of the row's own
     * grain, so replays regenerate it identically). */
   val NoveltyBySourceAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("wkey", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("n_grams", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_novel", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("novelty_ppm", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("wkey", StringType),
+    StructField("window_start", TimestampType),
+    StructField("source", StringType),
+    StructField("n_grams", LongType),
+    StructField("n_novel", LongType),
+    StructField("novelty_ppm", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted per-(window, source) NOVELTY monitor — the WHO twin of
     * [[noveltyAuditSink]]'s WHEN (the live `q_novelty_by_source`,
@@ -1125,92 +1067,33 @@ object IO {
     * against the SAME persisted first-seen gram index layout
     * (`(sh, first_window)`, `__bucket=pmod(sh, buckets)` — a store
     * seeded by [[graft.operators.Dedup.writeGramIndex]] or by the WHEN
-    * sink is readable here as-is), upsert into the versioned snapshot
-    * keyed by the synthesized `wkey`, then append the batch's first-seen
-    * grams as an anti-join delta (cost ∝ NEW grams). SINGLE-WRITER
-    * DISCIPLINE: exactly one novelty sink may own a gram index dir —
-    * this sink SUBSUMES the WHEN monitor (rolling its store over
-    * `source` per window reproduces [[noveltyAuditSink]]'s rows — the
-    * conservation law pinned in StreamingSpec), so deployments wanting
-    * both signals run this one and derive WHEN by rollup rather than
-    * double-appending one index.
-    *
-    * Takedown position and replay semantics are [[noveltyAuditSink]]'s,
-    * verbatim: the index is a doc-unattributed one-way-hash census
-    * (rebuild, not per-doc delete); committed batches replay as no-ops
-    * via the marker, torn batches re-derive identical decisions because
-    * attribution is a pure function of min(first_window) / min(min_doc). */
+    * sink is readable here as-is), keyed by the synthesized `wkey`.
+    * SINGLE-WRITER DISCIPLINE: exactly one novelty sink may own a gram
+    * index dir — this sink SUBSUMES the WHEN monitor (rolling its store
+    * over `source` per window reproduces [[noveltyAuditSink]]'s rows —
+    * the conservation law pinned in StreamingSpec), so deployments
+    * wanting both signals run this one and derive WHEN by rollup rather
+    * than double-appending one index. The takedown position is
+    * [[noveltyAuditSink]]'s; attribution is a pure function of
+    * min(first_window) / min(min_doc). */
   def noveltyBySourceAuditSink(hist: DataFrame, gramIndexDir: String,
                                baseDir: String, checkpointDir: String,
                                retain: Int = 3, buckets: Int = 64)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val idxPath = new org.apache.hadoop.fs.Path(gramIndexDir)
-              val fs = idxPath.getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-              val known =
-                if (fs.exists(idxPath))
-                  spark.read.parquet(gramIndexDir)
-                    .select("sh", "first_window")
-                else spark.createDataFrame(
-                  new java.util.ArrayList[org.apache.spark.sql.Row](),
-                  StructType(Seq(
-                    org.apache.spark.sql.types.StructField("sh",
-                      org.apache.spark.sql.types.LongType),
-                    org.apache.spark.sql.types.StructField("first_window",
-                      org.apache.spark.sql.types.TimestampType))))
-              val metrics = graft.streaming.Jobs
-                .noveltyBySourcePerWindow(pinned, known)
-                .withColumn("wkey", concat(
-                  (col("window_start").cast("double") * 1000).cast("long")
-                    .cast("string"), lit("|"), col("source")))
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "wkey",
-                NoveltyBySourceAuditSchema, retain)
-              val b = readBucketCount(spark, gramIndexDir)
-                .getOrElse(buckets)
-              // first-seen delta: grams this batch introduced, stamped
-              // with their attributed window; materialized so the
-              // append never scans its own output
-              val delta = pinned.groupBy("sh")
-                .agg(min(col("window_start")).as("first_window"))
-                .join(known.select("sh"), Seq("sh"), "left_anti")
-                .withColumn("__bucket", pmod(col("sh"), lit(b.toLong)))
-                .localCheckpoint(eager = true)
-              try {
-                if (!delta.isEmpty) {
-                  alignToPartitions(delta, "__bucket")
-                    .write.mode("append")
-                    .partitionBy("__bucket").parquet(gramIndexDir)
-                  if (readBucketCount(spark, gramIndexDir).isEmpty)
-                    writeBucketCount(spark, gramIndexDir, b)
-                }
-              } finally graft.operators.Checkpoints.drop(delta)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "wkey",
+      NoveltyBySourceAuditSchema, retain, Some(FirstSeenIndex(gramIndexDir,
+        "sh", LongType, buckets, col("sh"))))(
+      graft.streaming.Jobs.noveltyBySourcePerWindow)
 
   /** Snapshot schema of the [[dupRateAuditSink]] store: one exact-dup
     * rate row per finalized ingest window plus changelog bookkeeping. */
   val DupRateAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("n_docs", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_dup", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dup_ppm", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("window_start", TimestampType),
+    StructField("n_docs", LongType),
+    StructField("n_dup", LongType),
+    StructField("dup_ppm", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted live DUPLICATION-RATE monitor — the fifth corpus-audit
     * monitor (contamination, boilerplate, novelty, TTR, exact-dup rate):
@@ -1219,81 +1102,25 @@ object IO {
     * persisted FIRST-SEEN fingerprint index ((fp, first_window),
     * `__bucket = pmod(xxhash64(fp), buckets)` — the exact-dedup
     * fingerprint-index bucketing with the gram index's first-seen
-    * stamp), upsert into the versioned metrics store, then append the
-    * batch's first-seen fingerprints as an anti-join delta (cost ∝ NEW
-    * contents, never fp history). The monitor complements the exact-
-    * dedup ingest GATE: the gate decides admission on a pipeline that
-    * already committed to dedup; this measures duplication arriving on
-    * a raw stream — the number that justifies turning the gate on.
+    * stamp), keyed by `window_start`; the batch's first-seen
+    * fingerprints then append to the index. The monitor complements the
+    * exact-dedup ingest GATE: the gate decides admission on a pipeline
+    * that already committed to dedup; this measures duplication
+    * arriving on a raw stream — the number that justifies turning the
+    * gate on.
     *
     * Takedown position: like the gram index, the fp index here is a
     * one-way-hash census with no doc attribution (fp → first_window) —
     * doc-level opt-out rides the doc-attributed artifacts; rebuild (or
-    * the counted-ledger pattern) is the census-level remedy.
-    *
-    * Replay semantics are [[noveltyAuditSink]]'s verbatim: committed
-    * batches replay as marker no-ops; torn batches re-derive identical
-    * decisions because attribution is a pure function of
-    * min(first_window), and the delta anti-join lands empty. */
+    * the counted-ledger pattern) is the census-level remedy. */
   def dupRateAuditSink(hist: DataFrame, fpIndexDir: String,
                        baseDir: String, checkpointDir: String,
                        retain: Int = 3, buckets: Int = 64)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val idxPath = new org.apache.hadoop.fs.Path(fpIndexDir)
-              val fs = idxPath.getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-              val known =
-                if (fs.exists(idxPath))
-                  spark.read.parquet(fpIndexDir)
-                    .select("fp", "first_window")
-                else spark.createDataFrame(
-                  new java.util.ArrayList[org.apache.spark.sql.Row](),
-                  StructType(Seq(
-                    org.apache.spark.sql.types.StructField("fp",
-                      org.apache.spark.sql.types.StringType),
-                    org.apache.spark.sql.types.StructField("first_window",
-                      org.apache.spark.sql.types.TimestampType))))
-              val metrics = graft.streaming.Jobs
-                .dupRatePerWindow(pinned, known)
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "window_start",
-                DupRateAuditSchema, retain)
-              val b = readBucketCount(spark, fpIndexDir)
-                .getOrElse(buckets)
-              // first-seen delta: contents this batch introduced, stamped
-              // with their attributed window; materialized so the append
-              // never scans its own output
-              val delta = pinned.groupBy("fp")
-                .agg(min(col("window_start")).as("first_window"))
-                .join(known.select("fp"), Seq("fp"), "left_anti")
-                .withColumn("__bucket",
-                  pmod(xxhash64(col("fp")), lit(b.toLong)))
-                .localCheckpoint(eager = true)
-              try {
-                if (!delta.isEmpty) {
-                  alignToPartitions(delta, "__bucket")
-                    .write.mode("append")
-                    .partitionBy("__bucket").parquet(fpIndexDir)
-                  if (readBucketCount(spark, fpIndexDir).isEmpty)
-                    writeBucketCount(spark, fpIndexDir, b)
-                }
-              } finally graft.operators.Checkpoints.drop(delta)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "window_start",
+      DupRateAuditSchema, retain, Some(FirstSeenIndex(fpIndexDir, "fp",
+        StringType, buckets, xxhash64(col("fp")))))(
+      graft.streaming.Jobs.dupRatePerWindow)
 
   /** TAKEDOWN verb for the [[windowedMetricsStoreSink]] store — drop
     * retired windows from the live view, completing the artifact's verb
@@ -1340,8 +1167,7 @@ object IO {
           .withColumn("auc", lit(null).cast("double"))
           .withColumn("avg_prec", lit(null).cast("double"))
           .withColumn("op", lit("d"))
-          .withColumn("ts_ms",
-            (col("window_start").cast("double") * 1000).cast("long"))
+          .withColumn("ts_ms", windowMs)
         versionedUpsertBatch(tombstones, baseDir, "window_start",
           WindowedMetricsSchema, retain)
       }
@@ -1355,14 +1181,14 @@ object IO {
     * count) when the window's languages fall wholly outside the
     * baseline support — the unseen-language-flood alarm row. */
   val MixDriftAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("wkey", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("n_docs", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("kl_pico", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_unseen", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("wkey", StringType),
+    StructField("window_start", TimestampType),
+    StructField("source", StringType),
+    StructField("n_docs", LongType),
+    StructField("kl_pico", LongType),
+    StructField("n_unseen", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted live MIX-DRIFT monitor — the SIXTH corpus-audit monitor
     * (contamination, boilerplate, novelty, TTR, exact-dup rate,
@@ -1370,221 +1196,132 @@ object IO {
     * [[graft.streaming.Jobs.windowedLangCounts]] micro-batches fold
     * through [[graft.streaming.Jobs.mixDriftPerWindow]] against the
     * BASELINE language marginal persisted at `baselineDir` ((lang, n_l,
-    * n_total) — the trained corpus's mix), upserting one (window,
-    * source) KL row into the versioned metrics store via the
-    * synthesized `wkey` (the noveltyBySourceAuditSink key convention).
-    * The baseline is RE-READ per micro-batch (the decontaminateSpanSink
-    * probe convention): retraining the reference mix tightens the
-    * monitor without a restart. No index of its own — the monitor is
-    * stateless beyond the metrics store, the cheapest of the six
-    * (dimension-sized state, no text read). An unseen-language flood
-    * (every doc of a (window, source) outside the baseline support)
-    * lands as a kl_pico-null row with `n_unseen` carrying the doc
-    * count — the store records the strongest drift instead of dropping
-    * it (ADVICE r15).
-    *
-    * Replay semantics: committed batches replay as marker no-ops; a
-    * torn batch (no index append exists to tear) re-derives identical
-    * rows because the fold is a pure function of (batch, baseline). */
+    * n_total) — the trained corpus's mix), one (window, source) KL row
+    * keyed by the synthesized `wkey`. The baseline is RE-READ per
+    * micro-batch (the decontaminateSpanSink probe convention):
+    * retraining the reference mix tightens the monitor without a
+    * restart. No index of its own — the monitor is stateless beyond
+    * the metrics store, the cheapest of the six (dimension-sized state,
+    * no text read). An unseen-language flood (every doc of a (window,
+    * source) outside the baseline support) lands as a kl_pico-null row
+    * with `n_unseen` carrying the doc count — the store records the
+    * strongest drift instead of dropping it (ADVICE r15). */
   def mixDriftAuditSink(hist: DataFrame, baselineDir: String,
                         baseDir: String, checkpointDir: String,
                         retain: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val baseline = spark.read.parquet(baselineDir)
-                .select("lang", "n_l", "n_total")
-              val metrics = graft.streaming.Jobs
-                .mixDriftPerWindow(pinned, baseline)
-                .withColumn("wkey", concat(
-                  (col("window_start").cast("double") * 1000).cast("long")
-                    .cast("string"), lit("|"), col("source")))
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "wkey",
-                MixDriftAuditSchema, retain)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "wkey",
+        MixDriftAuditSchema, retain) { (pinned, _) =>
+      graft.streaming.Jobs.mixDriftPerWindow(pinned,
+        pinned.sparkSession.read.parquet(baselineDir)
+          .select("lang", "n_l", "n_total"))
+    }
 
   /** Snapshot schema of the [[qualityAuditSink]] store: one DSIR-weight
     * quality row per finalized (window, source) plus changelog
     * bookkeeping. */
   val QualityAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("wkey", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("n_tokens", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("weight_pico", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("mean_pico_per_token", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("wkey", StringType),
+    StructField("window_start", TimestampType),
+    StructField("source", StringType),
+    StructField("n_tokens", LongType),
+    StructField("weight_pico", LongType),
+    StructField("mean_pico_per_token", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted live QUALITY monitor — the SEVENTH corpus-audit monitor:
     * finalized [[graft.streaming.Jobs.windowedQualitySums]]
     * micro-batches fold through
-    * [[graft.streaming.Jobs.qualityPerWindow]] and upsert one (window,
-    * source) DSIR-weight row into the versioned metrics store via the
-    * synthesized `wkey` (the mixDriftAuditSink shape — stateless beyond
+    * [[graft.streaming.Jobs.qualityPerWindow]] into one (window, source)
+    * DSIR-weight row keyed by the synthesized `wkey` (stateless beyond
     * the store; the LM refresh rides the stream-static join inside the
     * windowed relation itself, so this sink has nothing to re-read).
     * The monitor-and-gate pairing: a source whose mean per-token weight
     * drifts toward the [[dsirGateSink]] threshold is about to lose
     * admission rate — the store's window history is the early-warning
-    * curve. Replay: committed batches are marker no-ops; the fold is a
-    * pure function of the batch. */
+    * curve. */
   def qualityAuditSink(hist: DataFrame, baseDir: String,
                        checkpointDir: String, retain: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val metrics = graft.streaming.Jobs.qualityPerWindow(pinned)
-                .withColumn("wkey", concat(
-                  (col("window_start").cast("double") * 1000).cast("long")
-                    .cast("string"), lit("|"), col("source")))
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "wkey",
-                QualityAuditSchema, retain)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "wkey", QualityAuditSchema,
+      retain)((pinned, _) => graft.streaming.Jobs.qualityPerWindow(pinned))
 
   /** Snapshot schema of the [[diversityAuditSink]] store: one semantic-
     * diversity census row per finalized window plus changelog
     * bookkeeping. */
   val DiversityAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("n_vecs", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_buckets", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("entropy_pico", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("max_bucket", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("min_bucket", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("window_start", TimestampType),
+    StructField("n_vecs", LongType),
+    StructField("n_buckets", LongType),
+    StructField("entropy_pico", LongType),
+    StructField("max_bucket", LongType),
+    StructField("min_bucket", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted live DIVERSITY monitor — the EIGHTH corpus-audit monitor
     * (contamination, boilerplate, novelty, TTR, exact-dup rate, mix
     * drift, quality, semantic diversity; VERDICT r15 #2): finalized
     * [[graft.streaming.Jobs.windowedBucketCounts]] micro-batches fold
     * through [[graft.streaming.Jobs.bucketEntropyPerWindow]] — the
-    * `q_bucket_entropy` pico-quantized census, window grain — and
-    * upsert one row per window into the versioned metrics store (the
-    * dupRateAuditSink key convention: window_start). The monitor-and-
-    * gate pairing: a falling entropy curve (or a spiking max_bucket)
-    * says the crawl is pooling in one semantic region — the reading
-    * that justifies turning [[diversityGateSink]]'s cap on, read from
-    * the store's window history BEFORE the mixture skews. Stateless
-    * beyond the store; replay: committed batches are marker no-ops, and
-    * the fold is a pure function of the batch. */
+    * `q_bucket_entropy` pico-quantized census, window grain — into one
+    * row per window keyed by `window_start`. The monitor-and-gate
+    * pairing: a falling entropy curve (or a spiking max_bucket) says the
+    * crawl is pooling in one semantic region — the reading that
+    * justifies turning [[diversityGateSink]]'s cap on, read from the
+    * store's window history BEFORE the mixture skews. Stateless beyond
+    * the store. */
   def diversityAuditSink(hist: DataFrame, baseDir: String,
                          checkpointDir: String, retain: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val metrics = graft.streaming.Jobs
-                .bucketEntropyPerWindow(pinned)
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "window_start",
-                DiversityAuditSchema, retain)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "window_start",
+      DiversityAuditSchema, retain)(
+      (pinned, _) => graft.streaming.Jobs.bucketEntropyPerWindow(pinned))
 
   /** Snapshot schema of the [[diversityBySourceAuditSink]] store: one
     * semantic-diversity census row per finalized (window, source) plus
     * changelog bookkeeping. */
   val DiversityBySourceAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("wkey", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("n_vecs", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_buckets", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("entropy_pico", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("max_bucket", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("min_bucket", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("wkey", StringType),
+    StructField("window_start", TimestampType),
+    StructField("source", StringType),
+    StructField("n_vecs", LongType),
+    StructField("n_buckets", LongType),
+    StructField("entropy_pico", LongType),
+    StructField("max_bucket", LongType),
+    StructField("min_bucket", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted live by-source DIVERSITY monitor — the WHO twin of
     * [[diversityAuditSink]] (the noveltyBySourceAuditSink convention):
     * finalized [[graft.streaming.Jobs.windowedBucketCountsBySource]]
     * micro-batches fold through
-    * [[graft.streaming.Jobs.bucketEntropyBySourcePerWindow]] and upsert
-    * one (window, source) entropy row via the synthesized `wkey`. The
+    * [[graft.streaming.Jobs.bucketEntropyBySourcePerWindow]] into one
+    * (window, source) entropy row keyed by the synthesized `wkey`. The
     * per-window store says the corpus is pooling; this store says WHICH
     * source's crawler is stuck in one semantic region — the
-    * mixture-weight lever. Stateless beyond the store; replay:
-    * committed batches are marker no-ops, the fold is a pure function
-    * of the batch. */
+    * mixture-weight lever. Stateless beyond the store. */
   def diversityBySourceAuditSink(hist: DataFrame, baseDir: String,
                                  checkpointDir: String, retain: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val metrics = graft.streaming.Jobs
-                .bucketEntropyBySourcePerWindow(pinned)
-                .withColumn("wkey", concat(
-                  (col("window_start").cast("double") * 1000).cast("long")
-                    .cast("string"), lit("|"), col("source")))
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "wkey",
-                DiversityBySourceAuditSchema, retain)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    auditStoreSink(hist, baseDir, checkpointDir, "wkey",
+      DiversityBySourceAuditSchema, retain)((pinned, _) =>
+      graft.streaming.Jobs.bucketEntropyBySourcePerWindow(pinned))
 
   /** Snapshot schema of the [[spectralDriftAuditSink]] store: one
     * spectral-drift census row per finalized window plus changelog
     * bookkeeping. */
   val SpectralDriftAuditSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("window_start", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("n_vecs", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_buckets", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("tv_ppm", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("max_bucket", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("min_bucket", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("op", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_ms", org.apache.spark.sql.types.LongType)))
+    StructField("window_start", TimestampType),
+    StructField("n_vecs", LongType),
+    StructField("n_buckets", LongType),
+    StructField("tv_ppm", LongType),
+    StructField("max_bucket", LongType),
+    StructField("min_bucket", LongType),
+    StructField("op", StringType),
+    StructField("ts_ms", LongType)))
 
   /** Persisted live SPECTRAL-DRIFT monitor — the NINTH corpus-audit
     * monitor (…, semantic diversity, by-source diversity, spectral
@@ -1594,41 +1331,23 @@ object IO {
     * per-window projection histogram against a FROZEN
     * [[graft.operators.Spectral.writeDirection]] reference axis, plus
     * its total-variation distance to the reference histogram in ppm —
-    * and upsert one row per window into the versioned metrics store.
-    * The monitor-and-eval pairing: the LSH diversity census says WHICH
+    * into one row per window keyed by `window_start`. The
+    * monitor-and-eval pairing: the LSH diversity census says WHICH
     * region pools; this says the embedding DISTRIBUTION itself is
     * sliding off the axis the reference corpus (and every IVF index /
     * semantic gate fit on it) assumed — the re-fit/re-train trigger,
     * read from window history. The artifact is read ONCE at sink
     * construction (immutable by contract — a refit is a NEW artifact +
-    * a new sink). Stateless beyond the store; replay: committed batches
-    * are marker no-ops, the fold is a pure function of the batch. */
+    * a new sink). Stateless beyond the store. */
   def spectralDriftAuditSink(hist: DataFrame, artifactDir: String,
                              baseDir: String, checkpointDir: String,
                              retain: Int = 3)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val (_, _, _, _, ref, refN) = graft.operators.Spectral
       .readDirection(hist.sparkSession, artifactDir)
-    hist.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$baseDir/_markers") {
-        (batch: DataFrame, _: Long) =>
-          // pin BEFORE the empty check (commits the stateful operator's
-          // state stores — the windowedMetricsStoreSink discipline)
-          val pinned = batch.localCheckpoint(eager = true)
-          try {
-            if (!pinned.isEmpty) {
-              val metrics = graft.streaming.Jobs
-                .spectralDriftPerWindow(pinned, ref, refN)
-                .withColumn("op", lit("u"))
-                .withColumn("ts_ms",
-                  (col("window_start").cast("double") * 1000).cast("long"))
-              versionedUpsertBatch(metrics, baseDir, "window_start",
-                SpectralDriftAuditSchema, retain)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-      })
-      .trigger(Trigger.AvailableNow())
+    auditStoreSink(hist, baseDir, checkpointDir, "window_start",
+      SpectralDriftAuditSchema, retain)((pinned, _) =>
+      graft.streaming.Jobs.spectralDriftPerWindow(pinned, ref, refN))
   }
 
   /** RETENTION verb for the [[windowedMetricsStoreSink]] store: tombstone
@@ -1653,7 +1372,7 @@ object IO {
 
   /** Complete snapshot versions under `baseDir`, ascending. */
   def snapshotVersions(spark: SparkSession, baseDir: String): Seq[Long] = {
-    val base = new org.apache.hadoop.fs.Path(baseDir)
+    val base = new Path(baseDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq
@@ -1661,7 +1380,7 @@ object IO {
       .flatMap { st =>
         val n = st.getPath.getName
         if (n.startsWith("v=") &&
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
+            fs.exists(new Path(st.getPath, "_SUCCESS")))
           scala.util.Try(n.drop(2).toLong).toOption
         else None
       }.sorted
@@ -1699,73 +1418,68 @@ object IO {
                          checkpointDir: String, keyCol: String,
                          snapshotSchema: StructType, numBuckets: Int,
                          compactHorizonMs: Option[Long] = None)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(numBuckets > 0, "numBuckets must be positive")
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val bucketOf = pmod(hash(col(keyCol)), lit(numBuckets))
-        // distinct buckets this batch touches: bounded by numBuckets,
-        // so the collect is a fixed-size driver-side set, never data-scale
-        val touched = batch.select(bucketOf.as("__bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (touched.nonEmpty) {
-          val dst = new org.apache.hadoop.fs.Path(snapshotDir)
-          val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // a snapshot dir that exists but holds no bucket partitions
-          // (every bucket compacted to empty, or only _SUCCESS left) has
-          // no schema to infer — treat it exactly like the no-dir branch
-          val hasBuckets = fs.exists(dst) &&
-            fs.listStatus(dst).exists(_.getPath.getName.startsWith("__bucket="))
-          val existing =
-            if (hasBuckets)
-              // filter on the partition column prunes to the touched
-              // bucket directories at the FileIndex — untouched buckets
-              // are never listed, opened, or shuffled
-              spark.read.parquet(snapshotDir)
-                .filter(col("__bucket").isin(touched: _*))
-                .select(snapshotSchema.fieldNames.toSeq.map(col): _*)
-            else
-              spark.createDataFrame(
-                new java.util.ArrayList[org.apache.spark.sql.Row](), snapshotSchema)
-          val upserted = graft.streaming.Cdc.applyChangelog(existing, batch, keyCol)
-          // opportunistic tombstone compaction: the touched buckets are
-          // being rewritten anyway, so expiring dead tombstones here is
-          // free — untouched buckets compact whenever they next merge
-          val merged = compactHorizonMs.fold(upserted)(h =>
-            graft.streaming.Cdc.compactTombstones(upserted, h,
-              System.currentTimeMillis()))
-          // materialize the merge BEFORE the overwrite: the merged plan
-          // reads the same path it is about to write (Spark rejects that
-          // read-write cycle, and lazily it would be a correctness bug).
-          // localCheckpoint pins the touched-bucket rows — bounded by
-          // design at a few task-units — to executor storage and cuts
-          // the lineage back to a LogicalRDD.
-          val pinned = merged.withColumn("__bucket", bucketOf)
-            .localCheckpoint(eager = true)
-          try {
-            // dynamic mode replaces exactly the partitions present in the
-            // output — the touched buckets — and leaves the rest in place
-            alignToPartitions(pinned, "__bucket")
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("__bucket")
-              .parquet(snapshotDir)
-            // a touched bucket whose merge compacted to EMPTY is absent
-            // from the output, so dynamic overwrite left its old files in
-            // place — drop those directories explicitly
-            val written = pinned.select("__bucket").distinct()
-              .collect().map(_.getInt(0)).toSet
-            touched.filterNot(written).foreach { b =>
-              fs.delete(
-                new org.apache.hadoop.fs.Path(s"$snapshotDir/__bucket=$b"), true)
-            }
-          } finally graft.operators.Checkpoints.drop(pinned)
-        }
-        ()
+    foreachBatchSink(df, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      val bucketOf = pmod(hash(col(keyCol)), lit(numBuckets))
+      // distinct buckets this batch touches: bounded by numBuckets,
+      // so the collect is a fixed-size driver-side set, never data-scale
+      val touched = batch.select(bucketOf.as("__bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      if (touched.nonEmpty) {
+        val dst = new Path(snapshotDir)
+        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // a snapshot dir that exists but holds no bucket partitions
+        // (every bucket compacted to empty, or only _SUCCESS left) has
+        // no schema to infer — treat it exactly like the no-dir branch
+        val hasBuckets = fs.exists(dst) &&
+          fs.listStatus(dst).exists(_.getPath.getName.startsWith("__bucket="))
+        val existing =
+          if (hasBuckets)
+            // filter on the partition column prunes to the touched
+            // bucket directories at the FileIndex — untouched buckets
+            // are never listed, opened, or shuffled
+            spark.read.parquet(snapshotDir)
+              .filter(col("__bucket").isin(touched: _*))
+              .select(snapshotSchema.fieldNames.toSeq.map(col): _*)
+          else
+            spark.createDataFrame(
+              new java.util.ArrayList[Row](), snapshotSchema)
+        val upserted = graft.streaming.Cdc.applyChangelog(existing, batch, keyCol)
+        // opportunistic tombstone compaction: the touched buckets are
+        // being rewritten anyway, so expiring dead tombstones here is
+        // free — untouched buckets compact whenever they next merge
+        val merged = compactHorizonMs.fold(upserted)(h =>
+          graft.streaming.Cdc.compactTombstones(upserted, h,
+            System.currentTimeMillis()))
+        // materialize the merge BEFORE the overwrite: the merged plan
+        // reads the same path it is about to write (Spark rejects that
+        // read-write cycle, and lazily it would be a correctness bug).
+        // localCheckpoint pins the touched-bucket rows — bounded by
+        // design at a few task-units — to executor storage and cuts
+        // the lineage back to a LogicalRDD.
+        val pinned = merged.withColumn("__bucket", bucketOf)
+          .localCheckpoint(eager = true)
+        try {
+          // dynamic mode replaces exactly the partitions present in the
+          // output — the touched buckets — and leaves the rest in place
+          alignToPartitions(pinned, "__bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__bucket")
+            .parquet(snapshotDir)
+          // a touched bucket whose merge compacted to EMPTY is absent
+          // from the output, so dynamic overwrite left its old files in
+          // place — drop those directories explicitly
+          val written = pinned.select("__bucket").distinct()
+            .collect().map(_.getInt(0)).toSet
+          touched.filterNot(written).foreach { b =>
+            fs.delete(new Path(s"$snapshotDir/__bucket=$b"), true)
+          }
+        } finally graft.operators.Checkpoints.drop(pinned)
       }
-      .trigger(Trigger.AvailableNow())
+    }
   }
 
   /** Read the live rows of a bucketed snapshot written by
@@ -1792,22 +1506,16 @@ object IO {
   def compactParquet(spark: SparkSession, dir: String,
                      targetFileBytes: Long = 128L << 20): Int = {
     require(targetFileBytes > 0)
-    val dst = new org.apache.hadoop.fs.Path(dir)
+    val dst = new Path(dir)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(dst).getLength
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tmp = new org.apache.hadoop.fs.Path(dir + "_tmp")
-    val bak = new org.apache.hadoop.fs.Path(dir + "_bak")
+    val tmp = new Path(dir + "_tmp")
     // the read of `dir` completes while writing _tmp — the swap below
     // only runs after the write action finished
     spark.read.parquet(dir).coalesce(n)
       .write.mode("overwrite").parquet(tmp.toString)
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"compactParquet: $what failed")
-    fs.delete(bak, true)
-    must(fs.rename(dst, bak), s"rename $dst -> $bak")
-    must(fs.rename(tmp, dst), s"rename $tmp -> $dst")
-    fs.delete(bak, true)
+    swapIn(fs, tmp, dir, "compactParquet")
     n
   }
 
@@ -1852,10 +1560,10 @@ object IO {
                                            partCol: String,
                                            touched: Seq[Long],
                                            written: Set[Long]): Unit = {
-    val base = new org.apache.hadoop.fs.Path(dir)
+    val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     touched.filterNot(written).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(base, s"$partCol=$b"), true)
+      fs.delete(new Path(base, s"$partCol=$b"), true)
     }
     if (fs.exists(base) &&
         !fs.listStatus(base).exists(_.getPath.getName.startsWith(s"$partCol=")))
@@ -1867,7 +1575,7 @@ object IO {
     * and the documented representation of that state is a missing dir
     * (cold start), never a schema-less or stale one. */
   private[graft] def deleteDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
@@ -1879,17 +1587,31 @@ object IO {
     * `coalesce(1)`: callers pass driver-bounded relations (≤ a few
     * hundred rows) — one file, not one per shuffle partition. */
   private[graft] def swapWrite(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    val dst = new org.apache.hadoop.fs.Path(dir)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "_tmp")
-    val bak = new org.apache.hadoop.fs.Path(dir + "_bak")
+    val tmp = new Path(dir + "_tmp")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    swapIn(tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration),
+      tmp, dir, "swapWrite")
+  }
+
+  /** The two-rename swap behind every write-beside-then-swap verb:
+    * `staged` (fully written by the caller, under the caller's own
+    * staging suffix) replaces `dir` — move the current `dir` to
+    * `<dir>_bak` → move `staged` in → drop `_bak` — so there is never a
+    * moment without a readable copy, and a crash between the renames
+    * leaves `_bak` for the caller's recovery read ([[readSwapped]],
+    * [[graft.operators.Similarity.ivfRecoverSwap]]). Hadoop rename
+    * reports most failures via `false`, not an exception, so both
+    * renames are checked (`who` names the caller): a swallowed failure
+    * would let the caller commit work silently stranded at `staged`. */
+  private[graft] def swapIn(fs: FileSystem, staged: Path, dir: String,
+                            who: String): Unit = {
     def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"swapWrite: $what failed")
-    fs.delete(bak, true)
+      if (!ok) throw new java.io.IOException(s"$who: $what failed")
+    val dst = new Path(dir)
+    val bak = new Path(dir + "_bak")
+    fs.delete(bak, true) // best-effort pre-clean; verified below
     if (fs.exists(dst)) must(fs.rename(dst, bak), s"rename $dst -> $bak")
-    must(fs.rename(tmp, dst), s"rename $tmp -> $dst")
+    must(fs.rename(staged, dst), s"rename $staged -> $dst")
     fs.delete(bak, true)
   }
 
@@ -1898,9 +1620,9 @@ object IO {
     * left. None = the artifact was never written (cold start). */
   private[graft] def readSwapped(spark: SparkSession,
                                  dir: String): Option[DataFrame] = {
-    val dst = new org.apache.hadoop.fs.Path(dir)
+    val dst = new Path(dir)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new org.apache.hadoop.fs.Path(dir + "_bak")
+    val bak = new Path(dir + "_bak")
     if (fs.exists(dst)) Some(spark.read.parquet(dir))
     else if (fs.exists(bak)) Some(spark.read.parquet(bak.toString))
     else None
@@ -1913,7 +1635,7 @@ object IO {
     * writer pins it here and the other verbs discover it instead of
     * trusting their caller to repeat the right number. */
   def writeBucketCount(spark: SparkSession, dir: String, n: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, ".bucket_count")
+    val p = new Path(dir, ".bucket_count")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(n.toString.getBytes("UTF-8")) finally out.close()
@@ -1926,7 +1648,7 @@ object IO {
     * appending new-hash rows to an old-hash index would silently never
     * match, so the verbs check this stamp and fail loudly instead. */
   def writeLayoutVersion(spark: SparkSession, dir: String, v: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, ".layout_version")
+    val p = new Path(dir, ".layout_version")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(v.toString.getBytes("UTF-8")) finally out.close()
@@ -1940,7 +1662,7 @@ object IO {
     * opaque StringIndexOutOfBoundsException, which is the right failure
     * for a stamp whose whole job is to say "rebuild me" when unsure. */
   def readLayoutVersion(spark: SparkSession, dir: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir, ".layout_version")
+    val p = new Path(dir, ".layout_version")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else readIntSidecar(fs, p)
@@ -1952,8 +1674,8 @@ object IO {
     * StringIndexOutOfBoundsException `new String(buf, 0, -1)` used to
     * throw, so callers decide the failure mode instead of dying on an
     * opaque bounds error. */
-  private def readIntSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Option[Int] = {
+  private def readIntSidecar(fs: FileSystem,
+                             p: Path): Option[Int] = {
     val in = fs.open(p)
     try {
       val buf = new Array[Byte](32)
@@ -1968,7 +1690,7 @@ object IO {
     * unlike the layout stamp, there is no safe default — guessing a
     * bucket count mis-routes every subsequent append. */
   def readBucketCount(spark: SparkSession, dir: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir, ".bucket_count")
+    val p = new Path(dir, ".bucket_count")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else readIntSidecar(fs, p) match {
@@ -1991,7 +1713,7 @@ object IO {
     * rewrite discipline the IVF drift lifecycle uses). */
   def partitionCensus(spark: SparkSession, dir: String,
                       partPrefix: String): Seq[PartitionCensus] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
+    val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq
@@ -2032,7 +1754,7 @@ object IO {
                             targetFileBytes: Long = 128L << 20): Seq[String] = {
     require(maxFilesPerPartition >= 1, "maxFilesPerPartition must be >= 1")
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val base = new org.apache.hadoop.fs.Path(dir)
+    val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return Seq.empty
     // recovery sweep: restore any bak whose live partition vanished in
@@ -2041,7 +1763,7 @@ object IO {
       val n = st.getPath.getName
       if (n.startsWith(".compact_tmp_")) fs.delete(st.getPath, true)
       else if (n.startsWith(".compact_bak_")) {
-        val live = new org.apache.hadoop.fs.Path(base, n.stripPrefix(".compact_bak_"))
+        val live = new Path(base, n.stripPrefix(".compact_bak_"))
         if (!fs.exists(live)) {
           if (!fs.rename(st.getPath, live))
             throw new java.io.IOException(s"compactPartitionedDir: recovery rename $n failed")
@@ -2055,9 +1777,9 @@ object IO {
         math.max(1L, (c.bytes + targetFileBytes - 1) / targetFileBytes).toInt
       if (c.files <= maxFilesPerPartition || c.files <= targetN) None
       else {
-        val live = new org.apache.hadoop.fs.Path(base, c.partition)
-        val tmp = new org.apache.hadoop.fs.Path(base, s".compact_tmp_${c.partition}")
-        val bak = new org.apache.hadoop.fs.Path(base, s".compact_bak_${c.partition}")
+        val live = new Path(base, c.partition)
+        val tmp = new Path(base, s".compact_tmp_${c.partition}")
+        val bak = new Path(base, s".compact_bak_${c.partition}")
         // the partition dir reads WITHOUT its partition column (the
         // value lives in the dir name) — exactly the file schema the
         // swapped-in rewrite must carry
@@ -2081,7 +1803,7 @@ object IO {
     * Returns the dropped partition dir names. */
   def expirePartitions(spark: SparkSession, dir: String, partPrefix: String,
                        dropValue: String => Boolean): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
+    val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq
@@ -2108,26 +1830,23 @@ object IO {
                             partCol: String,
                             compactEvery: Option[Int] = None,
                             maxFilesPerPartition: Int = 4)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(compactEvery.forall(_ >= 1), "compactEvery must be >= 1")
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentForeachBatch(s"$dir/_markers") {
-        (batch: DataFrame, batchId: Long) =>
-          graft.sources.IO.alignToPartitions(batch, partCol)
-            .write.mode("append").partitionBy(partCol).parquet(dir)
-          // in-sink maintenance policy: every k-th batch defragments
-          // whatever the appends accumulated — fragmentation-
-          // proportional (only partitions above threshold rewrite), and
-          // safe under the batch marker (a replayed batch skips the
-          // append AND the compact; compaction is idempotent anyway)
-          compactEvery.foreach { k =>
-            if (batchId % k == k - 1)
-              compactPartitionedDir(batch.sparkSession, dir, partCol,
-                maxFilesPerPartition)
-          }
+    foreachBatchSink(df, checkpointDir)(
+      idempotentForeachBatch(s"$dir/_markers") { (batch, batchId) =>
+        graft.sources.IO.alignToPartitions(batch, partCol)
+          .write.mode("append").partitionBy(partCol).parquet(dir)
+        // in-sink maintenance policy: every k-th batch defragments
+        // whatever the appends accumulated — fragmentation-
+        // proportional (only partitions above threshold rewrite), and
+        // safe under the batch marker (a replayed batch skips the
+        // append AND the compact; compaction is idempotent anyway)
+        compactEvery.foreach { k =>
+          if (batchId % k == k - 1)
+            compactPartitionedDir(batch.sparkSession, dir, partCol,
+              maxFilesPerPartition)
+        }
       })
-      .trigger(Trigger.AvailableNow())
   }
 
   /** Streaming TAKEDOWN: each micro-batch of opt-out docs leaves every
@@ -2147,21 +1866,17 @@ object IO {
                    idCol: String, textCol: String,
                    fpIndexDir: Option[String] = None,
                    nearDupIndexDir: Option[String] = None)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    requests.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one consume feeds both verbs (and commits the batch's plan)
-        val pinned = batch.localCheckpoint(eager = true)
-        try {
-          fpIndexDir.foreach(d => graft.operators.Dedup
-            .deleteFromFingerprintIndex(pinned, textCol, d))
-          nearDupIndexDir.foreach(d => graft.operators.Dedup
-            .deleteFromNearDupIndex(pinned.select(col(idCol)), idCol, d))
-        } finally graft.operators.Checkpoints.drop(pinned)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    foreachBatchSink(requests, checkpointDir) { (batch, _) =>
+      // one consume feeds both verbs (and commits the batch's plan)
+      val pinned = batch.localCheckpoint(eager = true)
+      try {
+        fpIndexDir.foreach(d => graft.operators.Dedup
+          .deleteFromFingerprintIndex(pinned, textCol, d))
+        nearDupIndexDir.foreach(d => graft.operators.Dedup
+          .deleteFromNearDupIndex(pinned.select(col(idCol)), idCol, d))
+      } finally graft.operators.Checkpoints.drop(pinned)
+    }
 
   // ---- round-trip helpers -------------------------------------------
 

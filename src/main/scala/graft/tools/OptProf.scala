@@ -283,6 +283,8 @@ object OptProf {
         // try/finally (ADVICE r17): an exception mid-loop must not leave
         // the kill switch set and poison same-session measurements
         try abpropIds.foreach { case (id, fn) =>
+          // the previous id ended on the "off" arm: warm up unset
+          sys.props.remove(prop)
           noop(fn(spark, sfDir)); sweep()
           val t = scala.collection.mutable.Map("on" -> List.empty[Double],
             "off" -> List.empty[Double])

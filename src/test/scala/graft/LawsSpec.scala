@@ -373,6 +373,15 @@ class LawsSpec extends SparkSpec {
     assert(mid == legacy)
   }
 
+  test("globalRowNumber: an input column named like its temp column errors instead of being lost") {
+    import graft.operators.Analytics
+    val df = spark.range(0, 10).toDF("id").withColumn("__grank_mid", col("id") * 2)
+    val e = intercept[IllegalArgumentException] {
+      Analytics.globalRowNumber(df, Seq(col("id")), "rank")
+    }
+    assert(e.getMessage.contains("__grank_mid"))
+  }
+
   test("fanOutFromSingle: spreads single-source inputs, refuses multi-source ones (ADVICE r17 tie-order restriction)") {
     val one = spark.range(0, 1000, 1, numPartitions = 1).toDF("id")
     val spread = operators.Dedup.fanOutFromSingle(one, col("id"))

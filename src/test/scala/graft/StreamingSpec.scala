@@ -1614,6 +1614,54 @@ class StreamingSpec extends SparkSpec {
       s"replayed batches must be marker no-ops: $vBefore -> $versions")
   }
 
+  test("audit-store sinks: a micro-batch that finalizes no window writes only its marker") {
+    // one event and no watermark advance past its window's end: the
+    // windowed relation's micro-batch is empty, so the store commits no
+    // v=<n> snapshot and the first-seen index dir is never created —
+    // but the batch is still marked committed
+    val root = java.nio.file.Files.createTempDirectory("audit_empty_").toString
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    def assertMarkerOnly(base: String): Unit = {
+      assert(graft.sources.IO.snapshotVersions(spark, base).isEmpty,
+        s"$base: an empty batch must commit no snapshot version")
+      assert(exists(s"$base/_markers/0"),
+        s"$base: an empty batch must still write its marker")
+    }
+    // stateless store: qualityAuditSink
+    val lmDir = s"$root/lm"
+    Seq((0L, 1L)).toDF("b", "ratio_pico").write.parquet(lmDir)
+    val qIn = MemoryStream[(Timestamp, String, String)]
+    val qHist = graft.streaming.Jobs.windowedQualitySums(
+      qIn.toDF().toDF("ts", "source", "text"), "ts", "source", "text",
+      spark.read.parquet(lmDir), "10 minutes", "5 minutes")
+    val q1 = graft.sources.IO
+      .qualityAuditSink(qHist, s"$root/quality", s"$root/quality_ck")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .start()
+    try {
+      qIn.addData((ts("2024-01-01 10:01:00"), "s", "a b c d"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    assertMarkerOnly(s"$root/quality")
+    // indexed store: noveltyAuditSink
+    val nIn = MemoryStream[(Timestamp, String)]
+    val nHist = graft.streaming.Jobs.windowedGramDocFreq(
+      nIn.toDF().toDF("ts", "text"), "ts", "text", "10 minutes", "5 minutes")
+    val idxDir = s"$root/grams"
+    val q2 = graft.sources.IO
+      .noveltyAuditSink(nHist, idxDir, s"$root/novelty", s"$root/novelty_ck")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .start()
+    try {
+      nIn.addData((ts("2024-01-01 10:01:00"), "a b c d"))
+      q2.processAllAvailable()
+    } finally q2.stop()
+    assertMarkerOnly(s"$root/novelty")
+    assert(!exists(idxDir), "an empty batch must not create the first-seen index")
+  }
+
   test("dsirGateSink: quality gate admits target-like docs, audits every decision, replay is a no-op") {
     // LM trained batch-side (Sampling.dsirLm — what the sink re-reads
     // per micro-batch): target rows are 'good'-vocabulary docs, raw adds
