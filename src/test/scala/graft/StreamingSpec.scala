@@ -1678,16 +1678,19 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Sampling.dsirLm(corpus, "text", col("t"))
       .write.parquet(lmDir)
     val in = MemoryStream[(Long, String)]
+    // the sink's default trigger is AvailableNow, which fixes its end
+    // offset when the query thread first plans: data added after
+    // start() races that and can leave the query with no batch, so
+    // every addData here comes before its start()
     def start(ck: String) = graft.sources.IO.dsirGateSink(
       in.toDF().toDF("doc_id", "text"), lmDir, outDir, auditDir, ck,
       "doc_id", "text", thresholdPicoPerToken = 0L).start()
     val ck1 = java.nio.file.Files.createTempDirectory("dsirgate_ck1_").toString
+    in.addData((1L, "good signal prose"), (2L, "junk spam noise"),
+      (3L, ""))
     val q1 = start(ck1)
-    try {
-      in.addData((1L, "good signal prose"), (2L, "junk spam noise"),
-        (3L, ""))
-      q1.processAllAvailable()
-    } finally q1.stop()
+    try q1.processAllAvailable()
+    finally q1.stop()
     val admitted = spark.read.parquet(outDir)
       .select("doc_id").as[Long].collect().toSet
     assert(admitted == Set(1L), s"gate admitted $admitted")
@@ -1703,11 +1706,10 @@ class StreamingSpec extends SparkSpec {
     val (nOut, nAudit) = (spark.read.parquet(outDir).count(),
       spark.read.parquet(auditDir).count())
     val ck2 = java.nio.file.Files.createTempDirectory("dsirgate_ck2_").toString
+    in.addData((1L, "good signal prose"))
     val q2 = start(ck2)
-    try {
-      in.addData((1L, "good signal prose"))
-      q2.processAllAvailable()
-    } finally q2.stop()
+    try q2.processAllAvailable()
+    finally q2.stop()
     assert(spark.read.parquet(outDir).count() == nOut &&
       spark.read.parquet(auditDir).count() == nAudit,
       "replayed batch must be a marker no-op on both dirs")
