@@ -45,9 +45,9 @@ object Analytics {
     * otherwise re-drawn per action). */
   def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
                       rankCol: String = "rn"): DataFrame = {
-    // the codegen path numbers rows through this temp column; an input
-    // column of the same name (Spark resolves names case-insensitively)
-    // would be overwritten and then dropped
+    // the numbering runs through this temp column; an input column of
+    // the same name (Spark resolves names case-insensitively) would be
+    // overwritten and then dropped
     require(!df.columns.exists(_.equalsIgnoreCase("__grank_mid")),
       "globalRowNumber: input must not carry a column named __grank_mid")
     val spark = df.sparkSession
@@ -71,42 +71,31 @@ object Analytics {
         val o = acc; acc += counts.getOrElse(p, 0L); o
       }
     }
-    if (sys.props.contains("graft.grank.legacy")) {
-      // r17 RDD-hop path, kept as the A/B arm: every consumer of the
-      // numbered relation pays the InternalRow→Row→InternalRow converter
-      // chain per action (the measured ~0.2-0.33 s/task constant)
-      val outSchema = StructType(df.schema.fields :+
-        StructField(rankCol, LongType, nullable = false))
-      val numbered = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var r = offsets(pid)
-        it.map { row => r += 1; Row.fromSeq(row.toSeq :+ r) }
-      }
-      spark.createDataFrame(numbered, outSchema)
-    } else {
-      // r18 codegen path (guide §1.2 step 2 — per-task work): stay in
-      // Tungsten. monotonically_increasing_id over the CHECKPOINTED
-      // partitions is (pid << 33) + row-index-within-partition in stored
-      // (= sorted) order, so rank = offsets(pid) + index + 1 — a pure
-      // codegen projection, no RDD hop, no converter chain. Valid only
-      // because `sorted` is pinned: the expression sits narrow on the
-      // checkpoint scan, so partition ids and iteration order are those
-      // of the materialized blocks on every re-evaluation.
-      val mid = col("__grank_mid")
-      sorted.withColumn("__grank_mid", monotonically_increasing_id())
-        .withColumn(rankCol,
-          // coalesce pins nullable=false, matching the legacy schema;
-          // the index pid+1 is in [1, nPart] by construction
-          coalesce(
-            element_at(typedLit(offsets), (shiftright(mid, 33) + 1).cast("int")) +
-              mid.bitwiseAND(lit((1L << 33) - 1)) + lit(1L),
-            lit(0L)))
-        .drop("__grank_mid")
-    }
+    // stay in Tungsten: monotonically_increasing_id over the CHECKPOINTED
+    // partitions is (pid << 33) + row-index-within-partition in stored
+    // (= sorted) order, so rank = offsets(pid) + index + 1 — a pure
+    // codegen projection, no RDD hop, no converter chain. Valid only
+    // because `sorted` is pinned: the expression sits narrow on the
+    // checkpoint scan, so partition ids and iteration order are those
+    // of the materialized blocks on every re-evaluation. LawsSpec pins
+    // the bit layout this decomposition reads.
+    val mid = col("__grank_mid")
+    sorted.withColumn("__grank_mid", monotonically_increasing_id())
+      .withColumn(rankCol,
+        // pid+1 is in [1, nPart] by construction; a null here means the
+        // decomposition broke, which must fail rather than emit a rank
+        coalesce(
+          element_at(typedLit(offsets), (shiftright(mid, 33) + 1).cast("int")) +
+            mid.bitwiseAND(lit((1L << 33) - 1)) + lit(1L),
+          raise_error(lit("globalRowNumber: monotonically_increasing_id " +
+            "decomposed to a partition outside the offsets table"))))
+      .drop("__grank_mid")
   }
-  // r17 note: an eager localCheckpoint of the createDataFrame results in
-  // this family (paying the RDD-scan's measured ~0.2-0.33 s/task
-  // converter cost once instead of per consumer) was same-session
-  // A/B-measured over 8 caller ids: WORSE on all 8 (q_rfm 2.33→2.68,
+  // r17 note: an eager localCheckpoint of the createDataFrame results of
+  // the running-sum operators below (paying the RDD-scan's measured
+  // ~0.2-0.33 s/task converter cost once instead of per consumer) was
+  // same-session A/B-measured over 8 caller ids, then including
+  // globalRowNumber's: WORSE on all 8 (q_rfm 2.33→2.68,
   // q_sequence_pack 0.61→0.70 — the extra materialization job costs
   // more wall than the repeated scans, whose CPU soaks into idle cores).
   // Kept un-pinned deliberately.

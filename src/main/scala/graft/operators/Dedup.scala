@@ -32,7 +32,6 @@ object Dedup {
     * BEFORE the explode multiplies rows (guide §3.3). */
   private[graft] def fanOut(df: DataFrame, key: Column): DataFrame = {
     if (df.isStreaming) return df // micro-batch partitioning is the source's
-    if (sys.props.get("graft.fanout.off").contains("true")) return df // dev A/B
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, key)
@@ -55,7 +54,6 @@ object Dedup {
     * not lean on it further. */
   private[graft] def fanOutFromSingle(df: DataFrame, key: Column): DataFrame = {
     if (df.isStreaming) return df
-    if (sys.props.get("graft.fanout.off").contains("true")) return df // dev A/B
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (target <= 1) return df
     val nonEmpty = df.queryExecution.toRdd

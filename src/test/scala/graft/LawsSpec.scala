@@ -357,20 +357,27 @@ class LawsSpec extends SparkSpec {
       sizes(b) == (n / k + 1).toInt), "earlier buckets take the extra row")
   }
 
-  test("globalRowNumber: r18 codegen mid-path == legacy RDD path, row for row") {
-    import graft.operators.Analytics
-    val rev = graft.sources.Tables.orders(spark, sfDir)
-      .groupBy("o_custkey")
-      .agg(round(sum(col("o_totalprice")), 2).as("rev"))
-    def run() = Analytics.globalRowNumber(
-        rev, Seq(desc("rev"), col("o_custkey")), "rank")
-      .select(col("o_custkey"), col("rev"), col("rank"))
-      .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
-    val mid = run()
-    val legacy =
-      try { sys.props("graft.grank.legacy") = "true"; run() }
-      finally sys.props.remove("graft.grank.legacy")
-    assert(mid == legacy)
+  test("monotonically_increasing_id over a checkpoint: partition id above bit 33, stored-order index below") {
+    // globalRowNumber decomposes this id into (partition, index) over its
+    // checkpoint; a Spark upgrade that changes the layout must fail here
+    // instead of misnumbering ranks
+    val ck = spark.range(0, 300, 1, numPartitions = 4).toDF("id")
+      .sortWithinPartitions(desc("id")) // stored order is not id order
+      .localCheckpoint(eager = true)
+    val stored = ck.as[Long].rdd.glom().collect().map(_.toSeq)
+    assert(stored.count(_.nonEmpty) >= 3)
+    val tagged = ck.select(col("id"), monotonically_increasing_id().as("mid"),
+        spark_partition_id().as("pid"))
+      .as[(Long, Long, Int)].rdd.glom().collect()
+    assert(tagged.length == stored.length)
+    val low = (1L << 33) - 1
+    for (((rows, ids), p) <- tagged.zip(stored).zipWithIndex) {
+      assert(rows.map(_._1).toSeq == ids, s"partition $p: rows left stored order")
+      assert(rows.forall { case (_, mid, pid) => pid == p && (mid >> 33) == pid },
+        s"partition $p: high bits are not the partition id")
+      assert(rows.map(_._2 & low).toSeq == ids.indices.map(_.toLong),
+        s"partition $p: low 33 bits do not run 0..n-1")
+    }
   }
 
   test("globalRowNumber: an input column named like its temp column errors instead of being lost") {
