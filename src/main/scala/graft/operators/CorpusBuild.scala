@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.sources.BucketedIndex
 
 /** Configuration of the composed LIVE ingest chain (VERDICT r16 #1) —
   * the streaming twin of [[CorpusBuild.buildCorpus]]: which stages run
@@ -370,12 +371,6 @@ object CorpusBuild {
   val ChainOutcomes: Seq[String] = Seq("exact_dup", "near_dup",
     "winnow_dup", "decontaminated", "quality", "diversity", "admitted")
 
-  private def dirExists(spark: org.apache.spark.sql.SparkSession,
-                        d: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** DECIDE phase: every stage's outcome for one micro-batch, from
     * pre-batch artifact state only — no mutation anywhere. Returns the
     * decisions relation (id, outcome, ship_text, n_tokens, weight_pico,
@@ -396,11 +391,10 @@ object CorpusBuild {
     val intra1 = withFp.join(
       withFp.groupBy("__fp").agg(min(col(id)).as(id)).select(id),
       Seq(id), "left_semi")
-    val s1 = (if (dirExists(spark, cfg.fpIndexDir))
-        intra1.join(
-          spark.read.parquet(cfg.fpIndexDir).select(col("fp").as("__fp")),
-          Seq("__fp"), "left_anti")
-      else intra1).drop("__fp").localCheckpoint(eager = true)
+    val s1 = BucketedIndex.read(spark, cfg.fpIndexDir)
+      .fold(intra1)(idx => intra1.join(idx.select(col("fp").as("__fp")),
+        Seq("__fp"), "left_anti"))
+      .drop("__fp").localCheckpoint(eager = true)
     // stage 2: near-dup — intra LSH collapse + band-index gate (the
     // nearDupAgainstIndex verb, cold-start tolerant)
     val s2 = Dedup.nearDupAgainstIndex(s1, id, txt, cfg.bandIndexDir,
@@ -563,58 +557,39 @@ object CorpusBuild {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__batch").parquet(outDir)
+    // the replay path's index-deduped advance: rows of `df` whose
+    // `key` is already an `id` in the index relation at `rel` drop
+    def unindexed(df: DataFrame, key: String, rel: String): DataFrame =
+      if (!isReplay) df
+      else BucketedIndex.read(spark, rel).fold(df)(idx =>
+        df.join(idx.select(col("id").as(key)), Seq(key), "left_anti"))
     // 2. fp index ← stage-1 survivors (ORIGINAL text fingerprints — the
-    // gate judges raw arrivals, the buildCorpus artifact semantics)
-    val s1docs = past("exact_dup")
-    if (!s1docs.isEmpty) {
-      if (dirExists(spark, cfg.fpIndexDir))
-        Dedup.appendFingerprintIndex(s1docs, txt, cfg.fpIndexDir)
-      else Dedup.writeFingerprintIndex(s1docs, txt, cfg.fpIndexDir)
-    }
+    // gate judges raw arrivals, the buildCorpus artifact semantics);
+    // each index verb below seeds a cold index and writes nothing for
+    // an empty delta
+    Dedup.appendFingerprintIndex(past("exact_dup"), txt, cfg.fpIndexDir)
     // 3. band index ← stage-2 survivors
-    val s2docs = past("exact_dup", "near_dup")
-    val s2add =
-      if (isReplay && dirExists(spark, s"${cfg.bandIndexDir}/docs"))
-        s2docs.join(spark.read.parquet(s"${cfg.bandIndexDir}/docs")
-          .select(col("id").as(id)), Seq(id), "left_anti")
-      else s2docs
-    if (!s2add.isEmpty)
-      Dedup.appendNearDupIndex(s2add, id, txt, cfg.bandIndexDir)
+    Dedup.appendNearDupIndex(unindexed(past("exact_dup", "near_dup"), id,
+      s"${cfg.bandIndexDir}/docs"), id, txt, cfg.bandIndexDir)
     // 4. winnow index ← stage-3 survivors
     cfg.winnowIndexDir.foreach { wd =>
-      val s3docs = past("exact_dup", "near_dup", "winnow_dup")
-      val s3add =
-        if (isReplay && dirExists(spark, s"$wd/fps"))
-          s3docs.join(spark.read.parquet(s"$wd/fps")
-            .select(col("id").as(id)), Seq(id), "left_anti")
-        else s3docs
-      Dedup.appendWinnowIndex(s3add, id, txt, wd) // empty-guards itself
+      Dedup.appendWinnowIndex(unindexed(
+        past("exact_dup", "near_dup", "winnow_dup"), id, s"$wd/fps"),
+        id, txt, wd)
     }
     // 5. bucket-membership index + census ← admitted embedded docs
     // (bucket comes from the WAL, never recomputed)
     for (_ <- cfg.embCol; dd <- cfg.diversityIndexDir) {
-      val admEmb = admitted.filter(col("bucket").isNotNull)
-        .select(col("bucket"), col("id").cast("long").as("id"))
-      val delta =
-        if (isReplay && dirExists(spark, dd))
-          admEmb.join(spark.read.parquet(dd).select("id"), Seq("id"),
-            "left_anti")
-        else admEmb
-      val pinnedDelta = delta.localCheckpoint(eager = true)
-      if (!pinnedDelta.isEmpty) {
+      val delta = unindexed(admitted.filter(col("bucket").isNotNull)
+          .select(col("bucket"), col("id").cast("long").as("id")), "id", dd)
+        .localCheckpoint(eager = true)
+      if (!delta.isEmpty) {
         val occBefore = Sampling.readBucketOccupancy(spark, dd)
           .localCheckpoint(eager = true) // read BEFORE the append below
-        val bkts = graft.sources.IO.readBucketCount(spark, dd).getOrElse(64)
-        graft.sources.IO.alignToPartitions(
-            pinnedDelta.withColumn("__bucket",
-              pmod(xxhash64(col("bucket")), lit(bkts.toLong))), "__bucket")
-          .write.mode("append").partitionBy("__bucket").parquet(dd)
-        if (graft.sources.IO.readBucketCount(spark, dd).isEmpty)
-          graft.sources.IO.writeBucketCount(spark, dd, bkts)
+        BucketedIndex.append(Sampling.BucketMembershipIndex, dd, 64, delta)
         if (isReplay) Sampling.writeBucketCensus(spark, dd)
-        else Sampling.advanceBucketCensus(occBefore,
-          pinnedDelta.select("bucket"), dd)
-      } else if (isReplay && dirExists(spark, dd))
+        else Sampling.advanceBucketCensus(occBefore, delta.select("bucket"), dd)
+      } else if (isReplay && BucketedIndex.exists(spark, dd))
         // the crash may have landed between index append and census
         // advance — reconcile the census even when the delta re-applied
         // as empty

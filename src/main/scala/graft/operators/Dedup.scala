@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.sources.BucketedIndex
 
 /** Deduplication operators for training-data pipelines (driver brief [N];
   * SURVEY.md §2.K). The reference's own dedup is the keyed first-visit
@@ -597,24 +598,20 @@ object Dedup {
     * contract as [[NearDupLayoutVersion]]. */
   val WinnowLayoutVersion = 1
 
-  private def requireWinnowLayout(spark: org.apache.spark.sql.SparkSession,
-                                  indexDir: String): Unit = {
-    val v = graft.sources.IO.readLayoutVersion(spark, indexDir)
-    if (!v.contains(WinnowLayoutVersion))
-      throw new IllegalStateException(
-        s"winnow index at $indexDir has layout version ${v.getOrElse("<unstamped>")}, " +
-          s"need $WinnowLayoutVersion: its fingerprints were selected under a " +
-          "different hash/k/w and would silently never match. Rebuild with " +
-          "writeWinnowIndex.")
-  }
+  /** The winnow index's [[BucketedIndex]] layout: (id, fh) rows under
+    * `fps/`, bucketed by id hash, stamped. */
+  private val WinnowIndex = BucketedIndex.Layout(xxhash64(col("id")),
+    Seq("fps"), Some(BucketedIndex.Stamp("winnow", WinnowLayoutVersion,
+      "its fingerprints were selected under a different hash/k/w and " +
+        "would silently never match", "writeWinnowIndex")))
 
   /** Persisted winnowing fingerprint index — the MOSS matcher's serving
     * artifact: the distinct selected (id, fh) relation
-    * ([[winnowFingerprints]]) as parquet PARTITIONED by the id-hash
-    * bucket `__bucket`, so takedown deletes rewrite only touched
-    * buckets (the [[writeNearDupIndex]] layout discipline). ~2/(w+1)
+    * ([[winnowFingerprints]]) in the id-bucketed [[BucketedIndex]]
+    * layout, so takedown deletes rewrite only touched buckets. ~2/(w+1)
     * of the corpus gram count in 16 bytes/row — the compact substring
-    * signature of the whole corpus. Single writer by contract. */
+    * signature of the whole corpus. A corpus winnowing to nothing seeds
+    * "no index yet". */
   def writeWinnowIndex(docs: DataFrame, idCol: String, textCol: String,
                        indexDir: String, storeBuckets: Int = 64): Unit =
     writeWinnowFps(winnowFingerprints(docs, idCol, textCol), indexDir,
@@ -626,27 +623,12 @@ object Dedup {
     * corpus build winnows its survivors once and seeds the index from
     * the same pass). */
   private[graft] def writeWinnowFps(fps: DataFrame, indexDir: String,
-                                    storeBuckets: Int = 64): Unit = {
-    // empty-seed guard (ADVICE r16): a corpus winnowing to nothing
-    // (empty, or every doc under the winnow window) seeds "no index
-    // yet" — the matchAgainstWinnowIndex cold-start contract
-    if (fps.isEmpty) {
-      graft.sources.IO.deleteDir(fps.sparkSession, indexDir); return
-    }
-    fps
-      .withColumn("__bucket", idBucket(col("id"), storeBuckets))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket")
-      .parquet(s"$indexDir/fps")
-    graft.sources.IO.writeBucketCount(fps.sparkSession, indexDir, storeBuckets)
-    graft.sources.IO.writeLayoutVersion(fps.sparkSession, indexDir,
-      WinnowLayoutVersion)
-  }
+                                    storeBuckets: Int = 64): Unit =
+    BucketedIndex.seed(WinnowIndex, indexDir, storeBuckets, fps)
 
   /** Append newly admitted docs' selected fingerprints — batch-
     * proportional (winnow the BATCH, append its rows); a missing index
-    * is the streaming cold start and this append seeds it, stamping the
-    * sidecars the way [[writeWinnowIndex]] does. */
+    * is the streaming cold start and this append seeds it. */
   def appendWinnowIndex(novel: DataFrame, idCol: String, textCol: String,
                         indexDir: String, storeBuckets: Int = 64): Unit =
     appendWinnowFps(winnowFingerprints(novel, idCol, textCol), indexDir,
@@ -657,65 +639,18 @@ object Dedup {
     * sink (the sink already holds the batch's fingerprints; re-deriving
     * them from the novel docs would be a third winnow pass). */
   private[graft] def appendWinnowFps(novelFps: DataFrame, indexDir: String,
-                                     storeBuckets: Int = 64): Unit = {
-    val spark = novelFps.sparkSession
-    val fpsPath = new org.apache.hadoop.fs.Path(s"$indexDir/fps")
-    val coldStart = !fpsPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(fpsPath)
-    if (!coldStart) requireWinnowLayout(spark, indexDir)
-    val sb = graft.sources.IO.readBucketCount(spark, indexDir)
-      .getOrElse(storeBuckets)
-    val delta = novelFps
-      .withColumn("__bucket", idBucket(col("id"), sb))
-      .localCheckpoint(true)
-    // cold-start empty-append guard (the appendNearDupIndex note): an
-    // empty batch must not manufacture a schema-less fps/ dir
-    if (delta.isEmpty) return
-    graft.sources.IO.alignToPartitions(delta, "__bucket")
-      .write.mode("append").partitionBy("__bucket")
-      .parquet(s"$indexDir/fps")
-    if (coldStart) {
-      graft.sources.IO.writeBucketCount(spark, indexDir, sb)
-      graft.sources.IO.writeLayoutVersion(spark, indexDir, WinnowLayoutVersion)
-    }
-  }
+                                     storeBuckets: Int = 64): Unit =
+    BucketedIndex.append(WinnowIndex, indexDir, storeBuckets, novelFps)
 
   /** Remove ids from the winnow index — the TAKEDOWN verb: the ids'
     * fingerprints leave, so future batches can no longer be flagged as
-    * overlapping removed content. Touched-bucket dynamic overwrite,
-    * replayed delete finds nothing and writes nothing, untouched bucket
-    * dirs stay byte-identical, delete == rebuild-without-those-ids.
-    * Returns the touched bucket ids. */
+    * overlapping removed content ([[BucketedIndex.delete]]: delete ==
+    * rebuild-without-those-ids, replay a no-op). Returns the touched
+    * bucket ids. */
   def deleteFromWinnowIndex(ids: DataFrame, idCol: String,
-                            indexDir: String): Seq[Long] = {
-    val spark = ids.sparkSession
-    requireWinnowLayout(spark, indexDir)
-    val idOnly = ids.select(col(idCol).as("id")).distinct()
-      .localCheckpoint(eager = true)
-    try {
-      val rel = spark.read.parquet(s"$indexDir/fps")
-        .select(col("id"), col("fh"),
-          col("__bucket").cast("long").as("__bucket"))
-      val touched = rel.join(idOnly, Seq("id"), "left_semi")
-        .select("__bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= storeBuckets ids
-      if (touched.isEmpty) return touched
-      val remaining = rel.filter(col("__bucket").isin(touched: _*))
-        .join(idOnly, Seq("id"), "left_anti")
-        .localCheckpoint(eager = true) // pin before overwriting the source
-      try {
-        graft.sources.IO.alignToPartitions(remaining, "__bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__bucket").parquet(s"$indexDir/fps")
-        val written = remaining.select("__bucket").distinct()
-          .collect().map(_.getLong(0)).toSet // bounded: <= storeBuckets ids
-        dropEmptiedPartitions(spark, s"$indexDir/fps", "__bucket",
-          touched, written)
-      } finally Checkpoints.drop(remaining)
-      touched
-    } finally Checkpoints.drop(idOnly)
-  }
+                            indexDir: String): Seq[Long] =
+    BucketedIndex.delete(WinnowIndex, indexDir,
+      ids.select(col(idCol).as("id")))
 
   /** Match an ingest batch against the persisted winnow index: batch
     * docs sharing ≥ `minShared` selected fingerprint hashes with ANY
@@ -756,15 +691,15 @@ object Dedup {
                                                 minShared: Long = 2L): DataFrame = {
     val spark = bsel.sparkSession
     val sizes = bsel.groupBy("id").agg(count(lit(1)).as("n_sel"))
-    val fpsPath = new org.apache.hadoop.fs.Path(s"$indexDir/fps")
-    val coldStart = !fpsPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(fpsPath)
-    if (coldStart)
-      return bsel.filter(lit(false))
-        .select(col("id").as(idCol), col("id").as("match_id"),
-          lit(0L).as("n_shared"), lit(0.0).as("score"))
-    requireWinnowLayout(spark, indexDir)
-    val idx = spark.read.parquet(s"$indexDir/fps").select("id", "fh")
+    val idx = BucketedIndex.read(spark, s"$indexDir/fps") match {
+      case Some(rel) =>
+        BucketedIndex.requireLayout(spark, indexDir, WinnowIndex)
+        rel.select("id", "fh")
+      case None =>
+        return bsel.filter(lit(false))
+          .select(col("id").as(idCol), col("id").as("match_id"),
+            lit(0L).as("n_shared"), lit(0.0).as("score"))
+    }
     val hot = idx.groupBy("fh").agg(countDistinct(col("id")).as("df"))
       .filter(col("df") > maxDocFreq).select("fh")
     idx.join(broadcast(hot), Seq("fh"), "left_anti").as("i")
@@ -905,41 +840,28 @@ object Dedup {
     !hasLeak(shingle(Text.tokens(col(textCol))))
   }
 
+  /** The fingerprint index's [[BucketedIndex]] layout: distinct fp
+    * rows bucketed by `pmod(xxhash64(fp), n)`. */
+  private val FingerprintIndex = BucketedIndex.Layout(xxhash64(col("fp")))
+
   /** Persisted exact-dedup fingerprint index: the distinct md5 fingerprints
-    * of a corpus, written as parquet PARTITIONED by the fingerprint-hash
-    * bucket `__bucket = pmod(xxhash64(fp), buckets)`. The steady-state
+    * of a corpus in the [[BucketedIndex]] layout. The steady-state
     * companion of [[dedupAgainstIndex]]: at 100 TB the corpus is deduped
     * ONCE, the index (16 bytes/distinct doc — orders of magnitude smaller
     * than the corpus) persists, and every subsequent ingest batch dedups
     * against the index instead of re-scanning history. The bucketed
-    * layout exists for [[deleteFromFingerprintIndex]]: a takedown
-    * rewrites only the buckets holding the removed fingerprints (dynamic
-    * partition overwrite — per-partition atomic, replay-idempotent), the
-    * same touched-partitions discipline as the IVF and components
-    * stores. Reads are unaffected (the partition column is dropped by
-    * the fp projections). */
+    * layout exists for [[deleteFromFingerprintIndex]]. Reads are
+    * unaffected (the partition column is dropped by the fp
+    * projections). */
   def writeFingerprintIndex(docs: DataFrame, textCol: String,
-                            indexDir: String, buckets: Int = 64): Unit = {
+                            indexDir: String, buckets: Int = 64): Unit =
     // r18 note: a fanOut before this md5 chain was A/B-measured WORSE
-    // (q_dedup_incremental ON 1.63 / OFF 0.98): the isEmpty limit-1
-    // probe below cannot short-circuit through a repartition — it would
-    // pay the full exchange, and the write pays it again. Kept serial.
-    val fps = docs.select(Text.fingerprint(col(textCol)).as("fp")).distinct()
-    // empty-seed guard (ADVICE r16): an empty corpus seeds "no index
-    // yet" (a missing dir — the documented cold-start state), never a
-    // schema-less partitioned dir. Limit-1 probe, not a pin: the
-    // relation is corpus-sized and this verb runs once per corpus.
-    if (fps.isEmpty) {
-      graft.sources.IO.deleteDir(docs.sparkSession, indexDir); return
-    }
-    fps
-      .withColumn("__bucket", pmod(xxhash64(col("fp")), lit(buckets.toLong)))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(indexDir)
-    // pin the layout: later appends route by the WRITTEN count, not
-    // whatever their caller happens to pass
-    graft.sources.IO.writeBucketCount(docs.sparkSession, indexDir, buckets)
-  }
+    // (q_dedup_incremental ON 1.63 / OFF 0.98): the seed's isEmpty
+    // limit-1 probe cannot short-circuit through a repartition — it
+    // would pay the full exchange, and the write pays it again. Kept
+    // serial.
+    BucketedIndex.seed(FingerprintIndex, indexDir, buckets,
+      docs.select(Text.fingerprint(col(textCol)).as("fp")).distinct())
 
   /** Remove the fingerprints of `deletedDocs` from a persisted
     * fingerprint index — the TAKEDOWN verb of the lifecycle
@@ -948,91 +870,28 @@ object Dedup {
     * a DEDUPED corpus (one surviving doc per fingerprint — exactly what
     * [[dedupAgainstIndex]] maintains), so a deleted doc's fingerprint
     * has no other owner and delete == rebuild-without-those-docs
-    * (ScalePathSpec law). Touched buckets come from a SEMI-JOIN against
-    * the index, so replaying a delete finds nothing and writes nothing;
-    * untouched bucket directories stay byte-identical. Returns the
-    * touched bucket ids (the cost witness). Single writer by contract,
-    * like append. */
+    * (ScalePathSpec law; [[BucketedIndex.delete]]). Returns the touched
+    * bucket ids. */
   def deleteFromFingerprintIndex(deletedDocs: DataFrame, textCol: String,
-                                 indexDir: String): Seq[Long] = {
-    val spark = deletedDocs.sparkSession
-    val fps = deletedDocs.select(Text.fingerprint(col(textCol)).as("fp"))
-      .distinct().localCheckpoint(eager = true)
-    try {
-      val idx = spark.read.parquet(indexDir)
-        .select(col("fp"), col("__bucket").cast("long").as("__bucket"))
-      val touched = idx.join(fps, Seq("fp"), "left_semi")
-        .select("__bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= buckets ids
-      if (touched.isEmpty) return touched // replay / unknown docs: zero writes
-      val remaining = idx.filter(col("__bucket").isin(touched: _*))
-        .join(fps, Seq("fp"), "left_anti")
-        .localCheckpoint(eager = true) // pin before overwriting the source path
-      try {
-        graft.sources.IO.alignToPartitions(remaining, "__bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__bucket").parquet(indexDir)
-        val written = remaining.select("__bucket").distinct()
-          .collect().map(_.getLong(0)).toSet // bounded: <= buckets ids
-        dropEmptiedPartitions(spark, indexDir, "__bucket", touched, written)
-      } finally Checkpoints.drop(remaining)
-      touched
-    } finally Checkpoints.drop(fps)
-  }
-
-  /** Shared emptied-partition guard of every takedown verb — one
-    * definition in [[graft.sources.IO.dropEmptiedPartitions]] (ADVICE
-    * r16), including the cold-start revert when a delete empties the
-    * whole artifact. */
-  private def dropEmptiedPartitions(spark: org.apache.spark.sql.SparkSession,
-                                    dir: String, partCol: String,
-                                    touched: Seq[Long],
-                                    written: Set[Long]): Unit =
-    graft.sources.IO.dropEmptiedPartitions(spark, dir, partCol, touched, written)
+                                 indexDir: String): Seq[Long] =
+    BucketedIndex.delete(FingerprintIndex, indexDir,
+      deletedDocs.select(Text.fingerprint(col(textCol)).as("fp")))
 
   /** Append a new batch's fingerprints to the index — only fingerprints
     * not already present are written (anti-join keeps the index
     * distinct), and existing index files are never rewritten: the append
     * cost is proportional to the NEW batch, never the corpus history.
-    *
-    * The delta is MATERIALIZED (`localCheckpoint`) before the append
-    * touches `indexDir`: the anti-join's read of the existing index
-    * completes first, so the appended files are never part of their own
-    * input scan, and a failure during the write leaves only uncommitted
-    * `_temporary` output (the committer publishes files at job commit) —
-    * the pre-append index remains intact and the call is safely
-    * re-runnable. Single-writer by contract: concurrent appenders could
-    * each compute a delta against the same snapshot and both insert the
-    * same fingerprint; serialize appends per index (the lifecycle is
-    * pinned in ScalePathSpec). */
+    * Re-running an append is a no-op, so a failed-then-retried append is
+    * safe. Single-writer by contract: concurrent appenders could each
+    * compute a delta against the same snapshot and both insert the same
+    * fingerprint. A missing index is the cold start, seeded here. */
   def appendFingerprintIndex(docs: DataFrame, textCol: String,
                              indexDir: String, buckets: Int = 64): Unit = {
-    val spark = docs.sparkSession
-    val b = graft.sources.IO.readBucketCount(spark, indexDir).getOrElse(buckets)
-    val idx = spark.read.parquet(indexDir).select("fp")
-    val delta = docs.select(Text.fingerprint(col(textCol)).as("fp")).distinct()
-      .join(idx, Seq("fp"), "left_anti")
-      .withColumn("__bucket", pmod(xxhash64(col("fp")), lit(b.toLong)))
-      .localCheckpoint(true) // finish reading indexDir BEFORE writing to it
-    graft.sources.IO.alignToPartitions(delta, "__bucket")
-      .write.mode("append").partitionBy("__bucket").parquet(indexDir)
+    val fps = docs.select(Text.fingerprint(col(textCol)).as("fp")).distinct()
+    BucketedIndex.append(FingerprintIndex, indexDir, buckets,
+      BucketedIndex.read(docs.sparkSession, indexDir)
+        .fold(fps)(idx => fps.join(idx.select("fp"), Seq("fp"), "left_anti")))
   }
-
-  /** Persist a MinHash band index for INCREMENTAL near-dup dedup — the
-    * fuzzy twin of [[writeFingerprintIndex]]. Two relations under
-    * `indexDir`: `bands/` holds the narrow (band, bucket, id) triples
-    * (LSH candidate lookup) and `docs/` holds (id, toks) (the exact-
-    * Jaccard confirm side). At 100 TB the bands relation is ~8 rows/doc
-    * of three scalars and the candidate join is a plain hash join on
-    * (band, bucket) — never a scan of the corpus text. */
-  /** Partition key of the near-dup index's relations: the ID-hash
-    * bucket. Both `bands/` and `docs/` carry it, so a takedown
-    * ([[deleteFromNearDupIndex]]) rewrites only the bucket directories
-    * holding the removed ids in each. (Distinct from the LSH `bucket`
-    * column — that is a JOIN key, this is the storage layout.) */
-  private def idBucket(c: Column, buckets: Int): Column =
-    pmod(xxhash64(c), lit(buckets.toLong))
 
   /** Layout version of the persisted near-dup band index. v2 = the
     * engine-portable md5 hash family (round 12); v1 (unstamped) indexes
@@ -1042,90 +901,52 @@ object Dedup {
     * (rebuild via [[writeNearDupIndex]] is the only safe migration). */
   val NearDupLayoutVersion = 2
 
-  private def requireNearDupLayout(spark: org.apache.spark.sql.SparkSession,
-                                   indexDir: String): Unit = {
-    val v = graft.sources.IO.readLayoutVersion(spark, indexDir)
-    if (!v.contains(NearDupLayoutVersion))
-      throw new IllegalStateException(
-        s"near-dup index at $indexDir has layout version ${v.getOrElse("<unstamped>")}, " +
-          s"need $NearDupLayoutVersion (md5-portable hash family): its band buckets were " +
-          "built with a different hash — appends/deletes/lookups would silently miss. " +
-          "Rebuild the index with writeNearDupIndex.")
-  }
+  /** The near-dup index's [[BucketedIndex]] layout: `docs/` (id, toks)
+    * and `bands/` (id, band, bucket), both bucketed by ID hash so a
+    * takedown rewrites only the buckets holding the removed ids in each
+    * (the LSH `bucket` column is a JOIN key, not the storage layout).
+    * Every indexed id has a docs row, so `docs/` decides cold start and
+    * the touched buckets for both relations. */
+  private val NearDupIndex = BucketedIndex.Layout(xxhash64(col("id")),
+    Seq("docs", "bands"), Some(BucketedIndex.Stamp("near-dup",
+      NearDupLayoutVersion, "its band buckets were built with a different " +
+        "hash (need the md5-portable family) — appends/deletes/lookups " +
+        "would silently miss", "writeNearDupIndex")))
 
+  /** The near-dup index's two relations for `docs`: (id, toks) and the
+    * MinHash band triples (id, band, bucket). */
+  private def nearDupRows(docs: DataFrame, idCol: String, textCol: String,
+                          shingleN: Int, numHashes: Int,
+                          bands: Int): Seq[DataFrame] =
+    Seq(docs.select(col(idCol).as("id"), Text.tokens(col(textCol)).as("toks")),
+      minhashSignatures(docs, idCol, textCol, shingleN, numHashes, bands)
+        .select(col(idCol).as("id"),
+          posexplode(col("buckets")).as(Seq("band", "bucket"))))
+
+  /** Persist a MinHash band index for INCREMENTAL near-dup dedup — the
+    * fuzzy twin of [[writeFingerprintIndex]]. Two relations under
+    * `indexDir`: `bands/` holds the narrow (band, bucket, id) triples
+    * (LSH candidate lookup) and `docs/` holds (id, toks) (the exact-
+    * Jaccard confirm side). At 100 TB the bands relation is ~8 rows/doc
+    * of three scalars and the candidate join is a plain hash join on
+    * (band, bucket) — never a scan of the corpus text. An empty corpus
+    * seeds "no index yet". */
   def writeNearDupIndex(docs: DataFrame, idCol: String, textCol: String,
                         indexDir: String, shingleN: Int = 3,
                         numHashes: Int = 32, bands: Int = 8,
-                        storeBuckets: Int = 64): Unit = {
-    // empty-seed guard (ADVICE r16): an empty corpus seeds "no index
-    // yet" — both subrelations missing, the nearDupAgainstIndex
-    // cold-start shape (one-of-two existing is the corrupt state)
-    if (docs.isEmpty) {
-      graft.sources.IO.deleteDir(docs.sparkSession, indexDir); return
-    }
-    val sigs = minhashSignatures(docs, idCol, textCol, shingleN, numHashes, bands)
-    sigs.select(col(idCol).as("id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .withColumn("__bucket", idBucket(col("id"), storeBuckets))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket")
-      .parquet(s"$indexDir/bands")
-    docs.select(col(idCol).as("id"), Text.tokens(col(textCol)).as("toks"))
-      .withColumn("__bucket", idBucket(col("id"), storeBuckets))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket")
-      .parquet(s"$indexDir/docs")
-    graft.sources.IO.writeBucketCount(docs.sparkSession, indexDir, storeBuckets)
-    graft.sources.IO.writeLayoutVersion(docs.sparkSession, indexDir,
-      NearDupLayoutVersion)
-  }
+                        storeBuckets: Int = 64): Unit =
+    BucketedIndex.seed(NearDupIndex, indexDir, storeBuckets,
+      nearDupRows(docs, idCol, textCol, shingleN, numHashes, bands): _*)
 
   /** Remove ids from a persisted near-dup index — the TAKEDOWN verb:
     * the ids' band triples and token arrays both leave the index, so
     * future batches can no longer be suppressed as near-dups of removed
-    * content. Touched ID-hash buckets come from a semi-join against
-    * `docs/` (every indexed id has a docs row, band rows only if it had
-    * shingles — the same hash, so one touched set covers both
-    * relations); a replayed delete finds nothing and writes nothing,
-    * untouched bucket directories stay byte-identical, and delete ==
-    * rebuild-without-those-ids (ScalePathSpec law). Returns the touched
-    * bucket ids. Single writer by contract. */
+    * content ([[BucketedIndex.delete]]: delete == rebuild-without-those-
+    * ids, ScalePathSpec law). Returns the touched bucket ids. */
   def deleteFromNearDupIndex(ids: DataFrame, idCol: String,
-                             indexDir: String): Seq[Long] = {
-    val spark = ids.sparkSession
-    requireNearDupLayout(spark, indexDir)
-    val idOnly = ids.select(col(idCol).as("id")).distinct()
-      .localCheckpoint(eager = true)
-    try {
-      val docsRel = spark.read.parquet(s"$indexDir/docs")
-        .select(col("id"), col("toks"),
-          col("__bucket").cast("long").as("__bucket"))
-      val touched = docsRel.join(idOnly, Seq("id"), "left_semi")
-        .select("__bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= storeBuckets ids
-      if (touched.isEmpty) return touched
-      def rewrite(sub: String, rel: DataFrame): Unit = {
-        val remaining = rel.filter(col("__bucket").isin(touched: _*))
-          .join(idOnly, Seq("id"), "left_anti")
-          .localCheckpoint(eager = true) // pin before overwriting the source
-        try {
-          graft.sources.IO.alignToPartitions(remaining, "__bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__bucket").parquet(s"$indexDir/$sub")
-          val written = remaining.select("__bucket").distinct()
-            .collect().map(_.getLong(0)).toSet // bounded: <= storeBuckets ids
-          dropEmptiedPartitions(spark, s"$indexDir/$sub", "__bucket",
-            touched, written)
-        } finally Checkpoints.drop(remaining)
-      }
-      rewrite("docs", docsRel)
-      rewrite("bands", spark.read.parquet(s"$indexDir/bands")
-        .select(col("id"), col("band"), col("bucket"),
-          col("__bucket").cast("long").as("__bucket")))
-      touched
-    } finally Checkpoints.drop(idOnly)
-  }
+                             indexDir: String): Seq[Long] =
+    BucketedIndex.delete(NearDupIndex, indexDir,
+      ids.select(col(idCol).as("id")))
 
   /** Incremental NEAR-dup dedup of an ingest batch against the persisted
     * band index: (1) intra-batch near-dup collapse via
@@ -1141,17 +962,13 @@ object Dedup {
     * the corpus text is touched only for candidate ids. Returns the
     * surviving batch rows.
     *
-    * COLD START: an empty index is the natural first state of a
-    * streaming ingest pipeline, so a missing `indexDir` (never seeded
-    * via [[writeNearDupIndex]]) is treated as an empty index — the
+    * COLD START: a missing index (never seeded) is an empty index — the
     * batch passes intra-dedup only and the first [[appendNearDupIndex]]
     * creates the dirs. EXACTLY ONE of `bands/`/`docs/` existing is a
-    * corrupt or half-written index and throws — cold start is
-    * both-missing, never one-of-two. A mistyped or unmounted path is
-    * indistinguishable from cold start by construction; callers that
-    * need fail-fast on misconfiguration should pre-seed with
-    * [[writeNearDupIndex]]. Seeding and appending assume a SINGLE
-    * writer; concurrent writers to one indexDir are out of contract. */
+    * corrupt or half-written index and throws. A mistyped or unmounted
+    * path is indistinguishable from cold start by construction; callers
+    * that need fail-fast on misconfiguration should pre-seed with
+    * [[writeNearDupIndex]]. */
   def nearDupAgainstIndex(batch: DataFrame, idCol: String, textCol: String,
                           indexDir: String, threshold: Double,
                           shingleN: Int = 3, numHashes: Int = 32,
@@ -1166,28 +983,25 @@ object Dedup {
     val sigs = minhashSignatures(intra, idCol, textCol, shingleN, numHashes, bands)
     val batchBands = sigs.select(col(idCol).as("__bid"),
       posexplode(col("buckets")).as(Seq("band", "bucket")))
-    def dirExists(sub: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/$sub")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    val (hasBands, hasDocs) = (dirExists("bands"), dirExists("docs"))
-    if (hasBands != hasDocs)
+    val (idxBands, idxDocs) = (BucketedIndex.read(spark, s"$indexDir/bands"),
+      BucketedIndex.read(spark, s"$indexDir/docs"))
+    if (idxBands.isDefined != idxDocs.isDefined)
       throw new IllegalStateException(
-        s"near-dup index at $indexDir is corrupt: bands=$hasBands docs=$hasDocs " +
-          "(cold start is BOTH missing; a seeded index has both)")
-    if (hasBands) requireNearDupLayout(spark, indexDir)
+        s"near-dup index at $indexDir is corrupt: bands=${idxBands.isDefined} " +
+          s"docs=${idxDocs.isDefined} (cold start is BOTH missing; a seeded " +
+          "index has both)")
+    if (idxBands.isDefined)
+      BucketedIndex.requireLayout(spark, indexDir, NearDupIndex)
     val batchToks = intra.select(col(idCol).as("__bid"),
       Text.tokens(col(textCol)).as("__btoks"))
     // empty-index fallbacks borrow the batch side's schema (same shape)
-    val idxBands =
-      if (hasBands) spark.read.parquet(s"$indexDir/bands")
-      else batchBands.select(col("__bid").as("id"), col("band"), col("bucket")).limit(0)
-    val cand = batchBands.join(idxBands, Seq("band", "bucket"))
+    val cand = batchBands.join(idxBands.getOrElse(batchBands
+        .select(col("__bid").as("id"), col("band"), col("bucket")).limit(0)),
+        Seq("band", "bucket"))
       .select(col("__bid"), col("id").as("__iid")).distinct()
-    val idxToks =
-      if (hasDocs) spark.read.parquet(s"$indexDir/docs")
-        .select(col("id").as("__iid"), col("toks").as("__itoks"))
-      else batchToks.select(col("__bid").as("__iid"), col("__btoks").as("__itoks")).limit(0)
+    val idxToks = idxDocs.getOrElse(batchToks
+        .select(col("__bid").as("id"), col("__btoks").as("toks")).limit(0))
+      .select(col("id").as("__iid"), col("toks").as("__itoks"))
     val dropped = cand
       .join(batchToks, Seq("__bid"))
       .join(idxToks, Seq("__iid"))
@@ -1197,178 +1011,98 @@ object Dedup {
   }
 
   /** Append surviving batch docs to the near-dup index — bands and token
-    * arrays both, delta materialized BEFORE touching `indexDir` (same
-    * read-then-write discipline as [[appendFingerprintIndex]]; single
-    * writer by contract). Cost ∝ batch. */
+    * arrays both, batch-proportional; a missing index is the streaming
+    * cold start and this append seeds it ([[BucketedIndex.append]]). */
   def appendNearDupIndex(survivors: DataFrame, idCol: String, textCol: String,
                          indexDir: String, shingleN: Int = 3,
                          numHashes: Int = 32, bands: Int = 8,
-                         storeBuckets: Int = 64): Unit = {
-    val spark = survivors.sparkSession
-    val bandsPath = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-    val coldStart = !bandsPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(bandsPath)
-    if (!coldStart) requireNearDupLayout(spark, indexDir)
-    val sb = graft.sources.IO.readBucketCount(survivors.sparkSession, indexDir)
-      .getOrElse(storeBuckets)
-    val sigs = minhashSignatures(survivors, idCol, textCol, shingleN, numHashes, bands)
-    val bandDelta = sigs.select(col(idCol).as("id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .withColumn("__bucket", idBucket(col("id"), sb))
-      .localCheckpoint(true)
-    val docDelta = survivors.select(col(idCol).as("id"),
-        Text.tokens(col(textCol)).as("toks"))
-      .withColumn("__bucket", idBucket(col("id"), sb))
-      .localCheckpoint(true)
-    // an EMPTY partitioned append writes no data files: on a warm index
-    // that is a harmless no-op, but on a COLD start it would create
-    // bands/docs dirs holding only _SUCCESS — the next batch's exists()
-    // check then reads a schema-less dir and dies (the diversityGateSink
-    // r16 lesson). Empty batch ⇒ no writes, no sidecars: the index
-    // simply does not exist yet, which is the documented cold-start
-    // contract of every consumer.
-    if (docDelta.isEmpty) return
-    graft.sources.IO.alignToPartitions(bandDelta, "__bucket")
-      .write.mode("append").partitionBy("__bucket")
-      .parquet(s"$indexDir/bands")
-    graft.sources.IO.alignToPartitions(docDelta, "__bucket")
-      .write.mode("append").partitionBy("__bucket")
-      .parquet(s"$indexDir/docs")
-    if (coldStart) {
-      // this append SEEDED the index — stamp the sidecars the same way
-      // writeNearDupIndex does, so later verbs can verify the layout
-      // and discover the pinned bucket count
-      graft.sources.IO.writeBucketCount(spark, indexDir, sb)
-      graft.sources.IO.writeLayoutVersion(spark, indexDir, NearDupLayoutVersion)
-    }
-  }
+                         storeBuckets: Int = 64): Unit =
+    BucketedIndex.append(NearDupIndex, indexDir, storeBuckets,
+      nearDupRows(survivors, idCol, textCol, shingleN, numHashes, bands): _*)
 
   /** Incremental exact dedup of an ingest batch against the persisted
     * fingerprint index: (1) intra-batch dedup — keep the minimum-id row
     * per fingerprint (one keyed shuffle over the BATCH only); (2) drop
     * rows whose fingerprint is already in the index (anti-join; the
     * index side is fingerprints only, so AQE broadcasts it while it
-    * fits and degrades to a keyed shuffle — never a corpus scan).
+    * fits and degrades to a keyed shuffle — never a corpus scan). A
+    * missing index is the cold start (intra-batch dedup only).
     * Returns the surviving batch rows; call [[appendFingerprintIndex]]
     * with the survivors afterwards to advance the index. */
   def dedupAgainstIndex(batch: DataFrame, idCol: String, textCol: String,
                         indexDir: String): DataFrame = {
-    val spark = batch.sparkSession
-    val idx = spark.read.parquet(indexDir).select("fp")
     // r18 note: a fanOut before this md5 pass was A/B-measured WORSE
     // (ON 1.80 / OFF 1.34 with the write-side fanOut already reverted):
     // the __fp window shuffle right below already spreads the work, so
     // the extra exchange only adds cost. Kept on the scan partitioning.
     val withFp = batch.withColumn("__fp", Text.fingerprint(col(textCol)))
     val w = Window.partitionBy(col("__fp")).orderBy(col(idCol))
-    withFp
+    val intra = withFp
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .join(idx, withFp("__fp") === idx("fp"), "left_anti")
+    BucketedIndex.read(batch.sparkSession, indexDir).map(_.select("fp"))
+      .fold(intra)(idx => intra.join(idx, withFp("__fp") === idx("fp"), "left_anti"))
       .drop("__fp", "__rn")
   }
 
+  /** The first-seen gram index's [[BucketedIndex]] layout — (sh,
+    * first_window) rows bucketed by `pmod(sh, n)`; the counted gram
+    * ledger shares it. [[graft.sources.IO.noveltyAuditSink]] appends
+    * in the same layout. */
+  private[graft] val GramIndex = BucketedIndex.Layout(col("sh"))
+
+  /** The first-seen fingerprint index's [[BucketedIndex]] layout —
+    * (fp, first_window) rows bucketed by `pmod(xxhash64(fp), n)`;
+    * [[graft.sources.IO.dupRateAuditSink]] appends in the same layout. */
+  private[graft] val FpFirstSeenIndex = BucketedIndex.Layout(xxhash64(col("fp")))
+
   /** Batch seeder for the first-seen GRAM INDEX
     * ([[graft.sources.IO.noveltyAuditSink]]'s serving artifact — same
-    * layout: distinct (sh, first_window) bucketed by `pmod(sh,
-    * buckets)` with the bucket-count sidecar, so a sink started on a
-    * seeded index appends straight onto it): the cold-start path a
-    * pipeline runs ONCE over its existing corpus before pointing the
-    * live novelty monitor — or [[noveltyAgainstGramIndex]] — at it.
-    * All grams stamp the caller's `asOf` (they were first seen no
-    * later than the seed corpus). */
+    * layout, so a sink started on a seeded index appends straight onto
+    * it): the cold-start path a pipeline runs ONCE over its existing
+    * corpus before pointing the live novelty monitor — or
+    * [[noveltyAgainstGramIndex]] — at it. All grams stamp the caller's
+    * `asOf` (they were first seen no later than the seed corpus). A
+    * gram-less corpus seeds "no index yet". */
   def writeGramIndex(docs: DataFrame, textCol: String, indexDir: String,
                      asOf: java.sql.Timestamp,
-                     buckets: Int = 64): Unit = {
-    val grams = docs
+                     buckets: Int = 64): Unit =
+    BucketedIndex.seed(GramIndex, indexDir, buckets, docs
       .select(explode(shingleSet(3)(Text.tokens(col(textCol))))
         .as("sh_str"))
       .select(xxhash64(col("sh_str")).as("sh")).distinct()
-    // empty-seed guard (ADVICE r16) — a gram-less corpus (empty, or
-    // every doc under the shingle window) seeds "no index yet"
-    if (grams.isEmpty) {
-      graft.sources.IO.deleteDir(docs.sparkSession, indexDir); return
-    }
-    grams
-      .withColumn("first_window", lit(asOf))
-      .withColumn("__bucket", pmod(col("sh"), lit(buckets.toLong)))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(indexDir)
-    graft.sources.IO.writeBucketCount(docs.sparkSession, indexDir, buckets)
-  }
+      .withColumn("first_window", lit(asOf)))
 
   /** Batch seeder for the first-seen FINGERPRINT INDEX
     * ([[graft.sources.IO.dupRateAuditSink]]'s serving artifact — same
-    * layout: distinct (fp, first_window) bucketed by
-    * `pmod(xxhash64(fp), buckets)` with the bucket-count sidecar, so a
-    * sink started on a seeded index appends straight onto it): the
-    * cold-start path a pipeline runs ONCE over its existing corpus
-    * before pointing the live duplication-rate monitor at it — after
-    * which every already-ingested content arriving again reads as a
-    * duplicate instead of a fresh canonical. All fingerprints stamp the
-    * caller's `asOf` (the [[writeGramIndex]] contract). */
+    * layout, so a sink started on a seeded index appends straight onto
+    * it): the cold-start path a pipeline runs ONCE over its existing
+    * corpus before pointing the live duplication-rate monitor at it —
+    * after which every already-ingested content arriving again reads as
+    * a duplicate instead of a fresh canonical. All fingerprints stamp
+    * the caller's `asOf` (the [[writeGramIndex]] contract). */
   def writeFpFirstSeenIndex(docs: DataFrame, textCol: String,
                             indexDir: String, asOf: java.sql.Timestamp,
-                            buckets: Int = 64): Unit = {
-    val fps = docs.select(md5(col(textCol)).as("fp")).distinct()
-    // empty-seed guard (ADVICE r16) — the writeFingerprintIndex note
-    if (fps.isEmpty) {
-      graft.sources.IO.deleteDir(docs.sparkSession, indexDir); return
-    }
-    fps
-      .withColumn("first_window", lit(asOf))
-      .withColumn("__bucket", pmod(xxhash64(col("fp")), lit(buckets.toLong)))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(indexDir)
-    graft.sources.IO.writeBucketCount(docs.sparkSession, indexDir, buckets)
-  }
+                            buckets: Int = 64): Unit =
+    BucketedIndex.seed(FpFirstSeenIndex, indexDir, buckets,
+      docs.select(md5(col(textCol)).as("fp")).distinct()
+        .withColumn("first_window", lit(asOf)))
 
   /** TAKEDOWN verb for the first-seen FINGERPRINT INDEX — completes the
     * [[graft.sources.IO.dupRateAuditSink]] artifact's verb set
-    * (seed / per-batch append / delete; VERDICT r15 #3, the last
-    * persisted artifact without the delete==rebuild law). Removes the
-    * content fingerprints of `deletedDocs` from the census: the index
-    * is a one-way fp → first_window map with no doc attribution, so a
+    * (seed / per-batch append / delete). Removes the content
+    * fingerprints of `deletedDocs` from the census: the index is a
+    * one-way fp → first_window map with no doc attribution, so a
     * content-level takedown means its fingerprint leaves the census
     * entirely — a re-arrival of the same content afterwards reads as a
     * FRESH canonical (stamped with its new window), exactly the rebuild
     * semantics (replaying the ingest without the deleted contents
     * yields this index, since each fp row is independent of every
-    * other). Touched buckets come from a semi-join against the index,
-    * so replaying a delete (or deleting unknown contents) finds nothing
-    * and writes nothing; untouched bucket directories stay
-    * byte-identical (the [[deleteFromFingerprintIndex]] discipline —
-    * dynamic partition overwrite of only the touched buckets, emptied
-    * buckets dropped). Returns the touched bucket ids (the cost
-    * witness). Single writer by contract, like the sink's append. */
+    * other; [[BucketedIndex.delete]]). Returns the touched bucket ids. */
   def deleteFromFpFirstSeenIndex(deletedDocs: DataFrame, textCol: String,
-                                 indexDir: String): Seq[Long] = {
-    val spark = deletedDocs.sparkSession
-    val fps = deletedDocs.select(md5(col(textCol)).as("fp"))
-      .distinct().localCheckpoint(eager = true)
-    try {
-      val idx = spark.read.parquet(indexDir)
-        .select(col("fp"), col("first_window"),
-          col("__bucket").cast("long").as("__bucket"))
-      val touched = idx.join(fps, Seq("fp"), "left_semi")
-        .select("__bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= buckets ids
-      if (touched.isEmpty) return touched // replay / unknown: zero writes
-      val remaining = idx.filter(col("__bucket").isin(touched: _*))
-        .join(fps, Seq("fp"), "left_anti")
-        .localCheckpoint(eager = true) // pin before overwriting the source
-      try {
-        graft.sources.IO.alignToPartitions(remaining, "__bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__bucket").parquet(indexDir)
-        val written = remaining.select("__bucket").distinct()
-          .collect().map(_.getLong(0)).toSet // bounded: <= buckets ids
-        dropEmptiedPartitions(spark, indexDir, "__bucket", touched, written)
-      } finally Checkpoints.drop(remaining)
-      touched
-    } finally Checkpoints.drop(fps)
-  }
+                                 indexDir: String): Seq[Long] =
+    BucketedIndex.delete(FpFirstSeenIndex, indexDir,
+      deletedDocs.select(md5(col(textCol)).as("fp")))
 
   /** Per-doc MARGINAL NOVELTY of a batch against a persisted gram
     * index — the data-ACQUISITION diligence primitive: before paying
@@ -1386,22 +1120,24 @@ object Dedup {
     * per-doc fold — the `q_dedup_ngram` shuffle class, never all-pairs. */
   def noveltyAgainstGramIndex(batch: DataFrame, idCol: String,
                               textCol: String,
-                              gramIndexDir: String): DataFrame = {
-    val spark = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(gramIndexDir)
-    val exists =
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+                              gramIndexDir: String): DataFrame =
+    noveltyAgainst(batch, idCol, textCol,
+      BucketedIndex.read(batch.sparkSession, gramIndexDir))
+
+  /** The per-doc novelty fold behind both gram-index probes: `known`
+    * carries an `sh` column; None (cold start) makes every gram novel. */
+  private def noveltyAgainst(batch: DataFrame, idCol: String,
+                             textCol: String,
+                             known: Option[DataFrame]): DataFrame = {
     val sh = batch
       .select(col(idCol),
         explode(shingleSet(3)(Text.tokens(col(textCol)))).as("sh_str"))
       .select(col(idCol), xxhash64(col("sh_str")).as("sh"))
-    val joined =
-      if (exists)
-        sh.join(spark.read.parquet(gramIndexDir)
-            .select(col("sh")).distinct().withColumn("__known", lit(1)),
+    known.fold(sh.withColumn("__known", lit(null).cast("int"))) { k =>
+        sh.join(k.select(col("sh")).distinct().withColumn("__known", lit(1)),
           Seq("sh"), "left")
-      else sh.withColumn("__known", lit(null).cast("int"))
-    joined.groupBy(idCol)
+      }
+      .groupBy(idCol)
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("__known").isNull, 1L).otherwise(0L)).as("n_novel"))
       .withColumn("novelty_ppm",
@@ -1423,8 +1159,7 @@ object Dedup {
   // the view, and one first seen only via retired docs re-attributes to
   // its earliest SURVIVING window — exactly rebuild semantics
   // (delete == rebuild law in ScalePathSpec). [[compactGramIndexCounted]]
-  // folds the ledger back to one row per live (sh, window) behind the
-  // write-tmp → swap discipline.
+  // folds the ledger back to one row per live (sh, window).
 
   /** Per-doc-distinct gram doc-counts of a corpus slice: (sh, n_docs).
     * `shingleSet` is per-doc DISTINCT, so the count counts docs. */
@@ -1439,39 +1174,17 @@ object Dedup {
     * `asOf` — the [[writeGramIndex]] twin with doc-counts kept. */
   def writeGramIndexCounted(docs: DataFrame, idCol: String, textCol: String,
                             indexDir: String, asOf: java.sql.Timestamp,
-                            buckets: Int = 64): Unit = {
-    val counts = gramDocCounts(docs, idCol, textCol)
-    // empty-seed guard (VERDICT r16 #4 — the r16 append guard, mirrored
-    // at the seed verb): a gram-less corpus seeds "no index yet"
-    if (counts.isEmpty) {
-      graft.sources.IO.deleteDir(docs.sparkSession, indexDir); return
-    }
-    counts
-      .withColumn("window_start", lit(asOf))
-      .withColumn("__bucket", pmod(col("sh"), lit(buckets.toLong)))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(indexDir)
-    graft.sources.IO.writeBucketCount(docs.sparkSession, indexDir, buckets)
-  }
+                            buckets: Int = 64): Unit =
+    BucketedIndex.seed(GramIndex, indexDir, buckets,
+      gramDocCounts(docs, idCol, textCol).withColumn("window_start", lit(asOf)))
 
   /** Ledger-append one admitted batch (window `asOf`) to the counted
     * index. Cost ∝ the batch's gram count — the index is never read. */
   def appendGramIndexCounted(docs: DataFrame, idCol: String, textCol: String,
                              indexDir: String,
-                             asOf: java.sql.Timestamp): Unit = {
-    val spark = docs.sparkSession
-    val b = graft.sources.IO.readBucketCount(spark, indexDir)
-      .getOrElse(64)
-    val delta = gramDocCounts(docs, idCol, textCol)
-      .withColumn("window_start", lit(asOf))
-      .withColumn("__bucket", pmod(col("sh"), lit(b.toLong)))
-      .localCheckpoint(eager = true)
-    // cold-start empty-append guard (the appendNearDupIndex note): a
-    // gram-less batch must not manufacture a schema-less index dir
-    if (delta.isEmpty) return
-    graft.sources.IO.alignToPartitions(delta, "__bucket")
-      .write.mode("append").partitionBy("__bucket").parquet(indexDir)
-  }
+                             asOf: java.sql.Timestamp): Unit =
+    BucketedIndex.append(GramIndex, indexDir, 64,
+      gramDocCounts(docs, idCol, textCol).withColumn("window_start", lit(asOf)))
 
   /** Doc-level TAKEDOWN from the counted gram index: append NEGATED
     * doc-counts for the retired docs, at the window they were admitted
@@ -1485,23 +1198,17 @@ object Dedup {
     * verb here). */
   def deleteFromGramIndexCounted(docs: DataFrame, idCol: String,
                                  textCol: String, indexDir: String,
-                                 window: java.sql.Timestamp): Unit = {
-    val spark = docs.sparkSession
-    val b = graft.sources.IO.readBucketCount(spark, indexDir)
-      .getOrElse(64)
-    gramDocCounts(docs, idCol, textCol)
-      .select(col("sh"), (-col("n_docs")).as("n_docs"))
-      .withColumn("window_start", lit(window))
-      .withColumn("__bucket", pmod(col("sh"), lit(b.toLong)))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("append").partitionBy("__bucket").parquet(indexDir)
-  }
+                                 window: java.sql.Timestamp): Unit =
+    BucketedIndex.append(GramIndex, indexDir, 64,
+      gramDocCounts(docs, idCol, textCol)
+        .select(col("sh"), (-col("n_docs")).as("n_docs"))
+        .withColumn("window_start", lit(window)))
 
   /** Live view of the counted ledger: one row per (sh, window_start)
     * with a POSITIVE surviving doc-count. */
   def liveGramIndexCounted(spark: org.apache.spark.sql.SparkSession,
                            indexDir: String): DataFrame =
-    spark.read.parquet(indexDir)
+    graft.sources.IO.readArtifact(spark, indexDir)
       .groupBy("sh", "window_start")
       .agg(sum(col("n_docs")).as("n_docs"))
       .filter(col("n_docs") > 0L)
@@ -1523,52 +1230,28 @@ object Dedup {
                                      textCol: String,
                                      indexDir: String): DataFrame = {
     val spark = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val exists =
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    val sh = batch
-      .select(col(idCol),
-        explode(shingleSet(3)(Text.tokens(col(textCol)))).as("sh_str"))
-      .select(col(idCol), xxhash64(col("sh_str")).as("sh"))
-    val joined =
-      if (exists)
-        sh.join(liveGramIndexCounted(spark, indexDir)
-            .select(col("sh")).distinct().withColumn("__known", lit(1)),
-          Seq("sh"), "left")
-      else sh.withColumn("__known", lit(null).cast("int"))
-    joined.groupBy(idCol)
-      .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("__known").isNull, 1L).otherwise(0L)).as("n_novel"))
-      .withColumn("novelty_ppm",
-        Analytics.halfUpPpm(col("n_novel"), col("n_grams")))
+    noveltyAgainst(batch, idCol, textCol,
+      Option.when(BucketedIndex.exists(spark, indexDir))(
+        liveGramIndexCounted(spark, indexDir)))
   }
 
   /** Fold the ledger to its live view on disk — one row per surviving
     * (sh, window), the delta/tombstone rows appends and takedowns
     * accumulate reclaimed. View-identical by construction
-    * (ScalePathSpec law). The [[deleteFromFingerprintIndex]] rewrite
-    * discipline: merged rows pinned BEFORE the dynamic-partition
-    * overwrite touches their own input path, then buckets the fold
-    * emptied entirely (every gram taken down) are dropped explicitly —
-    * dynamic overwrite only replaces partitions present in the output. */
+    * (ScalePathSpec law): every bucket is touched, the merged rows are
+    * pinned before they overwrite their own input, and a bucket the
+    * fold emptied is dropped ([[BucketedIndex.rewrite]]). */
   def compactGramIndexCounted(spark: org.apache.spark.sql.SparkSession,
                               indexDir: String): Unit = {
     val b = graft.sources.IO.readBucketCount(spark, indexDir).getOrElse(64)
-    val touched = spark.read.parquet(indexDir)
+    val touched = graft.sources.IO.readArtifact(spark, indexDir)
       .select(col("__bucket").cast("long").as("__bucket")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= buckets ids
     val merged = liveGramIndexCounted(spark, indexDir)
       .withColumn("__bucket", pmod(col("sh"), lit(b.toLong)))
       .localCheckpoint(eager = true) // pin before overwriting the source path
-    try {
-      graft.sources.IO.alignToPartitions(merged, "__bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket").parquet(indexDir)
-      val written = merged.select("__bucket").distinct()
-        .collect().map(_.getLong(0)).toSet // bounded: <= buckets ids
-      dropEmptiedPartitions(spark, indexDir, "__bucket", touched, written)
-    } finally Checkpoints.drop(merged)
+    try BucketedIndex.rewrite(merged, indexDir, touched)
+    finally Checkpoints.drop(merged)
   }
 
   /** Connected components over an undirected pair list: every vertex gets
@@ -1866,50 +1549,62 @@ object Dedup {
     relabeled.unionByName(newLabeled)
   }
 
+  /** The bucketed components store's [[BucketedIndex]] layout: (id,
+    * label) rows bucketed by `pmod(label, n)`. */
+  private val ComponentsStore = BucketedIndex.Layout(col("label"))
+
   /** BUCKETED persisted components store — the layout that makes
     * [[componentsMerge]]'s relabel pass batch-proportional at 100 TB:
-    * the (id, label) labeling lives as parquet partitioned by
-    * `__bucket = pmod(label, buckets)`, and a merge REWRITES ONLY the
-    * buckets whose labels changed (dynamic partition overwrite — the
-    * [[graft.operators.Similarity.ivfAppendIndex]] discipline) instead
-    * of snapshotting the whole labeling. Rows move buckets when their
+    * the (id, label) labeling lives in the label-bucketed
+    * [[BucketedIndex]] layout, and a merge REWRITES ONLY the buckets
+    * whose labels changed ([[BucketedIndex.rewrite]]) instead of
+    * snapshotting the whole labeling. Rows move buckets when their
     * component merges (the new minimum can hash elsewhere), so the
     * touched set is old ∪ new buckets of every changed component, plus
-    * the new nodes' buckets; a bucket emptied by the move is deleted
-    * explicitly (dynamic overwrite only rewrites partitions present in
-    * the OUTPUT — the ivfReembed emptied-list guard). Read side: the
-    * batch contraction joins the full store by id (a hash join — reads
-    * prune nothing, which is fine; the WIN is the write side, where
-    * history volume no longer gets rewritten per batch). Single writer
-    * per store by contract. */
+    * the new nodes' buckets. Read side: the batch contraction joins the
+    * full store by id (a hash join — reads prune nothing, which is fine;
+    * the WIN is the write side, where history volume no longer gets
+    * rewritten per batch). An empty labeling seeds "no store yet", which
+    * [[readComponentsStore]] reads as empty. */
   def writeComponentsStore(labels: DataFrame, dir: String,
                            buckets: Int = 64): Unit = {
     require(buckets >= 1, s"buckets must be positive, got $buckets")
-    labels.select(col("id").cast("long").as("id"),
-        col("label").cast("long").as("label"),
-        pmod(col("label").cast("long"), lit(buckets.toLong)).as("__bucket"))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(dir)
-    graft.sources.IO.writeBucketCount(labels.sparkSession, dir, buckets)
+    BucketedIndex.seed(ComponentsStore, dir, buckets,
+      labels.select(col("id").cast("long").as("id"),
+        col("label").cast("long").as("label")))
   }
 
-  /** Load the full labeling from a bucketed store (drops the bucket
-    * column — it is derivable). The schema is DECLARED, not inferred:
-    * a freshly seeded EMPTY store (the streaming cold start) has no
-    * data files to infer from. */
+  /** Load the full labeling from a store of either layout (drops the
+    * bucket column — it is derivable). The schema is DECLARED, not
+    * inferred; a missing store is the cold start and reads empty. */
   def readComponentsStore(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.read.schema(StructType(Seq(
-        StructField("id", LongType), StructField("label", LongType))))
-      .parquet(dir).select(col("id"), col("label"))
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("label", LongType)))
+    if (BucketedIndex.exists(spark, dir))
+      spark.read.schema(schema).parquet(dir).select(col("id"), col("label"))
+    else spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+  }
+
+  /** [[connectedComponents]] pinned, with the working checkpoints it
+    * leaves under its lazy result released — for callers that drop the
+    * pin themselves. */
+  private def pinnedComponents(pairs: DataFrame): DataFrame = {
+    val cc = connectedComponents(pairs)
+    val pinned = cc.localCheckpoint(eager = true)
+    Checkpoints.drop(cc)
+    pinned
   }
 
   /** Fold a batch of edges into the bucketed store IN PLACE: same
     * semantics as [[componentsMerge]] (ScalePathSpec pins relation
     * equality), but only the touched label-buckets rewrite. Returns the
     * touched bucket ids (the cost witness the spec asserts on — and
-    * that untouched bucket directories stay byte-identical). */
+    * that untouched bucket directories stay byte-identical). Every
+    * block it pins is released on every exit, the replayed no-op
+    * batch's included. */
   def mergeIntoComponentsStore(batch: DataFrame, dir: String,
                                idA: String = "id_a", idB: String = "id_b",
                                buckets: Int = 64): Seq[Long] = {
@@ -1923,8 +1618,6 @@ object Dedup {
     // min(label) here makes every merge read a clean labeling and
     // physically repairs the duplicate whenever its bucket rewrites.
     val lab = readComponentsStore(spark, dir)
-      .select(col("id").cast("long").as("id"),
-        col("label").cast("long").as("label"))
       .groupBy("id").agg(min("label").as("label"))
     val e = batch.select(col(idA).cast("long").as("ea"),
       col(idB).cast("long").as("eb"))
@@ -1936,51 +1629,39 @@ object Dedup {
       .select(coalesce(col("la"), col("ea")).as("id_a"),
         coalesce(col("lb"), col("eb")).as("id_b"))
       .localCheckpoint(eager = true)
-    val remap = connectedComponents(contracted)
-      .localCheckpoint(eager = true) // (old representative | new node) -> label
-    // changed components + new nodes decide the touched buckets
-    val changed = remap.where(col("id") =!= col("label"))
-    val bkt = (c: org.apache.spark.sql.Column) =>
-      pmod(c, lit(b.toLong))
-    val touched = changed.select(bkt(col("id")).as("b"))
-      .union(changed.select(bkt(col("label")).as("b")))
-      .union(remap.join(lab.select(col("id")), Seq("id"), "left_anti")
-        .select(bkt(col("label")).as("b")))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted // bounded: <= `buckets` ids
-    if (touched.isEmpty) return touched // replay/no-op batch: zero writes
-    // rows to rewrite: everything in the touched buckets, relabeled,
-    // plus the new nodes — pinned BEFORE overwriting the partitions it
-    // reads (the read-write-cycle break)
-    val inTouched = lab.where(bkt(col("label")).isin(touched: _*))
-      .join(remap.select(col("id").as("label"), col("label").as("__nl")),
-        Seq("label"), "left")
-      .select(col("id"), coalesce(col("__nl"), col("label")).as("label"))
-    val newNodes = contracted
-      .select(col("id_a").as("id")).union(contracted.select(col("id_b").as("id")))
-      .distinct()
-      .join(lab.select(col("id")), Seq("id"), "left_anti")
-      .join(remap, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    val pinned = inTouched.unionByName(newNodes)
-      .select(col("id"), col("label"), bkt(col("label")).as("__bucket"))
-      .localCheckpoint(eager = true)
-    graft.sources.IO.alignToPartitions(pinned, "__bucket")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(dir)
-    // a bucket whose every row moved elsewhere is absent from the
-    // output and survives dynamic overwrite — delete it explicitly
-    val written = pinned.select("__bucket").distinct()
-      .collect().map(_.getLong(0)).toSet // bounded: <= `buckets` ids
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(written).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(base, s"__bucket=$b"), true)
-    }
-    Checkpoints.drop(pinned)
-    Checkpoints.drop(remap)
-    Checkpoints.drop(contracted)
-    touched
+    try {
+      // (old representative | new node) -> label
+      val remap = pinnedComponents(contracted)
+      try {
+        // changed components + new nodes decide the touched buckets
+        val changed = remap.where(col("id") =!= col("label"))
+        val bkt = (c: Column) => pmod(c, lit(b.toLong))
+        val touched = changed.select(bkt(col("id")).as("b"))
+          .union(changed.select(bkt(col("label")).as("b")))
+          .union(remap.join(lab.select(col("id")), Seq("id"), "left_anti")
+            .select(bkt(col("label")).as("b")))
+          .distinct().collect().map(_.getLong(0)).toSeq.sorted // bounded: <= `buckets` ids
+        if (touched.isEmpty) return touched // replay/no-op batch: zero writes
+        // rows to rewrite: everything in the touched buckets, relabeled,
+        // plus the new nodes
+        val inTouched = lab.where(bkt(col("label")).isin(touched: _*))
+          .join(remap.select(col("id").as("label"), col("label").as("__nl")),
+            Seq("label"), "left")
+          .select(col("id"), coalesce(col("__nl"), col("label")).as("label"))
+        val newNodes = contracted
+          .select(col("id_a").as("id")).union(contracted.select(col("id_b").as("id")))
+          .distinct()
+          .join(lab.select(col("id")), Seq("id"), "left_anti")
+          .join(remap, Seq("id"), "left")
+          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+        val pinned = inTouched.unionByName(newNodes)
+          .select(col("id"), col("label"), bkt(col("label")).as("__bucket"))
+          .localCheckpoint(eager = true)
+        try BucketedIndex.rewrite(pinned, dir, touched)
+        finally Checkpoints.drop(pinned)
+        touched
+      } finally Checkpoints.drop(remap)
+    } finally Checkpoints.drop(contracted)
   }
 
   /** Measured-size gate for the components-store write strategy
@@ -2106,8 +1787,7 @@ object Dedup {
             .join(members.select(col("id").as("ea")), Seq("ea"), "left_semi")
             .join(members.select(col("id").as("eb")), Seq("eb"), "left_semi")
             .select(col("ea").as("id_a"), col("eb").as("id_b"))
-          val relab = connectedComponents(affEdges)
-            .localCheckpoint(eager = true)
+          val relab = pinnedComponents(affEdges)
           try {
             val newRows = members
               .join(relab, Seq("id"), "left")
@@ -2127,15 +1807,8 @@ object Dedup {
               val pinned = inTouched.unionByName(newRows)
                 .select(col("id"), col("label"), bkt(col("label")).as("__bucket"))
                 .localCheckpoint(eager = true)
-              try {
-                graft.sources.IO.alignToPartitions(pinned, "__bucket")
-                  .write.mode("overwrite")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy("__bucket").parquet(dir)
-                val written = pinned.select("__bucket").distinct()
-                  .collect().map(_.getLong(0)).toSet // bounded: <= buckets ids
-                dropEmptiedPartitions(spark, dir, "__bucket", touched, written)
-              } finally Checkpoints.drop(pinned)
+              try BucketedIndex.rewrite(pinned, dir, touched)
+              finally Checkpoints.drop(pinned)
               touched
             } else {
               val out = lab.join(affected, Seq("label"), "left_anti")

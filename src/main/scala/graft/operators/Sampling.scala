@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.BucketedIndex
 
 /** Sampling / dataset-split operators for training-data pipelines
   * (SURVEY.md §2.K extensions; driver brief "operations a large-scale
@@ -327,43 +328,32 @@ object Sampling {
       .drop("__emb", "__kept")
   }
 
+  /** The bucket-membership index's [[BucketedIndex]] layout: (bucket,
+    * id) rows bucketed by `pmod(xxhash64(bucket), n)` — what the
+    * diversity gate appends. */
+  private[graft] val BucketMembershipIndex =
+    BucketedIndex.Layout(xxhash64(col("bucket")))
+
   /** Batch seeder for the diversity gate's BUCKET-MEMBERSHIP index
     * ([[graft.sources.IO.diversityGateSink]]'s serving artifact — same
-    * layout: (bucket, id) rows partitioned by
-    * `__bucket = pmod(xxhash64(bucket), buckets)` with the bucket-count
-    * sidecar, so a gate started on a seeded index appends straight onto
+    * layout, so a gate started on a seeded index appends straight onto
     * it): the cold-start path a pipeline runs ONCE over its existing
     * corpus before pointing the live gate at it — after which every
     * bucket's budget is billed for what the corpus already holds. The
     * id attribution (vs a cheaper count census) is deliberate: it buys
     * the row-targeted, replay-idempotent takedown verb below, the
     * fp-first-seen lesson applied at build time. Ids must be integral
-    * (the diversityCapRanked contract). */
+    * (the diversityCapRanked contract). An empty relation seeds "no
+    * index yet". */
   def writeBucketMembershipIndex(vecs: DataFrame, idCol: String,
                                  embCol: String, indexDir: String,
-                                 buckets: Int = 64): Unit = {
-    val rows = vecs.select(diversityBucket(col(embCol)).as("bucket"),
-      col(idCol).cast("long").as("id"))
-    // empty-seed guard (ADVICE r16): seeding from an empty relation
-    // must leave the documented cold-start state ("no index yet" — a
-    // MISSING dir), never a schema-less partitioned dir (_SUCCESS +
-    // sidecar only) that passes the gate's exists() check and poisons
-    // its occupancy read with UNABLE_TO_INFER_SCHEMA. A limit-1 probe,
-    // not a localCheckpoint pin: the seeded relation is corpus-sized
-    // (this verb runs once per corpus) and the probe short-circuits.
-    if (rows.isEmpty) {
-      graft.sources.IO.deleteDir(vecs.sparkSession, indexDir); return
-    }
-    rows
-      .withColumn("__bucket",
-        pmod(xxhash64(col("bucket")), lit(buckets.toLong)))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(indexDir)
-    graft.sources.IO.writeBucketCount(vecs.sparkSession, indexDir, buckets)
+                                 buckets: Int = 64): Unit =
     // seed the occupancy census too, so a gate started on this index
     // never scans the id-attributed rows for occupancy (ADVICE r16)
-    writeBucketCensus(vecs.sparkSession, indexDir)
-  }
+    if (BucketedIndex.seed(BucketMembershipIndex, indexDir, buckets,
+        vecs.select(diversityBucket(col(embCol)).as("bucket"),
+          col(idCol).cast("long").as("id"))))
+      writeBucketCensus(vecs.sparkSession, indexDir)
 
   /** Location of the bucket-membership index's OCCUPANCY CENSUS — a
     * ≤ 2^planes-row (bucket, n_occ) sidecar the live gate reads instead
@@ -389,7 +379,8 @@ object Sampling {
   def writeBucketCensus(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String): Unit =
     graft.sources.IO.swapWrite(
-      censusOf(spark.read.parquet(indexDir).select("bucket", "id")),
+      censusOf(graft.sources.IO.readArtifact(spark, indexDir)
+        .select("bucket", "id")),
       censusDir(indexDir))
 
   /** Live occupancy of a bucket-membership index — what the diversity
@@ -401,13 +392,8 @@ object Sampling {
   def readBucketOccupancy(spark: org.apache.spark.sql.SparkSession,
                           indexDir: String): DataFrame =
     graft.sources.IO.readSwapped(spark, censusDir(indexDir))
-      .orElse {
-        val p = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p))
-          Some(censusOf(spark.read.parquet(indexDir).select("bucket", "id")))
-        else None
-      }
+      .orElse(BucketedIndex.read(spark, indexDir)
+        .map(idx => censusOf(idx.select("bucket", "id"))))
       .getOrElse(spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
@@ -437,49 +423,20 @@ object Sampling {
     * must FREE its semantic bucket's budget, not just leave the corpus:
     * after the delete, the gate's occupancy fold no longer bills the
     * removed ids, so fresh arrivals in that region are admitted again
-    * (delete == rebuild-without-the-ids, the gate-facing consequence).
-    * The [[graft.operators.Dedup.deleteFromFingerprintIndex]]
-    * discipline verbatim: touched buckets from a semi-join witness,
-    * dynamic partition overwrite of only those buckets, emptied bucket
-    * directories dropped, replay (or unknown ids) a zero-write no-op.
-    * Returns the touched storage-bucket ids (the cost witness). Single
-    * writer by contract, like the gate's append. */
+    * (delete == rebuild-without-the-ids, the gate-facing consequence;
+    * [[BucketedIndex.delete]]). Returns the touched storage-bucket ids
+    * (the cost witness). */
   def deleteFromBucketMembershipIndex(ids: DataFrame, idCol: String,
                                       indexDir: String): Seq[Long] = {
-    val spark = ids.sparkSession
-    val del = ids.select(col(idCol).cast("long").as("id"))
-      .distinct().localCheckpoint(eager = true)
-    try {
-      val idx = spark.read.parquet(indexDir)
-        .select(col("bucket"), col("id"),
-          col("__bucket").cast("long").as("__bucket"))
-      val touched = idx.join(del, Seq("id"), "left_semi")
-        .select("__bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= buckets ids
-      if (touched.isEmpty) return touched // replay / unknown: zero writes
-      val remaining = idx.filter(col("__bucket").isin(touched: _*))
-        .join(del, Seq("id"), "left_anti")
-        .localCheckpoint(eager = true) // pin before overwriting the source
-      try {
-        graft.sources.IO.alignToPartitions(remaining, "__bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__bucket").parquet(indexDir)
-        val written = remaining.select("__bucket").distinct()
-          .collect().map(_.getLong(0)).toSet // bounded: <= buckets ids
-        graft.sources.IO.dropEmptiedPartitions(spark, indexDir, "__bucket",
-          touched, written)
-        // rebuild the occupancy census the gate reads (one more index
-        // scan — fine for the exceptional verb; the per-batch path never
-        // rescans). A fully-emptied index reverted to cold start above
-        // took its census with it.
-        val base = new org.apache.hadoop.fs.Path(indexDir)
-        if (base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(base))
-          writeBucketCensus(spark, indexDir)
-      } finally Checkpoints.drop(remaining)
-      touched
-    } finally Checkpoints.drop(del)
+    val touched = BucketedIndex.delete(BucketMembershipIndex, indexDir,
+      ids.select(col(idCol).cast("long").as("id")))
+    // rebuild the occupancy census the gate reads (one more index scan
+    // — fine for the exceptional verb; the per-batch path never
+    // rescans). A fully-emptied index reverted to cold start and took
+    // its census with it.
+    if (touched.nonEmpty && BucketedIndex.exists(ids.sparkSession, indexDir))
+      writeBucketCensus(ids.sparkSession, indexDir)
+    touched
   }
 
   /** Train the hashed-unigram DSIR log-ratio language model (Xie et al.

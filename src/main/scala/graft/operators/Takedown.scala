@@ -82,10 +82,6 @@ object Takedown {
                   componentsEdges: Option[DataFrame] = None)
       : Map[String, Seq[Long]] = {
     val spark = docs.sparkSession
-    def exists(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
     require(artifacts.componentsStoreDir.isEmpty || componentsEdges.nonEmpty,
       "takedownAll: componentsStoreDir needs the current componentsEdges " +
         "relation (deleting a node can split its component)")
@@ -95,7 +91,9 @@ object Takedown {
       def run(name: String, dirOpt: Option[String])
              (verb: String => Seq[Long]): Unit =
         dirOpt.foreach { dir =>
-          out(name) = if (exists(dir)) verb(dir) else Seq.empty
+          out(name) =
+            if (graft.sources.BucketedIndex.exists(spark, dir)) verb(dir)
+            else Seq.empty
         }
       run("fingerprint", artifacts.fpIndexDir)(
         Dedup.deleteFromFingerprintIndex(pinned, textCol, _))

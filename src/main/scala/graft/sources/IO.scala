@@ -30,16 +30,33 @@ object IO {
     * only, never rows; the scan itself re-reads the files on every
     * action, so rewritten artifact CONTENT is always observed fresh.
     *
-    * Contract: a path's SCHEMA is stable for the JVM lifetime. Every
-    * artifact writer in this codebase overwrites a path with the
-    * identical schema (vectors/centroids/codebooks/codes layouts are
-    * fixed by their writers); a caller that rewrites one path with a
-    * DIFFERENT schema must not read it through here. */
+    * Invalidation: each cached schema carries the dir's modification
+    * time, and a read that sees another time infers again — one
+    * `getFileStatus` per read, no Spark job. Every committed Spark
+    * write (overwrite, dynamic overwrite, append) adds or removes an
+    * entry at the dir root, so a path rewritten with a DIFFERENT schema
+    * is re-inferred, never misread, whoever wrote it. (A store whose
+    * directories carry no modification time would defeat this.) A
+    * missing path reads through `spark.read`, which raises the usual
+    * PATH_NOT_FOUND. */
   private val artifactSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
   def readArtifact(spark: SparkSession, path: String): DataFrame = {
-    val schema = artifactSchemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val p = new Path(path)
+    val mtime =
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p).getModificationTime
+      catch {
+        case _: java.io.FileNotFoundException => return spark.read.parquet(path)
+      }
+    val cached = artifactSchemaCache.get(path)
+    val schema =
+      if (cached != null && cached._1 == mtime) cached._2
+      else {
+        val s = spark.read.parquet(path).schema
+        artifactSchemaCache.put(path, (mtime, s))
+        s
+      }
     spark.read.schema(schema).parquet(path)
   }
 
@@ -426,15 +443,9 @@ object IO {
         if (!admitted.isEmpty) {
           b.join(admitted.select(idCol), Seq(idCol), "left_semi")
             .write.mode("append").parquet(outDir)
-          val bkts = readBucketCount(spark, indexDir).getOrElse(buckets)
-          val delta = admitted
-            .select(col("bucket"), col(idCol).cast("long").as("id"))
-            .withColumn("__bucket",
-              pmod(xxhash64(col("bucket")), lit(bkts.toLong)))
-          alignToPartitions(delta, "__bucket")
-            .write.mode("append").partitionBy("__bucket").parquet(indexDir)
-          if (readBucketCount(spark, indexDir).isEmpty)
-            writeBucketCount(spark, indexDir, bkts)
+          BucketedIndex.append(graft.operators.Sampling.BucketMembershipIndex,
+            indexDir, buckets,
+            admitted.select(col("bucket"), col(idCol).cast("long").as("id")))
           // census advance LAST (corpus → index → census): a crash
           // before this line replays the batch against the old census
           // — identical decisions, duplicate-but-identical corpus/index
@@ -822,13 +833,12 @@ object IO {
     (col("window_start").cast("double") * 1000).cast("long")
 
   /** A persisted FIRST-SEEN index an audit store advances per batch:
-    * `(key, first_window)` rows under `__bucket = pmod(bucketHash, n)`
-    * partitions, `n` pinned in the bucket-count sidecar (`buckets`
-    * seeds a new index; maintenance rides [[compactPartitionedDir]]
-    * like every bucketed artifact). */
+    * `(key, first_window)` rows in the family's [[BucketedIndex]]
+    * layout (`buckets` seeds a new index; maintenance rides
+    * [[compactPartitionedDir]] like every bucketed artifact). */
   private case class FirstSeenIndex(dir: String, key: String,
                                     keyType: DataType, buckets: Int,
-                                    bucketHash: Column)
+                                    layout: BucketedIndex.Layout)
 
   /** The shared batch body of the per-window AUDIT STORES below — the
     * Doris-analog DWS sinks: finalized windowed-aggregate micro-batches
@@ -901,38 +911,22 @@ object IO {
   /** The index's (key, first_window) relation; a missing index is empty
     * (cold start). */
   private def readFirstSeen(spark: SparkSession,
-                            idx: FirstSeenIndex): DataFrame = {
-    val p = new Path(idx.dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.parquet(idx.dir).select(idx.key, "first_window")
-    else spark.createDataFrame(new java.util.ArrayList[Row](),
-      StructType(Seq(StructField(idx.key, idx.keyType),
-        StructField("first_window", TimestampType))))
-  }
+                            idx: FirstSeenIndex): DataFrame =
+    BucketedIndex.read(spark, idx.dir)
+      .map(_.select(idx.key, "first_window"))
+      .getOrElse(spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType(Seq(StructField(idx.key, idx.keyType),
+          StructField("first_window", TimestampType)))))
 
   /** Append the keys a batch introduced, stamped with their earliest
     * window: an anti-join delta against `known`, so the cost is ∝ NEW
-    * keys, never key history (the
-    * [[graft.operators.Dedup.appendFingerprintIndex]] discipline — the
-    * delta is materialized so the append never scans its own output). */
+    * keys, never key history. */
   private def appendFirstSeen(pinned: DataFrame, known: DataFrame,
-                              idx: FirstSeenIndex): Unit = {
-    val spark = pinned.sparkSession
-    val b = readBucketCount(spark, idx.dir).getOrElse(idx.buckets)
-    val delta = pinned.groupBy(idx.key)
-      .agg(min(col("window_start")).as("first_window"))
-      .join(known.select(idx.key), Seq(idx.key), "left_anti")
-      .withColumn("__bucket", pmod(idx.bucketHash, lit(b.toLong)))
-      .localCheckpoint(eager = true)
-    try {
-      if (!delta.isEmpty) {
-        alignToPartitions(delta, "__bucket")
-          .write.mode("append").partitionBy("__bucket").parquet(idx.dir)
-        if (readBucketCount(spark, idx.dir).isEmpty)
-          writeBucketCount(spark, idx.dir, b)
-      }
-    } finally graft.operators.Checkpoints.drop(delta)
-  }
+                              idx: FirstSeenIndex): Unit =
+    BucketedIndex.append(idx.layout, idx.dir, idx.buckets,
+      pinned.groupBy(idx.key)
+        .agg(min(col("window_start")).as("first_window"))
+        .join(known.select(idx.key), Seq(idx.key), "left_anti"))
 
   /** Snapshot schema of the [[windowedMetricsStoreSink]] store: one wide
     * metrics row per finalized window, plus the changelog bookkeeping
@@ -1040,7 +1034,7 @@ object IO {
       : DataStreamWriter[Row] =
     auditStoreSink(hist, baseDir, checkpointDir, "window_start",
       NoveltyAuditSchema, retain, Some(FirstSeenIndex(gramIndexDir, "sh",
-        LongType, buckets, col("sh"))))(
+        LongType, buckets, graft.operators.Dedup.GramIndex)))(
       graft.streaming.Jobs.noveltyPerWindow)
 
   /** Snapshot schema of the [[noveltyBySourceAuditSink]] store: one
@@ -1082,7 +1076,7 @@ object IO {
       : DataStreamWriter[Row] =
     auditStoreSink(hist, baseDir, checkpointDir, "wkey",
       NoveltyBySourceAuditSchema, retain, Some(FirstSeenIndex(gramIndexDir,
-        "sh", LongType, buckets, col("sh"))))(
+        "sh", LongType, buckets, graft.operators.Dedup.GramIndex)))(
       graft.streaming.Jobs.noveltyBySourcePerWindow)
 
   /** Snapshot schema of the [[dupRateAuditSink]] store: one exact-dup
@@ -1119,7 +1113,7 @@ object IO {
       : DataStreamWriter[Row] =
     auditStoreSink(hist, baseDir, checkpointDir, "window_start",
       DupRateAuditSchema, retain, Some(FirstSeenIndex(fpIndexDir, "fp",
-        StringType, buckets, xxhash64(col("fp")))))(
+        StringType, buckets, graft.operators.Dedup.FpFirstSeenIndex)))(
       graft.streaming.Jobs.dupRatePerWindow)
 
   /** TAKEDOWN verb for the [[windowedMetricsStoreSink]] store — drop
@@ -1545,21 +1539,16 @@ object IO {
   /** Delete the `partCol=v` directories of buckets that were touched by
     * a rewrite but absent from its output — dynamic partition overwrite
     * only replaces partitions PRESENT in the written data, so a bucket
-    * emptied by a delete/move would silently keep its stale files. The
-    * shared guard of every partitioned-index TAKEDOWN verb (fingerprint,
-    * fp-first-seen, near-dup, winnow, bucket-membership, components —
-    * one definition, ADVICE r16). If the drop leaves NO partition
-    * directories at all, the artifact dir itself (sidecars included) is
-    * removed: an index emptied by takedown must revert to the
-    * documented COLD-START state ("no index yet"), not linger as a
-    * sidecar-only dir whose consumers' exists()-then-read dies with
-    * UNABLE_TO_INFER_SCHEMA (ADVICE r16 — the diversityGateSink /
-    * dupRateAuditSink read shape). delete-all == rebuild-from-nothing,
-    * which the empty-seed guards make "no dir". */
-  private[graft] def dropEmptiedPartitions(spark: SparkSession, dir: String,
-                                           partCol: String,
-                                           touched: Seq[Long],
-                                           written: Set[Long]): Unit = {
+    * emptied by a delete/move would silently keep its stale files.
+    * [[BucketedIndex.rewrite]]'s closing step. If the drop leaves NO
+    * partition directories at all, the artifact dir itself (sidecars
+    * included) is removed: an index emptied by takedown reverts to the
+    * cold-start state ("no index yet"), not a sidecar-only dir whose
+    * readers die with UNABLE_TO_INFER_SCHEMA. */
+  private[sources] def dropEmptiedPartitions(spark: SparkSession,
+                                             dir: String, partCol: String,
+                                             touched: Seq[Long],
+                                             written: Set[Long]): Unit = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     touched.filterNot(written).foreach { b =>
@@ -1634,12 +1623,9 @@ object IO {
     * or delete must route rows with the same `pmod(hash, n)`, so the
     * writer pins it here and the other verbs discover it instead of
     * trusting their caller to repeat the right number. */
-  def writeBucketCount(spark: SparkSession, dir: String, n: Int): Unit = {
-    val p = new Path(dir, ".bucket_count")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private[sources] def writeBucketCount(spark: SparkSession, dir: String,
+                                        n: Int): Unit =
+    writeIntSidecar(spark, new Path(dir, ".bucket_count"), n)
 
   /** Stamp a persisted artifact's layout version (`.layout_version`
     * sidecar). A layout version changes when the ON-DISK semantics of
@@ -1647,10 +1633,13 @@ object IO {
     * (xxhash64 → engine-portable md5), which re-keys every band bucket:
     * appending new-hash rows to an old-hash index would silently never
     * match, so the verbs check this stamp and fail loudly instead. */
-  def writeLayoutVersion(spark: SparkSession, dir: String, v: Int): Unit = {
-    val p = new Path(dir, ".layout_version")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+  private[sources] def writeLayoutVersion(spark: SparkSession, dir: String,
+                                          v: Int): Unit =
+    writeIntSidecar(spark, new Path(dir, ".layout_version"), v)
+
+  private def writeIntSidecar(spark: SparkSession, p: Path, v: Int): Unit = {
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
     try out.write(v.toString.getBytes("UTF-8")) finally out.close()
   }
 
@@ -1697,9 +1686,8 @@ object IO {
       case some @ Some(_) => some
       case None => throw new IllegalStateException(
         s"$p exists but is empty or unparseable (torn sidecar write): " +
-          "the artifact's bucket layout is unknowable — re-stamp it with " +
-          "writeBucketCount(<the count the artifact was built with>) or " +
-          "rebuild the artifact")
+          "the artifact's bucket layout is unknowable — rebuild the " +
+          "artifact with its seeding verb")
     }
   }
 

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.Dedup
+import graft.sources.BucketedIndex
 
 /** Dev-only near-dup scale probe: MEASURES the LSH candidate-bounding
   * claim behind `Dedup.clusterByMinhash` at a corpus size far above the
@@ -314,11 +316,9 @@ object DedupScale {
     val dir = java.nio.file.Files.createTempDirectory("novelty_gate_")
       .toString + "/grams"
     val t0 = System.nanoTime()
-    gramRel(idxDocs, "2024-01-01 00:00:00")
-      .select(col("sh"), col("window_start").as("first_window"))
-      .withColumn("__bucket", pmod(col("sh"), lit(64L)))
-      .transform(graft.sources.IO.alignToPartitions(_, "__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(dir)
+    BucketedIndex.seed(Dedup.GramIndex, dir, 64,
+      gramRel(idxDocs, "2024-01-01 00:00:00")
+        .select(col("sh"), col("window_start").as("first_window")))
     val buildSec = (System.nanoTime() - t0) / 1e9
     def batchOf(n: Int): org.apache.spark.sql.DataFrame =
       spark.range(n.toLong).select(col("id"))
@@ -336,13 +336,9 @@ object DedupScale {
       val t = System.nanoTime()
       val row = graft.streaming.Jobs.noveltyPerWindow(rel, known)
         .select("n_novel", "novelty_ppm").head()
-      val delta = rel.groupBy("sh")
+      BucketedIndex.append(Dedup.GramIndex, dir, 64, rel.groupBy("sh")
         .agg(min(col("window_start")).as("first_window"))
-        .join(known.select("sh"), Seq("sh"), "left_anti")
-        .withColumn("__bucket", pmod(col("sh"), lit(64L)))
-        .localCheckpoint(true)
-      graft.sources.IO.alignToPartitions(delta, "__bucket")
-        .write.mode("append").partitionBy("__bucket").parquet(dir)
+        .join(known.select("sh"), Seq("sh"), "left_anti"))
       ((System.nanoTime() - t) / 1e9, row.getLong(0), row.getLong(1))
     }
     // 2× batch drawn from a DISJOINT fresh vocabulary so the first

@@ -2200,6 +2200,27 @@ class LawsSpec extends SparkSpec {
     assert(ev >= -5 && ev <= 1005, s"ev_permille $ev outside PSD band")
   }
 
+  test("readArtifact: a dir rewritten with a different schema is re-inferred, never misread") {
+    import graft.operators.Similarity
+    val dir = java.nio.file.Files.createTempDirectory("artifact_schema_").toString
+    val centroids = Array(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f))
+    val vecs = Seq(Seq(1f, 0.1f, 0f, 0f), Seq(0.9f, 0f, 0.1f, 0f),
+      Seq(0f, 1f, 0.1f, 0f))
+    def topIds(): Set[Any] = Similarity.ivfTopKIndexed(spark, dir, "vec_id",
+        "embedding", Array(1f, 0f, 0f, 0f), k = 3, nprobe = 2)
+      .collect().map(_.get(0)).toSet
+    Similarity.ivfWriteIndex(vecs.zipWithIndex
+        .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding"),
+      "embedding", centroids, dir)
+    assert(topIds() == Set(0L, 1L, 2L))
+    // the same artifact path, now with String ids: the schema cached by
+    // the first read must not be applied to the new files
+    Similarity.ivfWriteIndex(vecs.zipWithIndex
+        .map { case (v, i) => (s"doc-$i", v) }.toDF("vec_id", "embedding"),
+      "embedding", centroids, dir)
+    assert(topIds() == Set("doc-0", "doc-1", "doc-2"))
+  }
+
   test("q_embed_project: driver projection replay; histogram covers every vector") {
     val rows = graft.sources.Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect()

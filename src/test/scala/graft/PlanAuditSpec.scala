@@ -364,9 +364,9 @@ class PlanAuditSpec extends SparkSpec {
     // counts only the <= K source lists.
     val expected = Map(
       "Analytics.scala" -> 6, // 3x per-partition offset rows (<= nPart), 3x bounded histogram/frontier cells
-      "Dedup.scala" -> 14,    // merge touched+written bucket ids x2, fingerprint-delete x2, fp-first-seen-delete x2 (r16), near-dup-delete x2, components-delete x2, winnow-delete x2, counted-gram-compact x2 (all <= buckets); the bloom probe-shingle collect is GONE (r16 ADVICE fix: executor-side bit fold)
+      "Dedup.scala" -> 3,     // components merge + components delete + counted-gram-compact touched bucket ids (all <= buckets); the bloom probe-shingle collect is GONE (r16 ADVICE fix: executor-side bit fold)
+      "BucketedIndex.scala" -> 2, // the index store's takedown touched ids + rewrite written ids (<= buckets) — every hash-bucketed family's delete/rewrite sites, moved out of Dedup/Sampling
       "Graph.scala" -> 4,     // <= K landmark/explicit source lists
-      "Sampling.scala" -> 2,  // bucket-membership-delete touched+written ids (<= buckets, r16)
       "Spectral.scala" -> 4,  // global + per-group moment folds (2+d+d² longs each), artifact write (histogram rows) + read (dim+hist rows) — all dimension/catalog-bounded (r17)
       "Takedown.scala" -> 1,  // distinct admission windows of the retired docs (r17)
       "Similarity.scala" -> 13 // <= k IVF list ids x3 + delete-written x2 + split-written, k centroid rows,
@@ -379,9 +379,13 @@ class PlanAuditSpec extends SparkSpec {
     val files = java.nio.file.Files.list(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.nonEmpty, "operators/ sweep found no sources")
+    // the bucketed-index store lives in sources/ but carries the
+    // operators' index delete/rewrite sites, so it is swept too
+    val store = java.nio.file.Paths.get(
+      "src/main/scala/graft/sources/BucketedIndex.scala")
     val unjustified = scala.collection.mutable.ArrayBuffer.empty[String]
     val census = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    for (f <- files) {
+    for (f <- files :+ store) {
       val lines = new String(java.nio.file.Files.readAllBytes(f),
         java.nio.charset.StandardCharsets.UTF_8).linesIterator.toVector
       for (i <- lines.indices

@@ -1765,6 +1765,29 @@ class ScalePathSpec extends SparkSpec {
     assert(snapshot() == want)
   }
 
+  test("bucketed components store: a replayed merge leaves no new persistent RDDs") {
+    // a long-running componentsStoreSink replays batches; every merge,
+    // the no-op one included, must release the blocks it pinned
+    val dir = java.nio.file.Files.createTempDirectory("cc_pins_").toString + "/labels"
+    Dedup.writeComponentsStore(Dedup.connectedComponents(
+      Seq((5L, 6L), (8L, 9L), (20L, 21L)).toDF("id_a", "id_b")), dir, 8)
+    val batch = Seq((6L, 9L), (9L, 3L)).toDF("id_a", "id_b")
+    def newPins(f: => Seq[Long]): (Seq[Long], Set[Int]) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val touched = f
+      (touched, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+    }
+    val (touched, merged) = newPins(
+      Dedup.mergeIntoComponentsStore(batch, dir, buckets = 8))
+    assert(touched.nonEmpty && merged.isEmpty,
+      s"a merge left ${merged.size} checkpoint RDDs registered")
+    val (replayTouched, replayed) = newPins(
+      Dedup.mergeIntoComponentsStore(batch, dir, buckets = 8))
+    assert(replayTouched.isEmpty, "replay must be a zero-write no-op")
+    assert(replayed.isEmpty,
+      s"a replayed merge left ${replayed.size} checkpoint RDDs registered")
+  }
+
   test("components store gate: both routes produce the identical labeling; layout follows the gate") {
     import java.nio.file.Files
     val b1 = Seq((5L, 6L), (8L, 9L), (20L, 21L))
@@ -1964,6 +1987,29 @@ class ScalePathSpec extends SparkSpec {
     }
     intercept[IllegalStateException] {
       Dedup.nearDupAgainstIndex(more, "doc_id", "text", dir, 0.5)
+    }
+  }
+
+  test("winnow index layout guard: an unstamped index fails loudly on every verb") {
+    // the layout check is the store's, shared by every stamped family:
+    // the near-dup guard above pins it for one family, this for another
+    val dir = java.nio.file.Files.createTempDirectory("winnow_layout_").toString + "/idx"
+    val docs = Seq((1L, (1 to 20).map(i => s"w$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    Dedup.writeWinnowIndex(docs, "doc_id", "text", dir)
+    assert(graft.sources.IO.readLayoutVersion(spark, dir)
+      .contains(Dedup.WinnowLayoutVersion))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, ".layout_version"))
+    val more = Seq((2L, (30 to 50).map(i => s"v$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    intercept[IllegalStateException] {
+      Dedup.appendWinnowIndex(more, "doc_id", "text", dir)
+    }
+    intercept[IllegalStateException] {
+      Dedup.deleteFromWinnowIndex(docs.select("doc_id"), "doc_id", dir)
+    }
+    intercept[IllegalStateException] {
+      Dedup.matchAgainstWinnowIndex(more, "doc_id", "text", dir)
     }
   }
 
