@@ -1250,7 +1250,7 @@ object Dedup {
     val merged = liveGramIndexCounted(spark, indexDir)
       .withColumn("__bucket", pmod(col("sh"), lit(b.toLong)))
       .localCheckpoint(eager = true) // pin before overwriting the source path
-    try BucketedIndex.rewrite(merged, indexDir, touched)
+    try BucketedIndex.rewrite(GramIndex, merged, indexDir, touched)
     finally Checkpoints.drop(merged)
   }
 
@@ -1657,7 +1657,7 @@ object Dedup {
         val pinned = inTouched.unionByName(newNodes)
           .select(col("id"), col("label"), bkt(col("label")).as("__bucket"))
           .localCheckpoint(eager = true)
-        try BucketedIndex.rewrite(pinned, dir, touched)
+        try BucketedIndex.rewrite(ComponentsStore, pinned, dir, touched)
         finally Checkpoints.drop(pinned)
         touched
       } finally Checkpoints.drop(remap)
@@ -1807,7 +1807,7 @@ object Dedup {
               val pinned = inTouched.unionByName(newRows)
                 .select(col("id"), col("label"), bkt(col("label")).as("__bucket"))
                 .localCheckpoint(eager = true)
-              try BucketedIndex.rewrite(pinned, dir, touched)
+              try BucketedIndex.rewrite(ComponentsStore, pinned, dir, touched)
               finally Checkpoints.drop(pinned)
               touched
             } else {

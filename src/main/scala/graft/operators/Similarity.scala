@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
+import graft.sources.{BucketedIndex, IO}
 
 /** Similarity search over embedding columns (driver brief [N]; SURVEY.md
   * §2.K). Baseline: brute-force cosine top-k (exact). Scale path: banded
@@ -306,8 +307,19 @@ object Similarity {
 
   // ---- persisted IVF index lifecycle --------------------------------
 
-  /** True when `indexDir` is a FUSED IVF-PQ index (a `codes/` mirror is
-    * present). The fused layout's vectors/ + centroids/ are
+  /** The persisted IVF index's [[BucketedIndex]] layout: `vectors/`
+    * partitioned by `ivf_list`, the inverted list a row is assigned to
+    * (not a hash, so the store's read, takedown and rewrite apply; the
+    * list assignment is this module's own). The fused index adds the
+    * `codes/` mirror, keyed by the same id. */
+  private val IvfIndex = BucketedIndex.Layout(col("ivf_list"), Seq("vectors"),
+    part = "ivf_list")
+  private val IvfPqIndex = IvfIndex.copy(rels = Seq("vectors", "codes"))
+
+  /** True when `indexDir` is a FUSED IVF-PQ index (its `codebooks/` are
+    * present — no incremental verb rewrites them, so they survive a
+    * takedown that empties `vectors/` and `codes/`, and a plain index
+    * never has them). The fused layout's vectors/ + centroids/ are
     * byte-compatible with plain IVF for READS, but plain MUTATION verbs
     * know nothing of `codes/` — running one would silently desync the
     * mirror (appended ids invisible to ADC, split lists coded against
@@ -316,17 +328,15 @@ object Similarity {
     * same fail-loud discipline as the near-dup index's
     * `.layout_version` stamp. */
   def isFusedIndex(spark: org.apache.spark.sql.SparkSession,
-                   indexDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+                   indexDir: String): Boolean =
+    BucketedIndex.exists(spark, s"$indexDir/codebooks")
 
   private def requireNotFused(spark: org.apache.spark.sql.SparkSession,
                               indexDir: String, verb: String,
                               fusedVerb: String): Unit =
     if (isFusedIndex(spark, indexDir))
       throw new IllegalStateException(
-        s"$verb: $indexDir is a FUSED IVF-PQ index (codes/ present); the " +
+        s"$verb: $indexDir is a FUSED IVF-PQ index (codebooks/ present); the " +
           s"plain verb would desync the PQ code mirror from vectors/ — " +
           s"use $fusedVerb instead (reads — ivfTopKIndexed, ivfProbeScan, " +
           "ivfListSizes, ivfNeedsRetrain — remain layout-agnostic)")
@@ -369,13 +379,14 @@ object Similarity {
 
   /** Incremental index maintenance — the steady-state operation: assign
     * ONLY the new batch against the persisted centroids and rewrite ONLY
-    * the `ivf_list=` partitions that batch touches, via dynamic partition
-    * overwrite (the same touched-partitions-only pattern as
-    * [[graft.sources.IO.bucketedUpsertSink]]). Existing rows of the
-    * touched lists are read back through a partition-pruned scan
+    * the `ivf_list=` partitions that batch touches
+    * ([[BucketedIndex.rewrite]], the same touched-partitions-only
+    * rewrite as [[graft.sources.IO.bucketedUpsertSink]]). Existing rows
+    * of the touched lists are read back through a partition-pruned scan
     * (untouched lists are never listed or opened), re-submitted ids are
     * replaced (id-level upsert within a list), and per-append cost is
-    * O(batch + touched lists) — independent of index size.
+    * O(batch + touched lists) — independent of index size. An index
+    * whose `vectors/` a takedown emptied is seeded again.
     *
     * Caveat (documented, not silently wrong): an id whose NEW embedding
     * assigns to a different list than its old one leaves the stale copy
@@ -387,37 +398,36 @@ object Similarity {
     * partitions. */
   def ivfAppendIndex(newVecs: DataFrame, idCol: String, vecCol: String,
                      indexDir: String): Unit = {
-    requireNotFused(newVecs.sparkSession, indexDir, "ivfAppendIndex",
-      "ivfPqAppendIndex")
-    ivfAppendVectors(newVecs, idCol, vecCol, indexDir)
+    val spark = newVecs.sparkSession
+    requireNotFused(spark, indexDir, "ivfAppendIndex", "ivfPqAppendIndex")
+    ivfAppendVectors(newVecs, idCol, vecCol, indexDir,
+      ivfReadCentroids(spark, indexDir))
   }
 
+  /** The vector upsert of [[ivfAppendIndex]] under the given persisted
+    * `centroids`; returns the sorted touched list ids. */
   private def ivfAppendVectors(newVecs: DataFrame, idCol: String,
-                               vecCol: String, indexDir: String): Unit = {
+                               vecCol: String, indexDir: String,
+                               centroids: Array[Array[Float]]): Seq[Int] = {
     val spark = newVecs.sparkSession
-    val centroids = ivfReadCentroids(spark, indexDir)
     val assigned = ivfAssign(newVecs, vecCol, centroids)
       .localCheckpoint(eager = true)
     try {
-      // ≤ k ints — a fixed-size driver-side set, never data-scale
       val touched = assigned.select("ivf_list").distinct()
         .collect().map(_.getInt(0)).toSeq.sorted // bounded: <= k list ids
-      if (touched.isEmpty) return // empty batch: nothing to rewrite
-      val existing = spark.read.parquet(s"$indexDir/vectors")
-        .filter(col("ivf_list").isin(touched: _*))
-        .join(assigned.select(col(idCol)), Seq(idCol), "left_anti")
-      // pin the merge before overwriting the path it reads (same
-      // read-write-cycle break as bucketedUpsertSink); bounded by the
-      // touched lists' size, a few task-units by construction
-      val merged = existing.unionByName(assigned)
-        .localCheckpoint(eager = true)
-      try
-        graft.sources.IO.alignToPartitions(merged, "ivf_list")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ivf_list")
-          .parquet(s"$indexDir/vectors")
-      finally Checkpoints.drop(merged)
+      if (touched.nonEmpty) {
+        val existing = BucketedIndex.read(spark, s"$indexDir/vectors")
+          .map(_.filter(col("ivf_list").isin(touched: _*))
+            .join(assigned.select(col(idCol)), Seq(idCol), "left_anti"))
+        // pin the merge before overwriting the path it reads; bounded by
+        // the touched lists' size, a few task-units by construction
+        val merged = existing.fold(assigned)(_.unionByName(assigned))
+          .localCheckpoint(eager = true)
+        try BucketedIndex.rewrite(IvfIndex, merged, s"$indexDir/vectors",
+          touched.map(_.toLong))
+        finally Checkpoints.drop(merged)
+      }
+      touched
     } finally Checkpoints.drop(assigned)
   }
 
@@ -426,55 +436,19 @@ object Similarity {
     * refresh story: re-embedding = delete + [[ivfAppendIndex]]
     * ([[ivfReembedIndex]] composes the two).
     *
-    * Locating the ids costs one COLUMN-PRUNED scan of the index's
-    * (id, ivf_list) columns — the partition key is the list, not the id,
-    * so membership can't be pruned at the file level; parquet column
-    * pruning keeps the scan to two scalar columns, never the vectors.
-    * The rewrite itself is dynamic partition overwrite of the touched
-    * lists only. A list whose rows are ALL deleted needs explicit
-    * directory removal — dynamic overwrite only replaces partitions
-    * present in the written data, so an emptied list would silently
-    * survive otherwise. Single writer by contract, like append. Fails
-    * loudly on a FUSED index — use [[ivfPqDeleteIds]], which runs this
-    * same delete and then refreshes the touched code partitions. */
+    * The store's takedown ([[BucketedIndex.delete]]) locates the ids
+    * with one COLUMN-PRUNED scan of the index's (id, ivf_list) columns —
+    * the partition key is the list, not the id, so membership can't be
+    * pruned at the file level; parquet column pruning keeps the scan to
+    * two scalar columns, never the vectors — then rewrites the touched
+    * lists only, drops a list whose rows were ALL deleted, and removes
+    * `vectors/` when no list is left. Single writer by contract, like
+    * append. Fails loudly on a FUSED index — use [[ivfPqDeleteIds]],
+    * which takes the same rows out of `codes/` too. */
   def ivfDeleteIds(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                    idCol: String, ids: DataFrame): Unit = {
     requireNotFused(spark, indexDir, "ivfDeleteIds", "ivfPqDeleteIds")
-    ivfDeleteVectorIds(spark, indexDir, idCol, ids)
-  }
-
-  private def ivfDeleteVectorIds(spark: org.apache.spark.sql.SparkSession,
-                                 indexDir: String, idCol: String,
-                                 ids: DataFrame): Unit = {
-    val idOnly = ids.select(col(idCol)).distinct().localCheckpoint(eager = true)
-    try {
-      val vectors = spark.read.parquet(s"$indexDir/vectors")
-      // ≤ k ints, same bounded driver-side set as ivfAppendIndex
-      val touched = vectors.join(idOnly, Seq(idCol), "left_semi")
-        .select("ivf_list").distinct().collect().map(_.getInt(0)).toSeq.sorted // bounded: <= k list ids
-      if (touched.isEmpty) return
-      val remaining = vectors.filter(col("ivf_list").isin(touched: _*))
-        .join(idOnly, Seq(idCol), "left_anti")
-        .localCheckpoint(eager = true) // pin before overwriting the source path
-      try {
-        val keptLists = remaining.select("ivf_list").distinct()
-          .collect().map(_.getInt(0)).toSet // bounded: <= k list ids
-        if (keptLists.nonEmpty)
-          graft.sources.IO.alignToPartitions(remaining, "ivf_list")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ivf_list")
-            .parquet(s"$indexDir/vectors")
-        val emptied = touched.filterNot(keptLists)
-        if (emptied.nonEmpty) {
-          val base = new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-          val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          emptied.foreach { l =>
-            fs.delete(new org.apache.hadoop.fs.Path(base, s"ivf_list=$l"), true)
-          }
-        }
-      } finally Checkpoints.drop(remaining)
-    } finally Checkpoints.drop(idOnly)
+    BucketedIndex.delete(IvfIndex, indexDir, ids.select(col(idCol)))
   }
 
   /** Re-embed ids in a persisted IVF index: delete the old copies (from
@@ -488,22 +462,27 @@ object Similarity {
                       indexDir: String): Unit = {
     val spark = newVecs.sparkSession
     requireNotFused(spark, indexDir, "ivfReembedIndex", "ivfPqReembedIndex")
-    ivfDeleteVectorIds(spark, indexDir, idCol, newVecs.select(col(idCol)))
-    ivfAppendVectors(newVecs, idCol, vecCol, indexDir)
+    BucketedIndex.delete(IvfIndex, indexDir, newVecs.select(col(idCol)))
+    ivfAppendVectors(newVecs, idCol, vecCol, indexDir,
+      ivfReadCentroids(spark, indexDir))
   }
 
   // ---- drift detection + retrain lifecycle --------------------------
 
   /** Per-list row counts of a persisted index — a scan of the partition
     * key column only (parquet reads no vector data for it). The census
-    * the drift trigger and the split policy read. */
+    * the drift trigger and the split policy read; an emptied index (no
+    * `vectors/`) has no lists. */
   def ivfListSizes(spark: org.apache.spark.sql.SparkSession,
-                   indexDir: String): DataFrame =
+                   indexDir: String): DataFrame = {
+    import spark.implicits._
     // schema-cached read (r18): this census runs per append epoch in the
     // streaming gates — the footer-inference job it saves is per-batch
-    graft.sources.IO.readArtifact(spark, s"$indexDir/vectors")
-      .groupBy(col("ivf_list").cast("int").as("ivf_list"))
-      .agg(count(lit(1)).as("n"))
+    BucketedIndex.read(spark, s"$indexDir/vectors").fold(
+      Seq.empty[(Int, Long)].toDF("ivf_list", "n"))(
+      _.groupBy(col("ivf_list").cast("int").as("ivf_list"))
+        .agg(count(lit(1)).as("n")))
+  }
 
   /** MEASURED drift trigger: [[ivfAppendIndex]] assigns new vectors to
     * the ORIGINAL centroids, so under distribution drift appended mass
@@ -542,11 +521,11 @@ object Similarity {
                       iters: Int = 8, seed: Long = 42L): Unit = {
     ivfRecoverSwap(spark, indexDir)
     // AFTER the recovery sweep: a fused index interrupted mid-swap has
-    // no live codes/ until the sweep restores it — guarding first would
+    // no live codebooks/ until the sweep restores it — guarding first would
     // wave the plain retrain through on exactly the index it must not
     // touch
     requireNotFused(spark, indexDir, "ivfRetrainIndex", "ivfPqRetrainIndex")
-    val vecs = spark.read.parquet(s"$indexDir/vectors").drop("ivf_list")
+    val vecs = IO.readArtifact(spark, s"$indexDir/vectors").drop("ivf_list")
     val centroids = ivfTrainDistributed(vecs, vecCol, k, iters, seed)
     val next = new org.apache.hadoop.fs.Path(indexDir + "_next")
     val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -634,7 +613,7 @@ object Similarity {
     require(list >= 0 && list < centroids.length,
       s"list $list out of range [0, ${centroids.length})")
     val newId = centroids.length
-    val rows = spark.read.parquet(s"$indexDir/vectors")
+    val rows = IO.readArtifact(spark, s"$indexDir/vectors")
       .filter(col("ivf_list") === list) // partition-pruned to the one list
       .select(col(idCol), col(vecCol))
     val sample = rows.select(vecCol).rdd
@@ -673,15 +652,15 @@ object Similarity {
   /** The vector-rewrite step of a split, shared verbatim with
     * [[ivfRecoverSplit]] so recovery IS a replay: re-assign the rows of
     * `list` (and, on recovery, any already in `newId`) to whichever of
-    * the two recorded sub-centroids is nearer, dynamic-overwrite those
-    * two partitions only, and drop the stale dir of a side the
-    * (degenerate) split left unwritten. Idempotent: pure function of
-    * the recorded sub-centroids and the rows. */
+    * the two recorded sub-centroids is nearer and rewrite those two
+    * partitions only ([[BucketedIndex.rewrite]] also drops the stale dir
+    * of a side the (degenerate) split left unwritten). Idempotent: pure
+    * function of the recorded sub-centroids and the rows. */
   private def splitRewriteVectors(spark: org.apache.spark.sql.SparkSession,
                                   indexDir: String, idCol: String,
                                   vecCol: String, list: Int, newId: Int,
                                   subs: Array[Array[Float]]): Unit = {
-    val rows = spark.read.parquet(s"$indexDir/vectors")
+    val rows = IO.readArtifact(spark, s"$indexDir/vectors")
       .filter(col("ivf_list").isin(list, newId))
       .select(col(idCol), col(vecCol))
     val bc = spark.sparkContext.broadcast(subs)
@@ -690,22 +669,9 @@ object Similarity {
       .withColumn("ivf_list",
         when(pick(col(vecCol)) === 0, lit(list)).otherwise(lit(newId)))
       .localCheckpoint(eager = true) // one list's rows; pin before overwriting it
-    try {
-      graft.sources.IO.alignToPartitions(pinned, "ivf_list")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ivf_list").parquet(s"$indexDir/vectors")
-      val written = pinned.select("ivf_list").distinct()
-        .collect().map(_.getInt(0)).toSet // bounded: <= 2 ids
-      // degenerate split (every row nearer one sub-centroid): the other
-      // partition was touched-but-unwritten — drop its stale files
-      val fs = new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq(list, newId).filterNot(written).foreach { l =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$indexDir/vectors/ivf_list=$l"), true)
-      }
-    } finally Checkpoints.drop(pinned)
+    try BucketedIndex.rewrite(IvfIndex, pinned, s"$indexDir/vectors",
+      Seq(list.toLong, newId.toLong))
+    finally Checkpoints.drop(pinned)
   }
 
   private def splitIntentPath(indexDir: String) =
@@ -1211,11 +1177,11 @@ object Similarity {
   //
   // INVARIANT: codes/ mirrors vectors/ list-for-list
   // (codes(list) == residual-encode(vectors(list)) under the persisted
-  // codebooks — [[ivfPqEncodeResiduals]]). Every fused verb restores it
-  // by re-encoding exactly the lists the vector verb touched; the
-  // refresh derives codes purely from vectors/, so a crash between the
-  // two writes is repaired by re-running the verb (refresh is
-  // idempotent).
+  // codebooks — [[ivfPqEncodeResiduals]]). The write, append and split
+  // restore it by re-encoding exactly the lists the vector verb touched;
+  // the refresh derives codes purely from vectors/, so a crash between
+  // the two writes is repaired by re-running the verb (refresh is
+  // idempotent). The takedown removes the same rows from both.
 
   /** Persist PQ codebooks as a small (m·kSub)-row table. */
   def pqWriteCodebooks(spark: org.apache.spark.sql.SparkSession,
@@ -1278,11 +1244,12 @@ object Similarity {
   }
 
   /** Re-encode `lists` from vectors/ into codes/ — the invariant-
-    * restoring refresh every fused verb ends with. Reads ONLY the given
-    * list partitions (pruned), residual-encodes them under the persisted
-    * centroids + codebooks, rewrites ONLY those code partitions (dynamic
-    * overwrite), and drops code dirs whose vector dir vanished.
-    * Idempotent: pure function of vectors/ + centroids/ + codebooks/. */
+    * restoring refresh the fused write, append and split end with.
+    * Reads ONLY the given list partitions (pruned), residual-encodes
+    * them under the persisted centroids + codebooks, and rewrites ONLY
+    * those code partitions ([[BucketedIndex.rewrite]], which also drops
+    * code dirs whose vector dir vanished). Idempotent: pure function of
+    * vectors/ + centroids/ + codebooks/. */
   def ivfPqRefreshLists(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String, idCol: String, vecCol: String,
                         lists: Seq[Int],
@@ -1297,28 +1264,13 @@ object Similarity {
     if (lists.isEmpty) return
     val centroids = centroidsKnown.getOrElse(ivfReadCentroids(spark, indexDir))
     val codebooks = codebooksKnown.getOrElse(pqReadCodebooks(spark, indexDir))
-    val vecs = graft.sources.IO.readArtifact(spark, s"$indexDir/vectors")
+    val vecs = IO.readArtifact(spark, s"$indexDir/vectors")
       .filter(col("ivf_list").isin(lists: _*))
-    val encoded = ivfPqEncodeResiduals(vecs, idCol, vecCol, centroids,
-      codebooks)
-    val pinned = encoded.localCheckpoint(eager = true)
-    try {
-      val written = pinned.select("ivf_list").distinct()
-        .collect().map(_.getInt(0)).toSet // bounded: <= nlists ints
-      if (written.nonEmpty)
-        graft.sources.IO.alignToPartitions(pinned, "ivf_list")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ivf_list").parquet(s"$indexDir/codes")
-      // a list whose vectors were fully deleted leaves no written
-      // partition — dynamic overwrite won't touch its stale code dir,
-      // so drop it explicitly (the ivfDeleteIds emptied-dir guard)
-      val base = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      lists.filterNot(written).foreach { l =>
-        fs.delete(new org.apache.hadoop.fs.Path(base, s"ivf_list=$l"), true)
-      }
-    } finally Checkpoints.drop(pinned)
+    val pinned = ivfPqEncodeResiduals(vecs, idCol, vecCol, centroids,
+      codebooks).localCheckpoint(eager = true)
+    try BucketedIndex.rewrite(IvfPqIndex, pinned, s"$indexDir/codes",
+      lists.map(_.toLong))
+    finally Checkpoints.drop(pinned)
   }
 
   /** Build the fused IVF-PQ index: coarse assignment + raw vectors
@@ -1351,39 +1303,34 @@ object Similarity {
 
   /** Steady-state append to a fused index: the plain-IVF vector append
     * (touched-lists-only upsert), then code refresh of exactly those
-    * lists. Cost: O(batch + touched lists), independent of index size. */
+    * lists, under ONE centroid read and ONE batch assignment. Cost:
+    * O(batch + touched lists), independent of index size. An index a
+    * takedown emptied is seeded again. */
   def ivfPqAppendIndex(newVecs: DataFrame, idCol: String, vecCol: String,
                        indexDir: String): Unit = {
     val spark = newVecs.sparkSession
     val centroids = ivfReadCentroids(spark, indexDir)
-    val touched = ivfAssign(newVecs, vecCol, centroids)
-      .select("ivf_list").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted // bounded: <= k list ids
-    ivfAppendVectors(newVecs, idCol, vecCol, indexDir)
+    val touched = ivfAppendVectors(newVecs, idCol, vecCol, indexDir, centroids)
     ivfPqRefreshLists(spark, indexDir, idCol, vecCol, touched,
       Some(centroids))
   }
 
-  /** Takedown on a fused index: the plain-IVF delete (touched lists
-    * located by a column-pruned (id, list) scan), then code refresh of
-    * those lists — emptied lists lose both their vector AND code dirs. */
+  /** Takedown on a fused index: one [[BucketedIndex.delete]] over
+    * `vectors/` + `codes/` (touched lists located by a column-pruned
+    * (id, list) scan of vectors/). Codes are a per-row function of the
+    * vector and its list's centroid, so taking the same rows out of
+    * both keeps the mirror without re-encoding; emptied lists lose both
+    * their vector AND code dirs, and an index emptied entirely keeps
+    * only its centroids/ + codebooks/. */
   def ivfPqDeleteIds(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String, idCol: String, vecCol: String,
-                     ids: DataFrame): Unit = {
-    val touched = spark.read.parquet(s"$indexDir/vectors")
-      .join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-      .select("ivf_list").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted // bounded: <= k list ids
-    ivfDeleteVectorIds(spark, indexDir, idCol, ids)
-    ivfPqRefreshLists(spark, indexDir, idCol, vecCol, touched)
-  }
+                     ids: DataFrame): Unit =
+    BucketedIndex.delete(IvfPqIndex, indexDir, ids.select(col(idCol)))
 
   /** Re-embed ids in a fused index — the [[ivfReembedIndex]] twin:
     * fused delete + fused append, so each id lands exactly once in the
-    * list its NEW vector assigns to and every touched list's code
-    * partition re-derives. (A list touched by both halves refreshes
-    * twice — the refresh is idempotent and touched-lists-bounded, so
-    * correctness is free and the cost stays O(batch + touched lists).) */
+    * list its NEW vector assigns to, both halves keep the code mirror,
+    * and the cost stays O(batch + touched lists). */
   def ivfPqReembedIndex(newVecs: DataFrame, idCol: String, vecCol: String,
                         indexDir: String): Unit = {
     val spark = newVecs.sparkSession
@@ -1610,7 +1557,7 @@ object Similarity {
                         k: Int, dim: Int, m: Int = 8, kSub: Int = 16,
                         iters: Int = 8, seed: Long = 42L): Unit = {
     ivfRecoverSwap(spark, indexDir)
-    val vecs = spark.read.parquet(s"$indexDir/vectors").drop("ivf_list")
+    val vecs = IO.readArtifact(spark, s"$indexDir/vectors").drop("ivf_list")
     val centroids = ivfTrainDistributed(vecs, vecCol, k, iters, seed)
     val next = new org.apache.hadoop.fs.Path(indexDir + "_next")
     val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -5,22 +5,30 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Checkpoints
 
-/** The one on-disk layout every hash-bucketed index family shares
-  * (fingerprint, fp-first-seen, gram, gram-counted, winnow, near-dup,
-  * bucket-membership, the bucketed components store), and the verbs
-  * that maintain it. Each family builds its own rows and names its
-  * bucket key; everything about the layout lives here.
+/** The one on-disk layout every partitioned index family shares, and
+  * the verbs that maintain it. The hash-bucketed families (fingerprint,
+  * fp-first-seen, gram, gram-counted, winnow, near-dup,
+  * bucket-membership, the bucketed components store and
+  * [[IO.bucketedUpsertSink]]'s snapshot) partition by `__bucket`; the
+  * IVF / IVF-PQ indexes ([[graft.operators.Similarity]]) partition
+  * their `vectors/` (and fused `codes/`) relations by the inverted list
+  * a row is assigned to, `ivf_list`, which is not a hash. Each family
+  * builds its own rows and names its key and partition column;
+  * everything about the layout lives here.
   *
   * Layout: an index dir holds one or more relations (the dir itself, or
   * named subdirs such as the near-dup index's `docs/` + `bands/`), each
-  * parquet partitioned by `__bucket = pmod(key, n)`. Two sidecars sit
-  * at the index dir root: `.bucket_count` pins `n`, so later appends
-  * route by the WRITTEN count rather than whatever their caller passes,
-  * and, for stamped families, `.layout_version` (see [[Stamp]]).
+  * parquet partitioned by the family's partition column. For the
+  * hash-bucketed families that is `__bucket = pmod(key, n)`, and two
+  * sidecars sit at the index dir root: `.bucket_count` pins `n`, so
+  * later appends route by the WRITTEN count rather than whatever their
+  * caller passes, and, for stamped families, `.layout_version` (see
+  * [[Stamp]]). Only those families [[seed]] and [[append]]; every
+  * family shares [[read]], [[delete]] and [[rewrite]].
   *
   * Disciplines every verb keeps:
   *  - a missing dir is the cold start ("no index yet"): seeding from no
-  *    rows removes the dir, and a takedown that empties an index
+  *    rows removes the dir, and a takedown that empties a relation
   *    reverts it to that state, never to a schema-less dir whose
   *    readers die with UNABLE_TO_INFER_SCHEMA;
   *  - rows are pinned (`localCheckpoint`) before any write touches the
@@ -29,8 +37,9 @@ import graft.operators.Checkpoints
   *  - an empty delta writes nothing, so a replay that finds its rows
   *    already applied (an anti-joined append, any takedown) is a
   *    zero-write no-op;
-  *  - a takedown rewrites only the touched buckets (dynamic partition
-  *    overwrite); untouched bucket dirs stay byte-identical.
+  *  - a takedown or rewrite replaces only the touched partitions
+  *    (dynamic partition overwrite); untouched partition dirs stay
+  *    byte-identical.
   *
   * Single writer per index by contract. */
 object BucketedIndex {
@@ -46,10 +55,12 @@ object BucketedIndex {
 
   /** One family's layout: its bucket key expression over the rows, its
     * relations under the index dir (`""` = the dir itself; the first
-    * one decides cold start, emptiness and the touched buckets) and its
-    * version stamp, if it has one. */
+    * one decides cold start, emptiness and the touched partitions), its
+    * version stamp, if it has one, and its partition column (a family
+    * not partitioned by `__bucket` never calls [[seed]] or [[append]]). */
   final case class Layout(key: Column, rels: Seq[String] = Seq(""),
-                          stamp: Option[Stamp] = None)
+                          stamp: Option[Stamp] = None,
+                          part: String = "__bucket")
 
   private def relDir(dir: String, rel: String): String =
     if (rel.isEmpty) dir else s"$dir/$rel"
@@ -125,53 +136,70 @@ object BucketedIndex {
     } finally deltas.foreach(Checkpoints.drop)
   }
 
-  /** The touched-bucket TAKEDOWN: remove every row matching `keys` (on
-    * all of its columns) from every relation. Touched buckets come from
-    * a semi-join of `keys` against the first relation, so a replayed
-    * delete (or one of unknown keys) finds nothing and writes nothing;
-    * each relation then rewrites only those buckets, minus the matching
-    * rows, and delete == rebuild-without-those-rows. A missing index
-    * has nothing to delete. Returns the sorted touched bucket ids (the
-    * cost witness). */
+  /** The touched-partition TAKEDOWN: remove every row matching `keys`
+    * (on all of its columns) from every relation. Touched partitions
+    * come from a semi-join of `keys` against the first relation, so a
+    * replayed delete (or one of unknown keys) finds nothing and writes
+    * nothing; each relation then rewrites only those partitions, minus
+    * the matching rows, and delete == rebuild-without-those-rows. A
+    * missing index has nothing to delete. Returns the sorted touched
+    * partition ids (the cost witness). */
   def delete(layout: Layout, dir: String, keys: DataFrame): Seq[Long] = {
     val spark = keys.sparkSession
     if (!exists(spark, relDir(dir, layout.rels.head))) return Seq.empty
     requireLayout(spark, dir, layout)
+    val part = col(layout.part)
     val k = keys.distinct().localCheckpoint(eager = true)
     try {
       val on = k.columns.toSeq
       val rels = layout.rels.map { rel =>
         rel -> IO.readArtifact(spark, relDir(dir, rel))
-          .withColumn("__bucket", col("__bucket").cast("long"))
       }
       val touched = rels.head._2.join(k, on, "left_semi")
-        .select("__bucket").distinct()
+        .select(part.cast("long")).distinct()
         .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= n ids
       if (touched.nonEmpty) rels.foreach { case (rel, current) =>
-        val remaining = current.filter(col("__bucket").isin(touched: _*))
+        val remaining = current.filter(part.isin(touched: _*))
           .join(k, on, "left_anti")
           .localCheckpoint(eager = true)
-        try rewrite(remaining, relDir(dir, rel), touched)
+        try rewrite(layout, remaining, relDir(dir, rel), touched)
         finally Checkpoints.drop(remaining)
       }
       touched
     } finally Checkpoints.drop(k)
   }
 
-  /** Replace the `touched` buckets of the relation at `dir` with
-    * `pinned` (rows carrying a long `__bucket`; pinned by the caller,
-    * since they are usually read from `dir` itself). Dynamic partition
-    * overwrite replaces only the buckets present in `pinned`, so a
-    * touched bucket absent from it is dropped explicitly; if that
-    * leaves no bucket at all, the dir reverts to the cold start. */
-  def rewrite(pinned: DataFrame, dir: String, touched: Seq[Long]): Unit = {
-    IO.alignToPartitions(pinned, "__bucket")
+  /** Replace the `touched` partitions of the relation at `dir` with
+    * `pinned` (rows carrying the layout's partition column; pinned by
+    * the caller, since they are usually read from `dir` itself). Dynamic
+    * partition overwrite replaces only the partitions present in
+    * `pinned`, so a touched partition absent from it is dropped
+    * explicitly; if that leaves no partition at all, the dir reverts to
+    * the cold start (sidecars included, when `dir` is the index root). */
+  def rewrite(layout: Layout, pinned: DataFrame, dir: String,
+              touched: Seq[Long]): Unit = {
+    IO.alignToPartitions(pinned, layout.part)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(dir)
-    val written = pinned.select("__bucket").distinct()
+      .partitionBy(layout.part).parquet(dir)
+    val written = pinned.select(col(layout.part).cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet // bounded: <= n ids
-    IO.dropEmptiedPartitions(pinned.sparkSession, dir, "__bucket", touched,
+    dropEmptiedPartitions(pinned.sparkSession, dir, layout.part, touched,
       written)
+  }
+
+  /** Delete the `part=v` dirs of partitions `touched` by a rewrite but
+    * absent from its output `written`; if none is left, delete `dir`. */
+  private def dropEmptiedPartitions(spark: SparkSession, dir: String,
+                                    part: String, touched: Seq[Long],
+                                    written: Set[Long]): Unit = {
+    val base = new Path(dir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    touched.filterNot(written).foreach { b =>
+      fs.delete(new Path(base, s"$part=$b"), true)
+    }
+    if (fs.exists(base) &&
+        !fs.listStatus(base).exists(_.getPath.getName.startsWith(s"$part=")))
+      fs.delete(base, true)
   }
 }

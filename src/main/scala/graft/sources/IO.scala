@@ -1394,12 +1394,16 @@ object IO {
     *   1. computes the bucket set its keys touch (≤ numBuckets ints),
     *   2. reads ONLY those bucket partitions (partition-pruned scan),
     *   3. merges with [[graft.streaming.Cdc.applyChangelog]], and
-    *   4. rewrites ONLY those partitions via dynamic partition overwrite.
+    *   4. rewrites ONLY those partitions ([[BucketedIndex.rewrite]]).
     *
     * Per-batch cost is O(batch + touched buckets), independent of
     * snapshot size. `numBuckets` is fixed for the life of a snapshot
     * (changing it requires a one-off full rewrite); size it so one bucket
     * ≈ a comfortable task unit (e.g. 4 096 buckets for a 1 TB snapshot).
+    * Buckets are `pmod(hash(key), numBuckets)` (an Int, the on-disk
+    * layout of existing snapshots), not the store's Long-keyed seed
+    * routing. A batch whose tombstone compaction empties every bucket
+    * reverts the snapshot to missing, which reads as no rows.
     *
     * Crash safety: dynamic overwrite stages files and swaps at job
     * commit; if a batch dies mid-write the checkpoint has not committed,
@@ -1414,32 +1418,19 @@ object IO {
                          compactHorizonMs: Option[Long] = None)
       : DataStreamWriter[Row] = {
     require(numBuckets > 0, "numBuckets must be positive")
+    val layout = BucketedIndex.Layout(hash(col(keyCol)))
+    val bucketOf = pmod(layout.key, lit(numBuckets))
     foreachBatchSink(df, checkpointDir) { (batch, _) =>
-      val spark = batch.sparkSession
-      val bucketOf = pmod(hash(col(keyCol)), lit(numBuckets))
       // distinct buckets this batch touches: bounded by numBuckets,
       // so the collect is a fixed-size driver-side set, never data-scale
-      val touched = batch.select(bucketOf.as("__bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
+      val touched = batch.select(bucketOf.cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSeq.sorted
       if (touched.nonEmpty) {
-        val dst = new Path(snapshotDir)
-        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a snapshot dir that exists but holds no bucket partitions
-        // (every bucket compacted to empty, or only _SUCCESS left) has
-        // no schema to infer — treat it exactly like the no-dir branch
-        val hasBuckets = fs.exists(dst) &&
-          fs.listStatus(dst).exists(_.getPath.getName.startsWith("__bucket="))
-        val existing =
-          if (hasBuckets)
-            // filter on the partition column prunes to the touched
-            // bucket directories at the FileIndex — untouched buckets
-            // are never listed, opened, or shuffled
-            spark.read.parquet(snapshotDir)
-              .filter(col("__bucket").isin(touched: _*))
-              .select(snapshotSchema.fieldNames.toSeq.map(col): _*)
-          else
-            spark.createDataFrame(
-              new java.util.ArrayList[Row](), snapshotSchema)
+        // filter on the partition column prunes to the touched bucket
+        // directories at the FileIndex — untouched buckets are never
+        // listed, opened, or shuffled
+        val existing = readBucketedSnapshot(batch.sparkSession,
+          snapshotDir, snapshotSchema, col("__bucket").isin(touched: _*))
         val upserted = graft.streaming.Cdc.applyChangelog(existing, batch, keyCol)
         // opportunistic tombstone compaction: the touched buckets are
         // being rewritten anyway, so expiring dead tombstones here is
@@ -1447,42 +1438,31 @@ object IO {
         val merged = compactHorizonMs.fold(upserted)(h =>
           graft.streaming.Cdc.compactTombstones(upserted, h,
             System.currentTimeMillis()))
-        // materialize the merge BEFORE the overwrite: the merged plan
-        // reads the same path it is about to write (Spark rejects that
-        // read-write cycle, and lazily it would be a correctness bug).
-        // localCheckpoint pins the touched-bucket rows — bounded by
-        // design at a few task-units — to executor storage and cuts
-        // the lineage back to a LogicalRDD.
+        // pin the merge BEFORE the overwrite: the merged plan reads the
+        // path it is about to write; the touched-bucket rows are
+        // bounded by design at a few task-units
         val pinned = merged.withColumn("__bucket", bucketOf)
           .localCheckpoint(eager = true)
-        try {
-          // dynamic mode replaces exactly the partitions present in the
-          // output — the touched buckets — and leaves the rest in place
-          alignToPartitions(pinned, "__bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__bucket")
-            .parquet(snapshotDir)
-          // a touched bucket whose merge compacted to EMPTY is absent
-          // from the output, so dynamic overwrite left its old files in
-          // place — drop those directories explicitly
-          val written = pinned.select("__bucket").distinct()
-            .collect().map(_.getInt(0)).toSet
-          touched.filterNot(written).foreach { b =>
-            fs.delete(new Path(s"$snapshotDir/__bucket=$b"), true)
-          }
-        } finally graft.operators.Checkpoints.drop(pinned)
+        try BucketedIndex.rewrite(layout, pinned, snapshotDir, touched)
+        finally graft.operators.Checkpoints.drop(pinned)
       }
     }
   }
 
   /** Read the live rows of a bucketed snapshot written by
     * [[bucketedUpsertSink]] (partition column dropped, tombstones kept —
-    * pipe through [[graft.streaming.Cdc.liveView]] to drop them). */
+    * pipe through [[graft.streaming.Cdc.liveView]] to drop them). A
+    * missing snapshot (none written yet, or emptied) has no rows. */
   def readBucketedSnapshot(spark: SparkSession, snapshotDir: String,
                            snapshotSchema: StructType): DataFrame =
-    spark.read.parquet(snapshotDir)
-      .select(snapshotSchema.fieldNames.toSeq.map(col): _*)
+    readBucketedSnapshot(spark, snapshotDir, snapshotSchema, lit(true))
+
+  private def readBucketedSnapshot(spark: SparkSession, snapshotDir: String,
+                                   snapshotSchema: StructType,
+                                   buckets: Column): DataFrame =
+    BucketedIndex.read(spark, snapshotDir).fold(
+      spark.createDataFrame(new java.util.ArrayList[Row](), snapshotSchema))(
+      _.filter(buckets).select(snapshotSchema.fieldNames.toSeq.map(col): _*))
 
   /** Small-files compaction for a parquet directory — the steady-state
     * maintenance op every incremental sink here (append, upsert, IVF
@@ -1535,29 +1515,6 @@ object IO {
     * path), far cheaper than the file-creation storm it prevents. */
   def alignToPartitions(df: DataFrame, partCol: String): DataFrame =
     df.repartition(col(partCol))
-
-  /** Delete the `partCol=v` directories of buckets that were touched by
-    * a rewrite but absent from its output — dynamic partition overwrite
-    * only replaces partitions PRESENT in the written data, so a bucket
-    * emptied by a delete/move would silently keep its stale files.
-    * [[BucketedIndex.rewrite]]'s closing step. If the drop leaves NO
-    * partition directories at all, the artifact dir itself (sidecars
-    * included) is removed: an index emptied by takedown reverts to the
-    * cold-start state ("no index yet"), not a sidecar-only dir whose
-    * readers die with UNABLE_TO_INFER_SCHEMA. */
-  private[sources] def dropEmptiedPartitions(spark: SparkSession,
-                                             dir: String, partCol: String,
-                                             touched: Seq[Long],
-                                             written: Set[Long]): Unit = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(written).foreach { b =>
-      fs.delete(new Path(base, s"$partCol=$b"), true)
-    }
-    if (fs.exists(base) &&
-        !fs.listStatus(base).exists(_.getPath.getName.startsWith(s"$partCol=")))
-      fs.delete(base, true)
-  }
 
   /** Remove an artifact directory — the empty-seed guards' revert verb:
     * seeding an index from an EMPTY corpus means "index of nothing",

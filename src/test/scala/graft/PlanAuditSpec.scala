@@ -369,11 +369,10 @@ class PlanAuditSpec extends SparkSpec {
       "Graph.scala" -> 4,     // <= K landmark/explicit source lists
       "Spectral.scala" -> 4,  // global + per-group moment folds (2+d+d² longs each), artifact write (histogram rows) + read (dim+hist rows) — all dimension/catalog-bounded (r17)
       "Takedown.scala" -> 1,  // distinct admission windows of the retired docs (r17)
-      "Similarity.scala" -> 13 // <= k IVF list ids x3 + delete-written x2 + split-written, k centroid rows,
-      // + the 5 fused-IVF-PQ sites (r12, each reviewed bounded): m*kSub
-      // codebook rows, <= nlists retrain-written ids, <= k touched-list
-      // ids on pq-append and pq-delete, refine*k ADC candidate ids
-      // + the semantic-gate probe census (r13, <= k list ids)
+      "Similarity.scala" -> 7 // <= k IVF append touched-list ids, k list-size rows x2 (drift trigger, split policy), k centroid rows,
+      // m*kSub codebook rows, refine*k ADC candidate ids, the
+      // semantic-gate probe census (<= k list ids); the takedown's
+      // touched and every rewrite's written list ids are the store's
     )
     val dir = java.nio.file.Paths.get("src/main/scala/graft/operators")
     val files = java.nio.file.Files.list(dir).iterator().asScala

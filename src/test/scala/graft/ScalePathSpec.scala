@@ -2906,6 +2906,62 @@ class ScalePathSpec extends SparkSpec {
     assert(ranked.count() == 2L)
   }
 
+  test("fused IVF-PQ takedown of every id empties vectors/ + codes/; the index stays fused and a fused append seeds it again") {
+    val dim = 8
+    val rnd = new scala.util.Random(19)
+    def noisy(center: Array[Float]): Array[Float] =
+      center.map(x => x + 0.01f * rnd.nextGaussian().toFloat)
+    val centers = Array.tabulate(4) { c =>
+      Array.tabulate(dim)(j => if (j == c) 1f else 0f)
+    }
+    val rows = for (c <- 0 until 4; m <- 0 until 6)
+      yield ((c * 6 + m).toLong, noisy(centers(c)))
+    val emb = rows.toDF("vec_id", "embedding")
+    val centroids = Similarity.ivfTrain(emb, "embedding", k = 4, iters = 10)
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_empty_").toString + "/idx"
+    Similarity.ivfPqWriteIndex(emb, "vec_id", "embedding", centroids, dim,
+      dir, m = 4, kSub = 8)
+    def gone(rel: String) = !new java.io.File(s"$dir/$rel").exists
+
+    Similarity.ivfPqDeleteIds(spark, dir, "vec_id", "embedding",
+      emb.select("vec_id"))
+    assert(gone("vectors") && gone("codes"),
+      "deleting every id must remove both list-partitioned relations")
+    assert(!gone("centroids") && !gone("codebooks"))
+    assert(Similarity.ivfListSizes(spark, dir).count() == 0L &&
+      !Similarity.ivfNeedsRetrain(spark, dir))
+
+    // still a fused index: the plain append refuses it, touching nothing
+    val batch = (100 to 103).map(i => (i.toLong, noisy(centers(i % 4))))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalStateException](
+      Similarity.ivfAppendIndex(batch, "vec_id", "embedding", dir))
+    assert(e.getMessage.contains("FUSED") && e.getMessage.contains("ivfPqAppendIndex"),
+      e.getMessage)
+    assert(gone("vectors") && gone("codes"))
+
+    // the fused append seeds both relations again, mirror included
+    Similarity.ivfPqAppendIndex(batch, "vec_id", "embedding", dir)
+    val cbs = Similarity.pqReadCodebooks(spark, dir)
+    val cents = Similarity.ivfReadCentroids(spark, dir)
+    def hex(rs: Array[org.apache.spark.sql.Row]): Set[(Long, Int, String)] =
+      rs.map(r => (r.getLong(0), r.getInt(1),
+        r.getAs[Array[Byte]](2).map("%02x".format(_)).mkString)).toSet
+    val stored = hex(spark.read.parquet(s"$dir/codes")
+      .select(col("vec_id"), col("ivf_list").cast("int"), col("pq_code"))
+      .collect())
+    val expect = hex(Similarity.ivfPqEncodeResiduals(
+        spark.read.parquet(s"$dir/vectors"), "vec_id", "embedding", cents, cbs)
+      .select(col("vec_id"), col("ivf_list").cast("int"), col("pq_code"))
+      .collect())
+    assert(stored == expect && stored.map(_._1) == (100L to 103L).toSet,
+      s"codes must mirror the re-seeded vectors: $stored vs $expect")
+    val served = Similarity.ivfPqTopK(spark, dir, "vec_id", "embedding",
+      centers(0), k = 4, nprobe = 4, refine = 4)
+      .select("vec_id").as[Long].collect().toSet
+    assert(served == (100L to 103L).toSet, s"appended ids must be served: $served")
+  }
+
   test("direction artifact: roundtrip == registered ids; deterministic rewrite; self-projection parity; empty-seed guard") {
     import graft.operators.Spectral
     val base = java.nio.file.Files.createTempDirectory("specart_").toString

@@ -299,6 +299,32 @@ class SourcesSpec extends SparkSpec {
     assert(live.size == 32 && live(7L) == "v7_new" && live(8L) == "v8")
   }
 
+  test("bucketedUpsertSink: a snapshot emptied by tombstone compaction reads as no rows and seeds again") {
+    val in = tmp() + "/cdc_in5"; val snap = tmp() + "/bsnap_empty"; val ck = tmp() + "/ck5"
+    Files.createDirectories(java.nio.file.Paths.get(in))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("name", StringType), StructField("op", StringType),
+      StructField("ts_ms", LongType)))
+    def batch(rows: Seq[(Long, String, String, Long)]): Unit = {
+      rows.toDF("id", "name", "op", "ts_ms").write.mode("append").parquet(in)
+      IO.bucketedUpsertSink(IO.fileStream(spark, in, schema), snap, ck, "id",
+        schema, 8, compactHorizonMs = Some(0L)).start().awaitTermination()
+    }
+    batch((1L to 32L).map(i => (i, s"v$i", "c", 10L)))
+    assert(IO.readBucketedSnapshot(spark, snap, schema).count() == 32L)
+    // delete every key: the tombstones are past the 0 ms horizon, so the
+    // compaction empties every bucket
+    batch((1L to 32L).map(i => (i, s"v$i", "d", 20L)))
+    assert(!new java.io.File(snap).exists,
+      "an emptied snapshot must revert to the missing dir")
+    assert(IO.readBucketedSnapshot(spark, snap, schema).count() == 0L)
+    batch(Seq((40L, "v40", "c", 30L)))
+    val live = graft.streaming.Cdc.liveView(
+      IO.readBucketedSnapshot(spark, snap, schema))
+      .select("id", "name").as[(Long, String)].collect().toMap
+    assert(live == Map(40L -> "v40"))
+  }
+
   test("multimodal: payload-aware repartitioning bounds partition byte size") {
     val rows = (0L until 100L).map(i =>
       Row(i, "image", Multimodal.FakeCodec.encode(8, 8, 1, Array.fill[Byte](1024)(1)),
