@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark harness: each declared query is executed
   * sequentially on a shared session and its full physical plan consumed;
@@ -40,25 +39,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // size input splits to the test SF (single ~11 MB parquet files):
-      // the 128 MB default gives every scan exactly ONE partition, idling
-      // all but one core in the scan stage. At cluster scale with real
-      // multi-GB table layouts the default is correct — this is the
-      // "size maxPartitionBytes to the SF" lever, not a universal setting.
-      .config("spark.sql.files.maxPartitionBytes", s"${2 * 1024 * 1024}")
-      // r17 note: an AQE coalescePartitions.minPartitionSize floor (16 KB)
-      // was A/B-measured same-session over 10 representative ids — wash
-      // to WORSE (q_basket_affinity +0.33 s, q_bpe_encode +0.44 s, heavy
-      // pair ids ±0.03 s): the serialized stages that motivated it turn
-      // out to be broadcast-exchange builds and 1-partition checkpoints,
-      // which the floor cannot split. Stock AQE behavior kept.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // r17 note: an AQE coalescePartitions.minPartitionSize floor (16 KB)
+    // was A/B-measured same-session over 10 representative ids — wash
+    // to WORSE (q_basket_affinity +0.33 s, q_bpe_encode +0.44 s, heavy
+    // pair ids ±0.03 s): the serialized stages that motivated it turn
+    // out to be broadcast-exchange builds and 1-partition checkpoints,
+    // which the floor cannot split. Stock AQE behavior kept.
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: touch the scan/agg/join/window machinery once. A
     // warmup failure must not abort the bench (the timed loop has its own

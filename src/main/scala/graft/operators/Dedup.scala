@@ -1666,8 +1666,9 @@ object Dedup {
 
   /** Measured-size gate for the components-store write strategy
     * (BASELINE.md "components store gate"): below this labeling size
-    * the BUCKETED store's fixed costs dominate — `tools/ComponentsScale`
-    * measured the touched-buckets path 3.4× SLOWER in wall time at a
+    * the BUCKETED store's fixed costs dominate — BASELINE.md's Round-10
+    * "bucketed-components rewrite volume" row measured the
+    * touched-buckets path 3.4× SLOWER in wall time at a
     * 4M-node labeling (3.1 s flat vs 10.7 s bucketed: fixed
     * dynamic-overwrite machinery + 256-partition listing overhead)
     * even though it writes 3.7× fewer bytes. Flat write throughput in
@@ -1694,8 +1695,8 @@ object Dedup {
     * [[graft.sources.IO.componentsStoreSink]] folds batches through:
     * labelings at or below `maxFlatRows` route through a FLAT snapshot
     * rewrite ([[componentsMerge]] + one overwrite — cheaper than the
-    * bucketed machinery below the gate, measured in
-    * `tools/ComponentsScale`), larger ones through the bucketed
+    * bucketed machinery below the gate, measured in BASELINE.md's
+    * Round-10 "bucketed-components rewrite volume" row), larger ones through the bucketed
     * touched-partitions-only [[mergeIntoComponentsStore]], converting a
     * flat store to the bucketed layout once when it first crosses the
     * gate. Both routes produce the IDENTICAL labeling (the min-label

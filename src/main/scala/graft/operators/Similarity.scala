@@ -489,7 +489,8 @@ object Similarity {
     * piles into few lists — their probe cost grows without bound, and
     * drifted content that straddles old centroid boundaries SCATTERS
     * across lists, decaying recall at fixed `nprobe` (both measured:
-    * ScalePathSpec drift law, AnnScale drift row in BASELINE.md). Fires
+    * ScalePathSpec drift law, BASELINE.md's Round-11 "IVF drift
+    * lifecycle" row). Fires
     * when max(list size) > skewFactor × mean(list size) — a k-row
     * census, free to evaluate after every append epoch. Remedies:
     * [[ivfSplitOversizedLists]] (incremental, touched-lists-only — the
@@ -1166,7 +1167,7 @@ object Similarity {
   // part, so raw-vector codes would collapse to near-identical words
   // and ADC couldn't rank INSIDE a list at all (raw-code ADC measured
   // ~0.02 recall@10 during development). The shipped residual design at
-  // 1M × 64f (AnnScale pq, 2026-08-15, BASELINE.md r13 row): recall@10
+  // 1M × 64f (BASELINE.md's Round-13 "fused IVF-PQ at scale" row): recall@10
   // 0.55 / 0.80 / 0.94 at refine 8 / 32 / 128 — `refine` is the
   // recall-vs-re-rank-I/O lever, and on a corpus whose true neighbors
   // sit inside ADC's quantization noise the lever is the design, not a

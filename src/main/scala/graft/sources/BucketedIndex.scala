@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Checkpoints
 
@@ -175,15 +175,22 @@ object BucketedIndex {
     * partition overwrite replaces only the partitions present in
     * `pinned`, so a touched partition absent from it is dropped
     * explicitly; if that leaves no partition at all, the dir reverts to
-    * the cold start (sidecars included, when `dir` is the index root). */
+    * the cold start (sidecars included, when `dir` is the index root).
+    * The written partitions are observed on the write itself, so
+    * finding the emptied ones costs no job of its own. */
   def rewrite(layout: Layout, pinned: DataFrame, dir: String,
               touched: Seq[Long]): Unit = {
+    // observed above the exchange: below it, AQE drops the observing
+    // stage from the final plan of an empty write and reports no metrics
+    val seen = Observation()
     IO.alignToPartitions(pinned, layout.part)
+      .observe(seen, collect_set(col(layout.part).cast("long")).as("w"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(layout.part).parquet(dir)
-    val written = pinned.select(col(layout.part).cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet // bounded: <= n ids
+    val written = seen.get.getOrElse("w", throw new IllegalStateException(
+      s"rewrite of $dir reported no written partitions"))
+      .asInstanceOf[collection.Seq[Long]].toSet
     dropEmptiedPartitions(pinned.sparkSession, dir, layout.part, touched,
       written)
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump formatted physical plans for headline queries — the
   * scale audit loop (pushdown reached the scan? dims broadcast? top-k via
   * TakeOrderedAndProject? shuffles only where keyed?). */
@@ -11,12 +9,7 @@ object Explain {
     val which: Set[String] = if (args.length > 1) args.drop(1).toSet else Set(
       "q_filter", "q_join_broadcast", "q_join_hash", "q_sort_limit",
       "q_agg_groupby", "q_similarity_topk", "q_topk", "q_join_lookup")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     if (args.length > 1 && args(1) == "scan-census") {
       // repeated-scan audit: how many times does each query's plan scan

@@ -48,4 +48,43 @@ class SourceScanSpec extends AnyFunSuite {
       fail(rolled.map(_._2).mkString(
         "partitionOverwriteMode outside BucketedIndex (use BucketedIndex.rewrite):\n", "\n", ""))
   }
+
+  test("every main builds its session through LocalSession") {
+    // one builder keeps every entry point's master, shuffle partitions,
+    // split size, timezone and UI setting the same, and stamps the cores
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val builder = """SparkSession\s*\.\s*builder\s*\(""".r
+    val hits = for {
+      f <- files
+      if f.getFileName.toString != "LocalSession.scala"
+      src = new String(Files.readAllBytes(f), "UTF-8")
+      m <- builder.findAllMatchIn(src)
+    } yield s"$f:${src.take(m.start).count(_ == '\n') + 1}"
+    if (hits.nonEmpty)
+      fail(hits.mkString("SparkSession.builder() outside LocalSession:\n", "\n", ""))
+  }
+
+  test("README and COVERAGE name only tools that exist") {
+    // a deleted tool left in the docs sends readers to a class that is
+    // gone; its readings live in BASELINE.md with their commits
+    val root = Paths.get("src/main/scala/graft")
+    val names = """graft\.tools\.(\{[\w, ]+\}|\w+)|runMain graft\.(\w+(?:\.\w+)*)""".r
+    val missing = for {
+      doc <- List("README.md", "COVERAGE.md")
+      m <- names.findAllMatchIn(new String(Files.readAllBytes(Paths.get(doc)), "UTF-8"))
+      cls <- Option(m.group(1)) match {
+        case Some(tools) => tools.stripPrefix("{").stripSuffix("}")
+          .split(",").map(t => s"tools.${t.trim}").toList
+        case None => List(m.group(2))
+      }
+      file = root.resolve(cls.replace('.', '/') + ".scala")
+      if !Files.isRegularFile(file)
+    } yield s"$doc: ${m.matched} (no $file)"
+    if (missing.nonEmpty)
+      fail(missing.distinct.mkString("docs name tools that do not exist:\n", "\n", ""))
+  }
 }
