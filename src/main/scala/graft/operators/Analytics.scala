@@ -950,7 +950,7 @@ object Analytics {
 
   def hwReadState(spark: org.apache.spark.sql.SparkSession,
                   dir: String): DataFrame =
-    spark.read.parquet(dir)
+    graft.sources.IO.readArtifact(spark, dir)
 
   /** Fold a new-observation batch into a persisted state dir in place
     * (read → extend → overwrite; the state is key-sized, pinned before

@@ -4,16 +4,22 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.sources.BucketedIndex
+import graft.sources.{BucketedIndex, IO}
 
 /** Configuration of the composed LIVE ingest chain (VERDICT r16 #1) —
   * the streaming twin of [[CorpusBuild.buildCorpus]]: which stages run
   * and which persisted artifacts they gate against / advance. Stage
   * order is fixed (exact-dedup → near-dup → winnow → decontaminate →
   * DSIR quality → diversity); optional stages switch on by naming
-  * their artifact. Every operator is the SAME one the stage's
-  * standalone gate sink and batch query id use — composition, not
-  * re-implementation (the buildCorpus contract).
+  * their artifact. Where each stage rule lives: winnow, span
+  * excision, DSIR quality and diversity admission decide in ONE
+  * function each ([[CorpusBuild.winnowStage]],
+  * [[CorpusBuild.spanStage]], [[CorpusBuild.qualityStage]],
+  * [[CorpusBuild.diversityAdmit]]; the index + census advance is
+  * [[CorpusBuild.advanceDiversity]]), which the matching standalone
+  * gate sink and buildCorpus's winnow and quality stages call too;
+  * near-dup shares [[Dedup.nearDupAgainstIndex]] with the near-dup
+  * sink; drop-mode decontamination is buildCorpus's Bloom predicate.
   *
   * Divergence from buildCorpus, documented: (1) the batch build's
   * internal duplicated-SPAN stage needs corpus-wide span statistics a
@@ -199,17 +205,14 @@ object CorpusBuild {
     // the build hands the streaming gate exactly the state it needs.
     val winnowed = winnowIndexDir match {
       case Some(dir) =>
-        val fps = Dedup.winnowFingerprints(near, idCol, textCol)
-          .localCheckpoint(eager = true) // feeds pairs (df cap, sizes,
-                                         // both join sides) + index seed
-        val surv = Dedup.keepCanonical(near,
-            Dedup.winnowPairsFromFps(fps, minShared = winnowMinShared),
-            idCol)
-          .localCheckpoint(eager = true) // feeds the seed + the final pass
+        // fps feed the pairs and the index seed; the survivors feed the
+        // seed and the final pass
+        val w = winnowStage(near, idCol, textCol, winnowMinShared,
+          _.localCheckpoint(eager = true))
         Dedup.writeWinnowFps(
-          fps.join(surv.select(col(idCol).as("id")), Seq("id"), "left_semi"),
+          w.fps.join(w.kept.select(col(idCol).as("id")), Seq("id"), "left_semi"),
           dir)
-        surv
+        w.kept
       case None => near
     }
     // optional stage 2¾: exact duplicated-SPAN removal (Lee et al.
@@ -238,19 +241,16 @@ object CorpusBuild {
           .drop("n_tokens", "n_removed"), toks)
       case None => (winnowed, 0L)
     }
-    // optional stage 2⅞: DSIR quality selection — the composed form of
-    // the live quality gate (the SAME Sampling.dsirScore fold and the
-    // SAME exact-integer threshold comparison as IO.dsirGateSink, so a
-    // doc admitted here is the doc the gate would admit). The score
-    // pass is one narrow explode + broadcast LM join over the dedup
-    // survivors; the keep is a semi-join on the kept ids.
+    // optional stage 2⅞: DSIR quality selection — the live quality
+    // gate's own decision ([[qualityStage]], which IO.dsirGateSink and
+    // the chain run too, so a doc admitted here is the doc the gate
+    // would admit). The score pass is one narrow explode + broadcast LM
+    // join over the dedup survivors; the keep is a semi-join on the
+    // kept ids, and only the kept rows are pinned.
     val qualified = qualityLm match {
       case Some(lm) =>
-        val kept = Sampling.dsirScore(spanned, idCol, textCol, lm)
-          .filter(col("weight_pico") >=
-            lit(qualityThresholdPico) * col("n_tokens"))
-          .select(idCol)
-        spanned.join(kept, Seq(idCol), "left_semi")
+        qualityStage(spanned, lm, idCol, textCol, qualityThresholdPico,
+            identity).kept
           .localCheckpoint(eager = true) // feeds the observed pass below
       case None => spanned
     }
@@ -380,143 +380,207 @@ object CorpusBuild {
     * columns are non-null where their stage ran. Batch-proportional
     * throughout: every index gate is the standalone sink's probe shape
     * (batch-keyed joins against bucketed indexes, broadcast
-    * probe/LM/census). */
-  def chainDecide(batch: DataFrame, cfg: ChainConfig): DataFrame = {
+    * probe/LM/census). `batch` must already be pinned: its one consume
+    * feeds every stage. */
+  def chainDecide(batch: DataFrame, cfg: ChainConfig): DataFrame =
+    chainDecide(batch, cfg, _.localCheckpoint(eager = true))
+
+  /** [[chainDecide]] taking its pins through `pin`: the composed sink
+    * passes its batch's [[Checkpoints.Pins]] and releases them once the
+    * WAL write has read them. The decision is a fold over the enabled
+    * stages in [[ChainOutcomes]] order: each stage maps its input to
+    * its pinned survivors plus the WAL columns it records per doc, a
+    * doc's outcome is the stage it did not survive, and the WAL's audit
+    * columns are the enabled stages' columns, null-typed for the rest. */
+  private[graft] def chainDecide(batch: DataFrame, cfg: ChainConfig,
+                                 pin: DataFrame => DataFrame): DataFrame = {
     val spark = batch.sparkSession
     val id = cfg.idCol; val txt = cfg.textCol
-    val b = batch.localCheckpoint(eager = true) // one consume, six stages
-    // stage 1: exact — intra-batch min-id keeper per content
-    // fingerprint, then the fp-index gate (missing index = cold start)
-    val withFp = b.withColumn("__fp", Text.fingerprint(col(txt)))
-    val intra1 = withFp.join(
-      withFp.groupBy("__fp").agg(min(col(id)).as(id)).select(id),
-      Seq(id), "left_semi")
-    val s1 = BucketedIndex.read(spark, cfg.fpIndexDir)
-      .fold(intra1)(idx => intra1.join(idx.select(col("fp").as("__fp")),
-        Seq("__fp"), "left_anti"))
-      .drop("__fp").localCheckpoint(eager = true)
-    // stage 2: near-dup — intra LSH collapse + band-index gate (the
-    // nearDupAgainstIndex verb, cold-start tolerant)
-    val s2 = Dedup.nearDupAgainstIndex(s1, id, txt, cfg.bandIndexDir,
-      cfg.nearDupThreshold).localCheckpoint(eager = true)
-    // stage 3: winnow — one winnow pass feeds the intra gate and the
-    // index gate (the winnowIngestSink single-pass discipline); index
-    // matches against the batch's OWN ids are excluded (replay-stable)
-    val s3 = cfg.winnowIndexDir match {
-      case Some(wd) =>
-        val fps = Dedup.winnowFingerprints(s2, id, txt)
-          .localCheckpoint(eager = true)
-        val intra = Dedup.keepCanonical(s2,
-          Dedup.winnowPairsFromFps(fps, minShared = cfg.winnowMinShared),
-          id).localCheckpoint(eager = true)
-        val matches = Dedup.matchFpsAgainstWinnowIndex(
-            fps.join(intra.select(col(id).as("id")), Seq("id"), "left_semi"),
-            id, wd, minShared = cfg.winnowMinShared)
-          .join(b.select(col(id).as("match_id")), Seq("match_id"),
-            "left_anti")
-        intra.join(matches.select(id), Seq(id), "left_anti")
-          .localCheckpoint(eager = true)
-      case None => s2
+    type Stage = DataFrame => (DataFrame, Option[DataFrame])
+    // exact: intra-batch min-id keeper per content fingerprint, then the
+    // fp-index gate (missing index = cold start)
+    val exact: Stage = in => {
+      val withFp = in.withColumn("__fp", Text.fingerprint(col(txt)))
+      val intra = withFp.join(
+        withFp.groupBy("__fp").agg(min(col(id)).as(id)).select(id),
+        Seq(id), "left_semi")
+      (BucketedIndex.read(spark, cfg.fpIndexDir)
+        .fold(intra)(idx => intra.join(idx.select(col("fp").as("__fp")),
+          Seq("__fp"), "left_anti"))
+        .drop("__fp"), None)
     }
-    // stage 4: decontamination — probe re-read per batch; drop mode
-    // rides the SAME Bloom predicate buildCorpus uses, span mode the
-    // same excision verb the standalone span sink uses
-    val (s4, excisedOpt) = cfg.probeDir match {
-      case Some(pd) =>
-        val probe = spark.read.parquet(pd)
-        if (cfg.decontaminateSpans) {
-          val cleaned = Dedup.removeContaminatedSpans(s3, probe, id, txt,
-              cfg.shingleN)
-            .withColumnRenamed("id", id)
-            .localCheckpoint(eager = true) // one excision: audit + admit
-          val kept = s3.drop(txt)
-            .join(cleaned.filter(col("clean_text") =!= "")
-              .select(col(id), col("clean_text").as(txt)), Seq(id))
-            .localCheckpoint(eager = true)
-          (kept, Some(cleaned))
-        } else
-          (s3.filter(Dedup.bloomKeepPredicate(probe, txt, cfg.shingleN))
-            .localCheckpoint(eager = true), None)
-      case None => (s3, None)
-    }
-    // stage 5: DSIR quality — LM re-read per batch; judges the text
-    // that SHIPS (post-excision); token-less docs reject (the
-    // dsirGateSink decision, verbatim)
-    val (s5, scoredOpt) = cfg.lmDir match {
-      case Some(ld) =>
-        val lm = spark.read.parquet(ld).select("b", "ratio_pico")
-        val scored = Sampling.dsirScore(s4, id, txt, lm)
-          .localCheckpoint(eager = true) // one scoring: audit + admit
-        val kept = scored.filter(col("weight_pico") >=
-          lit(cfg.qualityThresholdPicoPerToken) * col("n_tokens"))
-          .select(id)
-        (s4.join(kept, Seq(id), "left_semi").localCheckpoint(eager = true),
-          Some(scored))
-      case None => (s4, None)
-    }
-    // stage 6: diversity — occupancy from the census (O(2^planes)
-    // state), the q_diversity_sample ranking for intra-batch collapse;
-    // unembedded docs pass (the diversityCapSample contract)
-    val (s6, admittedEmbOpt) = (cfg.embCol, cfg.diversityIndexDir) match {
-      case (Some(ec), Some(dd)) =>
-        val vecs = s5.filter(col(ec).isNotNull).select(col(id), col(ec))
-        val ranked = Sampling.diversityCapRanked(vecs, id, ec,
-          cfg.diversityCap).select(col("bucket"), col("rn"), col(id))
-        val occ = Sampling.readBucketOccupancy(spark, dd)
-        val admittedEmb = ranked
-          .join(broadcast(occ), Seq("bucket"), "left")
-          .na.fill(0L, Seq("n_occ"))
-          .filter(col("rn") + col("n_occ") <= cfg.diversityCap.toLong)
-          .select(col(id), col("bucket"))
-          .localCheckpoint(eager = true) // feeds the keep + the WAL
-        val keep = s5.filter(col(ec).isNull).select(col(id))
-          .unionByName(admittedEmb.select(col(id)))
-        (s5.join(keep, Seq(id), "left_semi").localCheckpoint(eager = true),
-          Some(admittedEmb))
-      case _ => (s5, None)
-    }
-    // assemble outcomes: each doc named by the stage that dropped it
+    // near-dup: intra LSH collapse + band-index gate (cold-start tolerant)
+    val nearDup: Stage = in => (Dedup.nearDupAgainstIndex(in, id, txt,
+      cfg.bandIndexDir, cfg.nearDupThreshold), None)
+    val winnow = cfg.winnowIndexDir.map[Stage](wd => in =>
+      (winnowStage(in, id, txt, cfg.winnowMinShared, pin,
+        Some(wd -> batch)).kept, None))
+    // decontamination: drop mode rides the SAME Bloom predicate
+    // buildCorpus uses, span mode the standalone span sink's stage
+    val decontaminate = cfg.probeDir.map[Stage](pd => in =>
+      if (cfg.decontaminateSpans) {
+        val s = spanStage(in, pd, id, txt, cfg.shingleN, pin)
+        (s.kept, Some(s.cleaned.select(col(id).as("id"),
+          when(col("n_removed") > 0, col("clean_text")).as("ship_text"),
+          col("n_removed"))))
+      } else (in.filter(Dedup.bloomKeepPredicate(
+        IO.readArtifact(spark, pd), txt, cfg.shingleN)), None))
+    // quality judges the text that SHIPS (post-excision)
+    val quality = cfg.lmDir.map[Stage](ld => in => {
+      val s = qualityStage(in, IO.readArtifact(spark, ld), id, txt,
+        cfg.qualityThresholdPicoPerToken, pin)
+      (s.kept, Some(s.scored.select(col(id).as("id"), col("n_tokens"),
+        col("weight_pico"))))
+    })
+    // diversity: occupancy from the census; unembedded docs pass (the
+    // diversityCapSample contract)
+    val diversity = for (ec <- cfg.embCol; dd <- cfg.diversityIndexDir)
+      yield ((in: DataFrame) => {
+        val admitted = diversityAdmit(
+          in.filter(col(ec).isNotNull).select(col(id), col(ec)),
+          Sampling.readBucketOccupancy(spark, dd), id, ec, cfg.diversityCap,
+          pin)
+        val keep = in.filter(col(ec).isNull).select(col(id))
+          .unionByName(admitted.select(col(id)))
+        (in.join(keep, Seq(id), "left_semi"),
+          Some(admitted.select(col(id).as("id"), col("bucket"))))
+      }): Stage
+    val stages = Seq(Some(exact), Some(nearDup), winnow, decontaminate,
+        quality, diversity).zip(ChainOutcomes)
+      .collect { case (Some(stage), outcome) => (stage, outcome) }
     def idsOf(df: DataFrame) = df.select(col(id).as("id"))
-    val ladder = Seq(idsOf(b), idsOf(s1), idsOf(s2), idsOf(s3), idsOf(s4),
-      idsOf(s5))
-    val droppedAt = ladder.zip(ladder.tail :+ idsOf(s6))
-      .zip(ChainOutcomes.init)
-      .map { case ((pre, post), o) =>
-        pre.join(post, Seq("id"), "left_anti")
-          .select(col("id"), lit(o).as("outcome"))
+    val (admitted, dropped, audits) = stages
+      .foldLeft((batch, Seq.empty[DataFrame], Seq.empty[DataFrame])) {
+        case ((in, dropped, audits), (stage, outcome)) =>
+          val (out, audit) = stage(in)
+          val kept = pin(out)
+          (kept, dropped :+ idsOf(in).join(idsOf(kept), Seq("id"), "left_anti")
+            .select(col("id"), lit(outcome).as("outcome")), audits ++ audit)
       }
-    val outcomes = droppedAt
+    val outcomes = (dropped :+ idsOf(admitted)
+        .select(col("id"), lit("admitted").as("outcome")))
       .reduce(_ unionByName _)
-      .unionByName(idsOf(s6).select(col("id"),
-        lit("admitted").as("outcome")))
-    // enrich with the audit/apply columns (null where a stage was off
-    // or the doc never reached it)
-    val spanCols = excisedOpt match {
-      case Some(cleaned) => outcomes.join(
-        cleaned.select(col(id).as("id"),
-          when(col("n_removed") > 0, col("clean_text"))
-            .as("ship_text"),
-          col("n_removed")),
-        Seq("id"), "left")
-      case None => outcomes
-        .withColumn("ship_text", lit(null).cast("string"))
-        .withColumn("n_removed", lit(null).cast("long"))
+    WalAuditColumns.foldLeft(audits.foldLeft(outcomes)(_.join(_, Seq("id"), "left"))) {
+        case (df, (c, t)) =>
+          if (df.columns.contains(c)) df else df.withColumn(c, lit(null).cast(t))
+      }
+      .select(("id" +: "outcome" +: WalAuditColumns.map(_._1)).map(col): _*)
+  }
+
+  /** The decisions WAL's per-doc audit columns and their types, in
+    * order; a disabled stage's columns are all null. */
+  private val WalAuditColumns = Seq("ship_text" -> "string",
+    "n_tokens" -> "long", "weight_pico" -> "long", "n_removed" -> "long",
+    "bucket" -> "long")
+
+  // ---- the gate stages: each ingest gate's decision, written once ----
+  //
+  // buildCorpus, the composed chain and the standalone gate sinks in
+  // graft.sources.IO all decide through these. Each takes the stage's
+  // input and its pre-batch state (index dir, probe, LM, occupancy) and
+  // returns the kept rows plus the per-doc columns the WAL and the
+  // sinks' audits record. `pin` is the caller's eager pin (a
+  // micro-batch's Checkpoints.Pins, or identity): a stage pins only what
+  // more than one of its consumers reads, and leaves `kept` lazy.
+
+  /** The winnow (substring-family) gate. `fps`: ONE winnow pass over
+    * `docs`, feeding both gates and the caller's index advance;
+    * `pairs`: within-`docs` overlap pairs; `intra`: the min-id
+    * canonical per overlap family. With `index` = (winnow index dir,
+    * micro-batch), `matches` gates the intra survivors' fingerprints
+    * against the index, never counting a match against the batch's own
+    * ids (a replay whose rows the index already holds decides as
+    * before); `kept` = intra survivors no index match flagged. */
+  private[graft] final case class Winnowed(fps: DataFrame, pairs: DataFrame,
+      intra: DataFrame, matches: Option[DataFrame], kept: DataFrame)
+  private[graft] def winnowStage(docs: DataFrame, idCol: String, textCol: String,
+      minShared: Long, pin: DataFrame => DataFrame,
+      index: Option[(String, DataFrame)] = None): Winnowed = {
+    val fps = pin(Dedup.winnowFingerprints(docs, idCol, textCol))
+    val pairs = Dedup.winnowPairsFromFps(fps, minShared = minShared)
+    val intra = pin(Dedup.keepCanonical(docs, pairs, idCol))
+    val matches = index.map { case (dir, batch) =>
+      Dedup.matchFpsAgainstWinnowIndex(
+          fps.join(intra.select(col(idCol).as("id")), Seq("id"), "left_semi"),
+          idCol, dir, minShared = minShared)
+        .join(batch.select(col(idCol).as("match_id")), Seq("match_id"),
+          "left_anti")
     }
-    val qualCols = scoredOpt match {
-      case Some(scored) => spanCols.join(
-        scored.select(col(id).as("id"), col("n_tokens"),
-          col("weight_pico")), Seq("id"), "left")
-      case None => spanCols
-        .withColumn("n_tokens", lit(null).cast("long"))
-        .withColumn("weight_pico", lit(null).cast("long"))
-    }
-    val divCols = admittedEmbOpt match {
-      case Some(adm) => qualCols.join(
-        adm.select(col(id).as("id"), col("bucket")), Seq("id"), "left")
-      case None => qualCols.withColumn("bucket", lit(null).cast("long"))
-    }
-    divCols.select("id", "outcome", "ship_text", "n_tokens",
-      "weight_pico", "n_removed", "bucket")
+    Winnowed(fps, pairs, intra, matches, matches.fold(intra)(m =>
+      intra.join(m.select(idCol), Seq(idCol), "left_anti")))
+  }
+
+  /** The surgical decontamination gate: `cleaned` (idCol, n_tokens,
+    * n_removed, clean_text) excises every probe-matching maximal span
+    * ([[Dedup.removeContaminatedSpans]], probe re-read per batch so a
+    * grown benchmark tightens the gate); `kept` = `docs` with the clean
+    * text, minus the docs the excision emptied. */
+  private[graft] final case class Excised(cleaned: DataFrame, kept: DataFrame)
+  private[graft] def spanStage(docs: DataFrame, probeDir: String, idCol: String,
+      textCol: String, n: Int, pin: DataFrame => DataFrame): Excised = {
+    val cleaned = pin(Dedup.removeContaminatedSpans(docs,
+        IO.readArtifact(docs.sparkSession, probeDir), idCol, textCol, n)
+      .withColumnRenamed("id", idCol))
+    Excised(cleaned, docs.drop(textCol)
+      .join(cleaned.filter(col("clean_text") =!= "")
+        .select(col(idCol), col("clean_text").as(textCol)), Seq(idCol)))
+  }
+
+  /** The DSIR quality gate: `scored` (idCol, n_tokens, weight_pico,
+    * admitted) scores every doc with a token against the hashed LM
+    * (b, ratio_pico); a doc is admitted when weight_pico ≥ threshold ·
+    * n_tokens — exact integers, so a replay decides bit-for-bit.
+    * Token-less docs never reach the explode and are rejected (no
+    * content to judge). `kept` = the admitted `docs` rows. */
+  private[graft] final case class Scored(scored: DataFrame, kept: DataFrame)
+  private[graft] def qualityStage(docs: DataFrame, lm: DataFrame, idCol: String,
+      textCol: String, thresholdPicoPerToken: Long, pin: DataFrame => DataFrame,
+      buckets: Int = 4096): Scored = {
+    val scored = pin(Sampling.dsirScore(docs, idCol, textCol,
+        lm.select("b", "ratio_pico"), buckets)
+      .withColumn("admitted",
+        col("weight_pico") >= lit(thresholdPicoPerToken) * col("n_tokens")))
+    Scored(scored, docs.join(scored.filter(col("admitted")).select(idCol),
+      Seq(idCol), "left_semi"))
+  }
+
+  /** The diversity gate's admission, pinned: (idCol, bucket) of the
+    * `vecs` (idCol, embCol — the caller picks which vectors compete)
+    * that fit their semantic bucket's `cap` against the occupancy `occ`
+    * (bucket, n_occ; a bucket absent from it is empty). A batch rank
+    * never exceeds `cap` ([[Sampling.diversityCapRanked]] keeps the
+    * bottom-`cap` per bucket in deterministic md5 order), so trimming to
+    * rn + occupancy ≤ cap is the exact greedy admission. */
+  private[graft] def diversityAdmit(vecs: DataFrame, occ: DataFrame, idCol: String,
+      embCol: String, cap: Int, pin: DataFrame => DataFrame): DataFrame =
+    pin(Sampling.diversityCapRanked(vecs, idCol, embCol, cap)
+      .join(broadcast(occ), Seq("bucket"), "left")
+      .na.fill(0L, Seq("n_occ"))
+      .filter(col("rn") + col("n_occ") <= cap.toLong)
+      .select(col(idCol), col("bucket")))
+
+  /** Advance the bucket-membership index at `dir` and its census by one
+    * batch's admitted `delta` (bucket, id: long), pinned by the caller.
+    * An empty delta writes nothing: an empty partitioned append would
+    * leave a schema-less dir that poisons the next occupancy read.
+    * Order: `beforeIndex` (the standalone sink's corpus append) → `occ`
+    * (the occupancy the census advances from, read before the index
+    * changes) → index → census, so a crash before the census replays
+    * against the old census. `isReplay` (a batch re-applied after a
+    * crash) rebuilds the census from the index instead, exact under its
+    * count-distinct semantics, and reconciles it even when the delta
+    * re-applied as empty. */
+  private[graft] def advanceDiversity(delta: DataFrame, dir: String, buckets: Int,
+      isReplay: Boolean, occ: => DataFrame, beforeIndex: => Unit): Unit = {
+    val spark = delta.sparkSession
+    if (!delta.isEmpty) {
+      beforeIndex
+      val occBefore = occ
+      BucketedIndex.append(Sampling.BucketMembershipIndex, dir, buckets, delta)
+      if (isReplay) Sampling.writeBucketCensus(spark, dir)
+      else Sampling.advanceBucketCensus(occBefore, delta.select("bucket"), dir)
+    } else if (isReplay && BucketedIndex.exists(spark, dir))
+      Sampling.writeBucketCensus(spark, dir)
   }
 
   /** APPLY phase: replay one batch's persisted decisions onto every
@@ -538,7 +602,7 @@ object CorpusBuild {
     *     replay (exact — countDistinct semantics). */
   def chainApply(batch: DataFrame, decisions: DataFrame, outDir: String,
                  cfg: ChainConfig, batchId: Long,
-                 isReplay: Boolean): Unit = {
+                 isReplay: Boolean): Unit = Checkpoints.scoped(batch.sparkSession) { pin =>
     val spark = batch.sparkSession
     val id = cfg.idCol; val txt = cfg.textCol
     val d = decisions
@@ -579,22 +643,11 @@ object CorpusBuild {
     }
     // 5. bucket-membership index + census ← admitted embedded docs
     // (bucket comes from the WAL, never recomputed)
-    for (_ <- cfg.embCol; dd <- cfg.diversityIndexDir) {
-      val delta = unindexed(admitted.filter(col("bucket").isNotNull)
-          .select(col("bucket"), col("id").cast("long").as("id")), "id", dd)
-        .localCheckpoint(eager = true)
-      if (!delta.isEmpty) {
-        val occBefore = Sampling.readBucketOccupancy(spark, dd)
-          .localCheckpoint(eager = true) // read BEFORE the append below
-        BucketedIndex.append(Sampling.BucketMembershipIndex, dd, 64, delta)
-        if (isReplay) Sampling.writeBucketCensus(spark, dd)
-        else Sampling.advanceBucketCensus(occBefore, delta.select("bucket"), dd)
-      } else if (isReplay && BucketedIndex.exists(spark, dd))
-        // the crash may have landed between index append and census
-        // advance — reconcile the census even when the delta re-applied
-        // as empty
-        Sampling.writeBucketCensus(spark, dd)
-    }
+    for (_ <- cfg.embCol; dd <- cfg.diversityIndexDir)
+      advanceDiversity(pin(unindexed(admitted.filter(col("bucket").isNotNull)
+          .select(col("bucket"), col("id").cast("long").as("id")), "id", dd)),
+        dd, 64, isReplay, occ = pin(Sampling.readBucketOccupancy(spark, dd)),
+        beforeIndex = ())
     // 6. ledger — one row per batch, derived from the WAL (exactly-once
     // via the same batch-partitioned dynamic overwrite)
     chainLedgerRow(d, batchId)
@@ -611,18 +664,15 @@ object CorpusBuild {
     val rankCol = ChainOutcomes.foldRight(lit(-1)) { (o, acc) =>
       when(col("outcome") === o, lit(rank(o))).otherwise(acc)
     }
+    // the rows past each stage, in stage order; the diversity stage's
+    // survivors are the admitted
+    val past = Seq("after_exact", "after_near_dup", "after_winnow",
+        "after_decontaminate", "after_quality", "admitted")
+      .zipWithIndex.map { case (name, r) =>
+        sum(when(col("__r") >= r + 1, 1L).otherwise(0L)).as(name) }
     decisions.select(rankCol.as("__r"), col("n_removed"))
-      .agg(
-        count(lit(1)).as("raw"),
-        sum(when(col("__r") >= 1, 1L).otherwise(0L)).as("after_exact"),
-        sum(when(col("__r") >= 2, 1L).otherwise(0L)).as("after_near_dup"),
-        sum(when(col("__r") >= 3, 1L).otherwise(0L)).as("after_winnow"),
-        sum(when(col("__r") >= 4, 1L).otherwise(0L))
-          .as("after_decontaminate"),
-        sum(when(col("__r") >= 5, 1L).otherwise(0L)).as("after_quality"),
-        sum(when(col("__r") >= 6, 1L).otherwise(0L)).as("admitted"),
-        coalesce(sum(col("n_removed")), lit(0L))
-          .as("span_tokens_removed"))
+      .agg(count(lit(1)).as("raw"), past :+
+        coalesce(sum(col("n_removed")), lit(0L)).as("span_tokens_removed"): _*)
       .withColumn("__batch", lit(batchId))
   }
 }

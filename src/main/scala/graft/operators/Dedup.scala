@@ -287,10 +287,11 @@ object Dedup {
   def clusterByMinhash(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double, shingleN: Int = 3,
                        numHashes: Int = 32, bands: Int = 8): DataFrame =
-    keepCanonical(docs,
-      minhashConfirmedPairs(docs, idCol, textCol, threshold, shingleN,
-        numHashes, bands),
-      idCol)
+    // the clustering pins its edge list from the pairs eagerly, so the
+    // signatures the pairs were built from are released once it returns
+    Checkpoints.scoped(docs.sparkSession)(pins => keepCanonical(docs,
+      pins.hold(minhashConfirmedPairs(docs, idCol, textCol, threshold,
+        shingleN, numHashes, bands)), idCol))
 
   /** The confirmed near-dup PAIR relation behind [[clusterByMinhash]]
     * (LSH candidates → exact-Jaccard confirm, id_a < id_b) — exposed so
@@ -977,9 +978,11 @@ object Dedup {
     // clusterByMinhash returns the intra-batch SURVIVORS directly.
     // localCheckpoint: `intra` feeds THREE consumers below (signatures,
     // token projection, final left-anti) — without it the whole
-    // intra-batch LSH clustering subtree re-evaluates per consumer.
-    val intra = clusterByMinhash(batch, idCol, textCol, threshold,
-      shingleN, numHashes, bands).localCheckpoint(true)
+    // intra-batch LSH clustering subtree re-evaluates per consumer; the
+    // clustering's own pins are released once it is pinned.
+    val intra = Checkpoints.scoped(spark)(pins => pins.hold(clusterByMinhash(
+      batch, idCol, textCol, threshold, shingleN, numHashes, bands))
+      .localCheckpoint(true))
     val sigs = minhashSignatures(intra, idCol, textCol, shingleN, numHashes, bands)
     val batchBands = sigs.select(col(idCol).as("__bid"),
       posexplode(col("buckets")).as(Seq("band", "bucket")))

@@ -281,7 +281,7 @@ object Spectral {
     * (m, v, evPermille, bucketWidth, referenceHistogram, refN). */
   def readDirection(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (Array[Long], Array[Long], Long, Long, Map[Long, Long], Long) = {
-    val rows = spark.read.parquet(dir)
+    val rows = graft.sources.IO.readArtifact(spark, dir)
       .select("kind", "idx", "a", "b")
       // bounded: dim 'dir' rows + 1 'meta' + occupied-bucket 'hist' rows — dimension/histogram-, never data-scale
       .collect()

@@ -7,6 +7,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType,
   StructField, StructType, TimestampType}
 
+import graft.operators.{Checkpoints, CorpusBuild}
+
 /** Source/sink pack (SURVEY.md §2.A). The reference's connector surface —
   * Kafka topics between layers, MySQL-CDC ingest, HBase dim store, Doris
   * OLAP sink, HDFS checkpoints (reference `pom.xml:153-195,69-73`) — maps
@@ -161,6 +163,24 @@ object IO {
       .foreachBatch(body)
       .trigger(Trigger.AvailableNow())
 
+  /** The skeleton of every marked sink that pins its batch (the
+    * ingest gates, the composed chain, the audit stores): a committed
+    * batch is skipped ([[idempotentForeachBatch]], markers under
+    * `outDir/_markers`), the batch is pinned once, and `body` runs over
+    * it with the batch's [[Checkpoints.Pins]]. Every pin is released
+    * after the body's last write — unpersist does NOT free
+    * localCheckpoint blocks, and a long-running query would otherwise
+    * keep one batch-sized block set per micro-batch. */
+  private def pinnedBatchSink(df: DataFrame, outDir: String,
+                              checkpointDir: String)
+                             (body: (DataFrame, Long, Checkpoints.Pins) => Unit)
+      : DataStreamWriter[Row] =
+    foreachBatchSink(df, checkpointDir)(
+      idempotentForeachBatch(s"$outDir/_markers") { (batch, batchId) =>
+        Checkpoints.scoped(batch.sparkSession)(pin =>
+          body(pin(batch), batchId, pin))
+      })
+
   /** Streaming IVF index maintenance: each micro-batch of embeddings is
     * appended into a persisted IVF index via
     * [[graft.operators.Similarity.ivfAppendIndex]] — assign only the
@@ -235,12 +255,13 @@ object IO {
                        threshold: Double)
       : DataStreamWriter[Row] =
     foreachBatchSink(docs, checkpointDir) { (batch, _) =>
-      val survivors = graft.operators.Dedup
-        .nearDupAgainstIndex(batch, idCol, textCol, indexDir, threshold)
-        .localCheckpoint(true) // one computation feeds both appends
-      survivors.write.mode("append").parquet(outDir)
-      graft.operators.Dedup.appendNearDupIndex(
-        survivors, idCol, textCol, indexDir)
+      Checkpoints.scoped(batch.sparkSession) { pin =>
+        val survivors = pin(graft.operators.Dedup // feeds both appends
+          .nearDupAgainstIndex(batch, idCol, textCol, indexDir, threshold))
+        survivors.write.mode("append").parquet(outDir)
+        graft.operators.Dedup.appendNearDupIndex(
+          survivors, idCol, textCol, indexDir)
+      }
     }
 
   /** Streaming corpus ingest with benchmark DECONTAMINATION at the
@@ -266,19 +287,14 @@ object IO {
                               checkpointDir: String, idCol: String,
                               textCol: String, n: Int = 5)
       : DataStreamWriter[Row] =
-    foreachBatchSink(docs, checkpointDir)(
-      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
-        val spark = batch.sparkSession
-        val probe = spark.read.parquet(probeDir)
-        val b = batch.localCheckpoint(true) // one scan feeds both routes
-        val flagged = graft.operators.Dedup
-          .contaminatedIds(b, probe, idCol, textCol, n)
-          .localCheckpoint(true)
-        b.join(flagged, Seq(idCol), "left_semi")
-          .write.mode("append").parquet(quarantineDir)
-        b.join(flagged, Seq(idCol), "left_anti")
-          .write.mode("append").parquet(outDir)
-      })
+    pinnedBatchSink(docs, outDir, checkpointDir) { (b, _, pin) =>
+      val flagged = pin(graft.operators.Dedup.contaminatedIds(b,
+        readArtifact(b.sparkSession, probeDir), idCol, textCol, n))
+      b.join(flagged, Seq(idCol), "left_semi")
+        .write.mode("append").parquet(quarantineDir)
+      b.join(flagged, Seq(idCol), "left_anti")
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming corpus ingest with SURGICAL decontamination at the gate
     * — the excision twin of [[decontaminateIngestSink]] (live
@@ -292,7 +308,8 @@ object IO {
     * the whole-doc-drop outcome recovered exactly where it is right).
     * Every excision writes an audit row (id, n_tokens, n_removed,
     * emptied) to `auditDir` — the hygiene trail a review reads, the
-    * surgical sibling of the drop sink's quarantine. Exactly-once: both
+    * surgical sibling of the drop sink's quarantine. The decision is
+    * [[CorpusBuild.spanStage]], the chain's span stage. Exactly-once: both
     * appends under ONE committed-batch marker; the audit append runs
     * FIRST, so a torn batch can only leave audit rows without corpus
     * rows — never an unaudited excision. */
@@ -301,25 +318,14 @@ object IO {
                             checkpointDir: String, idCol: String,
                             textCol: String, n: Int = 5)
       : DataStreamWriter[Row] =
-    foreachBatchSink(docs, checkpointDir)(
-      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
-        val spark = batch.sparkSession
-        val probe = spark.read.parquet(probeDir)
-        val b = batch.localCheckpoint(true) // feeds excision + re-join
-        val cleaned = graft.operators.Dedup
-          .removeContaminatedSpans(b, probe, idCol, textCol, n)
-          .withColumnRenamed("id", idCol)
-          .localCheckpoint(true) // one excision feeds audit + admit
-        cleaned.filter(col("n_removed") > 0)
-          .select(col(idCol), col("n_tokens"), col("n_removed"),
-            (col("clean_text") === "").as("emptied"))
-          .write.mode("append").parquet(auditDir)
-        b.drop(textCol)
-          .join(cleaned.filter(col("clean_text") =!= "")
-            .select(col(idCol), col("clean_text").as(textCol)),
-            Seq(idCol))
-          .write.mode("append").parquet(outDir)
-      })
+    pinnedBatchSink(docs, outDir, checkpointDir) { (b, _, pin) =>
+      val s = CorpusBuild.spanStage(b, probeDir, idCol, textCol, n, pin)
+      s.cleaned.filter(col("n_removed") > 0)
+        .select(col(idCol), col("n_tokens"), col("n_removed"),
+          (col("clean_text") === "").as("emptied"))
+        .write.mode("append").parquet(auditDir)
+      s.kept.write.mode("append").parquet(outDir)
+    }
 
   /** Streaming QUALITY gate — the live form of the DSIR selection pair
     * (`q_dsir_hashed` weights, `q_dsir_select` cut): each micro-batch
@@ -330,8 +336,10 @@ object IO {
     * an audit row (id, n_tokens, weight_pico, admitted) appended FIRST
     * (never an unaudited decision — the decontaminateSpanSink
     * discipline). The comparison is exact integer arithmetic
-    * (weight_pico ≥ threshold·n_tokens — no division), so a replayed
-    * batch reproduces its decisions bit-for-bit; the LM is RE-READ per
+    * (weight_pico ≥ threshold·n_tokens — no division;
+    * [[CorpusBuild.qualityStage]], the chain's and buildCorpus's
+    * quality stage), so a replayed batch reproduces its decisions
+    * bit-for-bit; the LM is RE-READ per
     * micro-batch, so retraining the reference (new target corpus)
     * tightens the gate without a restart. The SEVENTH ingest gate
     * (exact-dup, near-dup, winnow, semantic, decontaminate ×2 — and now
@@ -350,29 +358,21 @@ object IO {
                    idCol: String, textCol: String,
                    thresholdPicoPerToken: Long, buckets: Int = 4096)
       : DataStreamWriter[Row] =
-    foreachBatchSink(docs, checkpointDir)(
-      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
-        val spark = batch.sparkSession
-        val lm = spark.read.parquet(lmDir).select("b", "ratio_pico")
-        val b = batch.localCheckpoint(true) // feeds scoring + admit join
-        val scored = graft.operators.Sampling
-          .dsirScore(b, idCol, textCol, lm, buckets)
-          .withColumn("admitted",
-            col("weight_pico") >= lit(thresholdPicoPerToken) * col("n_tokens"))
-          .localCheckpoint(true) // one scoring pass feeds audit + admit
-        // token-less docs never reach the explode — audit them as
-        // rejected (0 tokens, 0 weight) so every input has a decision
-        val unscored = b.select(col(idCol))
-          .join(scored.select(idCol), Seq(idCol), "left_anti")
-          .select(col(idCol), lit(0L).as("n_tokens"),
-            lit(0L).as("weight_pico"), lit(false).as("admitted"))
-        scored.select(col(idCol), col("n_tokens"), col("weight_pico"),
-            col("admitted"))
-          .union(unscored)
-          .write.mode("append").parquet(auditDir)
-        b.join(scored.filter(col("admitted")).select(idCol), Seq(idCol))
-          .write.mode("append").parquet(outDir)
-      })
+    pinnedBatchSink(docs, outDir, checkpointDir) { (b, _, pin) =>
+      val s = CorpusBuild.qualityStage(b, readArtifact(b.sparkSession, lmDir),
+        idCol, textCol, thresholdPicoPerToken, pin, buckets)
+      // token-less docs never reach the explode — audit them as
+      // rejected (0 tokens, 0 weight) so every input has a decision
+      val unscored = b.select(col(idCol))
+        .join(s.scored.select(idCol), Seq(idCol), "left_anti")
+        .select(col(idCol), lit(0L).as("n_tokens"),
+          lit(0L).as("weight_pico"), lit(false).as("admitted"))
+      s.scored.select(col(idCol), col("n_tokens"), col("weight_pico"),
+          col("admitted"))
+        .union(unscored)
+        .write.mode("append").parquet(auditDir)
+      s.kept.write.mode("append").parquet(outDir)
+    }
 
   /** Streaming DIVERSITY gate — the EIGHTH ingest gate (exact-dup,
     * near-dup, winnow, semantic, decontaminate ×2, quality — and now
@@ -398,8 +398,11 @@ object IO {
     * O(cap) state per bucket, never a window): a batch rank can never
     * exceed `cap` and the remaining budget never exceeds `cap`, so
     * trimming the bottom-`cap` to `rn + occupancy ≤ cap` is the exact
-    * greedy admission. Cold start: missing index = zero occupancy (the
-    * nearDupAgainstIndex contract); seed it from an existing corpus
+    * greedy admission ([[CorpusBuild.diversityAdmit]], the chain's
+    * diversity stage, which also shares the index + census advance,
+    * [[CorpusBuild.advanceDiversity]]). Cold start: missing index =
+    * zero occupancy (the nearDupAgainstIndex contract); seed it from
+    * an existing corpus
     * with [[graft.operators.Sampling.writeBucketMembershipIndex]].
     *
     * Replay semantics: committed batches are marker no-ops. Torn
@@ -414,48 +417,30 @@ object IO {
                         checkpointDir: String, idCol: String,
                         vecCol: String, cap: Int, buckets: Int = 64)
       : DataStreamWriter[Row] =
-    foreachBatchSink(vecs, checkpointDir)(
-      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
-        val spark = batch.sparkSession
-        val b = batch.localCheckpoint(true) // feeds ranking + admit join
-        val ranked = graft.operators.Sampling
-          .diversityCapRanked(b, idCol, vecCol, cap)
-          .select(col("bucket"), col("rn"), col(idCol))
-        // occupancy from the CENSUS sidecar (≤ 2^planes rows), never a
-        // per-batch scan of the id-attributed index (ADVICE r16: that
-        // fold's input grew with the admitted corpus). A pre-census
-        // index derives once and materializes below; a missing index
-        // is zero occupancy (cold start). Pinned: the filtered census
-        // feeds the admission AND the advance below, and the advance's
-        // swap must not re-read the dir it is replacing.
-        val occ = graft.operators.Sampling
-          .readBucketOccupancy(spark, indexDir)
-          .localCheckpoint(true)
-        val admitted = ranked
-          .join(broadcast(occ), Seq("bucket"), "left")
-          .na.fill(0L, Seq("n_occ"))
-          .filter(col("rn") + col("n_occ") <= cap.toLong)
-          .localCheckpoint(true) // feeds the corpus append + the delta
-        // zero-admission batches (empty micro-batch, or every bucket
-        // at cap) must not write: an EMPTY partitioned append creates
-        // a schema-less dir (only _SUCCESS) that poisons the next
-        // batch's occupancy read with UNABLE_TO_INFER_SCHEMA
-        if (!admitted.isEmpty) {
-          b.join(admitted.select(idCol), Seq(idCol), "left_semi")
-            .write.mode("append").parquet(outDir)
-          BucketedIndex.append(graft.operators.Sampling.BucketMembershipIndex,
-            indexDir, buckets,
-            admitted.select(col("bucket"), col(idCol).cast("long").as("id")))
-          // census advance LAST (corpus → index → census): a crash
-          // before this line replays the batch against the old census
-          // — identical decisions, duplicate-but-identical corpus/index
-          // rows (countDistinct census semantics absorb them); a crash
-          // after it self-bills the replay (admits nothing extra) —
-          // the conservative direction, as before
-          graft.operators.Sampling.advanceBucketCensus(
-            occ, admitted.select("bucket"), indexDir)
-        }
-      })
+    pinnedBatchSink(vecs, outDir, checkpointDir) { (b, _, pin) =>
+      // occupancy from the CENSUS sidecar (≤ 2^planes rows), never a
+      // per-batch scan of the id-attributed index (ADVICE r16: that
+      // fold's input grew with the admitted corpus). A pre-census
+      // index derives once and materializes below; a missing index
+      // is zero occupancy (cold start). Pinned: the filtered census
+      // feeds the admission AND the advance below, and the advance's
+      // swap must not re-read the dir it is replacing.
+      val occ = pin(graft.operators.Sampling
+        .readBucketOccupancy(b.sparkSession, indexDir))
+      val admitted = CorpusBuild.diversityAdmit(b, occ, idCol, vecCol, cap,
+        pin)
+      // corpus → index → census: a crash before the census advance
+      // replays the batch against the old census — identical
+      // decisions, duplicate-but-identical corpus/index rows
+      // (countDistinct census semantics absorb them); a crash after it
+      // self-bills the replay (admits nothing extra) — the
+      // conservative direction
+      CorpusBuild.advanceDiversity(
+        admitted.select(col("bucket"), col(idCol).cast("long").as("id")),
+        indexDir, buckets, isReplay = false, occ,
+        beforeIndex = b.join(admitted.select(idCol), Seq(idCol), "left_semi")
+          .write.mode("append").parquet(outDir))
+    }
 
   /** Streaming embedding ingest with SEMANTIC dedup at the gate — the
     * vector twin of [[nearDupDedupSink]]: each micro-batch drops
@@ -488,17 +473,17 @@ object IO {
       : DataStreamWriter[Row] =
     foreachBatchSink(vecs, checkpointDir)(
       idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
-        val intra = graft.operators.Similarity
-          .semanticCollapseBatch(batch, idCol, vecCol, indexDir,
-            threshold, nprobe)
-          .localCheckpoint(true) // feeds the index-gate join twice
-        val novel = graft.operators.Similarity
-          .semanticDedupAgainstIndex(intra, idCol, vecCol, indexDir,
-            threshold, nprobe)
-          .localCheckpoint(true) // one computation feeds both appends
-        novel.write.mode("append").parquet(outDir)
-        graft.operators.Similarity.ivfAppendIndex(
-          novel.select(col(idCol), col(vecCol)), idCol, vecCol, indexDir)
+        Checkpoints.scoped(batch.sparkSession) { pin =>
+          val intra = pin(graft.operators.Similarity // feeds the gate twice
+            .semanticCollapseBatch(batch, idCol, vecCol, indexDir,
+              threshold, nprobe))
+          val novel = pin(graft.operators.Similarity // feeds both appends
+            .semanticDedupAgainstIndex(intra, idCol, vecCol, indexDir,
+              threshold, nprobe))
+          novel.write.mode("append").parquet(outDir)
+          graft.operators.Similarity.ivfAppendIndex(
+            novel.select(col(idCol), col(vecCol)), idCol, vecCol, indexDir)
+        }
       })
 
   /** Streaming corpus ingest with a WINNOWING substring gate — the
@@ -523,9 +508,10 @@ object IO {
     * reads), survivors append to `outDir`, and the survivors'
     * already-computed fingerprints advance the index
     * ([[graft.operators.Dedup.appendWinnowFps]] — no second winnow
-    * pass) so later batches gate against everything admitted. Cold
-    * start: a missing index admits the intra-collapsed first batch and
-    * seeds.
+    * pass) so later batches gate against everything admitted. Both
+    * gates are [[CorpusBuild.winnowStage]], the chain's and buildCorpus's
+    * winnow stage. Cold start: a missing index admits the
+    * intra-collapsed first batch and seeds.
     *
     * Replay semantics (narrowed from "exactly-once over all effects" —
     * ADVICE r13): the committed-batch marker makes a COMPLETED batch an
@@ -544,57 +530,37 @@ object IO {
                        idCol: String, textCol: String,
                        minShared: Long = 2L)
       : DataStreamWriter[Row] =
-    foreachBatchSink(docs, checkpointDir)(
-      idempotentForeachBatch(s"$outDir/_markers") { (batch, _) =>
-        val b = batch.localCheckpoint(true) // one scan feeds both routes
-        // ONE winnow pass serves the intra gate, the index gate and
-        // the final index append
-        val fps = graft.operators.Dedup
-          .winnowFingerprints(b, idCol, textCol)
-          .localCheckpoint(true)
-        def bestOf(m: DataFrame): DataFrame = m
-          .groupBy(idCol)
-          .agg(max(struct(col("n_shared"), col("score"), col("match_id")))
-            .as("m"))
-          .select(col(idCol), col("m.match_id").as("match_id"),
-            col("m.n_shared").as("n_shared"), col("m.score").as("score"))
-        // gate 1: intra-batch collapse, min-id canonical per family
-        val intraPairs = graft.operators.Dedup
-          .winnowPairsFromFps(fps, minShared = minShared)
-          .localCheckpoint(true) // feeds keepCanonical + the audit rows
-        val intra = graft.operators.Dedup
-          .keepCanonical(b, intraPairs, idCol)
-          .localCheckpoint(true) // feeds the index gate + both appends
-        val intraFlag = bestOf(intraPairs
-            .select(col("id_a").as(idCol), col("id_b").as("match_id"),
-              col("n_shared"), col("score"))
-            .unionAll(intraPairs
-              .select(col("id_b").as(idCol), col("id_a").as("match_id"),
-                col("n_shared"), col("score"))))
-          .join(intra.select(idCol), Seq(idCol), "left_anti")
-        // gate 2: the index gate, on intra-survivors' fingerprints
-        // only; the batch's own ids are excluded from matches so a
-        // replayed torn batch (index append landed, marker didn't)
-        // reproduces the original decisions instead of self-flagging
-        val matches = graft.operators.Dedup
-          .matchFpsAgainstWinnowIndex(
-            fps.join(intra.select(col(idCol).as("id")), Seq("id"),
-              "left_semi"),
-            idCol, indexDir, minShared = minShared)
-          .join(b.select(col(idCol).as("match_id")), Seq("match_id"),
-            "left_anti")
-          .localCheckpoint(true) // feeds the audit rows + the anti-join
-        b.join(intraFlag.unionAll(bestOf(matches)), Seq(idCol), "inner")
-          .write.mode("append").parquet(flaggedDir)
-        val novel = intra
-          .join(matches.select(idCol), Seq(idCol), "left_anti")
-          .localCheckpoint(true) // feeds the corpus append AND the index
-        novel.write.mode("append").parquet(outDir)
-        graft.operators.Dedup.appendWinnowFps(
-          fps.join(novel.select(col(idCol).as("id")), Seq("id"),
-            "left_semi"),
-          indexDir)
-      })
+    pinnedBatchSink(docs, outDir, checkpointDir) { (b, _, pin) =>
+      // gate 1 (intra-batch collapse) and gate 2 (the index gate on the
+      // intra survivors; the batch's own ids never match, so a replayed
+      // torn batch — index append landed, marker didn't — reproduces
+      // the original decisions instead of self-flagging) share ONE
+      // winnow pass, which also feeds the final index append
+      val w = CorpusBuild.winnowStage(b, idCol, textCol, minShared, pin,
+        Some(indexDir -> b))
+      def bestOf(m: DataFrame): DataFrame = m
+        .groupBy(idCol)
+        .agg(max(struct(col("n_shared"), col("score"), col("match_id")))
+          .as("m"))
+        .select(col(idCol), col("m.match_id").as("match_id"),
+          col("m.n_shared").as("n_shared"), col("m.score").as("score"))
+      val intraFlag = bestOf(w.pairs
+          .select(col("id_a").as(idCol), col("id_b").as("match_id"),
+            col("n_shared"), col("score"))
+          .unionAll(w.pairs
+            .select(col("id_b").as(idCol), col("id_a").as("match_id"),
+              col("n_shared"), col("score"))))
+        .join(w.intra.select(idCol), Seq(idCol), "left_anti")
+      b.join(w.matches.fold(intraFlag)(m => intraFlag.unionAll(bestOf(m))),
+          Seq(idCol), "inner")
+        .write.mode("append").parquet(flaggedDir)
+      val novel = pin(w.kept) // feeds the corpus append AND the index
+      novel.write.mode("append").parquet(outDir)
+      graft.operators.Dedup.appendWinnowFps(
+        w.fps.join(novel.select(col(idCol).as("id")), Seq("id"),
+          "left_semi"),
+        indexDir)
+    }
 
   /** The COMPOSED live ingest chain — every hygiene gate in ONE
     * streaming sink (VERDICT r16 #1): per micro-batch, exact-dedup →
@@ -606,8 +572,10 @@ object IO {
     * CorpusLedger at batch grain) plus the per-doc decisions audit
     * (`outDir/_decisions` — every input doc named by the stage that
     * dropped it). Until now a user had to wire the eight standalone
-    * gate sinks by hand; this is the production composition, and each
-    * stage is the SAME operator its standalone sink runs.
+    * gate sinks by hand; this is the production composition. The
+    * winnow, span, quality and diversity stages decide through the
+    * same [[CorpusBuild]] stage function as their standalone sinks
+    * (see [[graft.operators.ChainConfig]] for where each rule lives).
     *
     * ONE COMMIT POINT (VERDICT r16 #2): the per-batch decisions WAL.
     * The decide phase mutates nothing and persists its outcome
@@ -627,26 +595,29 @@ object IO {
                          checkpointDir: String,
                          cfg: graft.operators.ChainConfig)
       : DataStreamWriter[Row] =
-    foreachBatchSink(docs, checkpointDir)(
-      idempotentForeachBatch(s"$outDir/_markers") { (batch, batchId) =>
-        val spark = batch.sparkSession
-        val b = batch.localCheckpoint(true) // one consume, all stages
-        if (!b.isEmpty) {
-          val walPath = s"$outDir/_decisions/__batch=$batchId"
-          val fs = new Path(walPath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // a COMMITTED WAL (job-commit _SUCCESS) marks the batch as
-          // mid-apply when it crashed — skip decide, re-apply from it;
-          // a torn WAL write (no _SUCCESS) is pre-commit: recompute
-          // (nothing was mutated) and overwrite
-          val isReplay = fs.exists(new Path(s"$walPath/_SUCCESS"))
-          if (!isReplay)
-            graft.operators.CorpusBuild.chainDecide(b, cfg)
-              .write.mode("overwrite").parquet(walPath)
-          graft.operators.CorpusBuild.chainApply(b,
-            spark.read.parquet(walPath), outDir, cfg, batchId, isReplay)
-        }
-      })
+    pinnedBatchSink(docs, outDir, checkpointDir) { (b, batchId, pin) =>
+      if (!b.isEmpty) {
+        val spark = b.sparkSession
+        val walPath = s"$outDir/_decisions/__batch=$batchId"
+        val fs = new Path(walPath)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // a COMMITTED WAL (job-commit _SUCCESS) marks the batch as
+        // mid-apply when it crashed — skip decide, re-apply from it;
+        // a torn WAL write (no _SUCCESS) is pre-commit: recompute
+        // (nothing was mutated) and overwrite. The WAL path is new per
+        // batch, so a fresh WAL is read back with the schema its decide
+        // just wrote instead of a footer-inference job.
+        val isReplay = fs.exists(new Path(s"$walPath/_SUCCESS"))
+        val wal =
+          if (isReplay) readArtifact(spark, walPath)
+          else {
+            val decisions = CorpusBuild.chainDecide(b, cfg, pin)
+            decisions.write.mode("overwrite").parquet(walPath)
+            spark.read.schema(decisions.schema).parquet(walPath)
+          }
+        CorpusBuild.chainApply(b, wal, outDir, cfg, batchId, isReplay)
+      }
+    }
 
   /** Streaming INCREMENTAL connected components: each micro-batch of
     * edges folds into a persisted (id, label) component labeling via
@@ -775,7 +746,7 @@ object IO {
       // fails the replayed query. An eager localCheckpoint is the same
       // full-partition consume the non-skip path performs; the blocks
       // are dropped immediately.
-      graft.operators.Checkpoints.drop(batch.localCheckpoint(true))
+      Checkpoints.drop(batch.localCheckpoint(true))
     }
   }
 
@@ -887,26 +858,22 @@ object IO {
                              index: Option[FirstSeenIndex] = None)
                             (fold: (DataFrame, DataFrame) => DataFrame)
       : DataStreamWriter[Row] =
-    foreachBatchSink(hist, checkpointDir)(
-      idempotentForeachBatch(s"$baseDir/_markers") { (batch, _) =>
-        val pinned = batch.localCheckpoint(eager = true)
-        try {
-          if (!pinned.isEmpty) {
-            val spark = pinned.sparkSession
-            val known =
-              index.fold(spark.emptyDataFrame)(readFirstSeen(spark, _))
-            val rows = fold(pinned, known)
-            val keyed =
-              if (keyCol != "wkey") rows
-              else rows.withColumn("wkey",
-                concat(windowMs.cast("string"), lit("|"), col("source")))
-            versionedUpsertBatch(
-              keyed.withColumn("op", lit("u")).withColumn("ts_ms", windowMs),
-              baseDir, keyCol, schema, retain)
-            index.foreach(appendFirstSeen(pinned, known, _))
-          }
-        } finally graft.operators.Checkpoints.drop(pinned)
-      })
+    pinnedBatchSink(hist, baseDir, checkpointDir) { (pinned, _, _) =>
+      if (!pinned.isEmpty) {
+        val spark = pinned.sparkSession
+        val known =
+          index.fold(spark.emptyDataFrame)(readFirstSeen(spark, _))
+        val rows = fold(pinned, known)
+        val keyed =
+          if (keyCol != "wkey") rows
+          else rows.withColumn("wkey",
+            concat(windowMs.cast("string"), lit("|"), col("source")))
+        versionedUpsertBatch(
+          keyed.withColumn("op", lit("u")).withColumn("ts_ms", windowMs),
+          baseDir, keyCol, schema, retain)
+        index.foreach(appendFirstSeen(pinned, known, _))
+      }
+    }
 
   /** The index's (key, first_window) relation; a missing index is empty
     * (cold start). */
@@ -1166,7 +1133,7 @@ object IO {
           WindowedMetricsSchema, retain)
       }
       n
-    } finally graft.operators.Checkpoints.drop(doomed)
+    } finally Checkpoints.drop(doomed)
   }
 
   /** Snapshot schema of the [[mixDriftAuditSink]] store: one language-
@@ -1207,7 +1174,7 @@ object IO {
     auditStoreSink(hist, baseDir, checkpointDir, "wkey",
         MixDriftAuditSchema, retain) { (pinned, _) =>
       graft.streaming.Jobs.mixDriftPerWindow(pinned,
-        pinned.sparkSession.read.parquet(baselineDir)
+        readArtifact(pinned.sparkSession, baselineDir)
           .select("lang", "n_l", "n_total"))
     }
 
@@ -1444,7 +1411,7 @@ object IO {
         val pinned = merged.withColumn("__bucket", bucketOf)
           .localCheckpoint(eager = true)
         try BucketedIndex.rewrite(layout, pinned, snapshotDir, touched)
-        finally graft.operators.Checkpoints.drop(pinned)
+        finally Checkpoints.drop(pinned)
       }
     }
   }
@@ -1487,7 +1454,7 @@ object IO {
     val tmp = new Path(dir + "_tmp")
     // the read of `dir` completes while writing _tmp — the swap below
     // only runs after the write action finished
-    spark.read.parquet(dir).coalesce(n)
+    readArtifact(spark, dir).coalesce(n)
       .write.mode("overwrite").parquet(tmp.toString)
     swapIn(fs, tmp, dir, "compactParquet")
     n
@@ -1569,8 +1536,8 @@ object IO {
     val dst = new Path(dir)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bak = new Path(dir + "_bak")
-    if (fs.exists(dst)) Some(spark.read.parquet(dir))
-    else if (fs.exists(bak)) Some(spark.read.parquet(bak.toString))
+    if (fs.exists(dst)) Some(readArtifact(spark, dir))
+    else if (fs.exists(bak)) Some(readArtifact(spark, bak.toString))
     else None
   }
 
@@ -1728,7 +1695,7 @@ object IO {
         // the partition dir reads WITHOUT its partition column (the
         // value lives in the dir name) — exactly the file schema the
         // swapped-in rewrite must carry
-        spark.read.parquet(live.toString).coalesce(targetN)
+        readArtifact(spark, live.toString).coalesce(targetN)
           .write.mode("overwrite").parquet(tmp.toString)
         must(fs.rename(live, bak), s"rename $live -> bak")
         must(fs.rename(tmp, live), s"rename tmp -> $live")
@@ -1813,14 +1780,14 @@ object IO {
                    nearDupIndexDir: Option[String] = None)
       : DataStreamWriter[Row] =
     foreachBatchSink(requests, checkpointDir) { (batch, _) =>
-      // one consume feeds both verbs (and commits the batch's plan)
-      val pinned = batch.localCheckpoint(eager = true)
-      try {
+      Checkpoints.scoped(batch.sparkSession) { pin =>
+        // one consume feeds both verbs (and commits the batch's plan)
+        val pinned = pin(batch)
         fpIndexDir.foreach(d => graft.operators.Dedup
           .deleteFromFingerprintIndex(pinned, textCol, d))
         nearDupIndexDir.foreach(d => graft.operators.Dedup
           .deleteFromNearDupIndex(pinned.select(col(idCol)), idCol, d))
-      } finally graft.operators.Checkpoints.drop(pinned)
+      }
     }
 
   // ---- round-trip helpers -------------------------------------------

@@ -7,14 +7,19 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Scans of the shipped sources for patterns no runtime test can see. */
 class SourceScanSpec extends AnyFunSuite {
 
+  // every .scala file under `root`
+  private def scalaFiles(root: java.nio.file.Path): List[java.nio.file.Path] = {
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("no shipped code reads a graft.* system property") {
     // a decided A/B kept as a -Dgraft.* switch is a hidden second code
     // path that neither the suite nor the benchmark runs
     val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
-    val walk = Files.walk(root)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
+    val files = scalaFiles(root)
     val read = """(sys\.props|System\.getProperty)[^";]{0,40}"graft\.[^"]*"""".r
     val hits = for {
       f <- files
@@ -30,10 +35,7 @@ class SourceScanSpec extends AnyFunSuite {
     // partitioned-index store; CorpusBuild's two `__batch` writes are the
     // exactly-once batch contract, a different one, and stay
     val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
-    val walk = Files.walk(root)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
+    val files = scalaFiles(root)
     val hits = for {
       f <- files
       (line, i) <- new String(Files.readAllBytes(f), "UTF-8").linesIterator.zipWithIndex
@@ -53,10 +55,7 @@ class SourceScanSpec extends AnyFunSuite {
     // one builder keeps every entry point's master, shuffle partitions,
     // split size, timezone and UI setting the same, and stamps the cores
     val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
-    val walk = Files.walk(root)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
+    val files = scalaFiles(root)
     val builder = """SparkSession\s*\.\s*builder\s*\(""".r
     val hits = for {
       f <- files
@@ -86,5 +85,26 @@ class SourceScanSpec extends AnyFunSuite {
     } yield s"$doc: ${m.matched} (no $file)"
     if (missing.nonEmpty)
       fail(missing.distinct.mkString("docs name tools that do not exist:\n", "\n", ""))
+  }
+
+  test("raw read.parquet census under operators/ and sources/ is pinned") {
+    // an engine-written artifact reads through IO.readArtifact's schema
+    // cache: a raw read.parquet runs a footer-inference job on every
+    // call, every micro-batch for a gate. What stays raw says why here.
+    val expected = Map(
+      "sources/IO.scala" -> 3,    // readParquet (the caller's own files) + readArtifact's miss and inference
+      "sources/Tables.scala" -> 1 // the testdata input tables' own schema cache
+    )
+    val root = Paths.get("src/main/scala/graft")
+    val raw = """\bread\s*\.\s*parquet\s*\(""".r
+    val census = (for {
+      f <- scalaFiles(root.resolve("operators")) ++ scalaFiles(root.resolve("sources"))
+      line <- new String(Files.readAllBytes(f), "UTF-8").linesIterator
+      if !line.trim.startsWith("*") && !line.trim.startsWith("//")
+      _ <- raw.findAllMatchIn(line)
+    } yield root.relativize(f).toString).groupBy(identity).map { case (f, n) => f -> n.size }
+    assert(census == expected,
+      s"raw read.parquet census drifted: got $census, pinned $expected; route an " +
+        "artifact read through IO.readArtifact, or pin the site here with its reason")
   }
 }

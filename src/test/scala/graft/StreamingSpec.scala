@@ -2815,6 +2815,127 @@ class StreamingSpec extends SparkSpec {
       s"replay must ship the WAL's text, got: $shipped")
   }
 
+  // each DataFrame becomes one file of a file stream read one file per
+  // micro-batch, in order; `sink` runs until the files are drained
+  private def runBatches(batches: org.apache.spark.sql.DataFrame*)(
+      sink: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
+      : Unit = {
+    val in = java.nio.file.Files.createTempDirectory("batches_").toString + "/in"
+    batches.foreach(_.coalesce(1).write.mode("append").parquet(in))
+    val q = sink(spark.readStream.schema(batches.head.schema)
+      .option("maxFilesPerTrigger", "1").parquet(in)).start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  test("a chain stage decides like its standalone sink: winnow, span, quality, diversity") {
+    import graft.sources.IO
+    val root = java.nio.file.Files.createTempDirectory("chain_vs_sink_").toString
+    // no exact or near duplicates: the chain's fixed stages pass every doc
+    val docs = chainDocs.filter(!col("doc_id").isin(2L, 3L)).localCheckpoint(true)
+    val text = docs.drop("embedding")
+    def rows(dir: String): Map[Long, String] = spark.read.parquet(dir)
+      .select("doc_id", "text").as[(Long, String)].collect().toMap
+    def ids(dir: String): Set[Long] = spark.read.parquet(dir)
+      .select("doc_id").as[Long].collect().toSet
+    // one batch through the chain with only `stage` on
+    def chain(stage: String): Map[Long, String] = {
+      val base = s"$root/chain_$stage"; seedChainInputs(base)
+      val all = chainCfg(base).copy(qualityThresholdPicoPerToken = 0L)
+      val off = all.copy(winnowIndexDir = None, probeDir = None,
+        lmDir = None, embCol = None, diversityIndexDir = None)
+      val cfg = stage match {
+        case "winnow" => off.copy(winnowIndexDir = all.winnowIndexDir)
+        case "span" => off.copy(probeDir = all.probeDir, decontaminateSpans = true)
+        case "quality" => off.copy(lmDir = all.lmDir)
+        case "diversity" => off.copy(embCol = all.embCol,
+          diversityIndexDir = all.diversityIndexDir)
+      }
+      runBatches(docs)(IO.composedIngestSink(_, s"$base/out", s"$base/ck", cfg))
+      rows(s"$base/out")
+    }
+    val sk = s"$root/sink"; seedChainInputs(sk)
+    val docIds = docs.select("doc_id").as[Long].collect().toSet
+    // winnow: doc 32 lifts 20 tokens of doc 10
+    runBatches(text)(IO.winnowIngestSink(_, s"$sk/win", s"$sk/win_out",
+      s"$sk/win_flag", s"$sk/win_ck", "doc_id", "text"))
+    val winnow = chain("winnow").keySet
+    assert(winnow == ids(s"$sk/win_out") && winnow == docIds - 32L,
+      s"winnow: chain $winnow, sink ${ids(s"$sk/win_out")}")
+    // span: doc 20's leaked run is excised, the rest ships verbatim
+    runBatches(text)(IO.decontaminateSpanSink(_, s"$sk/probe", s"$sk/span_out",
+      s"$sk/span_audit", s"$sk/span_ck", "doc_id", "text"))
+    val span = chain("span")
+    assert(span == rows(s"$sk/span_out"),
+      s"span: chain $span, sink ${rows(s"$sk/span_out")}")
+    assert(span(20L) == (300 to 330).map(i => s"z$i").mkString(" "),
+      s"span fixture excises doc 20: ${span(20L)}")
+    // quality at threshold 0: the token-less doc and off-target docs drop
+    runBatches(text)(IO.dsirGateSink(_, s"$sk/lm", s"$sk/q_out", s"$sk/q_audit",
+      s"$sk/q_ck", "doc_id", "text", thresholdPicoPerToken = 0L))
+    val quality = chain("quality").keySet
+    assert(quality == ids(s"$sk/q_out") && !quality.contains(40L) &&
+      quality.nonEmpty, s"quality: chain $quality, sink ${ids(s"$sk/q_out")}")
+    // diversity at cap 2: three docs share one bucket; the sink ranks
+    // the vectors it is given, the chain the embedded docs and passes
+    // the rest
+    val vecs = docs.filter(col("embedding").isNotNull).select("doc_id", "embedding")
+    runBatches(vecs)(IO.diversityGateSink(_, s"$sk/div", s"$sk/div_out",
+      s"$sk/div_ck", "doc_id", "embedding", cap = 2))
+    val embedded = vecs.select("doc_id").as[Long].collect().toSet
+    val diversity = chain("diversity").keySet
+    assert((diversity & embedded) == ids(s"$sk/div_out") &&
+      diversity -- embedded == docIds -- embedded &&
+      (embedded -- diversity).size == 1,
+      s"diversity: chain $diversity, sink ${ids(s"$sk/div_out")}")
+  }
+
+  test("the composed chain and the gate sinks release every per-batch pin") {
+    import graft.sources.IO
+    val root = java.nio.file.Files.createTempDirectory("gate_pins_").toString
+    seedChainInputs(root) // its LM training pin predates every count
+    val docs = chainDocs.localCheckpoint(true)
+    val (first, second) = (docs.filter(col("doc_id") < 30L),
+      docs.filter(col("doc_id") >= 30L))
+    val (t1, t2) = (first.drop("embedding"), second.drop("embedding"))
+    def vecs(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("embedding").isNotNull).select("doc_id", "embedding")
+    // two micro-batches per sink; every checkpoint RDD a batch pinned
+    // must be unregistered once the batch is done
+    def leftPinned(name: String)(run: => Unit): Seq[String] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      run
+      spark.sparkContext.getPersistentRDDs.toSeq
+        .filter { case (id, _) => !before(id) }
+        .map { case (_, rdd) => s"$name: $rdd" }
+    }
+    val left = Seq(
+      leftPinned("composedIngestSink")(runBatches(first, second)(
+        IO.composedIngestSink(_, s"$root/c_out", s"$root/c_ck", chainCfg(root)))),
+      leftPinned("winnowIngestSink")(runBatches(t1, t2)(IO.winnowIngestSink(_,
+        s"$root/w_idx", s"$root/w_out", s"$root/w_flag", s"$root/w_ck",
+        "doc_id", "text"))),
+      leftPinned("decontaminateSpanSink")(runBatches(t1, t2)(
+        IO.decontaminateSpanSink(_, s"$root/probe", s"$root/s_out",
+          s"$root/s_audit", s"$root/s_ck", "doc_id", "text"))),
+      leftPinned("dsirGateSink")(runBatches(t1, t2)(IO.dsirGateSink(_,
+        s"$root/lm", s"$root/q_out", s"$root/q_audit", s"$root/q_ck",
+        "doc_id", "text", thresholdPicoPerToken = 0L))),
+      leftPinned("diversityGateSink")(runBatches(
+        vecs(docs.filter(col("doc_id") < 52L)), vecs(docs.filter(col("doc_id") >= 52L)))(
+        IO.diversityGateSink(_, s"$root/d_idx", s"$root/d_out", s"$root/d_ck",
+          "doc_id", "embedding", cap = 2))),
+      leftPinned("decontaminateIngestSink")(runBatches(t1, t2)(
+        IO.decontaminateIngestSink(_, s"$root/probe", s"$root/x_out",
+          s"$root/x_quar", s"$root/x_ck", "doc_id", "text"))),
+      leftPinned("nearDupDedupSink")(runBatches(t1, t2)(IO.nearDupDedupSink(_,
+        s"$root/n_idx", s"$root/n_out", s"$root/n_ck", "doc_id", "text", 0.5)))
+    ).flatten
+    assert(left.isEmpty, left.mkString("checkpoint RDDs left registered:\n", "\n", ""))
+    // the runs did their work: both batches shipped through every sink
+    assert(spark.read.parquet(s"$root/c_out/_ledger").count() == 2L)
+  }
+
   test("windowedBucketCounts + bucketEntropyPerWindow: parity with q_bucket_entropy; concentration alarm") {
     // PARITY LAW (the mixDriftPerWindow convention): the fold over the
     // REAL embeddings table — one window — must reproduce the
