@@ -329,10 +329,10 @@ object Text {
     // the persisted tokenizer left off, and only k - initial.size new
     // rounds run. Returns ONLY the newly learned merges.
     val toSyms = udf { (w: String) => bpeEncodeWord(w, initial) }
-    var state = words
+    val (pinned, nWords) = graft.operators.Checkpoints.pinCounted(words
       .select(toSyms(col(wordCol)).as("syms"),
-        col(freqCol).cast("long").as("freq"))
-      .localCheckpoint(eager = true)
+        col(freqCol).cast("long").as("freq")))
+    var state = pinned
     // measured-size strategy pick (r17 — the Graph.LocalFixpointMaxEdges
     // discipline): every registry caller trains on a bounded vocabulary
     // head (≤4096 words), where each of the k rounds' census + argmax +
@@ -343,7 +343,7 @@ object Text {
     // only the ≤k merge rows come back to the driver; above it, the
     // distributed per-round loop runs unchanged. Parity pinned in
     // FunctionsSpec (gate forced off ↔ on).
-    if (state.count() <= localMaxWords)
+    if (nWords <= localMaxWords)
       return bpeTrainMergesOneTask(state, k, minCount, initial.size)
     var lastCkpt = state
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]

@@ -42,7 +42,9 @@ object Analytics {
     *
     * The relation is locally checkpointed so the counting pass and the
     * numbering pass see the identical partitioning (range sampling is
-    * otherwise re-drawn per action). */
+    * otherwise re-drawn per action). The checkpoint is lazy: the
+    * counting job is the one that materializes it, and the range bounds
+    * are fixed once, when the plan executes. */
   def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
                       rankCol: String = "rn"): DataFrame = {
     // the numbering runs through this temp column; an input column of
@@ -54,10 +56,10 @@ object Analytics {
     val nPart = math.max(1, spark.sparkContext.defaultParallelism)
     val sorted = df.repartitionByRange(nPart, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint(eager = true)
-    // per-partition counts WITHOUT a shuffle: a single map-only job over
-    // the already-checkpointed partitions (one count per partition, ≤
-    // nPart rows collected). The previous groupBy(spark_partition_id())
+      .localCheckpoint(eager = false)
+    // per-partition counts WITHOUT a shuffle: a single map-only job that
+    // materializes the checkpoint (one count per partition, ≤ nPart rows
+    // collected). The previous groupBy(spark_partition_id())
     // form paid a two-stage exchange per call — pure scheduling overhead
     // on an iterative-cadence operator. toRdd iterates the checkpoint's
     // InternalRows directly — no per-row external-Row conversion.

@@ -34,7 +34,9 @@ object Dedup {
   private[graft] def fanOut(df: DataFrame, key: Column): DataFrame = {
     if (df.isStreaming) return df // micro-batch partitioning is the source's
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
+    // the physical plan's partition count: `df.rdd` would also plan a
+    // deserializer that never runs
+    if (df.queryExecution.toRdd.getNumPartitions >= target) df
     else df.repartition(target, key)
   }
 
@@ -1280,8 +1282,8 @@ object Dedup {
       : DataFrame = {
     val e = pairs.select(col(idA).cast("long").as("src"),
       col(idB).cast("long").as("dst"))
-    val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(eager = true)
+    val (edges, nEdges) = Checkpoints.pinCounted(
+      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     // measured-size strategy pick (Graph.LocalFixpointMaxEdges): below
     // the gate the component labeling runs as union-find in ONE executor
     // task — the min-label fixpoint is UNIQUE (every vertex → min
@@ -1289,7 +1291,7 @@ object Dedup {
     // relation and path parity is semantic, not numeric (DedupSpec law
     // forces the distributed loop via localMaxEdges = 0 to pin it).
     // The symmetrized relation holds 2 rows per undirected edge.
-    if (edges.count() / 2 <= localMaxEdges)
+    if (nEdges / 2 <= localMaxEdges)
       return connectedComponentsOneTask(edges)
     // seed with round 1 already applied: from identity labels the first
     // propagation is exactly label = min(id, min neighbor id), which one
@@ -1579,16 +1581,20 @@ object Dedup {
 
   /** Load the full labeling from a store of either layout (drops the
     * bucket column — it is derivable). The schema is DECLARED, not
-    * inferred; a missing store is the cold start and reads empty. */
+    * inferred. A missing store reads from the `<dir>_bak` a crash
+    * between a swap's two renames leaves; with neither, it is the cold
+    * start and reads empty. */
   def readComponentsStore(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("label", LongType)))
-    if (BucketedIndex.exists(spark, dir))
-      spark.read.schema(schema).parquet(dir).select(col("id"), col("label"))
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    Seq(dir, dir + "_bak").find(BucketedIndex.exists(spark, _)) match {
+      case Some(live) =>
+        spark.read.schema(schema).parquet(live).select(col("id"), col("label"))
+      case None => spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    }
   }
 
   /** [[connectedComponents]] pinned, with the working checkpoints it
@@ -1705,7 +1711,10 @@ object Dedup {
     * gate. Both routes produce the IDENTICAL labeling (the min-label
     * fixpoint is unique — ScalePathSpec law); the gate only picks the
     * write strategy. Gate reads the CURRENT store's row count — one
-    * column-pruned scan, the price of not making the caller guess. */
+    * column-pruned scan, the price of not making the caller guess.
+    * Both full rewrites (the flat route, and the one-time conversion)
+    * write beside the store and swap in ([[graft.sources.IO.swapIn]]),
+    * so a failed write never loses the labeling. */
   def mergeComponentsStore(batch: DataFrame, dir: String,
                            idA: String = "id_a", idB: String = "id_b",
                            buckets: Int = 64,
@@ -1715,26 +1724,49 @@ object Dedup {
     val storeRows = readComponentsStore(spark, dir).count()
     if (storeRows > maxFlatRows) {
       if (!storeIsBucketed(spark, dir)) {
-        // one-time layout conversion at the gate crossing: pin the
-        // labeling, rewrite bucketed (full overwrite replaces the flat
-        // files), then merge touched-buckets-only
-        val lab = readComponentsStore(spark, dir).localCheckpoint(eager = true)
-        try writeComponentsStore(lab, dir, buckets)
-        finally Checkpoints.drop(lab)
+        // one-time layout conversion at the gate crossing: seed the
+        // bucketed layout beside the flat store, swap it in, then merge
+        // touched-buckets-only
+        val tmp = dir + "_tmp"
+        if (BucketedIndex.seed(ComponentsStore, tmp, buckets,
+            readComponentsStore(spark, dir)))
+          swapComponents(spark, tmp, dir)
+        else graft.sources.IO.deleteDir(spark, dir)
       }
       ComponentsMergeReport("bucketed",
         mergeIntoComponentsStore(batch, dir, idA, idB, buckets))
     } else {
-      val lab = readComponentsStore(spark, dir)
-        .groupBy("id").agg(min("label").as("label")) // crash-dup repair, as in the bucketed read
-      val merged = componentsMerge(lab, batch, idA, idB)
-        .localCheckpoint(eager = true) // fully consume the store read before overwriting it
-      // static overwrite deletes the whole dir first, so a previously
+      // the swapped-in snapshot replaces the whole dir, so a previously
       // bucketed store below the gate converges back to the flat layout
-      try merged.write.mode("overwrite").parquet(dir)
-      finally Checkpoints.drop(merged)
+      swapMergeComponents(batch, dir, idA, idB)
       ComponentsMergeReport("flat", Seq.empty)
     }
+  }
+
+  /** The flat components store's full rewrite, shared by the flat route
+    * of [[mergeComponentsStore]] and [[graft.sources.IO.componentsSink]]:
+    * fold `batch` into the labeling at `dir` ([[componentsMerge]]),
+    * write the result beside it at `<dir>_tmp`, then swap it in. The
+    * write fully consumes the store read before any rename touches it,
+    * so the labeling needs no pin, and there is never a moment without
+    * a readable labeling: a crash between the renames leaves
+    * `<dir>_bak`, which [[readComponentsStore]] reads. */
+  private[graft] def swapMergeComponents(batch: DataFrame, dir: String,
+                                         idA: String, idB: String): Unit = {
+    val spark = batch.sparkSession
+    val lab = readComponentsStore(spark, dir)
+      .groupBy("id").agg(min("label").as("label")) // crash-dup repair, as in the bucketed read
+    componentsMerge(lab, batch, idA, idB)
+      .write.mode("overwrite").parquet(dir + "_tmp")
+    swapComponents(spark, dir + "_tmp", dir)
+  }
+
+  private def swapComponents(spark: org.apache.spark.sql.SparkSession,
+                             staged: String, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(staged)
+    graft.sources.IO.swapIn(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, dir,
+      "componentsStore")
   }
 
   /** Remove nodes from a persisted components store — the TAKEDOWN verb

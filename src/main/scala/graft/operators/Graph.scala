@@ -26,9 +26,9 @@ object Graph {
     * cut. 2M edges ≈ 64 MB in task memory and ~15·m = 30M scalar ops
     * for a 15-round fixpoint: comfortably one task, far below the
     * crossover where per-round distribution wins. The gate is a
-    * MEASURED row count (one cheap count on a checkpointed relation),
-    * mirroring AQE's own runtime-size strategy picks — never a
-    * hardcoded repartition. */
+    * MEASURED row count, observed on the job that pins the relation
+    * ([[Checkpoints.pinCounted]]), mirroring AQE's own runtime-size
+    * strategy picks — never a hardcoded repartition. */
   private[graft] val LocalFixpointMaxEdges = 2000000L
 
   /** Weighted PageRank by power iteration: `iters` rounds of
@@ -64,14 +64,11 @@ object Graph {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(weightCol).cast("double").as("w"))
     val outw = e0.groupBy("src").agg(sum(col("w")).as("outw"))
-    val e = e0.join(outw, Seq("src")).localCheckpoint(true)
-    // measured-size strategy pick (see LocalFixpointMaxEdges): the edge
-    // relation is checkpointed, so this count is one cheap cached job
-    if (e.count() <= localMaxEdges) return pagerankOneTask(e, damping, iters)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
-    val n = nodes.count()
+    val (e, m) = Checkpoints.pinCounted(e0.join(outw, Seq("src")))
+    // measured-size strategy pick (see LocalFixpointMaxEdges)
+    if (m <= localMaxEdges) return pagerankOneTask(e, damping, iters)
+    val (nodes, n) = Checkpoints.pinCounted(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val base = (1.0 - damping) / n
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
     for (i <- 1 to iters) {
@@ -158,10 +155,11 @@ object Graph {
     * silently fold "hundredths of cents" and burn 100× of the 2^53
     * double-cast headroom at large SFs; a fractional column is
     * quantized to 1e-2-grain longs ("cents") so every downstream fold
-    * is still integer arithmetic. The result is localCheckpoint'ed:
-    * callers fan out into multi-join shapes (degree, orientation,
-    * wedge closure) and must not re-scan the upstream fact tables per
-    * consumer. */
+    * is still integer arithmetic. The result is pinned, and returned
+    * with its edge count ([[Checkpoints.pinCounted]]): callers fan out
+    * into multi-join shapes (degree, orientation, wedge closure) and
+    * must not re-scan the upstream fact tables per consumer, and the
+    * size-gated ones read their gate from the count. */
   /** Marker the in-plan weight guard embeds in its raise_error message
     * so [[undirect]]'s checkpoint-time catch can translate the task
     * failure back into the IllegalArgumentException the operator
@@ -180,7 +178,8 @@ object Graph {
     * (and puts `operators/` inside the PlanAuditSpec no-collect sweep). */
   private def undirect(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String,
-                       minWeight: Option[(Long, String)] = None): DataFrame = {
+                       minWeight: Option[(Long, String)] = None)
+      : (DataFrame, Long) = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val wc = edges.schema(weightCol).dataType match {
       case LongType | IntegerType | ShortType | ByteType =>
@@ -205,7 +204,7 @@ object Graph {
             .otherwise(col("wc")).as("wc"))
       case None => agg
     }
-    try guarded.localCheckpoint(true)
+    try Checkpoints.pinCounted(guarded)
     catch {
       case e: Throwable
           if messageChain(e).exists(_.contains(WeightContractTag)) =>
@@ -295,7 +294,7 @@ object Graph {
     * both engines. Returns one row (n_edges, assortativity). */
   def assortativityCensus(edges: DataFrame, srcCol: String, dstCol: String,
                           weightCol: String): DataFrame = {
-    val und = undirect(edges, srcCol, dstCol, weightCol)
+    val (und, _) = undirect(edges, srcCol, dstCol, weightCol)
     val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
     val pts = und.select(col("a").as("u"), col("b").as("v"))
@@ -321,7 +320,7 @@ object Graph {
     * which is what keeps the wedge join near-linear. */
   private def orientedParts(edges: DataFrame, srcCol: String, dstCol: String,
                             weightCol: String): (DataFrame, DataFrame, DataFrame) = {
-    val und = undirect(edges, srcCol, dstCol, weightCol)
+    val (und, _) = undirect(edges, srcCol, dstCol, weightCol)
     val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
     val oriented = und
@@ -377,47 +376,37 @@ object Graph {
                     maxIter: Int = 40,
                     localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
     require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
-    val und = undirect(edges, srcCol, dstCol, weightCol,
+    val (und, m) = undirect(edges, srcCol, dstCol, weightCol,
       minWeight = Some((0L, "shortestPaths requires non-negative weights")))
     // measured-size strategy pick (see LocalFixpointMaxEdges); exact
     // long min-folds, so path parity is trivial (GraphSpec law)
-    if (und.count() <= localMaxEdges)
+    if (m <= localMaxEdges)
       return shortestPathsOneTask(und, source, maxIter)
     val incSym = und.select(col("a").as("n"), col("b").as("m"), col("wc"))
       .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))
       .localCheckpoint(true)
     // literal 1-row seed: the source is at distance 0 even when isolated
-    var dist = edges.sparkSession.range(1)
+    val seed = edges.sparkSession.range(1)
       .select(lit(source).as("n"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val offers = incSym
-        .join(dist.select(col("n").as("m"), col("dist").as("dm")), Seq("m"))
-        .select(col("n"), (col("dm") + col("wc")).as("cand"))
-        .groupBy("n").agg(min(col("cand")).as("cand"))
-      val obs = org.apache.spark.sql.Observation(s"graft_sssp_round_$iter")
-      // full outer: a node can be newly reached this round (no old dist)
-      val next = dist.join(offers, Seq("n"), "full")
-        .select(col("n"), col("dist").as("old"),
-          when(col("dist").isNull, col("cand"))
-            .when(col("cand").isNull, col("dist"))
-            .otherwise(least(col("dist"), col("cand"))).as("dist"))
-        .observe(obs, sum(when(col("old").isNull ||
-          col("dist") < col("old"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
-      converged = Option(obs.get("changed")).forall(_.asInstanceOf[Long] == 0L)
-      val prev = dist
-      dist = next.select("n", "dist")
-      Checkpoints.drop(prev)
-      iter += 1
-    }
-    Checkpoints.drop(incSym)
-    if (!converged)
-      throw new IllegalStateException(
-        s"shortestPaths did not converge within $maxIter rounds — " +
-          "distances would be truncated; raise maxIter for this graph")
+    val dist = try Checkpoints.fixpoint(seed, maxIter,
+        new IllegalStateException(
+          s"shortestPaths did not converge within $maxIter rounds — " +
+            "distances would be truncated; raise maxIter for this graph"))(
+      dist => {
+        val offers = incSym
+          .join(dist.select(col("n").as("m"), col("dist").as("dm")), Seq("m"))
+          .select(col("n"), (col("dm") + col("wc")).as("cand"))
+          .groupBy("n").agg(min(col("cand")).as("cand"))
+        // full outer: a node can be newly reached this round (no old dist)
+        dist.join(offers, Seq("n"), "full")
+          .select(col("n"), col("dist").as("old"),
+            when(col("dist").isNull, col("cand"))
+              .when(col("cand").isNull, col("dist"))
+              .otherwise(least(col("dist"), col("cand"))).as("dist"))
+      },
+      col("old").isNull || col("dist") < col("old"))
+    finally Checkpoints.drop(incSym)
     dist.select(col("n").as("node"), col("dist").as("dist"))
   }
 
@@ -485,42 +474,32 @@ object Graph {
                weightCol: String, maxIter: Int = 100,
                localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
     require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
-    val und = undirect(edges, srcCol, dstCol, weightCol)
+    val (und, m) = undirect(edges, srcCol, dstCol, weightCol)
     // measured-size strategy pick (see LocalFixpointMaxEdges); exact
     // integer h-index folds, so path parity is trivial (GraphSpec law)
-    if (und.count() <= localMaxEdges) return corenessOneTask(und, maxIter)
+    if (m <= localMaxEdges) return corenessOneTask(und, maxIter)
     val inc = und.select(col("a").as("n"), col("b").as("m"))
       .union(und.select(col("b").as("n"), col("a").as("m")))
       .localCheckpoint(true)
-    var est = inc.groupBy("n").agg(count(lit(1)).as("est"))
+    val seed = inc.groupBy("n").agg(count(lit(1)).as("est"))
       .localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("n").orderBy(col("em").desc, col("m"))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val h = inc
-        .join(est.select(col("n").as("m"), col("est").as("em")), Seq("m"))
-        .withColumn("rnk", row_number().over(w))
-        .groupBy("n").agg(max(least(col("em"), col("rnk"))).as("h"))
-      val obs = org.apache.spark.sql.Observation(s"graft_kcore_round_$iter")
-      val next = est.join(h, Seq("n"))
-        .select(col("n"), col("est").as("old"),
-          least(col("est"), col("h")).as("est"))
-        .observe(obs, sum(when(col("est") < col("old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
-      converged = Option(obs.get("changed")).forall(_.asInstanceOf[Long] == 0L)
-      val prev = est
-      est = next.select("n", "est")
-      Checkpoints.drop(prev)
-      iter += 1
-    }
-    Checkpoints.drop(inc)
-    if (!converged)
-      throw new IllegalStateException(
-        s"coreness did not converge within $maxIter rounds — estimates " +
-          "would be over-estimates; raise maxIter for this graph")
+    val est = try Checkpoints.fixpoint(seed, maxIter,
+        new IllegalStateException(
+          s"coreness did not converge within $maxIter rounds — estimates " +
+            "would be over-estimates; raise maxIter for this graph"))(
+      est => {
+        val h = inc
+          .join(est.select(col("n").as("m"), col("est").as("em")), Seq("m"))
+          .withColumn("rnk", row_number().over(w))
+          .groupBy("n").agg(max(least(col("em"), col("rnk"))).as("h"))
+        est.join(h, Seq("n"))
+          .select(col("n"), col("est").as("old"),
+            least(col("est"), col("h")).as("est"))
+      },
+      col("est") < col("old"))
+    finally Checkpoints.drop(inc)
     est.select(col("n").as("node"), col("est").as("coreness"))
   }
 
@@ -609,10 +588,10 @@ object Graph {
     // driver-built (src, n, dist) literal relation, so the edge side
     // must carry the same type (int nation keys would CCE the collect
     // and type-coerce every per-round join)
-    val und = undirect(edges, srcCol, dstCol, weightCol,
-        minWeight = Some((0L, "harmonicCloseness requires non-negative weights")))
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"),
-        col("wc"))
+    val (undRaw, m) = undirect(edges, srcCol, dstCol, weightCol,
+      minWeight = Some((0L, "harmonicCloseness requires non-negative weights")))
+    val und = undRaw.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b"), col("wc"))
     val nodes = graphNodes(und)
     val srcDf = sourceSeed(nodes, sources, landmarkK, edges.sparkSession)
     // landmark estimator: the sampled 1/d sums extrapolate by n/K
@@ -624,7 +603,7 @@ object Graph {
         if (kA == 0L) 1.0 else nV.toDouble / kA
       case None => 1.0
     }
-    if (und.count() <= localMaxEdges) {
+    if (m <= localMaxEdges) {
       val srcList = srcDf.collect().map(_.getLong(0)).toSeq.sorted // bounded: <= K sources
       return harmonicClosenessOneTask(und, srcList, maxIter, scale)
     }
@@ -638,47 +617,34 @@ object Graph {
 
   /** The shared multi-source exact-distance fixpoint (source-tagged
     * Bellman–Ford): state (src, n, dist) in cent-longs, one incidence
-    * join + one (src, n)-keyed min per round, observe-metric
-    * convergence, superseded checkpoints dropped per round. Seeds from
+    * join + one (src, n)-keyed min per round, run by
+    * [[Checkpoints.fixpoint]]. Seeds from
     * the `srcDf(s)` relation IN-PLAN (no V-sized driver collect).
     * Shared by [[harmonicCloseness]], [[betweennessWeighted]] and
     * [[eccentricity]] — one loop, three folds. Returns the CHECKPOINTED
     * final distance relation (caller owns its release); throws on
-    * maxIter truncation (`opName` labels the error and the per-round
-    * observe metric). */
+    * maxIter truncation (`opName` labels the error). */
   private[graft] def multiSourceDistances(incSym: DataFrame, srcDf: DataFrame,
                                           maxIter: Int,
                                           opName: String): DataFrame = {
-    var dist = srcDf.select(col("s").as("src"), col("s").as("n"),
+    val seed = srcDf.select(col("s").as("src"), col("s").as("n"),
       lit(0L).as("dist")).localCheckpoint(true)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val offers = incSym
-        .join(dist.select(col("src"), col("n").as("m"), col("dist").as("dm")),
-          Seq("m"))
-        .select(col("src"), col("n"), (col("dm") + col("wc")).as("cand"))
-        .groupBy("src", "n").agg(min(col("cand")).as("cand"))
-      val obs = org.apache.spark.sql.Observation(s"graft_${opName}_r$iter")
-      val next = dist.join(offers, Seq("src", "n"), "full")
-        .select(col("src"), col("n"), col("dist").as("old"),
-          when(col("dist").isNull, col("cand"))
-            .when(col("cand").isNull, col("dist"))
-            .otherwise(least(col("dist"), col("cand"))).as("dist"))
-        .observe(obs, sum(when(col("old").isNull ||
-          col("dist") < col("old"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
-      converged = Option(obs.get("changed")).forall(_.asInstanceOf[Long] == 0L)
-      val prev = dist
-      dist = next.select("src", "n", "dist")
-      Checkpoints.drop(prev)
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
+    Checkpoints.fixpoint(seed, maxIter, new IllegalStateException(
         s"$opName did not converge within $maxIter rounds — " +
-          "distances would be truncated; raise maxIter for this graph")
-    dist
+          "distances would be truncated; raise maxIter for this graph"))(
+      dist => {
+        val offers = incSym
+          .join(dist.select(col("src"), col("n").as("m"), col("dist").as("dm")),
+            Seq("m"))
+          .select(col("src"), col("n"), (col("dm") + col("wc")).as("cand"))
+          .groupBy("src", "n").agg(min(col("cand")).as("cand"))
+        dist.join(offers, Seq("src", "n"), "full")
+          .select(col("src"), col("n"), col("dist").as("old"),
+            when(col("dist").isNull, col("cand"))
+              .when(col("cand").isNull, col("dist"))
+              .otherwise(least(col("dist"), col("cand"))).as("dist"))
+      },
+      col("old").isNull || col("dist") < col("old"))
   }
 
   /** Single-task twin of [[multiSourceDistances]]: synchronous
@@ -820,13 +786,13 @@ object Graph {
       "pass explicit sources OR landmarkK, not both")
     require(landmarkK.forall(_ >= 1),
       s"landmarkK must be positive, got ${landmarkK.get}")
-    val und = undirect(edges, srcCol, dstCol, weightCol,
-        minWeight = Some((0L, s"$what requires non-negative weights")))
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"),
-        col("wc"))
+    val (undRaw, m) = undirect(edges, srcCol, dstCol, weightCol,
+      minWeight = Some((0L, s"$what requires non-negative weights")))
+    val und = undRaw.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b"), col("wc"))
     val nodes = graphNodes(und)
     val srcDf = sourceSeed(nodes, sources, landmarkK, edges.sparkSession)
-    if (und.count() <= localMaxEdges) {
+    if (m <= localMaxEdges) {
       val srcList = srcDf.collect().map(_.getLong(0)).toSeq.sorted // bounded: <= K sources
       multiSourceDistancesOneTask(und, srcList, maxIter, what)
     } else {
@@ -874,7 +840,7 @@ object Graph {
       "pass explicit sources OR landmarkK, not both")
     require(landmarkK.forall(_ >= 1),
       s"landmarkK must be positive, got ${landmarkK.get}")
-    val undRaw = undirect(edges, srcCol, dstCol, weightCol)
+    val (undRaw, m) = undirect(edges, srcCol, dstCol, weightCol)
     val und = undRaw
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .localCheckpoint(true)
@@ -892,7 +858,7 @@ object Graph {
         if (kA == 0L) 1.0 else nV.toDouble / kA
       case None => 1.0
     }
-    if (und.count() <= localMaxEdges) {
+    if (m <= localMaxEdges) {
       val srcList = srcDf.collect().map(_.getLong(0)).toSeq.sorted // bounded: <= K sources
       return betweennessOneTask(und, srcList, maxIter, scale)
     }
@@ -978,21 +944,22 @@ object Graph {
     * Returns (visited, depth); throws if the wave does not exhaust. */
   private[graft] def brandesForwardState(incSym: DataFrame, srcDf: DataFrame,
                                          maxIter: Int): (DataFrame, Int) = {
-    var visited = srcDf.select(col("s").as("src"), col("s").as("n"),
-      lit(0).as("dist"), lit(1L).as("sigma")).localCheckpoint(true)
-    var frontier = visited
+    val (seed, k) = Checkpoints.pinCounted(srcDf.select(col("s").as("src"),
+      col("s").as("n"), lit(0).as("dist"), lit(1L).as("sigma")))
+    var visited = seed
+    var frontier = seed
+    var frontierRows = k
     var d = 0
-    while (frontier.count() > 0 && d < maxIter) {
+    while (frontierRows > 0 && d < maxIter) {
       val cand = frontier.select(col("src"), col("n").as("__from"),
           col("sigma"))
         .join(incSym.select(col("n").as("__from"), col("m").as("n")),
           Seq("__from"))
         .groupBy(col("src"), col("n")).agg(sum(col("sigma")).as("sigma"))
-      val nextFrontier = cand
+      val (nextFrontier, nextRows) = Checkpoints.pinCounted(cand
         .join(visited.select(col("src"), col("n"), lit(1).as("__seen")),
           Seq("src", "n"), "left_anti")
-        .select(col("src"), col("n"), lit(d + 1).as("dist"), col("sigma"))
-        .localCheckpoint(true)
+        .select(col("src"), col("n"), lit(d + 1).as("dist"), col("sigma")))
       // the union checkpoint MATERIALIZES before the superseded visited
       // blocks drop — on a landmark run the (src × node) state is the
       // largest relation in the job, and leaking one copy per BFS round
@@ -1002,9 +969,10 @@ object Graph {
       Checkpoints.drop(prevVisited)
       Checkpoints.drop(frontier)
       frontier = nextFrontier
+      frontierRows = nextRows
       d += 1
     }
-    if (frontier.count() > 0)
+    if (frontierRows > 0)
       throw new IllegalStateException(
         s"betweenness BFS did not exhaust within $maxIter rounds — " +
           "deltas would be truncated; raise maxIter for this graph")
@@ -1102,8 +1070,8 @@ object Graph {
     * over the per-source shortest-path DAG. Weighted levels are not
     * discrete BFS rounds, so the distributed path is three chained
     * FIXPOINTS, each one incidence join + keyed fold per round on the
-    * established loop discipline (eager checkpoints, observe-metric
-    * convergence, superseded-state [[Checkpoints.drop]]):
+    * established loop discipline ([[Checkpoints.fixpoint]]: eager
+    * checkpoints, observe-metric convergence, superseded-state drops):
     *
     *   1. distances — the multi-source Bellman–Ford of
     *      [[harmonicCloseness]] ((src, n, dist) state);
@@ -1138,7 +1106,7 @@ object Graph {
       "pass explicit sources OR landmarkK, not both")
     require(landmarkK.forall(_ >= 1),
       s"landmarkK must be positive, got ${landmarkK.get}")
-    val undRaw = undirect(edges, srcCol, dstCol, weightCol,
+    val (undRaw, m) = undirect(edges, srcCol, dstCol, weightCol,
       minWeight = Some((1L, "betweennessWeighted requires strictly " +
         "positive weights (zero collapses SP-DAG ranks)")))
     val und = undRaw.select(col("a").cast("long").as("a"),
@@ -1152,7 +1120,7 @@ object Graph {
         if (kA == 0L) 1.0 else nV.toDouble / kA
       case None => 1.0
     }
-    if (und.count() <= localMaxEdges) {
+    if (m <= localMaxEdges) {
       val srcList = srcDf.collect().map(_.getLong(0)).toSeq.sorted // bounded: <= K sources
       return betweennessWeightedOneTask(und, srcList, maxIter, scale)
     }
@@ -1162,8 +1130,6 @@ object Graph {
     // ---- fixpoint 1: exact weighted distances (src, n, dist) ----
     val dist = multiSourceDistances(incSym, srcDf, maxIter,
       "betweennessWeighted")
-    var converged = false
-    var iter = 0
     // ---- the per-source shortest-path DAG: dist(v) + w = dist(n) ----
     val dag = incSym.select(col("n").as("v"), col("m").as("w_node"),
         col("wc"))
@@ -1175,71 +1141,50 @@ object Graph {
       .select(col("src"), col("v"), col("w_node"))
       .localCheckpoint(true)
     // ---- fixpoint 2: σ along the DAG ----
-    var sigma = dist.select(col("src"), col("n"),
-        when(col("n") === col("src"), 1L).otherwise(0L).as("sigma"))
-      .localCheckpoint(true)
-    converged = false
-    iter = 0
-    while (!converged && iter < maxIter) {
-      val inSum = dag
-        .join(sigma.select(col("src"), col("n").as("v"),
-          col("sigma").as("sv")), Seq("src", "v"))
-        .groupBy(col("src"), col("w_node").as("n"))
-        .agg(sum(col("sv")).as("insum"))
-      val obs = org.apache.spark.sql.Observation(s"graft_bws_round_$iter")
-      val next = sigma.select(col("src"), col("n"), col("sigma").as("old"))
-        .join(inSum, Seq("src", "n"), "left")
-        .select(col("src"), col("n"), col("old"),
-          when(col("n") === col("src"), 1L)
-            .otherwise(coalesce(col("insum"), lit(0L))).as("sigma"))
-        .observe(obs, sum(when(col("sigma") =!= col("old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
-      converged = Option(obs.get("changed")).forall(_.asInstanceOf[Long] == 0L)
-      val prev = sigma
-      sigma = next.select("src", "n", "sigma")
-      Checkpoints.drop(prev)
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
+    val sigma = Checkpoints.fixpoint(
+      dist.select(col("src"), col("n"),
+          when(col("n") === col("src"), 1L).otherwise(0L).as("sigma"))
+        .localCheckpoint(true),
+      maxIter, new IllegalStateException(
         s"betweennessWeighted σ did not converge within $maxIter rounds — " +
-          "raise maxIter for this graph")
+          "raise maxIter for this graph"))(
+      sigma => {
+        val inSum = dag
+          .join(sigma.select(col("src"), col("n").as("v"),
+            col("sigma").as("sv")), Seq("src", "v"))
+          .groupBy(col("src"), col("w_node").as("n"))
+          .agg(sum(col("sv")).as("insum"))
+        sigma.select(col("src"), col("n"), col("sigma").as("old"))
+          .join(inSum, Seq("src", "n"), "left")
+          .select(col("src"), col("n"), col("old"),
+            when(col("n") === col("src"), 1L)
+              .otherwise(coalesce(col("insum"), lit(0L))).as("sigma"))
+      },
+      col("sigma") =!= col("old"))
     // ---- fixpoint 3: δ recomputed from successor δ until stable ----
-    var delta = dist.select(col("src"), col("n"), lit(0L).as("dp"))
-      .localCheckpoint(true)
-    converged = false
-    iter = 0
-    while (!converged && iter < maxIter) {
-      val contribs = dag
-        .join(sigma.select(col("src"), col("n").as("v"),
-          col("sigma").as("sv")), Seq("src", "v"))
-        .join(sigma.select(col("src"), col("n").as("w_node"),
-          col("sigma").as("sw")), Seq("src", "w_node"))
-        .join(delta.select(col("src"), col("n").as("w_node"),
-          col("dp").as("dpw")), Seq("src", "w_node"))
-        .select(col("src"), col("v").as("n"),
-          round(col("sv").cast("double") / col("sw").cast("double") *
-            (lit(1e12) + col("dpw").cast("double"))).cast("long").as("c"))
-        .groupBy("src", "n").agg(sum(col("c")).as("cd"))
-      val obs = org.apache.spark.sql.Observation(s"graft_bwb_round_$iter")
-      val next = delta.select(col("src"), col("n"), col("dp").as("old"))
-        .join(contribs, Seq("src", "n"), "left")
-        .select(col("src"), col("n"), col("old"),
-          coalesce(col("cd"), lit(0L)).as("dp"))
-        .observe(obs, sum(when(col("dp") =!= col("old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
-      converged = Option(obs.get("changed")).forall(_.asInstanceOf[Long] == 0L)
-      val prev = delta
-      delta = next.select("src", "n", "dp")
-      Checkpoints.drop(prev)
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
+    val delta = Checkpoints.fixpoint(
+      dist.select(col("src"), col("n"), lit(0L).as("dp")).localCheckpoint(true),
+      maxIter, new IllegalStateException(
         s"betweennessWeighted δ did not converge within $maxIter rounds — " +
-          "raise maxIter for this graph")
+          "raise maxIter for this graph"))(
+      delta => {
+        val contribs = dag
+          .join(sigma.select(col("src"), col("n").as("v"),
+            col("sigma").as("sv")), Seq("src", "v"))
+          .join(sigma.select(col("src"), col("n").as("w_node"),
+            col("sigma").as("sw")), Seq("src", "w_node"))
+          .join(delta.select(col("src"), col("n").as("w_node"),
+            col("dp").as("dpw")), Seq("src", "w_node"))
+          .select(col("src"), col("v").as("n"),
+            round(col("sv").cast("double") / col("sw").cast("double") *
+              (lit(1e12) + col("dpw").cast("double"))).cast("long").as("c"))
+          .groupBy("src", "n").agg(sum(col("c")).as("cd"))
+        delta.select(col("src"), col("n"), col("dp").as("old"))
+          .join(contribs, Seq("src", "n"), "left")
+          .select(col("src"), col("n"), col("old"),
+            coalesce(col("cd"), lit(0L)).as("dp"))
+      },
+      col("dp") =!= col("old"))
     Checkpoints.drop(dag)
     Checkpoints.drop(sigma)
     Checkpoints.drop(dist)
@@ -1359,7 +1304,7 @@ object Graph {
                  weightCol: String, communities: DataFrame,
                  nodeCol: String, commCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val und = undirect(edges, srcCol, dstCol, weightCol)
+    val (und, _) = undirect(edges, srcCol, dstCol, weightCol)
     val comm = communities.select(col(nodeCol).as("__node"),
       col(commCol).as("__comm"))
     val wtot = und.agg(coalesce(sum(col("wc")), lit(0L)).as("w"))
@@ -1409,11 +1354,11 @@ object Graph {
              localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
     require(k >= 2, s"k-truss needs k >= 2, got $k")
     require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
-    val und = undirect(edges, srcCol, dstCol, weightCol)
+    val (und, m) = undirect(edges, srcCol, dstCol, weightCol)
     var e = und.select("a", "b")
     // measured-size strategy pick (see LocalFixpointMaxEdges); integer
     // fixpoint, order-independent, so path parity is by construction
-    if (e.count() <= localMaxEdges) return ktrussOneTask(e, k, maxIter)
+    if (m <= localMaxEdges) return ktrussOneTask(e, k, maxIter)
     var result: DataFrame = null
     // blocks from the PREVIOUS round, released once this round's
     // checkpoint has materialized (the final round's survive for the
@@ -1542,10 +1487,10 @@ object Graph {
                        weightCol: String, iters: Int = 10,
                        localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    val und = undirect(edges, srcCol, dstCol, weightCol)
+    val (und, m) = undirect(edges, srcCol, dstCol, weightCol)
     // measured-size strategy pick (see LocalFixpointMaxEdges); integer
     // arithmetic end to end, so path parity is trivial (GraphSpec law)
-    if (und.count() <= localMaxEdges) return labelPropagationOneTask(und, iters)
+    if (m <= localMaxEdges) return labelPropagationOneTask(und, iters)
     // symmetric incidence: each undirected edge heard from both ends
     val inc = und.select(col("a").as("n"), col("b").as("m"), col("wc"))
       .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))

@@ -631,32 +631,15 @@ object IO {
     * within-component self-pairs and the relabel is the identity — so
     * at-least-once batch delivery converges. Missing snapshot = empty
     * labeling (the nearDupAgainstIndex cold-start contract).
-    * ScalePathSpec pins incremental == full-recompute across batches. */
+    * ScalePathSpec pins incremental == full-recompute across batches.
+    * The batch body is the components store's flat route
+    * ([[graft.operators.Dedup.swapMergeComponents]]). */
   def componentsSink(edges: DataFrame, labelsDir: String,
                      checkpointDir: String,
                      idA: String = "id_a", idB: String = "id_b")
       : DataStreamWriter[Row] =
     foreachBatchSink(edges, checkpointDir) { (batch, _) =>
-      val spark = batch.sparkSession
-      val dst = new Path(labelsDir)
-      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bak = new Path(labelsDir + "_bak")
-      val tmp = new Path(labelsDir + "_tmp")
-      val readFrom =
-        if (fs.exists(dst)) dst else if (fs.exists(bak)) bak else null
-      val labelSchema = StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("label", LongType, nullable = false)))
-      val existing =
-        if (readFrom == null)
-          spark.createDataFrame(new java.util.ArrayList[Row](), labelSchema)
-        else spark.read.schema(labelSchema).parquet(readFrom.toString)
-      // the _tmp write fully consumes the read of the live snapshot
-      // BEFORE any rename touches it — no read-own-input hazard and no
-      // node-sized checkpoint needed
-      graft.operators.Dedup.componentsMerge(existing, batch, idA, idB)
-        .write.mode("overwrite").parquet(tmp.toString)
-      swapIn(fs, tmp, labelsDir, "componentsSink")
+      graft.operators.Dedup.swapMergeComponents(batch, labelsDir, idA, idB)
     }
 
   /** Streaming incremental connected components over the BUCKETED

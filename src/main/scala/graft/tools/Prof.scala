@@ -1,6 +1,7 @@
 package graft.tools
 
 import scala.collection.mutable
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   * row is computed, with no count-prune and no sink cost.
   * {{{
   * sbt "runMain graft.tools.Prof ids <id>..."                    # min-of-3 wall per id
-  * sbt "runMain graft.tools.Prof jobs <id>..."                   # per-job / per-stage breakdown
+  * sbt "runMain graft.tools.Prof jobs <id>..."                   # per-job / per-stage breakdown, compiles
   * sbt "runMain graft.tools.Prof abconf <key> <a> <b> <id>..."   # interleaved A/B of a SQL conf
   * sbt "runMain graft.tools.Prof chain [batchSize] [nBatches]"   # per-micro-batch job census
   * }}}
@@ -68,6 +69,15 @@ object Prof {
     } finally spark.sparkContext.removeSparkListener(c)
   }
 
+  /** `body`'s result and the Janino compiles that ran under it (every
+    * generated class: whole-stage code, projections, orderings), on the
+    * driver and, in local mode, in the tasks. */
+  private def compiles[T](body: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val r = body
+    (r, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, usage)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -97,11 +107,15 @@ object Prof {
         }
       case "jobs" =>
         // warm each id twice, then census a third run: each job's
-        // duration and each stage's wall/run time
+        // duration and each stage's wall/run time. The compiles of the
+        // first run are the id's codegen footprint; those of the census
+        // run are what a warm run still pays.
         args.drop(1).foreach { id =>
-          run(id); run(id)
-          val (wall, c) = census(spark)(run(id))
-          println(f"[prof] $id total $wall%.3f s, ${c.jobs.size} jobs:")
+          val (_, firstCompiles) = compiles(run(id))
+          run(id)
+          val ((wall, c), censusCompiles) = compiles(census(spark)(run(id)))
+          println(f"[prof] $id total $wall%.3f s, ${c.jobs.size} jobs, " +
+            s"compiles: first run $firstCompiles, census run $censusCompiles:")
           c.jobs.sortBy(_.id).foreach { j =>
             println(f"[prof]   job ${j.id}%3d ${j.ns / 1e9}%7.3f s  ${j.name.take(90)}")
           }

@@ -1831,6 +1831,38 @@ class ScalePathSpec extends SparkSpec {
     assert(gotB == want, s"bucketed route $gotB != recompute $want")
   }
 
+  test("components store gate: a flat-route merge after a torn swap reads <dir>_bak, as the swap sink does") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import java.nio.file.Files
+    val b1 = Seq((5L, 6L), (8L, 9L), (20L, 21L))
+    val batch = Seq((6L, 9L), (9L, 3L))
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // a crash between a swap's two renames leaves the labeling at
+    // <dir>_bak and no live dir
+    def torn(prefix: String): String = {
+      val dir = Files.createTempDirectory(prefix).toString + "/labels"
+      Dedup.connectedComponents(b1.toDF("id_a", "id_b")).write.parquet(dir + "_bak")
+      dir
+    }
+    val sinkDir = torn("cc_torn_s_")
+    val in = MemoryStream[(Long, Long)]
+    val q = graft.sources.IO.componentsSink(in.toDF().toDF("id_a", "id_b"),
+      sinkDir, Files.createTempDirectory("cc_torn_ck_").toString).start()
+    try { in.addData(batch: _*); q.processAllAvailable() } finally q.stop()
+    val fromSink = labels(spark.read.parquet(sinkDir))
+    val flatDir = torn("cc_torn_f_")
+    val r = Dedup.mergeComponentsStore(batch.toDF("id_a", "id_b"), flatDir)
+    assert(r.route == "flat", s"$r")
+    val fromFlat = labels(Dedup.readComponentsStore(spark, flatDir))
+    assert(fromFlat == fromSink, s"flat route $fromFlat != swap sink $fromSink")
+    assert(fromSink == labels(Dedup.connectedComponents(
+      (b1 ++ batch).toDF("id_a", "id_b"))))
+    assert(Seq("_bak", "_tmp").forall(s => !new java.io.File(flatDir + s).exists()),
+      "the swap must leave only the live dir")
+  }
+
   test("componentsStoreSink: streaming batches fold into the bucketed store; parity with the swap sink") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -107,4 +107,39 @@ class SourceScanSpec extends AnyFunSuite {
       s"raw read.parquet census drifted: got $census, pinned $expected; route an " +
         "artifact read through IO.readArtifact, or pin the site here with its reason")
   }
+
+  test("size gates read their pin's observed count; Observation sites are pinned") {
+    // a measured-size gate reads the count Checkpoints.pinCounted observes
+    // on the job that pins the relation; a count() of its own costs the
+    // gate two more jobs. Convergence loops run through
+    // Checkpoints.fixpoint; what observes by hand says why here.
+    val root = Paths.get("src/main/scala/graft")
+    def code(f: java.nio.file.Path): List[(String, Int)] =
+      new String(Files.readAllBytes(f), "UTF-8").linesIterator.zipWithIndex
+        .filterNot { case (l, _) => l.trim.startsWith("*") || l.trim.startsWith("//") }
+        .toList
+    val gate = """\.count\(\)\s*(/\s*2\s*)?<=|frontier\.count\(\)\s*>""".r
+    val gates = for {
+      f <- scalaFiles(root.resolve("operators")) ++ scalaFiles(root.resolve("functions"))
+      (line, i) <- code(f)
+      if gate.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: ${line.trim}"
+    if (gates.nonEmpty)
+      fail(gates.mkString("size gates that run their own count (use Checkpoints.pinCounted):\n", "\n", ""))
+    val expected = Map(
+      "operators/Checkpoints.scala" -> 1, // pinCounted and fixpoint's one measured pin
+      "operators/Dedup.scala" -> 2,       // connectedComponents' pointer-jumping loop and its log-rounds fallback
+      "operators/Graph.scala" -> 1,       // ktruss's peeling loop keeps the superset filter, not a fixpoint state
+      "operators/Analytics.scala" -> 1,   // observedFilter, the public stage-accounting verb
+      "sources/BucketedIndex.scala" -> 1  // rewrite's written-partition set
+    )
+    val census = (for {
+      f <- scalaFiles(root)
+      (line, _) <- code(f)
+      _ <- """\bObservation\(""".r.findAllMatchIn(line)
+    } yield root.relativize(f).toString).groupBy(identity).map { case (f, n) => f -> n.size }
+    assert(census == expected,
+      s"Observation census drifted: got $census, pinned $expected; a convergence loop " +
+        "runs through Checkpoints.fixpoint, or pin the site here with its reason")
+  }
 }
