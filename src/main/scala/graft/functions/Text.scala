@@ -499,7 +499,7 @@ object Text {
     * the IVF centroid load. */
   def bpeReadMerges(spark: org.apache.spark.sql.SparkSession,
                     dir: String): Seq[(String, String)] =
-    spark.read.parquet(dir)
+    graft.sources.IO.readArtifact(spark, dir)
       .select("merge_rank", "left_sym", "right_sym")
       .orderBy("merge_rank")
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
@@ -574,7 +574,7 @@ object Text {
     * corpus scale (that is the point of a top-k vocab). */
   def readVocab(spark: org.apache.spark.sql.SparkSession,
                 dir: String): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(dir).select("vocab_rank", "w", "cw")
+    graft.sources.IO.readArtifact(spark, dir).select("vocab_rank", "w", "cw")
 
   /** Extend a persisted vocabulary to `k` total entries over the SAME
     * corpus: ranks already written are IMMUTABLE (rank r's token is a

@@ -1369,11 +1369,9 @@ object Dedup {
     * the distributed loop's output contract. Not a driver collect: the
     * work runs in one EXECUTOR task and the result stays a distributed
     * relation. */
-  private def connectedComponentsOneTask(edges: DataFrame): DataFrame = {
-    val ss = edges.sparkSession
-    import ss.implicits._
-    edges.select(col("src"), col("dst")).as[(Long, Long)]
-      .coalesce(1).mapPartitions { it =>
+  private def connectedComponentsOneTask(edges: DataFrame): DataFrame =
+    Graph.oneTask(edges.select("src", "dst"), "id", "label") {
+      (it: Iterator[(Long, Long)]) =>
         val parent = scala.collection.mutable.HashMap.empty[Long, Long]
         def find(x0: Long): Long = {
           var x = x0
@@ -1395,8 +1393,7 @@ object Dedup {
         }
         val keys = parent.keys.toArray
         keys.iterator.map(v => (v, find(v)))
-      }.toDF("id", "label")
-  }
+    }
 
   /** Connected components via alternating LARGE-STAR / SMALL-STAR
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge DataFrames (driver brief's
@@ -10,8 +12,10 @@ import org.apache.spark.sql.functions._
   * [[Dedup.connectedComponents]], built on the same loop discipline:
   * node/edge-keyed relations only, one shuffle per iteration, eager
   * `localCheckpoint` to keep the lineage flat, and never a
-  * data-proportional collect (the only driver-side value is the node
-  * count, one long).
+  * data-proportional collect. What reaches the driver is bounded: the
+  * edge and node counts the gates observe on their pins (longs), and
+  * a centrality sweep's source list (≤ K ids) below the
+  * [[LocalFixpointMaxEdges]] gate.
   */
 object Graph {
 
@@ -30,6 +34,60 @@ object Graph {
     * ([[Checkpoints.pinCounted]]), mirroring AQE's own runtime-size
     * strategy picks — never a hardcoded repartition. */
   private[graft] val LocalFixpointMaxEdges = 2000000L
+
+  /** The single-task path below [[LocalFixpointMaxEdges]]: `rows` —
+    * an edge list whose first two columns are node ids, read as longs —
+    * is coalesced into ONE executor task, `algo` runs the whole
+    * fixpoint over its rows there, and its output is named `out`. Not
+    * a driver collect: the work runs in an executor and the result
+    * stays a distributed relation. Each `algo` replicates its
+    * distributed loop operation-for-operation, so the two paths agree
+    * bit-for-bit (GraphSpec parity laws force the distributed loop via
+    * `localMaxEdges = 0`), and each keeps its own empty-input output. */
+  private[graft] def oneTask[T <: Product : TypeTag, R <: Product : TypeTag](
+      rows: DataFrame, out: String*)(algo: Iterator[T] => Iterator[R]): DataFrame = {
+    val ss = rows.sparkSession
+    import ss.implicits._
+    val a +: b +: rest = rows.columns.toSeq.map(col)
+    rows.select(a.cast("long") +: b.cast("long") +: rest: _*).as[T]
+      .coalesce(1).mapPartitions(algo).toDF(out: _*)
+  }
+
+  /** Spark's `round(x, scale)` on a double, for the single-task twins:
+    * java `BigDecimal.valueOf(x).setScale(scale, HALF_UP)` is exactly
+    * Spark's `Round`, so a twin's quantized folds match its loop's. */
+  private def sparkRound(x: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** Node → its (neighbor, wc) incidences, both ends of every edge. */
+  private type Adjacency = mutable.HashMap[Long, mutable.ArrayBuffer[(Long, Long)]]
+
+  private def adjacency(es: Iterator[(Long, Long, Long)]): Adjacency = {
+    val adj: Adjacency = mutable.HashMap.empty
+    es.foreach { case (a, b, wc) =>
+      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += ((b, wc))
+      adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += ((a, wc))
+    }
+    adj
+  }
+
+  /** The single-task twin of [[Checkpoints.fixpoint]]'s loop: runs
+    * `round`, which says whether it changed anything, until a round
+    * changes nothing, and throws `failure` once `maxIter` rounds have
+    * all changed something. */
+  private def converge(maxIter: Int, failure: => Throwable)(round: => Boolean): Unit = {
+    var iter = 0
+    while (round) { iter += 1; if (iter == maxIter) throw failure }
+  }
+
+  /** The symmetric incidence list (n, m, wc) of an undirected edge
+    * list, each edge heard from both ends, pinned: every round of a
+    * distributed loop joins it. The caller owns its release. */
+  private def incidence(und: DataFrame): DataFrame =
+    und.select(col("a").as("n"), col("b").as("m"), col("wc"))
+      .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))
+      .localCheckpoint(true)
 
   /** Weighted PageRank by power iteration: `iters` rounds of
     *
@@ -96,56 +154,41 @@ object Graph {
   /** The single-task fixpoint path of [[pagerank]]: the joined
     * (src, dst, w, outw) edge relation — `outw` computed by the SAME
     * distributed aggregate as the loop path, so the two paths share
-    * every double — is coalesced into one task that runs all `iters`
-    * rounds locally. Arithmetic is replicated operation-for-operation
-    * (java `BigDecimal.valueOf(...).setScale(..., HALF_UP)` is exactly
-    * Spark's `Round` on doubles; contribution folds are the same
-    * 1e-12-grain longs), so the output is BIT-IDENTICAL to the
-    * distributed loop — pinned by a GraphSpec parity law that forces
-    * the distributed path via `localMaxEdges = 0`. Not a driver
-    * collect: the iteration runs in one EXECUTOR task and the result
-    * stays a node-sized distributed relation. */
+    * every double — runs all `iters` rounds in one task, with the
+    * loop's 1e-12-grain long contribution folds and Spark `round`
+    * replicas, so the output is BIT-IDENTICAL to the distributed loop
+    * (GraphSpec parity law). */
   private def pagerankOneTask(e: DataFrame, damping: Double,
-                              iters: Int): DataFrame = {
-    val ss = e.sparkSession
-    import ss.implicits._
-    val rows = e.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w"), col("outw"))
-      .as[(Long, Long, Double, Double)]
-    rows.coalesce(1).mapPartitions { it =>
-      val es = it.toArray
-      if (es.isEmpty) Iterator.empty
-      else {
-        import java.math.{BigDecimal => JBD, RoundingMode}
-        // Spark Round(double, 0) then cast long
-        def pico(x: Double): Long =
-          JBD.valueOf(x).setScale(0, RoundingMode.HALF_UP).doubleValue.toLong
-        // Spark Round(double, 12)
-        def r12(x: Double): Double =
-          JBD.valueOf(x).setScale(12, RoundingMode.HALF_UP).doubleValue
-        val nodeSet = scala.collection.mutable.LinkedHashSet.empty[Long]
-        es.foreach { case (u, v, _, _) => nodeSet += u; nodeSet += v }
-        val nodes = nodeSet.toArray
+                              iters: Int): DataFrame =
+    oneTask(e.select("src", "dst", "w", "outw"), "node", "rank") {
+      (it: Iterator[(Long, Long, Double, Double)]) =>
+        val es = it.toArray
+        val nodes = es.flatMap { case (u, v, _, _) => Array(u, v) }.distinct
         val n = nodes.length
         val base = (1.0 - damping) / n
-        val rank = scala.collection.mutable.HashMap.empty[Long, Double]
+        val rank = mutable.HashMap.empty[Long, Double]
         nodes.foreach(v => rank(v) = 1.0 / n)
-        var i = 0
-        while (i < iters) {
-          val in = scala.collection.mutable.HashMap.empty[Long, Long]
+        for (_ <- 1 to iters) {
+          val in = mutable.HashMap.empty[Long, Long]
           es.foreach { case (u, v, w, ow) =>
-            val c = pico(rank(u) * w / ow * 1e12)
-            in(v) = in.getOrElse(v, 0L) + c
+            in(v) = in.getOrElse(v, 0L) + sparkRound(rank(u) * w / ow * 1e12, 0).toLong
           }
           nodes.foreach { v =>
-            rank(v) = r12(base + damping * (in.getOrElse(v, 0L).toDouble / 1e12))
+            rank(v) = sparkRound(base + damping * (in.getOrElse(v, 0L).toDouble / 1e12), 12)
           }
-          i += 1
         }
         nodes.iterator.map(v => (v, rank(v)))
-      }
-    }.toDF("node", "rank")
-  }
+    }
+
+  /** Marker the in-plan weight guard embeds in its raise_error message
+    * so [[undirect]]'s checkpoint-time catch can translate the task
+    * failure back into the IllegalArgumentException the operator
+    * contracts promise. */
+  private val WeightContractTag = "GRAFT_WEIGHT_CONTRACT"
+
+  private def messageChain(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).toSeq
 
   /** Undirected simple edge list from a directed multi-edge relation:
     * self-loops dropped, direction collapsed via (least, greatest),
@@ -159,18 +202,9 @@ object Graph {
     * with its edge count ([[Checkpoints.pinCounted]]): callers fan out
     * into multi-join shapes (degree, orientation, wedge closure) and
     * must not re-scan the upstream fact tables per consumer, and the
-    * size-gated ones read their gate from the count. */
-  /** Marker the in-plan weight guard embeds in its raise_error message
-    * so [[undirect]]'s checkpoint-time catch can translate the task
-    * failure back into the IllegalArgumentException the operator
-    * contracts promise. */
-  private val WeightContractTag = "GRAFT_WEIGHT_CONTRACT"
-
-  private def messageChain(e: Throwable): Seq[String] =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .flatMap(t => Option(t.getMessage)).toSeq
-
-  /** `minWeight = Some((lo, what))` enforces the weight contract
+    * size-gated ones read their gate from the count.
+    *
+    * `minWeight = Some((lo, what))` enforces the weight contract
     * IN-PLAN: a `raise_error` branch rides the aggregated weight column
     * through the eager checkpoint this helper already runs, so the
     * validation costs ZERO extra Spark jobs — it replaced a blocking
@@ -353,10 +387,10 @@ object Graph {
   /** Weighted single-source shortest paths over the undirected graph by
     * distributed relaxation (parallel Bellman–Ford): each round every
     * node offers `dist(n) + w(n,m)` to its neighbors and keeps the
-    * minimum offer seen — one incidence join + one keyed min per round,
-    * distance state node-sized, the [[Dedup.connectedComponents]] loop
-    * discipline (observe-metric convergence riding the checkpoint
-    * materialization, one Spark job per round). Distances are EXACT
+    * minimum offer seen — one incidence join + one keyed min per round.
+    * It is the one-source case of the shared [[multiSourceDistances]]
+    * fixpoint (and its single-task twin below the gate), so the state
+    * is node-sized and each round is one Spark job. Distances are EXACT
     * LONGS in the [[undirect]] weight unit (cents from the registry
     * callers), so every min-fold is integer arithmetic — reduce-order
     * free, the exempt lane's determinism contract.
@@ -374,78 +408,10 @@ object Graph {
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
                     weightCol: String, source: Long,
                     maxIter: Int = 40,
-                    localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
-    require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
-    val (und, m) = undirect(edges, srcCol, dstCol, weightCol,
-      minWeight = Some((0L, "shortestPaths requires non-negative weights")))
-    // measured-size strategy pick (see LocalFixpointMaxEdges); exact
-    // long min-folds, so path parity is trivial (GraphSpec law)
-    if (m <= localMaxEdges)
-      return shortestPathsOneTask(und, source, maxIter)
-    val incSym = und.select(col("a").as("n"), col("b").as("m"), col("wc"))
-      .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))
-      .localCheckpoint(true)
-    // literal 1-row seed: the source is at distance 0 even when isolated
-    val seed = edges.sparkSession.range(1)
-      .select(lit(source).as("n"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    val dist = try Checkpoints.fixpoint(seed, maxIter,
-        new IllegalStateException(
-          s"shortestPaths did not converge within $maxIter rounds — " +
-            "distances would be truncated; raise maxIter for this graph"))(
-      dist => {
-        val offers = incSym
-          .join(dist.select(col("n").as("m"), col("dist").as("dm")), Seq("m"))
-          .select(col("n"), (col("dm") + col("wc")).as("cand"))
-          .groupBy("n").agg(min(col("cand")).as("cand"))
-        // full outer: a node can be newly reached this round (no old dist)
-        dist.join(offers, Seq("n"), "full")
-          .select(col("n"), col("dist").as("old"),
-            when(col("dist").isNull, col("cand"))
-              .when(col("cand").isNull, col("dist"))
-              .otherwise(least(col("dist"), col("cand"))).as("dist"))
-      },
-      col("old").isNull || col("dist") < col("old"))
-    finally Checkpoints.drop(incSym)
-    dist.select(col("n").as("node"), col("dist").as("dist"))
-  }
-
-  /** The single-task fixpoint path of [[shortestPaths]]: the same
-    * synchronous Bellman–Ford rounds (relax from the PREVIOUS round's
-    * distances) over the normalized edge list in one executor task.
-    * Distances are exact longs, so parity with the distributed loop is
-    * by construction (GraphSpec law forces both paths). Keeps the
-    * maxIter-truncation throw — identical failure contract. */
-  private def shortestPathsOneTask(und: DataFrame, source: Long,
-                                   maxIter: Int): DataFrame = {
-    val ss = und.sparkSession
-    import ss.implicits._
-    val rows = und.select(col("a").cast("long"), col("b").cast("long"),
-      col("wc")).as[(Long, Long, Long)]
-    rows.coalesce(1).mapPartitions { it =>
-      val es = it.toArray
-      val dist = scala.collection.mutable.HashMap(source -> 0L)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIter) {
-        val next = dist.clone()
-        es.foreach { case (a, b, wc) =>
-          for ((n0, m0) <- Seq((a, b), (b, a)); dm <- dist.get(m0)) {
-            val cand = dm + wc
-            if (cand < next.getOrElse(n0, Long.MaxValue)) next(n0) = cand
-          }
-        }
-        converged = next == dist
-        dist.clear(); dist ++= next
-        iter += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"shortestPaths did not converge within $maxIter rounds — " +
-            "distances would be truncated; raise maxIter for this graph")
-      dist.iterator
-    }.toDF("node", "dist")
-  }
+                    localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame =
+    distanceSweep(edges, srcCol, dstCol, weightCol, Some(Seq(source)), None,
+        maxIter, localMaxEdges, "shortestPaths").distances
+      .select(col("n").as("node"), col("dist"))
 
   /** k-core decomposition (coreness per node) by the distributed
     * h-index fixpoint (Lü et al., "The H-index of a network", and the
@@ -475,20 +441,18 @@ object Graph {
                localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
     require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
     val (und, m) = undirect(edges, srcCol, dstCol, weightCol)
+    def failure = new IllegalStateException(
+      s"coreness did not converge within $maxIter rounds — estimates " +
+        "would be over-estimates; raise maxIter for this graph")
     // measured-size strategy pick (see LocalFixpointMaxEdges); exact
     // integer h-index folds, so path parity is trivial (GraphSpec law)
-    if (m <= localMaxEdges) return corenessOneTask(und, maxIter)
-    val inc = und.select(col("a").as("n"), col("b").as("m"))
-      .union(und.select(col("b").as("n"), col("a").as("m")))
-      .localCheckpoint(true)
+    if (m <= localMaxEdges) return corenessOneTask(und, maxIter, failure)
+    val inc = incidence(und)
     val seed = inc.groupBy("n").agg(count(lit(1)).as("est"))
       .localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("n").orderBy(col("em").desc, col("m"))
-    val est = try Checkpoints.fixpoint(seed, maxIter,
-        new IllegalStateException(
-          s"coreness did not converge within $maxIter rounds — estimates " +
-            "would be over-estimates; raise maxIter for this graph"))(
+    val est = try Checkpoints.fixpoint(seed, maxIter, failure)(
       est => {
         val h = inc
           .join(est.select(col("n").as("m"), col("est").as("em")), Seq("m"))
@@ -508,47 +472,29 @@ object Graph {
     * executor task. Every quantity is an exact int, so parity with the
     * distributed loop is by construction (GraphSpec law forces both
     * paths). Keeps the maxIter-truncation throw. */
-  private def corenessOneTask(und: DataFrame, maxIter: Int): DataFrame = {
-    val ss = und.sparkSession
-    import ss.implicits._
-    val rows = und.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)]
-    rows.coalesce(1).mapPartitions { it =>
-      val es = it.toArray
-      if (es.isEmpty) Iterator.empty
-      else {
-        val adj = scala.collection.mutable
-          .HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-        es.foreach { case (a, b) =>
-          adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-          adj.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-        }
-        val est = scala.collection.mutable.HashMap.empty[Long, Long]
+  private def corenessOneTask(und: DataFrame, maxIter: Int,
+                              failure: => Throwable): DataFrame =
+    // weights play no part: every edge counts once
+    oneTask(und.select(col("a"), col("b"), lit(1L)), "node", "coreness") {
+      (it: Iterator[(Long, Long, Long)]) =>
+        val adj = adjacency(it)
+        val est = mutable.HashMap.empty[Long, Long]
         adj.foreach { case (v, ns) => est(v) = ns.length.toLong }
-        var converged = false
-        var iter = 0
-        while (!converged && iter < maxIter) {
+        converge(maxIter, failure) {
           var changed = false
           val snap = est.clone()
           adj.foreach { case (v, ns) =>
-            val vals = ns.map(snap).sortBy(x => -x)
+            val vals = ns.map(p => snap(p._1)).sortBy(x => -x)
             var h = 0L
             var i = 0
             while (i < vals.length && vals(i) >= i + 1) { h = i + 1; i += 1 }
             val nv = math.min(snap(v), h)
             if (nv < est(v)) { est(v) = nv; changed = true }
           }
-          converged = !changed
-          iter += 1
+          changed
         }
-        if (!converged)
-          throw new IllegalStateException(
-            s"coreness did not converge within $maxIter rounds — estimates " +
-              "would be over-estimates; raise maxIter for this graph")
         est.iterator
-      }
-    }.toDF("node", "coreness")
-  }
+    }
 
   /** Harmonic closeness centrality from multi-source shortest paths:
     * C(v) = Σ_{s ∈ sources, s ≠ v, d(s,v) < ∞} 1 / d(s,v) — the
@@ -579,49 +525,103 @@ object Graph {
                         landmarkK: Option[Int] = None,
                         maxIter: Int = 40,
                         localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
+    val s = distanceSweep(edges, srcCol, dstCol, weightCol, sources, landmarkK,
+      maxIter, localMaxEdges, "harmonicCloseness")
+    closenessFold(s.distances, s.nodes, s.scale)
+  }
+
+  /** One centrality sweep's set-up, shared by every multi-source
+    * operator: the argument checks, the weight-guarded [[undirect]] pin
+    * and its measured gate, the long-normalized edge list, the node
+    * set, the seed relation, the landmark scale and the gate's ≤ K
+    * source list. `weight = None` sweeps hop counts: every edge weighs
+    * one, whatever the weight column holds. */
+  private final class Sweep(edges: DataFrame, srcCol: String, dstCol: String,
+                            weightCol: String, sources: Option[Seq[Long]],
+                            landmarkK: Option[Int], val maxIter: Int,
+                            localMaxEdges: Long, val what: String,
+                            weight: Option[(Long, String)]) {
     require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
     require(sources.isEmpty || landmarkK.isEmpty,
       "pass explicit sources OR landmarkK, not both")
     require(landmarkK.forall(_ >= 1),
       s"landmarkK must be positive, got ${landmarkK.get}")
-    // long-normalized node ids: the multi-source state seeds from a
-    // driver-built (src, n, dist) literal relation, so the edge side
-    // must carry the same type (int nation keys would CCE the collect
-    // and type-coerce every per-round join)
-    val (undRaw, m) = undirect(edges, srcCol, dstCol, weightCol,
-      minWeight = Some((0L, "harmonicCloseness requires non-negative weights")))
-    val und = undRaw.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"), col("wc"))
-    val nodes = graphNodes(und)
-    val srcDf = sourceSeed(nodes, sources, landmarkK, edges.sparkSession)
-    // landmark estimator: the sampled 1/d sums extrapolate by n/K
-    // (closeness folds linearly over sources); exact modes scale by
-    // 1.0 — an IEEE identity, so the fold stays bit-identical
-    val scale: Double = landmarkK match {
+    private val (pin, m) = undirect(edges, srcCol, dstCol, weightCol, weight)
+    /** Measured-size strategy pick (see [[LocalFixpointMaxEdges]]). */
+    val local: Boolean = m <= localMaxEdges
+    // long-normalized node ids, lazily over the pin: the multi-source
+    // state seeds from a (src, n, dist) relation of long sources, so the
+    // edge side must carry the same type (int nation keys would CCE the
+    // collect and type-coerce every per-round join)
+    val und: DataFrame = pin.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b"),
+      (if (weight.isEmpty) lit(1L) else col("wc")).as("wc"))
+    /** Every node on an edge — the output domain of the folds (a node
+      * reached by NO source must still report 0). */
+    val nodes: DataFrame =
+      und.select(col("a").as("n")).union(und.select(col("b").as("n"))).distinct()
+    /** The seed relation, built IN-PLAN from the node set (no V-sized
+      * driver collect on the distributed path): explicit `sources` as a
+      * literal relation; `landmarkK` as the first K nodes in
+      * deterministic md5 order (the registry's sampling discipline —
+      * reproducible across runs and engines); neither → every node (the
+      * exact all-sources form). */
+    val srcDf: DataFrame = sources match {
+      case Some(list) =>
+        require(list.nonEmpty, "centrality needs at least one source")
+        val ss = edges.sparkSession
+        import ss.implicits._
+        list.toDF("s")
+      case None => landmarkK match {
+        case Some(k) =>
+          nodes.orderBy(md5(col("n").cast("string")), col("n"))
+            .limit(k).select(col("n").as("s"))
+        case None => nodes.select(col("n").as("s"))
+      }
+    }
+    /** The landmark estimator's scale: sampled sums extrapolate by n/K
+      * (the folds are linear over sources); exact modes scale by 1.0 —
+      * an IEEE identity, so the fold stays bit-identical. Lazy: a sweep
+      * that does not fold by it runs no counts. */
+    lazy val scale: Double = landmarkK match {
       case Some(_) =>
         val nV = nodes.count(); val kA = srcDf.count()
         if (kA == 0L) 1.0 else nV.toDouble / kA
       case None => 1.0
     }
-    if (m <= localMaxEdges) {
-      val srcList = srcDf.collect().map(_.getLong(0)).toSeq.sorted // bounded: <= K sources
-      return harmonicClosenessOneTask(und, srcList, maxIter, scale)
-    }
-    val incSym = und.select(col("a").as("n"), col("b").as("m"), col("wc"))
-      .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))
-      .localCheckpoint(true)
-    val dist = multiSourceDistances(incSym, srcDf, maxIter, "harmonicCloseness")
-    Checkpoints.drop(incSym)
-    closenessFold(dist, nodes, scale)
+    /** The sources, ascending, for the single-task twins. */
+    def srcList: Seq[Long] = sources.getOrElse(
+      srcDf.collect().map(_.getLong(0)).toSeq).sorted // bounded: <= K sources
+    /** The (src, n, dist) exact shortest-distance relation. */
+    def distances: DataFrame =
+      if (local) multiSourceDistancesOneTask(und, srcList, maxIter, what)
+      else {
+        val incSym = incidence(und)
+        try multiSourceDistances(incSym, srcDf, maxIter, what)
+        finally Checkpoints.drop(incSym)
+      }
   }
+
+  /** A sweep over distances: weights must be non-negative. */
+  private def distanceSweep(edges: DataFrame, srcCol: String, dstCol: String,
+                            weightCol: String, sources: Option[Seq[Long]],
+                            landmarkK: Option[Int], maxIter: Int,
+                            localMaxEdges: Long, what: String): Sweep =
+    new Sweep(edges, srcCol, dstCol, weightCol, sources, landmarkK, maxIter,
+      localMaxEdges, what, Some((0L, s"$what requires non-negative weights")))
+
+  private def truncated(opName: String, maxIter: Int) = new IllegalStateException(
+    s"$opName did not converge within $maxIter rounds — " +
+      "distances would be truncated; raise maxIter for this graph")
 
   /** The shared multi-source exact-distance fixpoint (source-tagged
     * Bellman–Ford): state (src, n, dist) in cent-longs, one incidence
     * join + one (src, n)-keyed min per round, run by
     * [[Checkpoints.fixpoint]]. Seeds from
     * the `srcDf(s)` relation IN-PLAN (no V-sized driver collect).
-    * Shared by [[harmonicCloseness]], [[betweennessWeighted]] and
-    * [[eccentricity]] — one loop, three folds. Returns the CHECKPOINTED
+    * Shared by [[shortestPaths]], [[harmonicCloseness]],
+    * [[betweennessWeighted]], [[eccentricity]] and [[closenessTotals]]
+    * — one loop, five folds. Returns the CHECKPOINTED
     * final distance relation (caller owns its release); throws on
     * maxIter truncation (`opName` labels the error). */
   private[graft] def multiSourceDistances(incSym: DataFrame, srcDf: DataFrame,
@@ -629,15 +629,14 @@ object Graph {
                                           opName: String): DataFrame = {
     val seed = srcDf.select(col("s").as("src"), col("s").as("n"),
       lit(0L).as("dist")).localCheckpoint(true)
-    Checkpoints.fixpoint(seed, maxIter, new IllegalStateException(
-        s"$opName did not converge within $maxIter rounds — " +
-          "distances would be truncated; raise maxIter for this graph"))(
+    Checkpoints.fixpoint(seed, maxIter, truncated(opName, maxIter))(
       dist => {
         val offers = incSym
           .join(dist.select(col("src"), col("n").as("m"), col("dist").as("dm")),
             Seq("m"))
           .select(col("src"), col("n"), (col("dm") + col("wc")).as("cand"))
           .groupBy("src", "n").agg(min(col("cand")).as("cand"))
+        // full outer: a node can be newly reached this round (no old dist)
         dist.join(offers, Seq("src", "n"), "full")
           .select(col("src"), col("n"), col("dist").as("old"),
             when(col("dist").isNull, col("cand"))
@@ -648,25 +647,21 @@ object Graph {
   }
 
   /** Single-task twin of [[multiSourceDistances]]: synchronous
-    * Bellman–Ford per source over the normalized edge list in one
-    * executor task — identical exact cent-long distances, so any fold
-    * over the two relations is parity-exact by construction. */
+    * Bellman–Ford per source (relax from the PREVIOUS round's
+    * distances) over the normalized edge list in one executor task —
+    * identical exact cent-long distances, so any fold over the two
+    * relations is parity-exact by construction. A source on no edge
+    * still yields its own 0-distance row, as the loop's seed does. */
   private[graft] def multiSourceDistancesOneTask(und: DataFrame,
                                                  srcList: Seq[Long],
                                                  maxIter: Int,
                                                  opName: String): DataFrame = {
-    val ss = und.sparkSession
-    import ss.implicits._
-    val rows = und.select(col("a").cast("long"), col("b").cast("long"),
-      col("wc")).as[(Long, Long, Long)]
     val srcs = srcList.toArray
-    rows.coalesce(1).mapPartitions { it =>
+    oneTask(und, "src", "n", "dist") { (it: Iterator[(Long, Long, Long)]) =>
       val es = it.toArray
       srcs.iterator.flatMap { s0 =>
-        val d = scala.collection.mutable.HashMap(s0 -> 0L)
-        var converged = false
-        var iter = 0
-        while (!converged && iter < maxIter) {
+        val d = mutable.HashMap(s0 -> 0L)
+        converge(maxIter, truncated(opName, maxIter)) {
           val next = d.clone()
           es.foreach { case (a, b, wc) =>
             for ((n0, m0) <- Seq((a, b), (b, a)); dm <- d.get(m0)) {
@@ -674,23 +669,14 @@ object Graph {
               if (cand < next.getOrElse(n0, Long.MaxValue)) next(n0) = cand
             }
           }
-          converged = next == d
+          val changed = next != d
           d.clear(); d ++= next
-          iter += 1
+          changed
         }
-        if (!converged)
-          throw new IllegalStateException(
-            s"$opName did not converge within $maxIter rounds — " +
-              "distances would be truncated; raise maxIter for this graph")
         d.iterator.map { case (n0, dd) => (s0, n0, dd) }
       }
-    }.toDF("src", "n", "dist")
+    }
   }
-
-  /** Every node on an edge — the output domain of the closeness fold
-    * (a node reached by NO source must still report closeness 0). */
-  private def graphNodes(und: DataFrame): DataFrame =
-    und.select(col("a").as("n")).union(und.select(col("b").as("n"))).distinct()
 
   /** The shared (src, node, dist) → (node, n_reached, closeness) fold:
     * self-pairs dropped, 1/d terms scaled to exact 1e-12-grain longs
@@ -698,7 +684,7 @@ object Graph {
     * node, displayed at 6 dp. Isolated-from-all-sources nodes on an
     * edge still appear via the left join over the node set. */
   private def closenessFold(dist: DataFrame, nodes: DataFrame,
-                            scale: Double = 1.0): DataFrame = {
+                            scale: Double): DataFrame = {
     val terms = dist.where(col("src") =!= col("n") && col("dist") > 0L)
       .select(col("n"),
         round(lit(100.0) / col("dist").cast("double") * lit(1e12))
@@ -710,19 +696,6 @@ object Graph {
         round(coalesce(col("ts"), lit(0L)).cast("double") * lit(scale) /
           lit(1e12), 6).as("closeness"))
   }
-
-  /** The single-task path of [[harmonicCloseness]]: synchronous
-    * Bellman–Ford per source over the normalized edge list in one
-    * executor task, then the SAME distributed [[closenessFold]] over
-    * the exact long distances — term arithmetic is identical
-    * (Spark `round` on both paths), so parity with the distributed
-    * loop is by construction (GraphSpec law). */
-  private def harmonicClosenessOneTask(und: DataFrame, srcList: Seq[Long],
-                                       maxIter: Int,
-                                       scale: Double = 1.0): DataFrame =
-    closenessFold(
-      multiSourceDistancesOneTask(und, srcList, maxIter, "harmonicCloseness"),
-      graphNodes(und), scale)
 
   /** Weighted ECCENTRICITY per node (+ the diameter/radius endpoints):
     * ecc(v) = max over REACHED u of the exact cent-long shortest-path
@@ -743,8 +716,8 @@ object Graph {
                    landmarkK: Option[Int] = None,
                    maxIter: Int = 40,
                    localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame =
-    sourceDistanceTable(edges, srcCol, dstCol, weightCol, sources, landmarkK,
-      maxIter, localMaxEdges, "eccentricity")
+    distanceSweep(edges, srcCol, dstCol, weightCol, sources, landmarkK,
+        maxIter, localMaxEdges, "eccentricity").distances
       .where(col("src") =!= col("n"))
       .groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("n_reached"), max(col("dist")).as("ecc_cents"))
@@ -764,46 +737,11 @@ object Graph {
                       landmarkK: Option[Int] = None,
                       maxIter: Int = 40,
                       localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame =
-    sourceDistanceTable(edges, srcCol, dstCol, weightCol, sources, landmarkK,
-      maxIter, localMaxEdges, "closenessTotals")
+    distanceSweep(edges, srcCol, dstCol, weightCol, sources, landmarkK,
+        maxIter, localMaxEdges, "closenessTotals").distances
       .where(col("src") =!= col("n"))
       .groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("total_dist"))
-
-  /** The shared (src, n, dist) multi-source shortest-distance relation
-    * behind [[eccentricity]] and [[closenessTotals]]: weight-guarded
-    * undirect, source seeding (explicit / landmark / all nodes), and
-    * the measured-size strategy pick between the one-task and
-    * distributed fixpoints. */
-  private def sourceDistanceTable(edges: DataFrame, srcCol: String,
-                                  dstCol: String, weightCol: String,
-                                  sources: Option[Seq[Long]],
-                                  landmarkK: Option[Int], maxIter: Int,
-                                  localMaxEdges: Long,
-                                  what: String): DataFrame = {
-    require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
-    require(sources.isEmpty || landmarkK.isEmpty,
-      "pass explicit sources OR landmarkK, not both")
-    require(landmarkK.forall(_ >= 1),
-      s"landmarkK must be positive, got ${landmarkK.get}")
-    val (undRaw, m) = undirect(edges, srcCol, dstCol, weightCol,
-      minWeight = Some((0L, s"$what requires non-negative weights")))
-    val und = undRaw.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"), col("wc"))
-    val nodes = graphNodes(und)
-    val srcDf = sourceSeed(nodes, sources, landmarkK, edges.sparkSession)
-    if (m <= localMaxEdges) {
-      val srcList = srcDf.collect().map(_.getLong(0)).toSeq.sorted // bounded: <= K sources
-      multiSourceDistancesOneTask(und, srcList, maxIter, what)
-    } else {
-      val incSym = und.select(col("a").as("n"), col("b").as("m"), col("wc"))
-        .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))
-        .localCheckpoint(true)
-      val d = multiSourceDistances(incSym, srcDf, maxIter, what)
-      Checkpoints.drop(incSym)
-      d
-    }
-  }
 
   /** Betweenness centrality (unweighted, undirected) by distributed
     * Brandes (Brandes 2001): a level-synchronous multi-source BFS
@@ -835,37 +773,11 @@ object Graph {
                   landmarkK: Option[Int] = None,
                   maxIter: Int = 60,
                   localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
-    require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
-    require(sources.isEmpty || landmarkK.isEmpty,
-      "pass explicit sources OR landmarkK, not both")
-    require(landmarkK.forall(_ >= 1),
-      s"landmarkK must be positive, got ${landmarkK.get}")
-    val (undRaw, m) = undirect(edges, srcCol, dstCol, weightCol)
-    val und = undRaw
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .localCheckpoint(true)
-    // the long-normalized re-checkpoint supersedes undirect's internal
-    // checkpoint — release the inner blocks deterministically
-    Checkpoints.drop(undRaw)
-    val nodes = graphNodes(und)
-    val srcDf = sourceSeed(nodes, sources, landmarkK, edges.sparkSession)
-    // Brandes–Pich estimator scale: landmark δ sums extrapolate by n/K;
-    // exact modes multiply by 1.0 — an IEEE identity, so the fold stays
-    // bit-identical to the historical unscaled form
-    val scale: Double = landmarkK match {
-      case Some(_) =>
-        val nV = nodes.count(); val kA = srcDf.count()
-        if (kA == 0L) 1.0 else nV.toDouble / kA
-      case None => 1.0
-    }
-    if (m <= localMaxEdges) {
-      val srcList = srcDf.collect().map(_.getLong(0)).toSeq.sorted // bounded: <= K sources
-      return betweennessOneTask(und, srcList, maxIter, scale)
-    }
-    val incSym = und.select(col("a").as("n"), col("b").as("m"))
-      .union(und.select(col("b").as("n"), col("a").as("m")))
-      .localCheckpoint(true)
-    val (visited, d) = brandesForwardState(incSym, srcDf, maxIter)
+    val s = new Sweep(edges, srcCol, dstCol, weightCol, sources, landmarkK,
+      maxIter, localMaxEdges, "betweenness", None)
+    if (s.local) return brandesOneTask(s, maxDepth = Some(maxIter))
+    val incSym = incidence(s.und)
+    val (visited, d) = brandesForwardState(incSym, s.srcDf, maxIter)
     // ---- backward sweep by descending level ----
     // deltaPico(src, n): accumulated dependency, 1e-12-grain longs
     val maxDist = d - 1 // deepest level that holds nodes
@@ -900,39 +812,24 @@ object Graph {
     }
     // the final δ checkpoint truncates lineage, so the BFS state and the
     // symmetric incidence list are dead weight from here — release them
-    // (und stays: the node-domain fold below derives from it)
+    // (the pin stays: the node-domain fold below derives from it)
     Checkpoints.drop(visited)
     Checkpoints.drop(incSym)
-    // fold: betweenness(v) = scale · Σ_{src ≠ v} δ_src(v) / 2
-    val bt = delta.where(col("src") =!= col("n"))
-      .groupBy("n").agg(sum(col("dp")).as("dps"))
-    nodes.join(bt, Seq("n"), "left")
-      .select(col("n").as("node"),
-        round(coalesce(col("dps"), lit(0L)).cast("double") * lit(scale) /
-          lit(2e12), 6).as("betweenness"))
+    betweennessFold(delta, s)
   }
 
-  /** The shared seed relation of the centrality sweeps, built IN-PLAN
-    * from the node set (no V-sized driver collect on the distributed
-    * path): explicit `sources` as a literal relation; `landmarkK` as
-    * the first K nodes in deterministic md5 order (the registry's
-    * sampling discipline — reproducible across runs and engines);
-    * neither → every node (the exact all-sources form). */
-  private def sourceSeed(nodes: DataFrame, sources: Option[Seq[Long]],
-                         landmarkK: Option[Int],
-                         ss: SparkSession): DataFrame =
-    sources match {
-      case Some(list) =>
-        require(list.nonEmpty, "centrality needs at least one source")
-        import ss.implicits._
-        list.toDF("s")
-      case None => landmarkK match {
-        case Some(k) =>
-          nodes.orderBy(md5(col("n").cast("string")), col("n"))
-            .limit(k).select(col("n").as("s"))
-        case None => nodes.select(col("n").as("s"))
-      }
-    }
+  /** betweenness(v) = scale · Σ_{src ≠ v} δ_src(v) / 2 (each unordered
+    * pair counted from both endpoints), displayed at 6 dp, for every
+    * node on an edge: the Brandes–Pich n/K extrapolation in landmark
+    * mode, 1.0 (an IEEE identity) in exact modes. */
+  private def betweennessFold(delta: DataFrame, s: Sweep): DataFrame = {
+    val bt = delta.where(col("src") =!= col("n"))
+      .groupBy("n").agg(sum(col("dp")).as("dps"))
+    s.nodes.join(bt, Seq("n"), "left")
+      .select(col("n").as("node"),
+        round(coalesce(col("dps"), lit(0L)).cast("double") * lit(s.scale) /
+          lit(2e12), 6).as("betweenness"))
+  }
 
   /** The forward Brandes wave as level-synchronous multi-source BFS:
     * seeds (src=s, n=s, dist=0, σ=1) from the seed relation, one
@@ -972,94 +869,75 @@ object Graph {
       frontierRows = nextRows
       d += 1
     }
-    if (frontierRows > 0)
-      throw new IllegalStateException(
-        s"betweenness BFS did not exhaust within $maxIter rounds — " +
-          "deltas would be truncated; raise maxIter for this graph")
+    if (frontierRows > 0) throw bfsTruncated(maxIter)
     Checkpoints.drop(frontier)
     (visited, d)
   }
 
-  /** The single-task path of [[betweenness]]: exact Brandes per source
-    * in one executor task, replicating the distributed path's
-    * pico-quantized δ arithmetic operation-for-operation (java
-    * BigDecimal HALF_UP ≡ Spark `round`), so the output is
-    * bit-identical (GraphSpec parity law). `scale` is the landmark
-    * estimator factor, applied in the same (dps · scale) / 2e12 order
-    * as the distributed fold (1.0 in exact modes — IEEE identity). */
-  private def betweennessOneTask(und: DataFrame, srcList: Seq[Long],
-                                 maxIter: Int,
-                                 scale: Double = 1.0): DataFrame = {
-    val ss = und.sparkSession
-    import ss.implicits._
-    val rows = und.select(col("a"), col("b")).as[(Long, Long)]
-    val srcs = srcList.toArray
-    rows.coalesce(1).mapPartitions { it =>
-      import java.math.{BigDecimal => JBD, RoundingMode}
-      def pico(x: Double): Long =
-        JBD.valueOf(x).setScale(0, RoundingMode.HALF_UP).doubleValue.toLong
-      val es = it.toArray
-      if (es.isEmpty) Iterator.empty
-      else {
-        val adj = scala.collection.mutable
-          .HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-        es.foreach { case (a, b) =>
-          adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-          adj.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-        }
-        val nodes = adj.keys.toArray
-        val dps = scala.collection.mutable.HashMap.empty[Long, Long]
-        srcs.foreach { s0 =>
-          if (adj.contains(s0)) {
-            val dist = scala.collection.mutable.HashMap(s0 -> 0)
-            val sigma = scala.collection.mutable.HashMap(s0 -> 1L)
-            var frontier = List(s0)
-            var dd = 0
-            val levels = scala.collection.mutable.ArrayBuffer(List(s0))
-            while (frontier.nonEmpty && dd < maxIter) {
-              val next = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-              frontier.foreach { v =>
-                adj(v).foreach { w =>
-                  if (!dist.contains(w))
-                    next(w) = next.getOrElse(w, 0L) + sigma(v)
-                }
+  private def bfsTruncated(maxIter: Int) = new IllegalStateException(
+    s"betweenness BFS did not exhaust within $maxIter rounds — " +
+      "deltas would be truncated; raise maxIter for this graph")
+
+  /** The single-task path of both betweenness operators: exact Brandes
+    * per source in one executor task. The forward pass is Dijkstra
+    * (binary heap, lazy deletion) with cent-long distances and long σ —
+    * over the hop sweep's unit weights exactly the BFS wave — and the
+    * dependency sweep runs by STRICTLY descending distance (well-founded
+    * because weights are strictly positive), replicating the
+    * distributed loops' pico-quantized δ arithmetic
+    * operation-for-operation; the display is [[betweennessFold]]'s
+    * (Σδ · scale) / 2e12 at 6 dp. `maxDepth` is the hop sweep's BFS
+    * round bound: a source whose wave would run past it throws, as the
+    * distributed wave does. Output bit-identical to the distributed
+    * loops (GraphSpec parity laws). */
+  private def brandesOneTask(s: Sweep, maxDepth: Option[Int]): DataFrame = {
+    val srcs = s.srcList.toArray
+    val scale = s.scale
+    oneTask(s.und, "node", "betweenness") { (it: Iterator[(Long, Long, Long)]) =>
+      val adj = adjacency(it)
+      val dps = mutable.HashMap.empty[Long, Long]
+      srcs.filter(adj.contains).foreach { s0 =>
+        val dist = mutable.HashMap(s0 -> 0L)
+        val sigma = mutable.HashMap(s0 -> 1L)
+        val settled = mutable.ArrayBuffer.empty[Long]
+        val done = mutable.HashSet.empty[Long]
+        val pq = mutable.PriorityQueue((0L, s0))(
+          Ordering.by[(Long, Long), (Long, Long)](p => (-p._1, -p._2)))
+        while (pq.nonEmpty) {
+          val (d0, u) = pq.dequeue()
+          if (!done(u) && dist(u) == d0) {
+            done += u; settled += u
+            adj(u).foreach { case (v, wc) =>
+              val cand = d0 + wc
+              val dv = dist.get(v)
+              if (dv.forall(cand < _)) {
+                dist(v) = cand; sigma(v) = sigma(u); pq.enqueue((cand, v))
+              } else if (dv.contains(cand)) {
+                sigma(v) += sigma(u)
               }
-              frontier = next.keys.toList
-              frontier.foreach { w => dist(w) = dd + 1; sigma(w) = next(w) }
-              if (frontier.nonEmpty) levels += frontier
-              dd += 1
-            }
-            if (frontier.nonEmpty)
-              throw new IllegalStateException(
-                s"betweenness BFS did not exhaust within $maxIter rounds — " +
-                  "deltas would be truncated; raise maxIter for this graph")
-            val dp = scala.collection.mutable.HashMap.empty[Long, Long]
-            var lvl = levels.length - 1
-            while (lvl >= 1) {
-              levels(lvl).foreach { w =>
-                val dw = dp.getOrElse(w, 0L)
-                adj(w).foreach { v =>
-                  if (dist.get(v).contains(lvl - 1)) {
-                    val c = pico(sigma(v).toDouble / sigma(w).toDouble *
-                      (1e12 + dw.toDouble))
-                    dp(v) = dp.getOrElse(v, 0L) + c
-                  }
-                }
-              }
-              lvl -= 1
-            }
-            dp.foreach { case (v, x) =>
-              if (v != s0) dps(v) = dps.getOrElse(v, 0L) + x
             }
           }
         }
-        nodes.iterator.map { v =>
-          val x = dps.getOrElse(v, 0L)
-          (v, JBD.valueOf(x.toDouble * scale / 2e12)
-            .setScale(6, RoundingMode.HALF_UP).doubleValue)
+        maxDepth.foreach(k => if (dist(settled.last) >= k) throw bfsTruncated(k))
+        // dependency sweep: strictly descending distance (ties carry
+        // no DAG edges under positive weights, so tie order is moot)
+        val dp = mutable.HashMap.empty[Long, Long]
+        settled.reverseIterator.foreach { w =>
+          val dw = dp.getOrElse(w, 0L)
+          adj(w).foreach { case (v, wc) =>
+            if (dist.get(v).contains(dist(w) - wc))
+              dp(v) = dp.getOrElse(v, 0L) + sparkRound(
+                sigma(v).toDouble / sigma(w).toDouble * (1e12 + dw.toDouble), 0).toLong
+          }
+        }
+        dp.foreach { case (v, x) =>
+          if (v != s0) dps(v) = dps.getOrElse(v, 0L) + x
         }
       }
-    }.toDF("node", "betweenness")
+      adj.keysIterator.map { v =>
+        (v, sparkRound(dps.getOrElse(v, 0L).toDouble * scale / 2e12, 6))
+      }
+    }
   }
 
   /** WEIGHTED betweenness centrality (undirected, strictly positive
@@ -1101,35 +979,14 @@ object Graph {
                           landmarkK: Option[Int] = None,
                           maxIter: Int = 60,
                           localMaxEdges: Long = LocalFixpointMaxEdges): DataFrame = {
-    require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
-    require(sources.isEmpty || landmarkK.isEmpty,
-      "pass explicit sources OR landmarkK, not both")
-    require(landmarkK.forall(_ >= 1),
-      s"landmarkK must be positive, got ${landmarkK.get}")
-    val (undRaw, m) = undirect(edges, srcCol, dstCol, weightCol,
-      minWeight = Some((1L, "betweennessWeighted requires strictly " +
+    val s = new Sweep(edges, srcCol, dstCol, weightCol, sources, landmarkK,
+      maxIter, localMaxEdges, "betweennessWeighted",
+      Some((1L, "betweennessWeighted requires strictly " +
         "positive weights (zero collapses SP-DAG ranks)")))
-    val und = undRaw.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"), col("wc")).localCheckpoint(true)
-    Checkpoints.drop(undRaw)
-    val nodes = graphNodes(und)
-    val srcDf = sourceSeed(nodes, sources, landmarkK, edges.sparkSession)
-    val scale: Double = landmarkK match {
-      case Some(_) =>
-        val nV = nodes.count(); val kA = srcDf.count()
-        if (kA == 0L) 1.0 else nV.toDouble / kA
-      case None => 1.0
-    }
-    if (m <= localMaxEdges) {
-      val srcList = srcDf.collect().map(_.getLong(0)).toSeq.sorted // bounded: <= K sources
-      return betweennessWeightedOneTask(und, srcList, maxIter, scale)
-    }
-    val incSym = und.select(col("a").as("n"), col("b").as("m"), col("wc"))
-      .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))
-      .localCheckpoint(true)
+    if (s.local) return brandesOneTask(s, maxDepth = None)
+    val incSym = incidence(s.und)
     // ---- fixpoint 1: exact weighted distances (src, n, dist) ----
-    val dist = multiSourceDistances(incSym, srcDf, maxIter,
-      "betweennessWeighted")
+    val dist = multiSourceDistances(incSym, s.srcDf, maxIter, s.what)
     // ---- the per-source shortest-path DAG: dist(v) + w = dist(n) ----
     val dag = incSym.select(col("n").as("v"), col("m").as("w_node"),
         col("wc"))
@@ -1189,96 +1046,7 @@ object Graph {
     Checkpoints.drop(sigma)
     Checkpoints.drop(dist)
     Checkpoints.drop(incSym)
-    val bt = delta.where(col("src") =!= col("n"))
-      .groupBy("n").agg(sum(col("dp")).as("dps"))
-    nodes.join(bt, Seq("n"), "left")
-      .select(col("n").as("node"),
-        round(coalesce(col("dps"), lit(0L)).cast("double") * lit(scale) /
-          lit(2e12), 6).as("betweenness"))
-  }
-
-  /** The single-task path of [[betweennessWeighted]]: exact per-source
-    * Dijkstra (binary-heap, lazy deletion) with cent-long distances and
-    * long σ accumulation, then the dependency sweep by STRICTLY
-    * descending distance (well-founded because weights are strictly
-    * positive), replicating the distributed fixpoint's pico-quantized
-    * δ arithmetic operation-for-operation. */
-  private def betweennessWeightedOneTask(und: DataFrame, srcList: Seq[Long],
-                                         maxIter: Int,
-                                         scale: Double): DataFrame = {
-    val ss = und.sparkSession
-    import ss.implicits._
-    val rows = und.select(col("a"), col("b"), col("wc")).as[(Long, Long, Long)]
-    val srcs = srcList.toArray
-    rows.coalesce(1).mapPartitions { it =>
-      import java.math.{BigDecimal => JBD, RoundingMode}
-      def pico(x: Double): Long =
-        JBD.valueOf(x).setScale(0, RoundingMode.HALF_UP).doubleValue.toLong
-      val es = it.toArray
-      if (es.isEmpty) Iterator.empty
-      else {
-        val adj = scala.collection.mutable.HashMap
-          .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-        es.foreach { case (a, b, wc) =>
-          adj.getOrElseUpdate(a,
-            scala.collection.mutable.ArrayBuffer.empty) += ((b, wc))
-          adj.getOrElseUpdate(b,
-            scala.collection.mutable.ArrayBuffer.empty) += ((a, wc))
-        }
-        val nodes = adj.keys.toArray
-        val dps = scala.collection.mutable.HashMap.empty[Long, Long]
-        srcs.foreach { s0 =>
-          if (adj.contains(s0)) {
-            val dist = scala.collection.mutable.HashMap.empty[Long, Long]
-            val sigma = scala.collection.mutable.HashMap.empty[Long, Long]
-            val settled = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val done = scala.collection.mutable.HashSet.empty[Long]
-            val pq = scala.collection.mutable.PriorityQueue
-              .empty[(Long, Long)](Ordering.by[(Long, Long), (Long, Long)](
-                p => (-p._1, -p._2)))
-            dist(s0) = 0L; sigma(s0) = 1L; pq.enqueue((0L, s0))
-            while (pq.nonEmpty) {
-              val (d0, u) = pq.dequeue()
-              if (!done(u) && dist(u) == d0) {
-                done += u; settled += u
-                adj(u).foreach { case (v, wc) =>
-                  val cand = d0 + wc
-                  val dv = dist.get(v)
-                  if (dv.forall(cand < _)) {
-                    dist(v) = cand; sigma(v) = sigma(u); pq.enqueue((cand, v))
-                  } else if (dv.contains(cand)) {
-                    sigma(v) += sigma(u)
-                  }
-                }
-              }
-            }
-            // dependency sweep: strictly descending distance (ties carry
-            // no DAG edges under positive weights, so tie order is moot)
-            val dp = scala.collection.mutable.HashMap.empty[Long, Long]
-            settled.reverseIterator.foreach { w =>
-              if (w != s0 || dist(w) > 0L) {
-                val dw = dp.getOrElse(w, 0L)
-                adj(w).foreach { case (v, wc) =>
-                  if (dist.get(v).contains(dist(w) - wc)) {
-                    val c = pico(sigma(v).toDouble / sigma(w).toDouble *
-                      (1e12 + dw.toDouble))
-                    dp(v) = dp.getOrElse(v, 0L) + c
-                  }
-                }
-              }
-            }
-            dp.foreach { case (v, x) =>
-              if (v != s0) dps(v) = dps.getOrElse(v, 0L) + x
-            }
-          }
-        }
-        nodes.iterator.map { v =>
-          val x = dps.getOrElse(v, 0L)
-          (v, JBD.valueOf(x.toDouble * scale / 2e12)
-            .setScale(6, RoundingMode.HALF_UP).doubleValue)
-        }
-      }
-    }.toDF("node", "betweenness")
+    betweennessFold(delta, s)
   }
 
   /** Weighted modularity of a GIVEN node partition over the undirected
@@ -1356,9 +1124,12 @@ object Graph {
     require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
     val (und, m) = undirect(edges, srcCol, dstCol, weightCol)
     var e = und.select("a", "b")
+    def failure = new IllegalStateException(
+      s"ktruss did not converge within $maxIter rounds — the result " +
+        "would be a superset of the truss; raise maxIter for this graph")
     // measured-size strategy pick (see LocalFixpointMaxEdges); integer
     // fixpoint, order-independent, so path parity is by construction
-    if (m <= localMaxEdges) return ktrussOneTask(e, k, maxIter)
+    if (m <= localMaxEdges) return ktrussOneTask(e, k, maxIter, failure)
     var result: DataFrame = null
     // blocks from the PREVIOUS round, released once this round's
     // checkpoint has materialized (the final round's survive for the
@@ -1384,10 +1155,7 @@ object Graph {
       e = result.select("a", "b")
       iter += 1
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"ktruss did not converge within $maxIter rounds — the result " +
-          "would be a superset of the truss; raise maxIter for this graph")
+    if (!converged) throw failure
     result
   }
 
@@ -1438,39 +1206,22 @@ object Graph {
     * at once) in one executor task — identical round semantics, so the
     * maxIter-truncation throw carries over, and the fixpoint is the
     * same unique subgraph as the distributed loop (GraphSpec law). */
-  private def ktrussOneTask(simple: DataFrame, k: Int,
-                            maxIter: Int): DataFrame = {
-    val ss = simple.sparkSession
-    import ss.implicits._
-    val rows = simple.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)]
-    rows.coalesce(1).mapPartitions { it =>
-      var es = it.toArray
-      var converged = false
-      var iter = 0
-      var support = Map.empty[(Long, Long), Long]
-      while (!converged && iter < maxIter) {
-        val adj = scala.collection.mutable
-          .HashMap.empty[Long, scala.collection.mutable.Set[Long]]
-        es.foreach { case (a, b) =>
-          adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
-          adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
+  private def ktrussOneTask(simple: DataFrame, k: Int, maxIter: Int,
+                            failure: => Throwable): DataFrame =
+    oneTask(simple.select(col("a"), col("b"), lit(1L)), "a", "b", "support") {
+      (it: Iterator[(Long, Long, Long)]) =>
+        var es = it.toArray
+        var support = Map.empty[(Long, Long), Long]
+        converge(maxIter, failure) {
+          val adj = adjacency(es.iterator).map { case (v, ns) => v -> ns.map(_._1).toSet }
+          support = es.map { case (a, b, _) => (a, b) -> adj(a).count(adj(b)).toLong }.toMap
+          val next = es.filter { case (a, b, _) => support((a, b)) >= k - 2 }
+          val changed = next.length != es.length
+          es = next
+          changed
         }
-        support = es.map { case (a, b) =>
-          (a, b) -> adj(a).count(adj(b)).toLong
-        }.toMap
-        val next = es.filter(e => support(e) >= k - 2)
-        converged = next.length == es.length
-        es = next
-        iter += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"ktruss did not converge within $maxIter rounds — the result " +
-            "would be a superset of the truss; raise maxIter for this graph")
-      es.iterator.map { case (a, b) => (a, b, support((a, b))) }
-    }.toDF("a", "b", "support")
-  }
+        es.iterator.map { case (a, b, _) => (a, b, support((a, b))) }
+    }
 
   /** Community detection by synchronous label propagation, `iters`
     * fixed rounds (fixed — not convergence-gated — so the output is a
@@ -1491,10 +1242,7 @@ object Graph {
     // measured-size strategy pick (see LocalFixpointMaxEdges); integer
     // arithmetic end to end, so path parity is trivial (GraphSpec law)
     if (m <= localMaxEdges) return labelPropagationOneTask(und, iters)
-    // symmetric incidence: each undirected edge heard from both ends
-    val inc = und.select(col("a").as("n"), col("b").as("m"), col("wc"))
-      .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))
-      .localCheckpoint(true)
+    val inc = incidence(und)
     var labels = inc.select(col("n")).distinct()
       .withColumn("label", col("n"))
     for (i <- 1 to iters) {
@@ -1516,41 +1264,19 @@ object Graph {
     * (weight, −label) lexicographic max, so the output is identical to
     * the distributed loop by construction — pinned by the GraphSpec
     * parity law (distributed forced via `localMaxEdges = 0`). */
-  private def labelPropagationOneTask(und: DataFrame, iters: Int): DataFrame = {
-    val ss = und.sparkSession
-    import ss.implicits._
-    val rows = und.select(col("a").cast("long"), col("b").cast("long"),
-      col("wc")).as[(Long, Long, Long)]
-    rows.coalesce(1).mapPartitions { it =>
-      val es = it.toArray
-      if (es.isEmpty) Iterator.empty
-      else {
-        val nodeSet = scala.collection.mutable.LinkedHashSet.empty[Long]
-        es.foreach { case (a, b, _) => nodeSet += a; nodeSet += b }
-        val nodes = nodeSet.toArray
-        val labels = scala.collection.mutable.HashMap.empty[Long, Long]
-        nodes.foreach(v => labels(v) = v)
-        var i = 0
-        while (i < iters) {
-          // per-node incident weight by neighbor label, both edge ends
-          val acc = scala.collection.mutable
-            .HashMap.empty[Long, scala.collection.mutable.HashMap[Long, Long]]
-          def add(n0: Long, lbl: Long, wc: Long): Unit = {
-            val m = acc.getOrElseUpdate(n0,
-              scala.collection.mutable.HashMap.empty[Long, Long])
-            m(lbl) = m.getOrElse(lbl, 0L) + wc
-          }
-          es.foreach { case (a, b, wc) =>
-            add(a, labels(b), wc); add(b, labels(a), wc)
-          }
-          nodes.foreach { v =>
-            val best = acc(v).maxBy { case (lbl, w) => (w, -lbl) }
-            labels(v) = best._1
-          }
-          i += 1
+  private def labelPropagationOneTask(und: DataFrame, iters: Int): DataFrame =
+    oneTask(und, "node", "community") { (it: Iterator[(Long, Long, Long)]) =>
+      val adj = adjacency(it)
+      val labels = mutable.HashMap.empty[Long, Long]
+      adj.keys.foreach(v => labels(v) = v)
+      for (_ <- 1 to iters) {
+        // per-node incident weight by neighbor label, then the argmax
+        val next = adj.map { case (v, ns) =>
+          v -> ns.groupMapReduce(p => labels(p._1))(_._2)(_ + _)
+            .maxBy { case (lbl, w) => (w, -lbl) }._1
         }
-        nodes.iterator.map(v => (v, labels(v)))
+        labels ++= next
       }
-    }.toDF("node", "community")
-  }
+      labels.iterator
+    }
 }

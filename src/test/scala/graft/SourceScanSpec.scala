@@ -90,7 +90,8 @@ class SourceScanSpec extends AnyFunSuite {
   test("raw read.parquet census under operators/ and sources/ is pinned") {
     // an engine-written artifact reads through IO.readArtifact's schema
     // cache: a raw read.parquet runs a footer-inference job on every
-    // call, every micro-batch for a gate. What stays raw says why here.
+    // call, every micro-batch for a gate. What stays raw says why here;
+    // functions/ (the BPE merge table, the vocabulary) keeps none.
     val expected = Map(
       "sources/IO.scala" -> 3,    // readParquet (the caller's own files) + readArtifact's miss and inference
       "sources/Tables.scala" -> 1 // the testdata input tables' own schema cache
@@ -98,7 +99,7 @@ class SourceScanSpec extends AnyFunSuite {
     val root = Paths.get("src/main/scala/graft")
     val raw = """\bread\s*\.\s*parquet\s*\(""".r
     val census = (for {
-      f <- scalaFiles(root.resolve("operators")) ++ scalaFiles(root.resolve("sources"))
+      f <- Seq("operators", "sources", "functions").flatMap(d => scalaFiles(root.resolve(d)))
       line <- new String(Files.readAllBytes(f), "UTF-8").linesIterator
       if !line.trim.startsWith("*") && !line.trim.startsWith("//")
       _ <- raw.findAllMatchIn(line)
@@ -141,5 +142,22 @@ class SourceScanSpec extends AnyFunSuite {
     assert(census == expected,
       s"Observation census drifted: got $census, pinned $expected; a convergence loop " +
         "runs through Checkpoints.fixpoint, or pin the site here with its reason")
+  }
+
+  test("one single-task runner: coalesce(1) then mapPartitions only in Graph.oneTask") {
+    // the one-executor-task path below Graph.LocalFixpointMaxEdges is
+    // written once; each fixpoint passes the runner only its algorithm
+    val root = Paths.get("src/main/scala/graft")
+    val twin = """coalesce\(1\)\s*\.\s*mapPartitions""".r
+    val hits = for {
+      f <- scalaFiles(root.resolve("operators"))
+      code = new String(Files.readAllBytes(f), "UTF-8").linesIterator
+        .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("//"))
+        .mkString("\n")
+      m <- twin.findAllMatchIn(code)
+    } yield s"${root.relativize(f)}:${code.take(m.start).count(_ == '\n') + 1}"
+    assert(hits.size == 1 && hits.head.startsWith("operators/Graph.scala:"),
+      hits.mkString("coalesce(1).mapPartitions outside the one runner " +
+        "(pass the algorithm to Graph.oneTask):\n", "\n", ""))
   }
 }
