@@ -950,26 +950,25 @@ object Analytics {
     hwFitState(df, keyCols, orderCol, valueCol, period, alpha, beta, gamma,
       fillValue).write.mode("overwrite").parquet(dir)
 
+  /** The persisted state, read as [[graft.sources.IO.replacedPath]]
+    * says: a crash mid-replace leaves it at `<dir>_bak`. */
   def hwReadState(spark: org.apache.spark.sql.SparkSession,
                   dir: String): DataFrame =
-    graft.sources.IO.readArtifact(spark, dir)
+    graft.sources.IO.readArtifact(spark,
+      graft.sources.IO.replacedPath(spark, dir).getOrElse(dir))
 
-  /** Fold a new-observation batch into a persisted state dir in place
-    * (read → extend → overwrite; the state is key-sized, pinned before
-    * the rewrite). Single writer by contract, like every artifact. */
+  /** Fold a new-observation batch into a persisted state dir, replacing
+    * it ([[graft.sources.IO.replace]]). Single writer by contract, like
+    * every artifact. */
   def hwExtendStateDir(newObs: DataFrame, keyCols: Seq[String],
                        orderCol: String, valueCol: String, period: Int,
                        dir: String,
                        alpha: Double = 0.3, beta: Double = 0.1,
                        gamma: Double = 0.2,
-                       fillValue: Option[Double] = None): Unit = {
-    val spark = newObs.sparkSession
-    val updated = hwExtendState(hwReadState(spark, dir), newObs, keyCols,
-      orderCol, valueCol, period, alpha, beta, gamma, fillValue)
-      .localCheckpoint(eager = true) // consume the read before overwriting it
-    try updated.write.mode("overwrite").parquet(dir)
-    finally Checkpoints.drop(updated)
-  }
+                       fillValue: Option[Double] = None): Unit =
+    graft.sources.IO.replace(hwExtendState(
+      hwReadState(newObs.sparkSession, dir), newObs, keyCols, orderCol,
+      valueCol, period, alpha, beta, gamma, fillValue), dir, "hwExtendStateDir")
 
   /** TAKEDOWN verb for the persisted Holt–Winters state artifact — drop
     * retired series (keys) from the store, completing the artifact's
@@ -978,18 +977,15 @@ object Analytics {
     * those keys, row for row (the ScalePathSpec law), and deleting an
     * absent key is a no-op with byte-identical surviving rows (replay
     * law) — the same semi-join idempotence [[graft.sources.IO
-    * .takedownSink]] relies on. Cost: one key-sized anti-join + a
-    * key-sized rewrite (the state is key-sized by construction — never
-    * history-sized). Single writer by contract. */
+    * .takedownSink]] relies on. Cost: one key-sized anti-join, replacing
+    * the state dir ([[graft.sources.IO.replace]]; the state is key-sized
+    * by construction — never history-sized). Single writer by contract. */
   def hwDeleteStateKeys(keys: DataFrame, keyCols: Seq[String],
                         dir: String): Unit = {
     require(keyCols.nonEmpty, "hwDeleteStateKeys needs key columns")
-    val spark = keys.sparkSession
-    val remaining = hwReadState(spark, dir)
-      .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-      .localCheckpoint(eager = true) // consume the read before overwriting it
-    try remaining.write.mode("overwrite").parquet(dir)
-    finally Checkpoints.drop(remaining)
+    graft.sources.IO.replace(hwReadState(keys.sparkSession, dir)
+      .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti"),
+      dir, "hwDeleteStateKeys")
   }
 
   /** Grouped LIFT / CUMULATIVE-GAINS curve from the class histogram —

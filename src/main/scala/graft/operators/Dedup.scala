@@ -1523,22 +1523,35 @@ object Dedup {
                       idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     val lab = labels.select(col("id").cast("long").as("id"),
       col("label").cast("long").as("label"))
+    mergeDelta(lab, batch, idA, idB, _.localCheckpoint(eager = true))._2(lab)
+  }
+
+  /** A merge's change to the labeling `lab`, in the form
+    * [[commitComponents]] takes: the batch CONTRACTED through `lab`
+    * (an unlabeled endpoint is a new node and stands for itself) and
+    * CLUSTERED into the remap (old representative | new node) → label.
+    * The touched labels are the old and new label of every changed
+    * component and the new nodes' labels; the rewrite relabels a slice
+    * of `lab` through the remap and adds the new nodes. `pin` pins the
+    * contraction and the remap, both batch-sized. */
+  private def mergeDelta(lab: DataFrame, batch: DataFrame, idA: String,
+                         idB: String, pin: DataFrame => DataFrame)
+      : (DataFrame, DataFrame => DataFrame) = {
     val e = batch.select(col(idA).cast("long").as("ea"),
       col(idB).cast("long").as("eb"))
-    val contracted = e
+    val contracted = pin(e
       .join(lab.select(col("id").as("ea"), col("label").as("la")),
         Seq("ea"), "left")
       .join(lab.select(col("id").as("eb"), col("label").as("lb")),
         Seq("eb"), "left")
       .select(coalesce(col("la"), col("ea")).as("id_a"),
-        coalesce(col("lb"), col("eb")).as("id_b"))
-      .localCheckpoint(eager = true) // batch-sized; feeds CC + the appends
-    val remap = connectedComponents(contracted)
-      .localCheckpoint(eager = true) // touched-representative-sized
-    val relabeled = lab
-      .join(remap.select(col("id").as("label"), col("label").as("__nl")),
-        Seq("label"), "left")
-      .select(col("id"), coalesce(col("__nl"), col("label")).as("label"))
+        coalesce(col("lb"), col("eb")).as("id_b")))
+    val remap = pin(connectedComponents(contracted))
+    val changed = remap.where(col("id") =!= col("label"))
+    val touched = changed.select(col("id").as("label"))
+      .union(changed.select("label"))
+      .union(remap.join(lab.select(col("id")), Seq("id"), "left_anti")
+        .select("label"))
     // contracted endpoints are either existing LABELS (which are
     // themselves live node ids — the labeling invariant) or new node
     // ids: one anti-join against the id column isolates the new nodes
@@ -1546,9 +1559,12 @@ object Dedup {
       .select(col("id_a").as("id")).union(contracted.select(col("id_b").as("id")))
       .distinct()
       .join(lab.select(col("id")), Seq("id"), "left_anti")
-    val newLabeled = newNodes.join(remap, Seq("id"), "left")
+      .join(remap, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    relabeled.unionByName(newLabeled)
+    val relabel = remap.select(col("id").as("label"), col("label").as("__nl"))
+    (touched, slice => slice.join(relabel, Seq("label"), "left")
+      .select(col("id"), coalesce(col("__nl"), col("label")).as("label"))
+      .unionByName(newNodes))
   }
 
   /** The bucketed components store's [[BucketedIndex]] layout: (id,
@@ -1559,15 +1575,12 @@ object Dedup {
     * [[componentsMerge]]'s relabel pass batch-proportional at 100 TB:
     * the (id, label) labeling lives in the label-bucketed
     * [[BucketedIndex]] layout, and a merge REWRITES ONLY the buckets
-    * whose labels changed ([[BucketedIndex.rewrite]]) instead of
-    * snapshotting the whole labeling. Rows move buckets when their
-    * component merges (the new minimum can hash elsewhere), so the
-    * touched set is old ∪ new buckets of every changed component, plus
-    * the new nodes' buckets. Read side: the batch contraction joins the
-    * full store by id (a hash join — reads prune nothing, which is fine;
-    * the WIN is the write side, where history volume no longer gets
-    * rewritten per batch). An empty labeling seeds "no store yet", which
-    * [[readComponentsStore]] reads as empty. */
+    * whose labels changed ([[commitComponents]]) instead of
+    * snapshotting the whole labeling. Read side: the batch contraction
+    * joins the full store by id (a hash join — reads prune nothing,
+    * which is fine; the WIN is the write side, where history volume no
+    * longer gets rewritten per batch). An empty labeling seeds "no
+    * store yet", which [[readComponentsStore]] reads as empty. */
   def writeComponentsStore(labels: DataFrame, dir: String,
                            buckets: Int = 64): Unit = {
     require(buckets >= 1, s"buckets must be positive, got $buckets")
@@ -1578,15 +1591,16 @@ object Dedup {
 
   /** Load the full labeling from a store of either layout (drops the
     * bucket column — it is derivable). The schema is DECLARED, not
-    * inferred. A missing store reads from the `<dir>_bak` a crash
-    * between a swap's two renames leaves; with neither, it is the cold
-    * start and reads empty. */
+    * inferred. The store reads from where
+    * [[graft.sources.IO.replacedPath]] says; with neither the live dir
+    * nor the `_bak` a torn swap leaves, it is the cold start and reads
+    * empty. */
   def readComponentsStore(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("label", LongType)))
-    Seq(dir, dir + "_bak").find(BucketedIndex.exists(spark, _)) match {
+    graft.sources.IO.replacedPath(spark, dir) match {
       case Some(live) =>
         spark.read.schema(schema).parquet(live).select(col("id"), col("label"))
       case None => spark.createDataFrame(
@@ -1594,81 +1608,67 @@ object Dedup {
     }
   }
 
-  /** [[connectedComponents]] pinned, with the working checkpoints it
-    * leaves under its lazy result released — for callers that drop the
-    * pin themselves. */
-  private def pinnedComponents(pairs: DataFrame): DataFrame = {
-    val cc = connectedComponents(pairs)
-    val pinned = cc.localCheckpoint(eager = true)
-    Checkpoints.drop(cc)
-    pinned
-  }
+  /** The store's labeling, one row per id. Dynamic partition overwrite
+    * is only per-partition atomic, so a crash between a bucketed
+    * commit's new-label and old-label bucket writes can leave one id in
+    * two buckets with different labels. Replayed batches converge the
+    * LABELS but would never remove the duplicate ROW; folding to
+    * min(label) here makes every merge and delete read a clean labeling
+    * and physically repairs the duplicate whenever its bucket rewrites. */
+  private def storeLabels(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): DataFrame =
+    readComponentsStore(spark, dir).groupBy("id").agg(min("label").as("label"))
+
+  /** The one commit of the store's merge and delete. `rewrite` maps a
+    * slice of the store's labeling `lab` that holds every `touched`
+    * label's rows to the rows replacing it. A flat store (`buckets`
+    * None) is replaced whole by the rewrite of `lab`
+    * ([[graft.sources.IO.replace]]). A bucketed one rewrites only the
+    * buckets of the touched labels — rows move buckets when their
+    * component's new minimum hashes elsewhere, so these are the old and
+    * new labels of every changed component — from the rewrite of their
+    * rows, pinned with `pin`. Returns the touched bucket ids (none for
+    * a flat store); a delta touching none writes nothing. */
+  private def commitComponents(pin: DataFrame => DataFrame, dir: String,
+                               lab: DataFrame, touched: DataFrame,
+                               rewrite: DataFrame => DataFrame,
+                               buckets: Option[Long]): Seq[Long] =
+    buckets match {
+      case None =>
+        graft.sources.IO.replace(rewrite(lab), dir, "componentsStore")
+        Seq.empty
+      case Some(n) =>
+        val bkt = pmod(col("label"), lit(n))
+        val ids = touched.select(bkt).distinct()
+          .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= n ids
+        if (ids.nonEmpty)
+          BucketedIndex.rewrite(ComponentsStore,
+            pin(rewrite(lab.where(bkt.isin(ids: _*))).withColumn("__bucket", bkt)),
+            dir, ids)
+        ids
+    }
+
+  /** Fold `batch` into the store at `dir` ([[mergeDelta]], then
+    * [[commitComponents]]); every block it pins is released on every
+    * exit, the replayed no-op batch's included. */
+  private def mergeStore(batch: DataFrame, dir: String, idA: String,
+                         idB: String, buckets: Option[Long]): Seq[Long] =
+    Checkpoints.scoped(batch.sparkSession) { pin =>
+      val lab = storeLabels(batch.sparkSession, dir)
+      val (touched, rewrite) = mergeDelta(lab, batch, idA, idB, pin)
+      commitComponents(pin, dir, lab, touched, rewrite, buckets)
+    }
 
   /** Fold a batch of edges into the bucketed store IN PLACE: same
     * semantics as [[componentsMerge]] (ScalePathSpec pins relation
     * equality), but only the touched label-buckets rewrite. Returns the
     * touched bucket ids (the cost witness the spec asserts on — and
-    * that untouched bucket directories stay byte-identical). Every
-    * block it pins is released on every exit, the replayed no-op
-    * batch's included. */
+    * that untouched bucket directories stay byte-identical). */
   def mergeIntoComponentsStore(batch: DataFrame, dir: String,
                                idA: String = "id_a", idB: String = "id_b",
-                               buckets: Int = 64): Seq[Long] = {
-    val spark = batch.sparkSession
-    val b = graft.sources.IO.readBucketCount(spark, dir).getOrElse(buckets)
-    // dedup by id on the read: dynamic partition overwrite is only
-    // per-partition atomic, so a crash between the new-label bucket
-    // write and the old-label bucket rewrite can leave one id in two
-    // buckets with different labels. Replayed batches converge the
-    // LABELS but would never remove the duplicate ROW; folding to
-    // min(label) here makes every merge read a clean labeling and
-    // physically repairs the duplicate whenever its bucket rewrites.
-    val lab = readComponentsStore(spark, dir)
-      .groupBy("id").agg(min("label").as("label"))
-    val e = batch.select(col(idA).cast("long").as("ea"),
-      col(idB).cast("long").as("eb"))
-    val contracted = e
-      .join(lab.select(col("id").as("ea"), col("label").as("la")),
-        Seq("ea"), "left")
-      .join(lab.select(col("id").as("eb"), col("label").as("lb")),
-        Seq("eb"), "left")
-      .select(coalesce(col("la"), col("ea")).as("id_a"),
-        coalesce(col("lb"), col("eb")).as("id_b"))
-      .localCheckpoint(eager = true)
-    try {
-      // (old representative | new node) -> label
-      val remap = pinnedComponents(contracted)
-      try {
-        // changed components + new nodes decide the touched buckets
-        val changed = remap.where(col("id") =!= col("label"))
-        val bkt = (c: Column) => pmod(c, lit(b.toLong))
-        val touched = changed.select(bkt(col("id")).as("b"))
-          .union(changed.select(bkt(col("label")).as("b")))
-          .union(remap.join(lab.select(col("id")), Seq("id"), "left_anti")
-            .select(bkt(col("label")).as("b")))
-          .distinct().collect().map(_.getLong(0)).toSeq.sorted // bounded: <= `buckets` ids
-        if (touched.isEmpty) return touched // replay/no-op batch: zero writes
-        // rows to rewrite: everything in the touched buckets, relabeled,
-        // plus the new nodes
-        val inTouched = lab.where(bkt(col("label")).isin(touched: _*))
-          .join(remap.select(col("id").as("label"), col("label").as("__nl")),
-            Seq("label"), "left")
-          .select(col("id"), coalesce(col("__nl"), col("label")).as("label"))
-        val newNodes = contracted
-          .select(col("id_a").as("id")).union(contracted.select(col("id_b").as("id")))
-          .distinct()
-          .join(lab.select(col("id")), Seq("id"), "left_anti")
-          .join(remap, Seq("id"), "left")
-          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-        val pinned = inTouched.unionByName(newNodes)
-          .select(col("id"), col("label"), bkt(col("label")).as("__bucket"))
-          .localCheckpoint(eager = true)
-        try BucketedIndex.rewrite(ComponentsStore, pinned, dir, touched)
-        finally Checkpoints.drop(pinned)
-        touched
-      } finally Checkpoints.drop(remap)
-    } finally Checkpoints.drop(contracted)
-  }
+                               buckets: Int = 64): Seq[Long] =
+    mergeStore(batch, dir, idA, idB, Some(graft.sources.IO.readBucketCount(
+      batch.sparkSession, dir).getOrElse(buckets).toLong))
 
   /** Measured-size gate for the components-store write strategy
     * (BASELINE.md "components store gate"): below this labeling size
@@ -1700,7 +1700,7 @@ object Dedup {
   /** SIZE-GATED components-store merge — the entry point
     * [[graft.sources.IO.componentsStoreSink]] folds batches through:
     * labelings at or below `maxFlatRows` route through a FLAT snapshot
-    * rewrite ([[componentsMerge]] + one overwrite — cheaper than the
+    * rewrite ([[swapMergeComponents]] — cheaper than the
     * bucketed machinery below the gate, measured in BASELINE.md's
     * Round-10 "bucketed-components rewrite volume" row), larger ones through the bucketed
     * touched-partitions-only [[mergeIntoComponentsStore]], converting a
@@ -1710,8 +1710,7 @@ object Dedup {
     * write strategy. Gate reads the CURRENT store's row count — one
     * column-pruned scan, the price of not making the caller guess.
     * Both full rewrites (the flat route, and the one-time conversion)
-    * write beside the store and swap in ([[graft.sources.IO.swapIn]]),
-    * so a failed write never loses the labeling. */
+    * replace the store ([[graft.sources.IO.replace]]). */
   def mergeComponentsStore(batch: DataFrame, dir: String,
                            idA: String = "id_a", idB: String = "id_b",
                            buckets: Int = 64,
@@ -1720,51 +1719,29 @@ object Dedup {
     val spark = batch.sparkSession
     val storeRows = readComponentsStore(spark, dir).count()
     if (storeRows > maxFlatRows) {
-      if (!storeIsBucketed(spark, dir)) {
+      if (!storeIsBucketed(spark, dir))
         // one-time layout conversion at the gate crossing: seed the
-        // bucketed layout beside the flat store, swap it in, then merge
-        // touched-buckets-only
-        val tmp = dir + "_tmp"
-        if (BucketedIndex.seed(ComponentsStore, tmp, buckets,
+        // bucketed layout beside the flat store and swap it in, then
+        // merge touched-buckets-only
+        graft.sources.IO.replaceWith(spark, dir, "componentsStore")(
+          BucketedIndex.seed(ComponentsStore, _, buckets,
             readComponentsStore(spark, dir)))
-          swapComponents(spark, tmp, dir)
-        else graft.sources.IO.deleteDir(spark, dir)
-      }
       ComponentsMergeReport("bucketed",
         mergeIntoComponentsStore(batch, dir, idA, idB, buckets))
     } else {
-      // the swapped-in snapshot replaces the whole dir, so a previously
-      // bucketed store below the gate converges back to the flat layout
+      // the replacement is the whole dir, so a previously bucketed
+      // store below the gate converges back to the flat layout
       swapMergeComponents(batch, dir, idA, idB)
       ComponentsMergeReport("flat", Seq.empty)
     }
   }
 
-  /** The flat components store's full rewrite, shared by the flat route
-    * of [[mergeComponentsStore]] and [[graft.sources.IO.componentsSink]]:
-    * fold `batch` into the labeling at `dir` ([[componentsMerge]]),
-    * write the result beside it at `<dir>_tmp`, then swap it in. The
-    * write fully consumes the store read before any rename touches it,
-    * so the labeling needs no pin, and there is never a moment without
-    * a readable labeling: a crash between the renames leaves
-    * `<dir>_bak`, which [[readComponentsStore]] reads. */
+  /** The flat components store's merge, shared by the flat route of
+    * [[mergeComponentsStore]] and [[graft.sources.IO.componentsSink]]:
+    * [[componentsMerge]]'s fold, committed by replacing the labeling. */
   private[graft] def swapMergeComponents(batch: DataFrame, dir: String,
-                                         idA: String, idB: String): Unit = {
-    val spark = batch.sparkSession
-    val lab = readComponentsStore(spark, dir)
-      .groupBy("id").agg(min("label").as("label")) // crash-dup repair, as in the bucketed read
-    componentsMerge(lab, batch, idA, idB)
-      .write.mode("overwrite").parquet(dir + "_tmp")
-    swapComponents(spark, dir + "_tmp", dir)
-  }
-
-  private def swapComponents(spark: org.apache.spark.sql.SparkSession,
-                             staged: String, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(staged)
-    graft.sources.IO.swapIn(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, dir,
-      "componentsStore")
-  }
+                                         idA: String, idB: String): Unit =
+    mergeStore(batch, dir, idA, idB, None)
 
   /** Remove nodes from a persisted components store — the TAKEDOWN verb
     * of the components lifecycle. Deleting a node can SPLIT its
@@ -1785,76 +1762,49 @@ object Dedup {
     *   4. [[connectedComponents]] over that affected-only edge set
     *      (touched-components-sized, so the one-task gate usually
     *      fires); members with no surviving edge keep themselves;
-    *   5. write: bucketed store → dynamic overwrite of ONLY the buckets
-    *      holding affected components' old or new labels (byte-identity
-    *      elsewhere, emptied dirs dropped); flat store → snapshot
-    *      rewrite.
+    *   5. [[commitComponents]] swaps the affected components' rows for
+    *      the members' new labels: touched buckets only on a bucketed
+    *      store, a replace of a flat one.
     *
     * delete == rebuild-without-those-nodes exactly (ScalePathSpec law:
     * the min-label fixpoint over the surviving graph is unique); a
     * replayed delete finds no affected labels and writes nothing.
     * Returns touched bucket ids (empty for the flat route / no-op).
-    * Single writer by contract. */
+    * Every block it pins is released on every exit. Single writer by
+    * contract. */
   def deleteFromComponentsStore(ids: DataFrame, edges: DataFrame, dir: String,
                                 idA: String = "id_a", idB: String = "id_b",
                                 buckets: Int = 64): Seq[Long] = {
     val spark = ids.sparkSession
     val b = graft.sources.IO.readBucketCount(spark, dir).getOrElse(buckets)
-    val del = ids.select(ids.columns.head).toDF("id")
-      .select(col("id").cast("long").as("id")).distinct()
-      .localCheckpoint(eager = true)
-    try {
-      val lab = readComponentsStore(spark, dir)
-        .groupBy("id").agg(min("label").as("label")) // crash-dup repair
-      val affected = lab.join(del, Seq("id"), "left_semi")
-        .select("label").distinct().localCheckpoint(eager = true)
-      try {
-        if (affected.isEmpty) return Seq.empty // replay / unknown ids
-        val members = lab.join(affected, Seq("label"), "left_semi")
-          .join(del, Seq("id"), "left_anti")
-          .select("id").localCheckpoint(eager = true)
-        try {
-          val e = edges.select(col(idA).cast("long").as("ea"),
-            col(idB).cast("long").as("eb"))
-          val affEdges = e
-            .join(members.select(col("id").as("ea")), Seq("ea"), "left_semi")
-            .join(members.select(col("id").as("eb")), Seq("eb"), "left_semi")
-            .select(col("ea").as("id_a"), col("eb").as("id_b"))
-          val relab = pinnedComponents(affEdges)
-          try {
-            val newRows = members
-              .join(relab, Seq("id"), "left")
-              .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-            if (storeIsBucketed(spark, dir)) {
-              val bkt = (c: Column) => pmod(c, lit(b.toLong))
-              val touched = affected.select(bkt(col("label")).as("b"))
-                .union(newRows.select(bkt(col("label")).as("b")))
-                .distinct()
-                .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= buckets ids
-              // cohabitants of the touched buckets pass through; rows of
-              // affected components (deleted ids included) are replaced
-              // by newRows — their labels' buckets are all in `touched`
-              val inTouched = lab.where(bkt(col("label")).isin(touched: _*))
-                .join(affected, Seq("label"), "left_anti")
-                .select("id", "label")
-              val pinned = inTouched.unionByName(newRows)
-                .select(col("id"), col("label"), bkt(col("label")).as("__bucket"))
-                .localCheckpoint(eager = true)
-              try BucketedIndex.rewrite(ComponentsStore, pinned, dir, touched)
-              finally Checkpoints.drop(pinned)
-              touched
-            } else {
-              val out = lab.join(affected, Seq("label"), "left_anti")
-                .unionByName(newRows)
-                .localCheckpoint(eager = true) // consume the read first
-              try out.write.mode("overwrite").parquet(dir)
-              finally Checkpoints.drop(out)
-              Seq.empty
-            }
-          } finally Checkpoints.drop(relab)
-        } finally Checkpoints.drop(members)
-      } finally Checkpoints.drop(affected)
-    } finally Checkpoints.drop(del)
+    Checkpoints.scoped(spark) { pin =>
+      val del = pin(ids.select(ids.columns.head).toDF("id")
+        .select(col("id").cast("long").as("id")).distinct())
+      val lab = storeLabels(spark, dir)
+      val affected = pin(lab.join(del, Seq("id"), "left_semi")
+        .select("label").distinct())
+      if (affected.isEmpty) Seq.empty // replay / unknown ids
+      else {
+        val members = pin(lab.join(affected, Seq("label"), "left_semi")
+          .join(del, Seq("id"), "left_anti").select("id"))
+        val e = edges.select(col(idA).cast("long").as("ea"),
+          col(idB).cast("long").as("eb"))
+        val affEdges = e
+          .join(members.select(col("id").as("ea")), Seq("ea"), "left_semi")
+          .join(members.select(col("id").as("eb")), Seq("eb"), "left_semi")
+          .select(col("ea").as("id_a"), col("eb").as("id_b"))
+        val relab = pin(connectedComponents(affEdges))
+        val newRows = members.join(relab, Seq("id"), "left")
+          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+        // rows of affected components (deleted ids included) give way to
+        // newRows; cohabitants of the touched buckets pass through
+        commitComponents(pin, dir, lab,
+          affected.union(newRows.select("label")),
+          _.join(affected, Seq("label"), "left_anti").select("id", "label")
+            .unionByName(newRows),
+          if (storeIsBucketed(spark, dir)) Some(b.toLong) else None)
+      }
+    }
   }
 
   /** Keep one canonical document per near-dup cluster: the member with

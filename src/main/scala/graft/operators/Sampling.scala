@@ -378,10 +378,10 @@ object Sampling {
     * paid one). */
   def writeBucketCensus(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String): Unit =
-    graft.sources.IO.swapWrite(
+    graft.sources.IO.replace(
       censusOf(graft.sources.IO.readArtifact(spark, indexDir)
-        .select("bucket", "id")),
-      censusDir(indexDir))
+        .select("bucket", "id")).coalesce(1), // O(2^planes) rows: one file
+      censusDir(indexDir), "writeBucketCensus")
 
   /** Live occupancy of a bucket-membership index — what the diversity
     * gate charges admissions against: the census if present (O(2^planes)
@@ -391,7 +391,8 @@ object Sampling {
     * Always (bucket: long, n_occ: long). */
   def readBucketOccupancy(spark: org.apache.spark.sql.SparkSession,
                           indexDir: String): DataFrame =
-    graft.sources.IO.readSwapped(spark, censusDir(indexDir))
+    graft.sources.IO.replacedPath(spark, censusDir(indexDir))
+      .map(graft.sources.IO.readArtifact(spark, _))
       .orElse(BucketedIndex.read(spark, indexDir)
         .map(idx => censusOf(idx.select("bucket", "id"))))
       .getOrElse(spark.createDataFrame(
@@ -412,12 +413,13 @@ object Sampling {
     * torn-batch shape the gate documents). */
   def advanceBucketCensus(occ: DataFrame, admittedBuckets: DataFrame,
                           indexDir: String): Unit =
-    graft.sources.IO.swapWrite(
+    graft.sources.IO.replace(
       occ.select(col("bucket"), col("n_occ"))
         .unionAll(admittedBuckets
           .groupBy("bucket").agg(count(lit(1)).as("n_occ")))
-        .groupBy("bucket").agg(sum(col("n_occ")).as("n_occ")),
-      censusDir(indexDir))
+        .groupBy("bucket").agg(sum(col("n_occ")).as("n_occ"))
+        .coalesce(1), // O(2^planes) rows: one file
+      censusDir(indexDir), "advanceBucketCensus")
 
   /** TAKEDOWN verb for the bucket-membership index — opt-out content
     * must FREE its semantic bucket's budget, not just leave the corpus:

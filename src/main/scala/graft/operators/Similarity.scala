@@ -505,71 +505,60 @@ object Similarity {
   }
 
   /** FULL retrain — the drift remedy that restores fresh-build recall:
-    * re-trains `k` centroids on the index's OWN vectors (the distributed
-    * trainer — nothing data-scale reaches the driver) and rebuilds the
-    * index BESIDE the live one, then swaps directories (write-then-
-    * rename, the componentsSink discipline — no corpus-sized checkpoint,
-    * and the live index serves reads until the swap; a crash leaves
-    * `_bak`/`_next` for recovery). Cost is one corpus read + one write —
-    * paid once per drift epoch, amortized over the many batch-
-    * proportional appends that caused it. ScalePathSpec pins the
-    * recall-preservation law: post-retrain recall == fresh-build recall
-    * on the drifted corpus. Single writer by contract. Fails loudly on
-    * a FUSED index (the swap would drop codes/ + codebooks/ entirely) —
-    * use [[ivfPqRetrainIndex]]. */
+    * re-trains `k` centroids on the index's OWN vectors and rebuilds the
+    * index beside the live one ([[retrainBeside]]). Cost is one corpus
+    * read + one write — paid once per drift epoch, amortized over the
+    * many batch-proportional appends that caused it. ScalePathSpec pins
+    * the recall-preservation law: post-retrain recall == fresh-build
+    * recall on the drifted corpus. Single writer by contract. Fails
+    * loudly on a FUSED index (the swap would drop codes/ + codebooks/
+    * entirely) — use [[ivfPqRetrainIndex]]. */
   def ivfRetrainIndex(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String, vecCol: String, k: Int,
-                      iters: Int = 8, seed: Long = 42L): Unit = {
+                      iters: Int = 8, seed: Long = 42L): Unit =
+    retrainBeside(spark, indexDir, vecCol, k, iters, seed, "ivfRetrainIndex",
+      requireNotFused(spark, indexDir, "ivfRetrainIndex", "ivfPqRetrainIndex")) {
+      (vecs, centroids, next) => ivfWriteIndex(vecs, vecCol, centroids, next)
+    }
+
+  /** The retrains' staging dir: the successor index is built here and
+    * survives a crash, for [[ivfRecoverSwap]] to finish the swap. */
+  private def nextOf(indexDir: String): String = indexDir + "_next"
+
+  /** The full-retrain skeleton both index layouts share: repair a torn
+    * swap ([[ivfRecoverSwap]]), run `guard`, train `k` centroids on the
+    * index's own vectors (the distributed trainer — nothing data-scale
+    * reaches the driver), `build` the index from (vectors, centroids)
+    * into a cleared staging dir, then swap it in
+    * ([[graft.sources.IO.swapIn]]). The build reads the live index into
+    * a distinct path, so nothing corpus-sized is pinned, and the live
+    * index serves reads until the swap. `guard` runs AFTER the recovery
+    * sweep: a fused index interrupted mid-swap has no live codebooks/
+    * until the sweep restores it — guarding first would wave the plain
+    * retrain through on exactly the index it must not touch. */
+  private def retrainBeside(spark: org.apache.spark.sql.SparkSession,
+                            indexDir: String, vecCol: String, k: Int,
+                            iters: Int, seed: Long, who: String,
+                            guard: => Unit = ())(
+      build: (DataFrame, Array[Array[Float]], String) => Unit): Unit = {
     ivfRecoverSwap(spark, indexDir)
-    // AFTER the recovery sweep: a fused index interrupted mid-swap has
-    // no live codebooks/ until the sweep restores it — guarding first would
-    // wave the plain retrain through on exactly the index it must not
-    // touch
-    requireNotFused(spark, indexDir, "ivfRetrainIndex", "ivfPqRetrainIndex")
+    guard
     val vecs = IO.readArtifact(spark, s"$indexDir/vectors").drop("ivf_list")
     val centroids = ivfTrainDistributed(vecs, vecCol, k, iters, seed)
-    val next = new org.apache.hadoop.fs.Path(indexDir + "_next")
+    val next = new org.apache.hadoop.fs.Path(nextOf(indexDir))
     val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(next, true)
-    // builds next/ while READING the live index — distinct paths, no
-    // read-own-input hazard, no checkpoint of the corpus
-    ivfWriteIndex(vecs, vecCol, centroids, next.toString)
-    graft.sources.IO.swapIn(fs, next, indexDir, "ivfRetrainIndex")
+    build(vecs, centroids, next.toString)
+    IO.swapIn(fs, next, indexDir, who)
   }
 
-  /** Crash-recovery sweep for [[ivfRetrainIndex]]'s two-rename swap
-    * (the compactPartitionedDir discipline). States it repairs:
-    *  - live ABSENT + `_next` present: the crash landed between
-    *    rename(live→bak) and rename(next→live). `_next` is complete by
-    *    construction (it is fully written before the first rename), so
-    *    finish the swap: next→live, drop `_bak`.
-    *  - live ABSENT + only `_bak` present: roll back — bak→live.
-    *  - live present: any leftover `_next` (written but never swapped)
-    *    and `_bak` are stale by definition — delete both; the live
-    *    index was serving reads throughout.
-    * Called on entry to [[ivfRetrainIndex]]; safe to call any time
-    * under the single-writer contract. */
+  /** Crash-recovery sweep for the retrains' two-rename swap
+    * ([[graft.sources.IO.recoverSwap]] with the `_next` staging dir).
+    * Called on entry to every retrain; safe to call any time under the
+    * single-writer contract. */
   def ivfRecoverSwap(spark: org.apache.spark.sql.SparkSession,
-                     indexDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = live.getFileSystem(conf)
-    val next = new org.apache.hadoop.fs.Path(indexDir + "_next")
-    val bak = new org.apache.hadoop.fs.Path(indexDir + "_bak")
-    if (!fs.exists(live)) {
-      if (fs.exists(next)) {
-        if (!fs.rename(next, live))
-          throw new java.io.IOException(s"ivfRecoverSwap: rename $next -> $live failed")
-        fs.delete(bak, true)
-      } else if (fs.exists(bak)) {
-        if (!fs.rename(bak, live))
-          throw new java.io.IOException(s"ivfRecoverSwap: rename $bak -> $live failed")
-      }
-    } else {
-      fs.delete(next, true)
-      fs.delete(bak, true)
-    }
-  }
+                     indexDir: String): Unit =
+    IO.recoverSwap(spark, indexDir, nextOf(indexDir), "ivfRecoverSwap")
 
   /** 2-means refinement over a bounded in-memory sample (the
     * [[ivfTrain]] loop body, shared with [[ivfSplitList]]). */
@@ -1546,27 +1535,19 @@ object Similarity {
       ivfPqTopK(spark, indexDir, idCol, vecCol, query, k, nprobe, refine)
   }
 
-  /** Full retrain of a fused index — the drift remedy, under the same
-    * write-beside-then-swap discipline (and the same `_next`/`_bak`
-    * [[ivfRecoverSwap]] sweep) as [[ivfRetrainIndex]]: fresh coarse
-    * centroids (distributed k-means over the index's own vectors),
-    * fresh PQ codebooks, full re-encode — all into `_next`, then the
-    * two-rename swap. The live fused index serves reads until the
-    * swap. */
+  /** Full retrain of a fused index — the drift remedy, on the same
+    * skeleton as [[ivfRetrainIndex]] ([[retrainBeside]]): fresh coarse
+    * centroids, fresh PQ codebooks and a full re-encode, built beside
+    * the live fused index, which serves reads until the swap. */
   def ivfPqRetrainIndex(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String, idCol: String, vecCol: String,
                         k: Int, dim: Int, m: Int = 8, kSub: Int = 16,
-                        iters: Int = 8, seed: Long = 42L): Unit = {
-    ivfRecoverSwap(spark, indexDir)
-    val vecs = IO.readArtifact(spark, s"$indexDir/vectors").drop("ivf_list")
-    val centroids = ivfTrainDistributed(vecs, vecCol, k, iters, seed)
-    val next = new org.apache.hadoop.fs.Path(indexDir + "_next")
-    val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(next, true)
-    ivfPqWriteIndex(vecs, idCol, vecCol, centroids, dim, next.toString,
-      m, kSub, iters = iters, seed = seed)
-    graft.sources.IO.swapIn(fs, next, indexDir, "ivfPqRetrainIndex")
-  }
+                        iters: Int = 8, seed: Long = 42L): Unit =
+    retrainBeside(spark, indexDir, vecCol, k, iters, seed, "ivfPqRetrainIndex") {
+      (vecs, centroids, next) =>
+        ivfPqWriteIndex(vecs, idCol, vecCol, centroids, dim, next, m, kSub,
+          iters = iters, seed = seed)
+    }
 
   /** Embedding near-dup buckets: sign-LSH signature histogram — bucket id,
     * member count, representative min id. Buckets with n_vecs > 1 are the

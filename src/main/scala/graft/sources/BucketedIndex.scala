@@ -32,8 +32,12 @@ import graft.operators.Checkpoints
   *    reverts it to that state, never to a schema-less dir whose
   *    readers die with UNABLE_TO_INFER_SCHEMA;
   *  - rows are pinned (`localCheckpoint`) before any write touches the
-  *    dir they were read from, so a write never scans its own output
-  *    and a failed write leaves the old index intact;
+  *    dir they were read from, so a write never scans its own output;
+  *  - a failed write leaves the old index intact because the store
+  *    rewrites by dynamic partition overwrite, which stages the new
+  *    files and swaps the touched partitions in only at job commit (a
+  *    static overwrite would delete the dir first — whole-dir rewrites
+  *    go through [[IO.replace]] instead);
   *  - an empty delta writes nothing, so a replay that finds its rows
   *    already applied (an anti-joined append, any takedown) is a
   *    zero-write no-op;

@@ -623,14 +623,13 @@ object IO {
     * edges folds into a persisted (id, label) component labeling via
     * [[graft.operators.Dedup.componentsMerge]] — contract the batch
     * through the current labels, cluster the batch-sized contracted
-    * graph, relabel only touched components. The labeling snapshot
-    * swaps with the [[upsertSink]] write-then-swap discipline (never a
-    * moment without a readable snapshot; `_bak` recovers a crash
-    * between renames). Replay safety: componentsMerge is IDEMPOTENT —
-    * re-folding an already-applied batch contracts every edge to
-    * within-component self-pairs and the relabel is the identity — so
-    * at-least-once batch delivery converges. Missing snapshot = empty
-    * labeling (the nearDupAgainstIndex cold-start contract).
+    * graph, relabel only touched components. Each batch replaces the
+    * labeling snapshot ([[replace]]). Replay safety: componentsMerge is
+    * IDEMPOTENT — re-folding an already-applied batch contracts every
+    * edge to within-component self-pairs and the relabel is the
+    * identity — so at-least-once batch delivery converges. Missing
+    * snapshot = empty labeling (the nearDupAgainstIndex cold-start
+    * contract).
     * ScalePathSpec pins incremental == full-recompute across batches.
     * The batch body is the components store's flat route
     * ([[graft.operators.Dedup.swapMergeComponents]]). */
@@ -672,34 +671,19 @@ object IO {
 
   /** Keyed upsert sink (the HBase dim-writer analog): every micro-batch is
     * merged into the keyed snapshot directory with last-writer-wins
-    * semantics; deletes (`op='d'`) are applied. Overwrites the snapshot
-    * atomically per batch (read → merge → rewrite), which is the hermetic
-    * stand-in for HBase put/delete RPCs. */
+    * semantics; deletes (`op='d'`) are applied. Each batch replaces the
+    * whole snapshot ([[replace]]; a missing one reads as no rows), which
+    * is the hermetic stand-in for HBase put/delete RPCs. */
   def upsertSink(df: DataFrame, snapshotDir: String, checkpointDir: String,
                  keyCol: String, snapshotSchema: StructType)
       : DataStreamWriter[Row] =
     foreachBatchSink(df, checkpointDir) { (batch, _) =>
       val spark = batch.sparkSession
-      val dst = new Path(snapshotDir)
-      // resolve the snapshot path's OWN filesystem (s3a://, hdfs://, …),
-      // not the default FS
-      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bak = new Path(snapshotDir + "_bak")
-      val tmp = new Path(snapshotDir + "_tmp")
-      // recover from a crash between the renames below: the previous
-      // snapshot lives on at _bak until the new one is in place
-      val readFrom =
-        if (fs.exists(dst)) dst else if (fs.exists(bak)) bak else null
-      val existing =
-        if (readFrom == null)
-          spark.createDataFrame(
-            new java.util.ArrayList[Row](), snapshotSchema)
-        else spark.read.schema(snapshotSchema).parquet(readFrom.toString)
-      val merged = graft.streaming.Cdc.applyChangelog(existing, batch, keyCol)
-      // write-then-swap, never a moment without a readable snapshot:
-      // write _tmp → move current to _bak → move _tmp in → drop _bak
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      swapIn(fs, tmp, snapshotDir, "upsertSink")
+      val existing = replacedPath(spark, snapshotDir).fold(
+        spark.createDataFrame(new java.util.ArrayList[Row](), snapshotSchema))(
+        spark.read.schema(snapshotSchema).parquet(_))
+      replace(graft.streaming.Cdc.applyChangelog(existing, batch, keyCol),
+        snapshotDir, "upsertSink")
     }
 
   /** Exactly-once to a NON-idempotent sink: wrap the per-batch action
@@ -1421,25 +1405,17 @@ object IO {
     * bloat the driver's file index, and shred min/max pruning. Rewrites
     * the directory into ⌈bytes / targetFileBytes⌉ files with `coalesce`
     * (narrow — no shuffle; rows merge along existing file order, so a
-    * sorted layout stays sorted), then swaps atomically via the same
-    * write-tmp → bak → rename dance as [[upsertSink]]: readers never see
-    * a moment without a complete snapshot, and a crash leaves either the
-    * old or the new directory intact. Single-writer by contract, like
-    * all snapshot maintenance in this pack. Returns the output file
-    * count. */
+    * sorted layout stays sorted) and swaps them in with [[replace]].
+    * Single-writer by contract, like all snapshot maintenance in this
+    * pack. Returns the output file count. */
   def compactParquet(spark: SparkSession, dir: String,
                      targetFileBytes: Long = 128L << 20): Int = {
     require(targetFileBytes > 0)
     val dst = new Path(dir)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(dst).getLength
+    val bytes = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(dst).getLength
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tmp = new Path(dir + "_tmp")
-    // the read of `dir` completes while writing _tmp — the swap below
-    // only runs after the write action finished
-    readArtifact(spark, dir).coalesce(n)
-      .write.mode("overwrite").parquet(tmp.toString)
-    swapIn(fs, tmp, dir, "compactParquet")
+    replace(readArtifact(spark, dir).coalesce(n), dir, "compactParquet")
     n
   }
 
@@ -1475,53 +1451,94 @@ object IO {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  /** Write-then-swap a SMALL derived relation (a census, a pointer) so
-    * there is never a moment without a readable copy — the [[upsertSink]]
-    * swap discipline as a reusable verb: write `<dir>_tmp` → move the
-    * current dir to `<dir>_bak` → move `_tmp` in → drop `_bak`. A crash
-    * between the renames leaves `_bak`, which [[readSwapped]] recovers.
-    * `coalesce(1)`: callers pass driver-bounded relations (≤ a few
-    * hundred rows) — one file, not one per shuffle partition. */
-  private[graft] def swapWrite(df: DataFrame, dir: String): Unit = {
-    val tmp = new Path(dir + "_tmp")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    swapIn(tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration),
-      tmp, dir, "swapWrite")
+  // ---- whole-snapshot replace ---------------------------------------
+  //
+  // A snapshot dir is replaced by writing its successor BESIDE it at
+  // `<dir>_tmp` and swapping that in with two renames: move `dir` to
+  // `<dir>_bak`, move `_tmp` to `dir`, drop `_bak`. There is never a
+  // moment without a readable copy: a crash during the write leaves
+  // `dir` as it was (and a stale `_tmp` the next write overwrites), a
+  // crash between the renames leaves the old snapshot at `_bak`, which
+  // [[replacedPath]] reads. The write consumes every read of `dir` the
+  // successor's plan makes before any rename touches it, so a
+  // read-modify-write needs no pin. A static overwrite of `dir` would
+  // instead delete it before its own write job ran.
+
+  /** Replace the snapshot at `dir` with `df` (see above); `who` names
+    * the caller in a failed rename's error. */
+  private[graft] def replace(df: DataFrame, dir: String, who: String): Unit =
+    replaceWith(df.sparkSession, dir, who) { staged =>
+      df.write.mode("overwrite").parquet(staged)
+      true
+    }
+
+  /** [[replace]] for a successor some other writer lays out: `write`
+    * fills the staging path it is given and returns whether it wrote
+    * anything. Nothing written means the successor is the cold start,
+    * so `dir` is removed instead. */
+  private[graft] def replaceWith(spark: SparkSession, dir: String,
+                                 who: String)(write: String => Boolean): Unit = {
+    val staged = new Path(dir + "_tmp")
+    if (write(staged.toString))
+      swapIn(staged.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        staged, dir, who)
+    else deleteDir(spark, dir)
   }
 
-  /** The two-rename swap behind every write-beside-then-swap verb:
-    * `staged` (fully written by the caller, under the caller's own
-    * staging suffix) replaces `dir` — move the current `dir` to
-    * `<dir>_bak` → move `staged` in → drop `_bak` — so there is never a
-    * moment without a readable copy, and a crash between the renames
-    * leaves `_bak` for the caller's recovery read ([[readSwapped]],
-    * [[graft.operators.Similarity.ivfRecoverSwap]]). Hadoop rename
-    * reports most failures via `false`, not an exception, so both
-    * renames are checked (`who` names the caller): a swallowed failure
-    * would let the caller commit work silently stranded at `staged`. */
+  /** Where a [[replace]]d snapshot reads from: the live dir; else the
+    * `<dir>_bak` a crash between the swap's renames left; else None,
+    * the cold start (never written). */
+  private[graft] def replacedPath(spark: SparkSession,
+                                  dir: String): Option[String] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(dir, dir + "_bak").find(d => fs.exists(new Path(d)))
+  }
+
+  private def mustRename(fs: FileSystem, from: Path, to: Path,
+                         who: String): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"$who: rename $from -> $to failed")
+
+  /** The two renames behind [[replace]]: `staged`, fully written under
+    * the caller's staging suffix, replaces `dir`. Hadoop rename reports
+    * most failures via `false`, not an exception, so both renames are
+    * checked: a swallowed failure would let the caller commit work
+    * silently stranded at `staged`. */
   private[graft] def swapIn(fs: FileSystem, staged: Path, dir: String,
                             who: String): Unit = {
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"$who: $what failed")
     val dst = new Path(dir)
     val bak = new Path(dir + "_bak")
     fs.delete(bak, true) // best-effort pre-clean; verified below
-    if (fs.exists(dst)) must(fs.rename(dst, bak), s"rename $dst -> $bak")
-    must(fs.rename(staged, dst), s"rename $staged -> $dst")
+    if (fs.exists(dst)) mustRename(fs, dst, bak, who)
+    mustRename(fs, staged, dst, who)
     fs.delete(bak, true)
   }
 
-  /** Read a [[swapWrite]]-maintained relation, recovering from a crash
-    * mid-swap: the current dir if present, else the `_bak` the torn swap
-    * left. None = the artifact was never written (cold start). */
-  private[graft] def readSwapped(spark: SparkSession,
-                                 dir: String): Option[DataFrame] = {
-    val dst = new Path(dir)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The writer-side recovery of a swap staged at `staged` (a writer
+    * that keeps its successor across calls, such as an index retrain):
+    *  - `dir` absent, `staged` present: the crash landed between the two
+    *    renames and `staged` is complete (it is fully written before the
+    *    first), so finish the swap and drop `<dir>_bak`;
+    *  - `dir` absent, only `<dir>_bak` present: roll back to it;
+    *  - `dir` present: a leftover `staged` (never swapped) and `_bak`
+    *    are stale by definition, so both go; `dir` served reads
+    *    throughout.
+    * Safe to call any time under the single-writer contract. */
+  private[graft] def recoverSwap(spark: SparkSession, dir: String,
+                                 staged: String, who: String): Unit = {
+    val live = new Path(dir)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val next = new Path(staged)
     val bak = new Path(dir + "_bak")
-    if (fs.exists(dst)) Some(readArtifact(spark, dir))
-    else if (fs.exists(bak)) Some(readArtifact(spark, bak.toString))
-    else None
+    if (!fs.exists(live)) {
+      if (fs.exists(next)) {
+        mustRename(fs, next, live, who)
+        fs.delete(bak, true)
+      } else if (fs.exists(bak)) mustRename(fs, bak, live, who)
+    } else {
+      fs.delete(next, true)
+      fs.delete(bak, true)
+    }
   }
 
   /** Record the bucket count a hash-bucketed artifact was written with —

@@ -1059,6 +1059,56 @@ class LawsSpec extends SparkSpec {
     assert(stateRows(dir) == beforeReplay, "replayed delete must be a no-op")
   }
 
+  test("Holt-Winters state artifact: a torn replace leaves the state at <dir>_bak; read, extend and delete recover it") {
+    val m = 7
+    def x(t: Int): Double = 100.0 + 2.5 * t + ((t * 37) % 11)
+    val series = (0 until 28).flatMap(t => Seq((1L, t.toLong, x(t)),
+      (2L, t.toLong, x(t) + 3.0))).toDF("k", "t", "v")
+    val prefix = series.filter(col("t") < 21)
+    val suffix = series.filter(col("t") >= 21)
+    def stateRows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    // the reference: the same verbs on intact state dirs
+    def intact(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("hw_intact_")
+        .toString + "/state"
+      graft.operators.Analytics.hwWriteState(prefix, Seq("k"), "t", "v", m, dir)
+      dir
+    }
+    val ref = intact()
+    val fitted = stateRows(graft.operators.Analytics.hwReadState(spark, ref))
+    graft.operators.Analytics.hwExtendStateDir(suffix, Seq("k"), "t", "v", m, ref)
+    val extended = stateRows(graft.operators.Analytics.hwReadState(spark, ref))
+    val ref2 = intact()
+    graft.operators.Analytics.hwDeleteStateKeys(
+      Seq(Tuple1(1L)).toDF("k"), Seq("k"), ref2)
+    val deleted = stateRows(graft.operators.Analytics.hwReadState(spark, ref2))
+    // a crash between a replace's two renames leaves the state at
+    // <dir>_bak and no live dir
+    def torn(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("hw_torn_")
+        .toString + "/state"
+      graft.operators.Analytics.hwWriteState(prefix, Seq("k"), "t", "v", m,
+        dir + "_bak")
+      dir
+    }
+    def onlyLive(dir: String): Unit =
+      assert(new java.io.File(dir).isDirectory &&
+        Seq("_bak", "_tmp").forall(s => !new java.io.File(dir + s).exists()),
+        s"$dir: a replace must leave only the live dir")
+    assert(stateRows(graft.operators.Analytics.hwReadState(spark, torn())) == fitted,
+      "hwReadState must read the torn state from <dir>_bak")
+    val ext = torn()
+    graft.operators.Analytics.hwExtendStateDir(suffix, Seq("k"), "t", "v", m, ext)
+    onlyLive(ext)
+    assert(stateRows(graft.operators.Analytics.hwReadState(spark, ext)) == extended)
+    val del = torn()
+    graft.operators.Analytics.hwDeleteStateKeys(
+      Seq(Tuple1(1L)).toDF("k"), Seq("k"), del)
+    onlyLive(del)
+    assert(stateRows(graft.operators.Analytics.hwReadState(spark, del)) == deleted)
+  }
+
   test("isotonicFromHistogram matches the driver PAV on random histograms") {
     // LCG-random (group, score, pos, neg) histograms — the independent
     // reference is the BigInt PAV from the fixture test, re-run across

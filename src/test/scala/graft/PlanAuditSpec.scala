@@ -364,7 +364,7 @@ class PlanAuditSpec extends SparkSpec {
     // counts only the <= K source lists.
     val expected = Map(
       "Analytics.scala" -> 6, // 3x per-partition offset rows (<= nPart), 3x bounded histogram/frontier cells
-      "Dedup.scala" -> 3,     // components merge + components delete + counted-gram-compact touched bucket ids (all <= buckets); the bloom probe-shingle collect is GONE (r16 ADVICE fix: executor-side bit fold)
+      "Dedup.scala" -> 2,     // the components store commit (merge and delete) + counted-gram-compact touched bucket ids (all <= buckets); the bloom probe-shingle collect is GONE (r16 ADVICE fix: executor-side bit fold)
       "BucketedIndex.scala" -> 1, // the index store's takedown touched ids (<= buckets) — every hash-bucketed family's delete site, moved out of Dedup/Sampling; a rewrite observes its written ids on the write
       "Graph.scala" -> 1,     // the centrality sweep's <= K landmark/explicit source list
       "Spectral.scala" -> 4,  // global + per-group moment folds (2+d+d² longs each), artifact write (histogram rows) + read (dim+hist rows) — all dimension/catalog-bounded (r17)

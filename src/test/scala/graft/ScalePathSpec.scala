@@ -1788,6 +1788,38 @@ class ScalePathSpec extends SparkSpec {
       s"a replayed merge left ${replayed.size} checkpoint RDDs registered")
   }
 
+  test("components store: flat-route merges and deletes on both layouts, first run and replay, leave no new persistent RDDs") {
+    // componentsSink and the flat route below the gate run once per
+    // micro-batch, and a takedown replays: every run must release what
+    // it pinned, the clustering's own pins included
+    val b1 = Seq((5L, 6L), (8L, 9L), (20L, 21L)).toDF("id_a", "id_b")
+    val batch = Seq((6L, 9L), (9L, 3L)).toDF("id_a", "id_b")
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (8L, 9L), (20L, 21L))
+      .toDF("id_a", "id_b")
+    def labelsDir(prefix: String): String =
+      java.nio.file.Files.createTempDirectory(prefix).toString + "/labels"
+    def newPins(what: String)(f: => Unit): Unit =
+      for (run <- Seq("first run", "replay")) {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        f
+        val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+        assert(left.isEmpty, s"$what ($run) left ${left.size} checkpoint RDDs registered")
+      }
+    val flat = labelsDir("cc_pins_f_")
+    Dedup.connectedComponents(b1).write.parquet(flat)
+    newPins("flat-route merge") {
+      assert(Dedup.mergeComponentsStore(batch, flat, buckets = 8).route == "flat")
+    }
+    val flatDel = labelsDir("cc_pins_fd_")
+    Dedup.connectedComponents(edges).write.parquet(flatDel)
+    newPins("flat delete")(Dedup.deleteFromComponentsStore(
+      Seq(2L).toDF("id"), edges, flatDel, buckets = 8))
+    val bucketedDel = labelsDir("cc_pins_bd_")
+    Dedup.writeComponentsStore(Dedup.connectedComponents(edges), bucketedDel, 8)
+    newPins("bucketed delete")(Dedup.deleteFromComponentsStore(
+      Seq(2L).toDF("id"), edges, bucketedDel, buckets = 8))
+  }
+
   test("components store gate: both routes produce the identical labeling; layout follows the gate") {
     import java.nio.file.Files
     val b1 = Seq((5L, 6L), (8L, 9L), (20L, 21L))

@@ -51,6 +51,22 @@ class SourceScanSpec extends AnyFunSuite {
         "partitionOverwriteMode outside BucketedIndex (use BucketedIndex.rewrite):\n", "\n", ""))
   }
 
+  test("the replace suffixes live only in sources/IO.scala") {
+    // a whole-snapshot rewrite writes beside the dir and swaps in through
+    // IO.replace, and reads through IO.replacedPath: a `"_bak"` or
+    // `"_tmp"` literal elsewhere is a hand-rolled copy of that rule
+    val root = Paths.get("src/main/scala")
+    val suffix = """"_(bak|tmp)"""".r
+    val hits = for {
+      f <- scalaFiles(root)
+      if root.relativize(f).toString != "graft/sources/IO.scala"
+      (line, i) <- new String(Files.readAllBytes(f), "UTF-8").linesIterator.zipWithIndex
+      if suffix.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: ${line.trim}"
+    if (hits.nonEmpty)
+      fail(hits.mkString("replace suffixes outside IO (use IO.replace / replacedPath):\n", "\n", ""))
+  }
+
   test("every main builds its session through LocalSession") {
     // one builder keeps every entry point's master, shuffle partitions,
     // split size, timezone and UI setting the same, and stamps the cores
