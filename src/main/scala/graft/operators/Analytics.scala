@@ -999,22 +999,10 @@ object Analytics {
     * read three times — pass it pinned. Returns `groupCols ++
     * (threshold, n_flagged, frac_flagged, gain, lift)`. */
   def liftFromHistogram(h: DataFrame, groupCols: Seq[String]): DataFrame = {
-    require(groupCols.nonEmpty,
-      "liftFromHistogram needs at least one group column (the join " +
-        "re-keys on it; wrap a global sweep in a constant group)")
-    val have = h.columns.toSet
-    for (c <- Seq("score", "pos", "neg") ++ groupCols)
-      require(have(c), s"liftFromHistogram input is missing column '$c' " +
-        s"(have: ${h.columns.mkString(", ")})")
+    val cum = cumulative(h, groupCols, "liftFromHistogram")
     val g = groupCols.map(col)
     val tot = h.groupBy(g: _*).agg(sum(col("pos")).as("p_all"),
       sum(col("pos") + col("neg")).as("n_all"))
-    val cum = h.select(g :+ col("score").as("threshold"): _*)
-      .join(h.select(g :+ col("score").as("s2") :+ col("pos") :+
-        col("neg"): _*), groupCols)
-      .where(col("s2") >= col("threshold"))
-      .groupBy(g :+ col("threshold"): _*)
-      .agg(sum(col("pos")).as("tp"), sum(col("neg")).as("fp"))
     cum.join(tot, groupCols)
       .where(col("p_all") > 0L)
       .select(g :+ col("threshold") :+
@@ -1046,10 +1034,7 @@ object Analytics {
     * (the law LawsSpec pins, with a driver PAV reference and the
     * pooled-mass ledger Σ fitted·n == Σ pos). */
   def isotonicFromHistogram(h: DataFrame, groupCols: Seq[String]): DataFrame = {
-    val have = h.columns.toSet
-    for (c <- Seq("score", "pos", "neg") ++ groupCols)
-      require(have(c), s"isotonicFromHistogram input is missing column '$c' " +
-        s"(have: ${h.columns.mkString(", ")})")
+    checkHistogram(h, groupCols, "isotonicFromHistogram")
     val g = groupCols.map(col)
     val pav = udf { (cells: Seq[org.apache.spark.sql.Row]) =>
       // blocks of (member (score, n) list, pooled pos, pooled n); cells
@@ -1096,21 +1081,9 @@ object Analytics {
     * pinned. Zero-positive groups drop (recall undefined). Returns
     * `groupCols ++ (threshold, tp, fp, fn, prec, rec, f1)`. */
   def prCurveFromHistogram(h: DataFrame, groupCols: Seq[String]): DataFrame = {
-    require(groupCols.nonEmpty,
-      "prCurveFromHistogram needs at least one group column (the join " +
-        "re-keys on it; wrap a global sweep in a constant group)")
-    val have = h.columns.toSet
-    for (c <- Seq("score", "pos", "neg") ++ groupCols)
-      require(have(c), s"prCurveFromHistogram input is missing column '$c' " +
-        s"(have: ${h.columns.mkString(", ")})")
+    val cum = cumulative(h, groupCols, "prCurveFromHistogram")
     val g = groupCols.map(col)
     val tot = h.groupBy(g: _*).agg(sum(col("pos")).as("p_all"))
-    val cum = h.select(g :+ col("score").as("threshold"): _*)
-      .join(h.select(g :+ col("score").as("s2") :+ col("pos") :+
-        col("neg"): _*), groupCols)
-      .where(col("s2") >= col("threshold"))
-      .groupBy(g :+ col("threshold"): _*)
-      .agg(sum(col("pos")).as("tp"), sum(col("neg")).as("fp"))
     cum.join(tot, groupCols)
       .where(col("p_all") > 0L)
       .select(g :+ col("threshold") :+ col("tp") :+ col("fp") :+
@@ -1132,21 +1105,9 @@ object Analytics {
     * Returns `groupCols ++ (n_pos, avg_prec)`. */
   def avgPrecisionFromHistogram(h: DataFrame,
                                 groupCols: Seq[String]): DataFrame = {
-    require(groupCols.nonEmpty,
-      "avgPrecisionFromHistogram needs at least one group column (the join " +
-        "re-keys on it; wrap a global sweep in a constant group)")
-    val have = h.columns.toSet
-    for (c <- Seq("score", "pos", "neg") ++ groupCols)
-      require(have(c), s"avgPrecisionFromHistogram input is missing column " +
-        s"'$c' (have: ${h.columns.mkString(", ")})")
+    val cum = cumulative(h, groupCols, "avgPrecisionFromHistogram")
     val g = groupCols.map(col)
     val tot = h.groupBy(g: _*).agg(sum(col("pos")).as("p_all"))
-    val cum = h.select(g :+ col("score").as("threshold"): _*)
-      .join(h.select(g :+ col("score").as("s2") :+ col("pos") :+
-        col("neg"): _*), groupCols)
-      .where(col("s2") >= col("threshold"))
-      .groupBy(g :+ col("threshold"): _*)
-      .agg(sum(col("pos")).as("tp"), sum(col("neg")).as("fp"))
     val terms = cum
       .join(h.select(g :+ col("score").as("threshold") :+
         col("pos").as("pos_t"): _*), groupCols :+ "threshold")
@@ -1175,10 +1136,7 @@ object Analytics {
   def calibrationFromHistogram(h: DataFrame, groupCols: Seq[String],
                                binWidth: Long = 5L, maxBin: Long = 9L,
                                scoreMax: Long = 50L): DataFrame = {
-    val have = h.columns.toSet
-    for (c <- Seq("score", "pos", "neg") ++ groupCols)
-      require(have(c), s"calibrationFromHistogram input is missing column " +
-        s"'$c' (have: ${h.columns.mkString(", ")})")
+    checkHistogram(h, groupCols, "calibrationFromHistogram")
     val g = groupCols.map(col)
     val cellN = col("pos") + col("neg")
     h.groupBy(g :+ least(floor(col("score") / lit(binWidth)).cast("long"),
@@ -1199,14 +1157,7 @@ object Analytics {
   }
 
   def aucFromHistogram(h: DataFrame, groupCols: Seq[String]): DataFrame = {
-    // fail fast on the column contract: the fold below hardcodes
-    // score/pos/neg (the histogram shape both producers emit), and a
-    // wrong-shaped input would otherwise surface as an opaque resolver
-    // error three selects deep
-    val have = h.columns.toSet
-    for (c <- Seq("score", "pos", "neg") ++ groupCols)
-      require(have(c), s"aucFromHistogram input is missing column '$c' " +
-        s"(have: ${h.columns.mkString(", ")})")
+    checkHistogram(h, groupCols, "aucFromHistogram")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val g = groupCols.map(col)
     val h1 = h.select(g :+ col("score").as("s1") :+ col("pos"): _*)
@@ -1223,5 +1174,38 @@ object Analytics {
       .select(g :+ col("n_pos") :+ col("n_neg") :+
         round(col("num2").cast("double") /
           (lit(2.0) * col("n_pos") * col("n_neg")), 6).as("auc"): _*)
+  }
+
+  /** The histogram folds' column contract, checked before any plan is
+    * built: `h` carries score/pos/neg and every group column. The folds
+    * hardcode the histogram shape both producers emit, and a
+    * wrong-shaped input would otherwise surface as an opaque resolver
+    * error three selects deep. `who` names the fold in the message. */
+  private def checkHistogram(h: DataFrame, groupCols: Seq[String],
+                             who: String): Unit = {
+    val have = h.columns.toSet
+    for (c <- Seq("score", "pos", "neg") ++ groupCols)
+      require(have(c), s"$who input is missing column '$c' " +
+        s"(have: ${h.columns.mkString(", ")})")
+  }
+
+  /** Per (group, threshold): the cumulative class counts `tp`/`fp` of
+    * every histogram cell scoring ≥ the threshold — the within-group
+    * domain² self-join the lift, PR and AP sweeps share. The join
+    * re-keys on the group, so at least one group column is required
+    * (checked first, then the column contract, on behalf of `who`). */
+  private def cumulative(h: DataFrame, groupCols: Seq[String],
+                         who: String): DataFrame = {
+    require(groupCols.nonEmpty,
+      s"$who needs at least one group column (the join " +
+        "re-keys on it; wrap a global sweep in a constant group)")
+    checkHistogram(h, groupCols, who)
+    val g = groupCols.map(col)
+    h.select(g :+ col("score").as("threshold"): _*)
+      .join(h.select(g :+ col("score").as("s2") :+ col("pos") :+
+        col("neg"): _*), groupCols)
+      .where(col("s2") >= col("threshold"))
+      .groupBy(g :+ col("threshold"): _*)
+      .agg(sum(col("pos")).as("tp"), sum(col("neg")).as("fp"))
   }
 }

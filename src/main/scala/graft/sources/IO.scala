@@ -746,14 +746,9 @@ object IO {
                                    snapshotSchema: StructType,
                                    retain: Int): Unit = {
     val spark = batch.sparkSession
-    val versions = snapshotVersions(spark, baseDir)
-    val existing = versions.lastOption match {
-      case Some(v) => readSnapshotVersion(spark, baseDir, v, snapshotSchema)
-      case None => spark.createDataFrame(
-        new java.util.ArrayList[Row](), snapshotSchema)
-    }
+    val (latest, existing) = latestSnapshot(spark, baseDir, snapshotSchema)
     val merged = graft.streaming.Cdc.applyChangelog(existing, batch, keyCol)
-    val next = versions.lastOption.getOrElse(0L) + 1
+    val next = latest + 1
     merged.write.mode("overwrite").parquet(f"$baseDir/v=$next%05d")
     // GC strictly-older versions beyond the retention window
     val base = new Path(baseDir)
@@ -763,6 +758,16 @@ object IO {
     }
     ()
   }
+
+  /** The latest complete `v=<n>` snapshot under `baseDir` and its
+    * version; version 0 and no rows while none is committed. */
+  private def latestSnapshot(spark: SparkSession, baseDir: String,
+                             schema: StructType): (Long, DataFrame) =
+    snapshotVersions(spark, baseDir).lastOption match {
+      case Some(v) => (v, readSnapshotVersion(spark, baseDir, v, schema))
+      case None => (0L, spark.createDataFrame(
+        new java.util.ArrayList[Row](), schema))
+    }
 
   /** Epoch millis of a row's `window_start` — the audit stores'
     * data-derived changelog clock (`ts_ms`) and the time half of their
@@ -806,9 +811,11 @@ object IO {
     *      versioned merge keys on one column, and the key is a pure
     *      function of the row's own grain, so replays regenerate it;
     *   6. the upsert, then the first-seen append (store before index);
-    *   7. the pinned blocks are dropped — unpersist does NOT free
-    *      localCheckpoint blocks, and a long-running query would
-    *      otherwise keep one batch-sized block set per micro-batch.
+    *   7. the pinned blocks are dropped, the fold's own pins with them
+    *      (the rows are held by the batch's [[Checkpoints.Pins]]) —
+    *      unpersist does NOT free localCheckpoint blocks, and a
+    *      long-running query would otherwise keep one batch-sized block
+    *      set per micro-batch.
     *
     * Torn batches (some effects landed, marker didn't) replay with
     * stable decisions: the folds are pure functions of (batch, inputs),
@@ -825,12 +832,12 @@ object IO {
                              index: Option[FirstSeenIndex] = None)
                             (fold: (DataFrame, DataFrame) => DataFrame)
       : DataStreamWriter[Row] =
-    pinnedBatchSink(hist, baseDir, checkpointDir) { (pinned, _, _) =>
+    pinnedBatchSink(hist, baseDir, checkpointDir) { (pinned, _, pins) =>
       if (!pinned.isEmpty) {
         val spark = pinned.sparkSession
         val known =
           index.fold(spark.emptyDataFrame)(readFirstSeen(spark, _))
-        val rows = fold(pinned, known)
+        val rows = pins.hold(fold(pinned, known))
         val keyed =
           if (keyCol != "wkey") rows
           else rows.withColumn("wkey",
@@ -1077,17 +1084,14 @@ object IO {
   def deleteFromWindowedMetricsStore(spark: SparkSession, baseDir: String,
                                      windows: DataFrame,
                                      retain: Int = 3): Long = {
-    val versions = snapshotVersions(spark, baseDir)
-    if (versions.isEmpty) return 0L
-    val live = graft.streaming.Cdc.liveView(
-      readSnapshotVersion(spark, baseDir, versions.last,
-        WindowedMetricsSchema))
-    val doomed = live.select(col("window_start"))
-      .join(windows.select(col("window_start")).distinct(),
-        Seq("window_start"), "left_semi")
-      .localCheckpoint(eager = true) // window-count-sized, consumed twice
+    val (latest, snap) = latestSnapshot(spark, baseDir, WindowedMetricsSchema)
+    if (latest == 0L) return 0L
+    // window-count-sized, consumed twice; its count rides the pin's job
+    val (doomed, n) = Checkpoints.pinCounted(
+      graft.streaming.Cdc.liveView(snap).select(col("window_start"))
+        .join(windows.select(col("window_start")).distinct(),
+          Seq("window_start"), "left_semi"))
     try {
-      val n = doomed.count()
       if (n > 0) {
         val tombstones = doomed
           .withColumn("n_pos", lit(null).cast("long"))
@@ -1288,14 +1292,11 @@ object IO {
   def expireWindowedMetrics(spark: SparkSession, baseDir: String,
                             cutoff: java.sql.Timestamp,
                             retain: Int = 3): Long = {
-    val versions = snapshotVersions(spark, baseDir)
-    if (versions.isEmpty) return 0L
-    val old = graft.streaming.Cdc.liveView(
-        readSnapshotVersion(spark, baseDir, versions.last,
-          WindowedMetricsSchema))
-      .filter(col("window_start") < lit(cutoff))
-      .select(col("window_start"))
-    deleteFromWindowedMetricsStore(spark, baseDir, old, retain)
+    val (_, snap) = latestSnapshot(spark, baseDir, WindowedMetricsSchema)
+    deleteFromWindowedMetricsStore(spark, baseDir,
+      graft.streaming.Cdc.liveView(snap)
+        .filter(col("window_start") < lit(cutoff))
+        .select(col("window_start")), retain)
   }
 
   /** Complete snapshot versions under `baseDir`, ascending. */

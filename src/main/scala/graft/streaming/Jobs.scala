@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 
@@ -12,6 +12,21 @@ import graft.functions.Text
   */
 object Jobs {
 
+  /** The one windowed-aggregate shape the window relations below end in
+    * (Structured Streaming's watermark → `window()` → group → aggregate):
+    * group `df` by the tumbling window of `ts` and `keys`, aggregate,
+    * and lead the projection with the window's start as `window_start`
+    * ahead of the builder's own `out` columns. The caller places the
+    * watermark (it must stay upstream of the aggregate). State is keyed
+    * by (window, keys); in append mode each row emits exactly once, when
+    * the watermark passes the window end, and late rows drop. */
+  private def windowAgg(df: DataFrame, ts: Column, windowDur: String,
+                        keys: Seq[Column], aggs: Seq[Column])
+                       (out: Column*): DataFrame =
+    df.groupBy(window(ts, windowDur) +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("window.start").as("window_start") +: out: _*)
+
   /** The DWS traffic-keyword job (SURVEY.md §3.3, the reference's
     * signature composition): text events → tokenize (UDTF shape) →
     * watermarked tumbling window → per-window keyword counts.
@@ -21,13 +36,10 @@ object Jobs {
   def keywordWindowCounts(textStream: DataFrame, tsCol: String,
                           textCol: String, windowDur: String,
                           watermarkDelay: String): DataFrame =
-    textStream
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), explode(Text.tokens(col(textCol))).as("word"))
-      .groupBy(window(col(tsCol), windowDur), col("word"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("word"), col("cnt"))
+    windowAgg(textStream.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), explode(Text.tokens(col(textCol))).as("word")),
+      col(tsCol), windowDur, Seq(col("word")), Seq(count(lit(1)).as("cnt")))(
+      col("window.end").as("window_end"), col("word"), col("cnt"))
 
   /** The DWD log-split job (SURVEY.md §3.2 shape): dirty-JSON guard then
     * fan-out by payload type. Input: raw JSON strings with a `type` field
@@ -53,12 +65,10 @@ object Jobs {
   def userWindowSpend(events: DataFrame, tsCol: String, userCol: String,
                       valueCol: String, windowDur: String,
                       watermarkDelay: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur), col(userCol))
-      .agg(sum(col(valueCol)).as("spend"), count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col(userCol),
-        col("spend"), col("n_events"))
+    windowAgg(events.withWatermark(tsCol, watermarkDelay), col(tsCol),
+      windowDur, Seq(col(userCol)),
+      Seq(sum(col(valueCol)).as("spend"), count(lit(1)).as("n_events")))(
+      col(userCol), col("spend"), col("n_events"))
 
   /** The DWS hot-keys job: watermarked tumbling per-key counts. In
     * append mode each window's counts emit exactly once, when the
@@ -69,12 +79,9 @@ object Jobs {
     * (window_start, key, cnt). */
   def hotKeysPerWindow(events: DataFrame, tsCol: String, keyCol: String,
                        windowDur: String, watermarkDelay: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur), col(keyCol))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"),
-        col(keyCol).as("key"), col("cnt"))
+    windowAgg(events.withWatermark(tsCol, watermarkDelay), col(tsCol),
+      windowDur, Seq(col(keyCol)), Seq(count(lit(1)).as("cnt")))(
+      col(keyCol).as("key"), col("cnt"))
 
   /** The DWS unique-visitors job: watermarked tumbling windows with an
     * APPROXIMATE distinct-user count (HyperLogLog++). The sketch merges
@@ -84,13 +91,11 @@ object Jobs {
   def windowedUniques(events: DataFrame, tsCol: String, userCol: String,
                       windowDur: String, watermarkDelay: String,
                       rsd: Double = 0.05): DataFrame =
-    events
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(approx_count_distinct(col(userCol), rsd).as("approx_uniques"),
-        count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"),
-        col("approx_uniques"), col("n_events"))
+    windowAgg(events.withWatermark(tsCol, watermarkDelay), col(tsCol),
+      windowDur, Nil,
+      Seq(approx_count_distinct(col(userCol), rsd).as("approx_uniques"),
+        count(lit(1)).as("n_events")))(
+      col("approx_uniques"), col("n_events"))
 
   /** Chained two-level windowed aggregation (Spark ≥3.4 multiple
     * stateful operators): fine-grain tumbling counts roll up into a
@@ -103,14 +108,12 @@ object Jobs {
   def chainedWindowRollup(events: DataFrame, tsCol: String, keyCol: String,
                           fineDur: String, coarseDur: String,
                           watermarkDelay: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), fineDur), col(keyCol))
-      .agg(count(lit(1)).as("fine_cnt"))
-      .groupBy(window(window_time(col("window")), coarseDur), col(keyCol))
-      .agg(sum(col("fine_cnt")).as("cnt"))
-      .select(col("window.start").as("window_start"),
-        col(keyCol).as("key"), col("cnt"))
+    windowAgg(events
+        .withWatermark(tsCol, watermarkDelay)
+        .groupBy(window(col(tsCol), fineDur), col(keyCol))
+        .agg(count(lit(1)).as("fine_cnt")),
+      window_time(col("window")), coarseDur, Seq(col(keyCol)),
+      Seq(sum(col("fine_cnt")).as("cnt")))(col(keyCol).as("key"), col("cnt"))
 
   /** Streaming twin of the batch graph pack's `q_graph_degree`
     * (SURVEY.md §2.K): per-window weighted degree over a trade-edge
@@ -119,11 +122,9 @@ object Jobs {
     * The edge stream is symmetrized by a union of two projections of
     * the SAME watermarked stream before the windowed aggregate (both
     * branches carry the watermark, so append-mode finalize-once
-    * semantics hold: each (window, node) row emits exactly once when
-    * the watermark passes the window end, late edges drop). State is
-    * (open windows × nodes)-sized — never edge-sized — which is what
-    * survives an unbounded edge stream. Output: (window_start, node,
-    * out_w, out_edges, in_w, in_edges). */
+    * semantics hold). State is (open windows × nodes)-sized — never
+    * edge-sized — which is what survives an unbounded edge stream.
+    * Output: (window_start, node, out_w, out_edges, in_w, in_edges). */
   def windowedDegree(edges: DataFrame, tsCol: String, srcCol: String,
                      dstCol: String, weightCol: String, windowDur: String,
                      watermarkDelay: String): DataFrame = {
@@ -134,14 +135,13 @@ object Jobs {
     val ins = wm.select(col(tsCol).as("__ts"), col(dstCol).as("node"),
       lit(0.0).as("out_w"), lit(0L).as("out_edges"),
       col(weightCol).cast("double").as("in_w"), lit(1L).as("in_edges"))
-    outs.union(ins)
-      .groupBy(window(col("__ts"), windowDur), col("node"))
-      .agg(round(sum(col("out_w")), 2).as("out_w"),
+    windowAgg(outs.union(ins), col("__ts"), windowDur, Seq(col("node")),
+      Seq(round(sum(col("out_w")), 2).as("out_w"),
         sum(col("out_edges")).as("out_edges"),
         round(sum(col("in_w")), 2).as("in_w"),
-        sum(col("in_edges")).as("in_edges"))
-      .select(col("window.start").as("window_start"), col("node"),
-        col("out_w"), col("out_edges"), col("in_w"), col("in_edges"))
+        sum(col("in_edges")).as("in_edges")))(
+      col("node"), col("out_w"), col("out_edges"), col("in_w"),
+      col("in_edges"))
   }
 
   /** Per-window (score → class counts) histogram over a labeled event
@@ -151,9 +151,7 @@ object Jobs {
     * State is (open windows × score domain)-sized — the score domain is
     * bounded by construction (the at-scale AUC contract: continuous
     * scores get bucketed before this job), so state never grows with
-    * the event rate. Append mode: each (window, score) row emits
-    * exactly once when the watermark passes the window end; late rows
-    * drop. `labelCol` is numeric, nonzero = positive; NULL labels are
+    * the event rate. Append mode. `labelCol` is numeric, nonzero = positive; NULL labels are
     * FILTERED before the aggregate (an unlabeled event belongs to
     * neither class — dropping it keeps pos+neg equal to the counted
     * row population instead of silently understating both). Output:
@@ -163,13 +161,12 @@ object Jobs {
                              scoreCol: String, labelCol: String,
                              windowDur: String,
                              watermarkDelay: String): DataFrame =
-    events.filter(col(labelCol).isNotNull)
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur), col(scoreCol).as("score"))
-      .agg(sum(when(col(labelCol) =!= 0, 1L).otherwise(0L)).as("pos"),
-        sum(when(col(labelCol) === 0, 1L).otherwise(0L)).as("neg"))
-      .select(col("window.start").as("window_start"), col("score"),
-        col("pos"), col("neg"))
+    windowAgg(events.filter(col(labelCol).isNotNull)
+        .withWatermark(tsCol, watermarkDelay), col(tsCol), windowDur,
+      Seq(col(scoreCol).as("score")),
+      Seq(sum(when(col(labelCol) =!= 0, 1L).otherwise(0L)).as("pos"),
+        sum(when(col(labelCol) === 0, 1L).otherwise(0L)).as("neg")))(
+      col("score"), col("pos"), col("neg"))
 
   /** Per-window ROC-AUC over a FINALIZED [[windowedClassHistogram]]
     * micro-batch — [[graft.operators.Analytics.aucFromHistogram]] keyed
@@ -251,8 +248,7 @@ object Jobs {
     * distinct shingles broadcast into a stream-static left join ahead
     * of the windowed aggregate (the q_contamination_frac plan, window-
     * keyed instead of doc-keyed), so state is open-windows-sized, two
-    * longs each. Append mode: each window's row emits exactly once when
-    * the watermark passes its end. Feed finalized micro-batches to
+    * longs each. Append mode; feed finalized micro-batches to
     * [[contaminationFracPerWindow]]. */
   def windowedShingleHits(docs: DataFrame, tsCol: String, textCol: String,
                           probe: DataFrame, probeTextCol: String,
@@ -262,16 +258,15 @@ object Jobs {
       .select(explode(graft.operators.Dedup.shingleSet(5)(
         Text.tokens(col(probeTextCol)))).as("sh"))
       .distinct().withColumn("__hit", lit(1))
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol),
-        explode(graft.operators.Dedup.shingleSet(5)(
-          Text.tokens(col(textCol)))).as("sh"))
-      .join(broadcast(probeSh), Seq("sh"), "left")
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("__hit").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("window.start").as("window_start"),
-        col("n_shingles"), col("n_hit"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol),
+          explode(graft.operators.Dedup.shingleSet(5)(
+            Text.tokens(col(textCol)))).as("sh"))
+        .join(broadcast(probeSh), Seq("sh"), "left"),
+      col(tsCol), windowDur, Nil,
+      Seq(count(lit(1)).as("n_shingles"),
+        sum(when(col("__hit").isNotNull, 1L).otherwise(0L)).as("n_hit")))(
+      col("n_shingles"), col("n_hit"))
   }
 
   /** Per-window contamination fraction over a FINALIZED
@@ -300,15 +295,13 @@ object Jobs {
   def windowedGramDocCounts(docs: DataFrame, tsCol: String, idCol: String,
                             textCol: String, windowDur: String,
                             watermarkDelay: String): DataFrame =
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), col(idCol).as("doc_id"),
-        explode(graft.operators.Dedup.shingleList(8)(
-          Text.tokens(col(textCol)))).as("sh_str"))
-      .select(col(tsCol), col("doc_id"), xxhash64(col("sh_str")).as("sh"))
-      .groupBy(window(col(tsCol), windowDur), col("sh"), col("doc_id"))
-      .agg(count(lit(1)).as("n_pos"))
-      .select(col("window.start").as("window_start"), col("sh"),
-        col("doc_id"), col("n_pos"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), col(idCol).as("doc_id"),
+          explode(graft.operators.Dedup.shingleList(8)(
+            Text.tokens(col(textCol)))).as("sh_str"))
+        .select(col(tsCol), col("doc_id"), xxhash64(col("sh_str")).as("sh")),
+      col(tsCol), windowDur, Seq(col("sh"), col("doc_id")),
+      Seq(count(lit(1)).as("n_pos")))(col("sh"), col("doc_id"), col("n_pos"))
 
   /** Per-window BOILERPLATE MASS over a FINALIZED
     * [[windowedGramDocCounts]] micro-batch — the live twin of the batch
@@ -349,11 +342,10 @@ object Jobs {
   def windowedTokenCounts(docs: DataFrame, tsCol: String, textCol: String,
                           windowDur: String,
                           watermarkDelay: String): DataFrame =
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), explode(Text.tokens(col(textCol))).as("tok"))
-      .groupBy(window(col(tsCol), windowDur), col("tok"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("window.start").as("window_start"), col("tok"), col("c"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), explode(Text.tokens(col(textCol))).as("tok")),
+      col(tsCol), windowDur, Seq(col("tok")), Seq(count(lit(1)).as("c")))(
+      col("tok"), col("c"))
 
   /** Per-window TYPE-TOKEN RATIO and hapax share over a FINALIZED
     * [[windowedTokenCounts]] micro-batch — the live twin of the batch
@@ -388,15 +380,13 @@ object Jobs {
   def windowedGramDocFreq(docs: DataFrame, tsCol: String, textCol: String,
                           windowDur: String,
                           watermarkDelay: String): DataFrame =
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol),
-        explode(graft.operators.Dedup.shingleSet(3)(
-          Text.tokens(col(textCol)))).as("sh_str"))
-      .select(col(tsCol), xxhash64(col("sh_str")).as("sh"))
-      .groupBy(window(col(tsCol), windowDur), col("sh"))
-      .agg(count(lit(1)).as("n_docs"))
-      .select(col("window.start").as("window_start"), col("sh"),
-        col("n_docs"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol),
+          explode(graft.operators.Dedup.shingleSet(3)(
+            Text.tokens(col(textCol)))).as("sh_str"))
+        .select(col(tsCol), xxhash64(col("sh_str")).as("sh")),
+      col(tsCol), windowDur, Seq(col("sh")), Seq(count(lit(1)).as("n_docs")))(
+      col("sh"), col("n_docs"))
 
   /** Per-window NOVELTY over a FINALIZED [[windowedGramDocFreq]]
     * micro-batch — the live twin of the batch `q_ngram_novelty` id with
@@ -409,22 +399,10 @@ object Jobs {
     * HALF_UP fold ([[graft.operators.Analytics.halfUpPpm]] — parity by
     * construction, the q_auc convention) over the window sums. A
     * falling novelty_ppm says the crawl started re-reading itself —
-    * the live form of the batch id's collapse localization.
-    *
-    * Replay stability: an indexed gram whose `first_window` falls
-    * INSIDE this batch (a torn replay of this batch's own index append)
-    * still attributes its novelty to that window — decisions are a pure
-    * function of min(first_window), so a replayed batch reproduces its
-    * original rows even after its append landed. */
-  def noveltyPerWindow(batch: DataFrame, knownGrams: DataFrame): DataFrame = {
-    val first = batch.groupBy("sh")
-      .agg(min(col("window_start")).as("w_batch"))
-      .join(knownGrams.select(col("sh"), col("first_window").as("w_idx")),
-        Seq("sh"), "left")
-      .select(col("sh"),
-        when(col("w_idx").isNotNull && col("w_idx") <= col("w_batch"),
-          col("w_idx")).otherwise(col("w_batch")).as("first_window"))
-    batch.join(first, Seq("sh"))
+    * the live form of the batch id's collapse localization. Attribution
+    * is [[firstSeen]]'s, so a replayed batch reproduces its rows. */
+  def noveltyPerWindow(batch: DataFrame, knownGrams: DataFrame): DataFrame =
+    firstSeen(batch, knownGrams, "sh")
       .groupBy("window_start")
       .agg(sum(col("n_docs")).as("n_grams"),
         sum(when(col("first_window") === col("window_start"), 1L)
@@ -432,6 +410,28 @@ object Jobs {
       .withColumn("novelty_ppm",
         graft.operators.Analytics.halfUpPpm(col("n_novel"), col("n_grams")))
       .select("window_start", "n_grams", "n_novel", "novelty_ppm")
+
+  /** `batch` with each key's FIRST window attached as `first_window`:
+    * the earliest window carrying the key across the batch ∪ the
+    * persisted first-seen index `known` ((key, first_window); an empty
+    * relation for a cold start) — the attribution the novelty, by-source
+    * novelty and duplication-rate folds share.
+    *
+    * Replay stability: an indexed key whose `first_window` falls INSIDE
+    * this batch (a torn replay of this batch's own index append) still
+    * attributes to that window — decisions are a pure function of
+    * min(first_window), so a replayed batch reproduces its original rows
+    * even after its append landed. */
+  private def firstSeen(batch: DataFrame, known: DataFrame,
+                        key: String): DataFrame = {
+    val first = batch.groupBy(key)
+      .agg(min(col("window_start")).as("w_batch"))
+      .join(known.select(col(key), col("first_window").as("w_idx")),
+        Seq(key), "left")
+      .select(col(key),
+        when(col("w_idx").isNotNull && col("w_idx") <= col("w_batch"),
+          col("w_idx")).otherwise(col("w_batch")).as("first_window"))
+    batch.join(first, Seq(key))
   }
 
   /** Per-(window, source) doc-distinct 3-gram relation — the
@@ -451,17 +451,16 @@ object Jobs {
                                 idCol: String, sourceCol: String,
                                 textCol: String, windowDur: String,
                                 watermarkDelay: String): DataFrame =
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), col(idCol).as("doc_id"),
-        col(sourceCol).as("source"),
-        explode(graft.operators.Dedup.shingleSet(3)(
-          Text.tokens(col(textCol)))).as("sh_str"))
-      .select(col(tsCol), col("doc_id"), col("source"),
-        xxhash64(col("sh_str")).as("sh"))
-      .groupBy(window(col(tsCol), windowDur), col("source"), col("sh"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
-      .select(col("window.start").as("window_start"), col("source"),
-        col("sh"), col("n_docs"), col("min_doc"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), col(idCol).as("doc_id"),
+          col(sourceCol).as("source"),
+          explode(graft.operators.Dedup.shingleSet(3)(
+            Text.tokens(col(textCol)))).as("sh_str"))
+        .select(col(tsCol), col("doc_id"), col("source"),
+          xxhash64(col("sh_str")).as("sh")),
+      col(tsCol), windowDur, Seq(col("source"), col("sh")),
+      Seq(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc")))(
+      col("source"), col("sh"), col("n_docs"), col("min_doc"))
 
   /** Per-(window, source) NOVELTY over a FINALIZED
     * [[windowedGramSourceDocFreq]] micro-batch — the live twin of the
@@ -486,19 +485,12 @@ object Jobs {
     * corpus audit.
     *
     * Replay stability: decisions are a pure function of
-    * min(first_window) and min(min_doc), so a torn replay (index append
-    * landed, marker didn't) reproduces its original rows — the
-    * [[noveltyPerWindow]] argument, per source. */
+    * min(first_window) ([[firstSeen]]) and min(min_doc), so a torn
+    * replay (index append landed, marker didn't) reproduces its
+    * original rows. */
   def noveltyBySourcePerWindow(batch: DataFrame,
                                knownGrams: DataFrame): DataFrame = {
-    val first = batch.groupBy("sh")
-      .agg(min(col("window_start")).as("w_batch"))
-      .join(knownGrams.select(col("sh"), col("first_window").as("w_idx")),
-        Seq("sh"), "left")
-      .select(col("sh"),
-        when(col("w_idx").isNotNull && col("w_idx") <= col("w_batch"),
-          col("w_idx")).otherwise(col("w_batch")).as("first_window"))
-    val attributed = batch.join(first, Seq("sh"))
+    val attributed = firstSeen(batch, knownGrams, "sh")
     // the gram's owner inside its first window: the source with the
     // smallest doc id — ties impossible (doc ids are unique)
     val winners = attributed
@@ -527,12 +519,10 @@ object Jobs {
   def windowedFpCounts(docs: DataFrame, tsCol: String, textCol: String,
                        windowDur: String,
                        watermarkDelay: String): DataFrame =
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), md5(col(textCol)).as("fp"))
-      .groupBy(window(col(tsCol), windowDur), col("fp"))
-      .agg(count(lit(1)).as("n_docs"))
-      .select(col("window.start").as("window_start"), col("fp"),
-        col("n_docs"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), md5(col(textCol)).as("fp")),
+      col(tsCol), windowDur, Seq(col("fp")), Seq(count(lit(1)).as("n_docs")))(
+      col("fp"), col("n_docs"))
 
   /** Per-window exact-DUPLICATION rate over a FINALIZED
     * [[windowedFpCounts]] micro-batch — the live twin of the
@@ -548,21 +538,10 @@ object Jobs {
     * convention). A rising dup_ppm curve is the "crawl looped back onto
     * itself" alarm at EXACT-copy granularity — cheaper and earlier than
     * the near-dup gate, which is why pipelines monitor it even with
-    * gating off.
-    *
-    * Replay stability: attribution is a pure function of
-    * min(first_window), the [[noveltyPerWindow]] argument verbatim —
-    * an indexed fp whose first_window falls inside a torn replayed
-    * batch still attributes its canonical copy to that window. */
-  def dupRatePerWindow(batch: DataFrame, knownFps: DataFrame): DataFrame = {
-    val first = batch.groupBy("fp")
-      .agg(min(col("window_start")).as("w_batch"))
-      .join(knownFps.select(col("fp"), col("first_window").as("w_idx")),
-        Seq("fp"), "left")
-      .select(col("fp"),
-        when(col("w_idx").isNotNull && col("w_idx") <= col("w_batch"),
-          col("w_idx")).otherwise(col("w_batch")).as("first_window"))
-    batch.join(first, Seq("fp"))
+    * gating off. Attribution is [[firstSeen]]'s, so a torn replayed
+    * batch attributes each canonical copy as it did the first time. */
+  def dupRatePerWindow(batch: DataFrame, knownFps: DataFrame): DataFrame =
+    firstSeen(batch, knownFps, "fp")
       .groupBy("window_start")
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(when(col("first_window") === col("window_start"),
@@ -570,7 +549,6 @@ object Jobs {
       .withColumn("dup_ppm",
         graft.operators.Analytics.halfUpPpm(col("n_dup"), col("n_docs")))
       .select("window_start", "n_docs", "n_dup", "dup_ppm")
-  }
 
   /** Per-(window, source, lang) doc counts — the raw relation of the
     * live MIX-DRIFT monitor (the SIXTH corpus-audit monitor beside
@@ -582,12 +560,11 @@ object Jobs {
   def windowedLangCounts(docs: DataFrame, tsCol: String, sourceCol: String,
                          langCol: String, windowDur: String,
                          watermarkDelay: String): DataFrame =
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), col(sourceCol).as("source"), col(langCol).as("lang"))
-      .groupBy(window(col(tsCol), windowDur), col("source"), col("lang"))
-      .agg(count(lit(1)).as("n_sl"))
-      .select(col("window.start").as("window_start"), col("source"),
-        col("lang"), col("n_sl"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), col(sourceCol).as("source"),
+          col(langCol).as("lang")),
+      col(tsCol), windowDur, Seq(col("source"), col("lang")),
+      Seq(count(lit(1)).as("n_sl")))(col("source"), col("lang"), col("n_sl"))
 
   /** Per-(window, source) language-mix DRIFT over a FINALIZED
     * [[windowedLangCounts]] micro-batch — the live twin of the batch
@@ -658,18 +635,17 @@ object Jobs {
                           lm: DataFrame, windowDur: String,
                           watermarkDelay: String,
                           buckets: Int = 4096): DataFrame =
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), col(sourceCol).as("source"),
-        explode(Text.tokens(col(textCol))).as("w"))
-      .withColumn("b", pmod(
-        graft.operators.Dedup.portableHash64(concat(lit("dsir:"), col("w"))),
-        lit(buckets.toLong)))
-      .join(broadcast(lm.select("b", "ratio_pico")), Seq("b"))
-      .groupBy(window(col(tsCol), windowDur), col("source"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(col("ratio_pico")).as("weight_pico"))
-      .select(col("window.start").as("window_start"), col("source"),
-        col("n_tokens"), col("weight_pico"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), col(sourceCol).as("source"),
+          explode(Text.tokens(col(textCol))).as("w"))
+        .withColumn("b", pmod(
+          graft.operators.Dedup.portableHash64(concat(lit("dsir:"), col("w"))),
+          lit(buckets.toLong)))
+        .join(broadcast(lm.select("b", "ratio_pico")), Seq("b")),
+      col(tsCol), windowDur, Seq(col("source")),
+      Seq(count(lit(1)).as("n_tokens"),
+        sum(col("ratio_pico")).as("weight_pico")))(
+      col("source"), col("n_tokens"), col("weight_pico"))
 
   /** Per-(window, source) QUALITY reading over a FINALIZED
     * [[windowedQualitySums]] micro-batch — the live twin of the batch
@@ -700,16 +676,15 @@ object Jobs {
                         textCol: String, windowDur: String,
                         watermarkDelay: String,
                         seqLen: Long = 512L): DataFrame =
-    docs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), col(sourceCol).as("source"),
-        Text.tokenCount(col(textCol)).as("n"))
-      .withColumn("padded", // the q_pad_waste expression, verbatim
-        expr(s"greatest((n + ${seqLen - 1}) div $seqLen, 1) * $seqLen"))
-      .groupBy(window(col(tsCol), windowDur), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"),
-        sum(col("padded") - col("n")).as("n_pad"))
-      .select(col("window.start").as("window_start"), col("source"),
-        col("n_docs"), col("n_tokens"), col("n_pad"))
+    windowAgg(docs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), col(sourceCol).as("source"),
+          Text.tokenCount(col(textCol)).as("n"))
+        .withColumn("padded", // the q_pad_waste expression, verbatim
+          expr(s"greatest((n + ${seqLen - 1}) div $seqLen, 1) * $seqLen")),
+      col(tsCol), windowDur, Seq(col("source")),
+      Seq(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"),
+        sum(col("padded") - col("n")).as("n_pad")))(
+      col("source"), col("n_docs"), col("n_tokens"), col("n_pad"))
 
   /** Per-(window, source) PAD-WASTE reading over a FINALIZED
     * [[windowedPadTokens]] micro-batch — the live twin of the batch
@@ -737,13 +712,11 @@ object Jobs {
   def windowedBucketCounts(vecs: DataFrame, tsCol: String, vecCol: String,
                            windowDur: String,
                            watermarkDelay: String): DataFrame =
-    vecs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol),
-        graft.operators.Sampling.diversityBucket(col(vecCol)).as("bucket"))
-      .groupBy(window(col(tsCol), windowDur), col("bucket"))
-      .agg(count(lit(1)).as("n_b"))
-      .select(col("window.start").as("window_start"), col("bucket"),
-        col("n_b"))
+    windowAgg(vecs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol),
+          graft.operators.Sampling.diversityBucket(col(vecCol)).as("bucket")),
+      col(tsCol), windowDur, Seq(col("bucket")), Seq(count(lit(1)).as("n_b")))(
+      col("bucket"), col("n_b"))
 
   /** Per-(window, source, semantic-bucket) vector counts — the WHO twin
     * of [[windowedBucketCounts]] (the noveltyBySource convention: the
@@ -755,13 +728,11 @@ object Jobs {
                                    sourceCol: String, vecCol: String,
                                    windowDur: String,
                                    watermarkDelay: String): DataFrame =
-    vecs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol), col(sourceCol).as("source"),
-        graft.operators.Sampling.diversityBucket(col(vecCol)).as("bucket"))
-      .groupBy(window(col(tsCol), windowDur), col("source"), col("bucket"))
-      .agg(count(lit(1)).as("n_b"))
-      .select(col("window.start").as("window_start"), col("source"),
-        col("bucket"), col("n_b"))
+    windowAgg(vecs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol), col(sourceCol).as("source"),
+          graft.operators.Sampling.diversityBucket(col(vecCol)).as("bucket")),
+      col(tsCol), windowDur, Seq(col("source"), col("bucket")),
+      Seq(count(lit(1)).as("n_b")))(col("source"), col("bucket"), col("n_b"))
 
   /** Per-(window, source) semantic-diversity reading over a FINALIZED
     * [[windowedBucketCountsBySource]] micro-batch — the by-source twin
@@ -772,23 +743,8 @@ object Jobs {
     * window. Restricting the batch to ONE source reproduces the
     * per-window fold exactly (the rollup-parity law pinned in
     * StreamingSpec). */
-  def bucketEntropyBySourcePerWindow(batch: DataFrame): DataFrame = {
-    // (source × bucket)-bounded micro-batch relation, read twice —
-    // pinned like bucketEntropyPerWindow's
-    val p = batch.localCheckpoint(true)
-    val n = p.groupBy("window_start", "source").agg(sum(col("n_b")).as("n"))
-    p.join(n, Seq("window_start", "source"))
-      .withColumn("term_pico",
-        floor((col("n_b").cast("double") / col("n")) * lit(-1.0) *
-          log(col("n_b").cast("double") / col("n")) * lit(1e12))
-          .cast("long"))
-      .groupBy("window_start", "source")
-      .agg(max("n").as("n_vecs"), count(lit(1)).as("n_buckets"),
-        sum("term_pico").as("entropy_pico"),
-        max("n_b").as("max_bucket"), min("n_b").as("min_bucket"))
-      .select("window_start", "source", "n_vecs", "n_buckets",
-        "entropy_pico", "max_bucket", "min_bucket")
-  }
+  def bucketEntropyBySourcePerWindow(batch: DataFrame): DataFrame =
+    entropyFold(batch, Seq("window_start", "source"))
 
   /** Per-window semantic-DIVERSITY reading over a FINALIZED
     * [[windowedBucketCounts]] micro-batch — the live twin of the batch
@@ -801,22 +757,30 @@ object Jobs {
     * semantic region — the reading that decides whether the
     * [[graft.sources.IO.diversityGateSink]] cap needs to bind, caught
     * as the window closes. */
-  def bucketEntropyPerWindow(batch: DataFrame): DataFrame = {
+  def bucketEntropyPerWindow(batch: DataFrame): DataFrame =
+    entropyFold(batch, Seq("window_start"))
+
+  /** The bucket-entropy fold both diversity readings share, per `keys`
+    * group of a finalized (keys, bucket, n_b) batch: the group's vector
+    * count, occupied buckets, pico-quantized Shannon entropy (the
+    * q_bucket_entropy term, summed as exact longs) and occupancy
+    * extremes. */
+  private def entropyFold(batch: DataFrame, keys: Seq[String]): DataFrame = {
     // bucket-bounded micro-batch relation, read twice (the total fold
     // and the term fold) — pinned like mixDriftPerWindow's
     val p = batch.localCheckpoint(true)
-    val n = p.groupBy("window_start").agg(sum(col("n_b")).as("n"))
-    p.join(n, Seq("window_start"))
+    val n = p.groupBy(keys.map(col): _*).agg(sum(col("n_b")).as("n"))
+    p.join(n, keys)
       .withColumn("term_pico",
         floor((col("n_b").cast("double") / col("n")) * lit(-1.0) *
           log(col("n_b").cast("double") / col("n")) * lit(1e12))
           .cast("long"))
-      .groupBy("window_start")
+      .groupBy(keys.map(col): _*)
       .agg(max("n").as("n_vecs"), count(lit(1)).as("n_buckets"),
         sum("term_pico").as("entropy_pico"),
         max("n_b").as("max_bucket"), min("n_b").as("min_bucket"))
-      .select("window_start", "n_vecs", "n_buckets", "entropy_pico",
-        "max_bucket", "min_bucket")
+      .select((keys ++ Seq("n_vecs", "n_buckets", "entropy_pico",
+        "max_bucket", "min_bucket")).map(col): _*)
   }
 
   /** Per-(window, PC1-projection-bucket) vector counts against a FIXED
@@ -832,18 +796,16 @@ object Jobs {
                           m: Array[Long], v: Array[Long], bucketWidth: Long,
                           windowDur: String,
                           watermarkDelay: String): DataFrame =
-    vecs.withWatermark(tsCol, watermarkDelay)
-      .select(col(tsCol),
-        graft.operators.Spectral.quantCol(vecCol).as("__qa"))
-      .select(col(tsCol),
-        graft.operators.Spectral.projectionCol("__qa", m, v).as("__proj"))
-      .select(col(tsCol),
-        graft.operators.Spectral.bucketCol("__proj", bucketWidth)
-          .as("bucket"))
-      .groupBy(window(col(tsCol), windowDur), col("bucket"))
-      .agg(count(lit(1)).as("n_b"))
-      .select(col("window.start").as("window_start"), col("bucket"),
-        col("n_b"))
+    windowAgg(vecs.withWatermark(tsCol, watermarkDelay)
+        .select(col(tsCol),
+          graft.operators.Spectral.quantCol(vecCol).as("__qa"))
+        .select(col(tsCol),
+          graft.operators.Spectral.projectionCol("__qa", m, v).as("__proj"))
+        .select(col(tsCol),
+          graft.operators.Spectral.bucketCol("__proj", bucketWidth)
+            .as("bucket")),
+      col(tsCol), windowDur, Seq(col("bucket")), Seq(count(lit(1)).as("n_b")))(
+      col("bucket"), col("n_b"))
 
   /** Per-window spectral drift reading over a FINALIZED
     * [[windowedProjBuckets]] micro-batch: vector count, occupied

@@ -23,33 +23,21 @@ object Streams {
 
   /** Tumbling event-time window aggregate — the DWS signature shape.
     * `aggs` are standard agg columns (sum/count/…); output carries
-    * window_start/window_end plus the keys. */
+    * the keys and aggregates, then window_start/window_end. */
   def tumblingAgg(df: DataFrame, tsCol: String, duration: String,
                   keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.groupBy(window(col(tsCol), duration) +: keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start", col("window.start"))
-      .withColumn("window_end", col("window.end"))
-      .drop("window")
+    windowed(df, window(col(tsCol), duration), "window", keys, aggs)
 
   /** Sliding (hopping) event-time window aggregate. */
   def slidingAgg(df: DataFrame, tsCol: String, duration: String, slide: String,
                  keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.groupBy(window(col(tsCol), duration, slide) +: keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start", col("window.start"))
-      .withColumn("window_end", col("window.end"))
-      .drop("window")
+    windowed(df, window(col(tsCol), duration, slide), "window", keys, aggs)
 
   /** Gap-based session window aggregate (visit sessionization of the
     * reference's `topic_log` traffic). */
   def sessionAgg(df: DataFrame, tsCol: String, gap: String,
                  keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.groupBy(session_window(col(tsCol), gap) +: keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start", col("session_window.start"))
-      .withColumn("window_end", col("session_window.end"))
-      .drop("session_window")
+    windowed(df, session_window(col(tsCol), gap), "session_window", keys, aggs)
 
   /** Gap-based session windows with a PER-ROW dynamic gap (Spark's
     * `session_window(ts, gapExpr)` form): each row extends its session
@@ -58,11 +46,19 @@ object Streams {
     * the fixed-gap [[sessionAgg]]. */
   def sessionAggDynamicGap(df: DataFrame, tsCol: String, gap: Column,
                            keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.groupBy(session_window(col(tsCol), gap) +: keys.map(col): _*)
+    windowed(df, session_window(col(tsCol), gap), "session_window", keys, aggs)
+
+  /** The one body of the window verbs above: group by the window
+    * expression `win` (whose struct column Spark names `struct`) and the
+    * keys, aggregate, and flatten the struct into trailing
+    * window_start/window_end columns. */
+  private def windowed(df: DataFrame, win: Column, struct: String,
+                       keys: Seq[String], aggs: Seq[Column]): DataFrame =
+    df.groupBy(win +: keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start", col("session_window.start"))
-      .withColumn("window_end", col("session_window.end"))
-      .drop("session_window")
+      .withColumn("window_start", col(s"$struct.start"))
+      .withColumn("window_end", col(s"$struct.end"))
+      .drop(struct)
 
   /** Streaming exact dedup bounded by the watermark
     * (`dropDuplicatesWithinWatermark`): state for a key is held only until

@@ -125,6 +125,24 @@ class SourceScanSpec extends AnyFunSuite {
         "artifact read through IO.readArtifact, or pin the site here with its reason")
   }
 
+  test("window_start census under streaming/ is pinned to the one windowed-aggregate core") {
+    // every window relation groups, aggregates and leads with the
+    // window's start through Jobs.windowAgg; a builder that spells the
+    // shape by hand again shows up here
+    val expected = Map("streaming/Jobs.scala" -> 1)
+    val root = Paths.get("src/main/scala/graft")
+    val start = java.util.regex.Pattern.quote("col(\"window.start\")").r
+    val census = (for {
+      f <- scalaFiles(root.resolve("streaming"))
+      line <- new String(Files.readAllBytes(f), "UTF-8").linesIterator
+      if !line.trim.startsWith("*") && !line.trim.startsWith("//")
+      _ <- start.findAllMatchIn(line)
+    } yield root.relativize(f).toString).groupBy(identity).map { case (f, n) => f -> n.size }
+    assert(census == expected,
+      s"window.start census drifted: got $census, pinned $expected; build " +
+        "the window relation through Jobs.windowAgg")
+  }
+
   test("size gates read their pin's observed count; Observation sites are pinned") {
     // a measured-size gate reads the count Checkpoints.pinCounted observes
     // on the job that pins the relation; a count() of its own costs the

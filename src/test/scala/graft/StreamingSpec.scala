@@ -2936,6 +2936,58 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/c_out/_ledger").count() == 2L)
   }
 
+  test("the audit sinks whose folds pin their batch release those pins, replay included") {
+    import graft.sources.IO
+    val root = java.nio.file.Files.createTempDirectory("audit_pins_").toString
+    Seq(("en", 5L, 10L), ("de", 5L, 10L)).toDF("lang", "n_l", "n_total")
+      .write.parquet(s"$root/baseline")
+    graft.operators.Spectral.writeDirection(
+      graft.sources.Tables.embeddings(spark, sfDir), "embedding", s"$root/pc1")
+    val (w1, w2) = (ts("2024-01-01 10:00:00"), ts("2024-01-01 10:20:00"))
+    // finalized window rows, one window per micro-batch
+    val hist = Seq((w1, 3.0, 1L, 0L), (w1, 1.0, 1L, 0L), (w1, 2.0, 1L, 1L),
+      (w1, 4.0, 0L, 1L), (w2, 5.0, 1L, 0L), (w2, 1.0, 0L, 1L))
+      .toDF("window_start", "score", "pos", "neg")
+    val langs = Seq((w1, "srcA", "en", 1L), (w1, "srcA", "de", 1L),
+      (w2, "srcA", "en", 4L), (w2, "srcB", "fr", 2L))
+      .toDF("window_start", "source", "lang", "n_sl")
+    val buckets = Seq((w1, "srcA", 0L, 3L), (w1, "srcA", 1L, 1L),
+      (w2, "srcA", 0L, 2L), (w2, "srcB", 5L, 2L))
+      .toDF("window_start", "source", "bucket", "n_b")
+    def perWindow(df: org.apache.spark.sql.DataFrame) =
+      Seq(df.filter(col("window_start") === w1),
+        df.filter(col("window_start") === w2))
+    // two micro-batches, then a replay of both from a fresh checkpoint
+    // (marker-skipped); every checkpoint RDD the runs pinned must be
+    // unregistered once they are done
+    def leftPinned(name: String, batches: Seq[org.apache.spark.sql.DataFrame])(
+        sink: (org.apache.spark.sql.DataFrame, String) =>
+          org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
+        : Seq[String] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      for (run <- Seq("ck", "replay_ck"))
+        runBatches(batches: _*)(sink(_, s"$root/$name/$run"))
+      assert(IO.snapshotVersions(spark, s"$root/$name/store").nonEmpty,
+        s"$name committed no store version")
+      spark.sparkContext.getPersistentRDDs.toSeq
+        .filter { case (id, _) => !before(id) }
+        .map { case (_, rdd) => s"$name: $rdd" }
+    }
+    val left = Seq(
+      leftPinned("metrics", perWindow(hist))((df, ck) =>
+        IO.windowedMetricsStoreSink(df, s"$root/metrics/store", ck)),
+      leftPinned("mixdrift", perWindow(langs))((df, ck) =>
+        IO.mixDriftAuditSink(df, s"$root/baseline", s"$root/mixdrift/store", ck)),
+      leftPinned("diversity", perWindow(buckets.drop("source")))((df, ck) =>
+        IO.diversityAuditSink(df, s"$root/diversity/store", ck)),
+      leftPinned("bysource", perWindow(buckets))((df, ck) =>
+        IO.diversityBySourceAuditSink(df, s"$root/bysource/store", ck)),
+      leftPinned("spectral", perWindow(buckets.drop("source")))((df, ck) =>
+        IO.spectralDriftAuditSink(df, s"$root/pc1", s"$root/spectral/store", ck))
+    ).flatten
+    assert(left.isEmpty, left.mkString("checkpoint RDDs left registered:\n", "\n", ""))
+  }
+
   test("windowedBucketCounts + bucketEntropyPerWindow: parity with q_bucket_entropy; concentration alarm") {
     // PARITY LAW (the mixDriftPerWindow convention): the fold over the
     // REAL embeddings table — one window — must reproduce the
