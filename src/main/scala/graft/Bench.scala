@@ -99,12 +99,13 @@ object Bench {
           }
         if (ok) (System.nanoTime() - t0) / 1e9 else FailPenaltySec
       }
-      // between-id hygiene: every localCheckpoint a query materialized
-      // stays registered as a persistent RDD for the session's lifetime
-      // — 180+ ids of leftovers inflate GC/memory pressure on ADJACENT
-      // ids (the recurring "registry-adjacent elevation" signature is
-      // partly this, not only host steal). Each sample rebuilds its
-      // lineage from scratch, so dropping finished blocks is safe.
+      // between-id hygiene: the pins an id's plan embeds stay registered
+      // until their owner releases them, and Bench consumes the plan
+      // without a scope of its own. Unpersisting every registered RDD
+      // between ids frees them the way perfbench's per-id loop does
+      // (BatchWorkload), so both harnesses time an id against the same
+      // block-manager state. Each sample rebuilds its lineage from
+      // scratch, so dropping finished blocks is safe.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       // min = the plan's cost with host noise stripped (the headline);

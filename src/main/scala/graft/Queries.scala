@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.{Sketches, Text, Vectors}
-import graft.operators.{Dedup, Similarity, Spectral}
+import graft.operators.{Checkpoints, Dedup, Similarity, Spectral}
 
 /** The SURVEY.md §2 query contract, one `(SparkSession, sfDir) => DataFrame`
   * per declared operator id, plus the training-data-pipeline extensions.
@@ -1435,9 +1435,11 @@ object Queries {
     * closes it transitively with a recursive CTE. */
   val q_dedup_cluster: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
-      .filter(col("jaccard") >= 0.5)
-    val cc = Dedup.connectedComponents(pairs).withColumnRenamed("id", "doc_id")
+    // the shingle pins are released once the clustering pins its edges
+    val cc = Checkpoints.scoped(s)(pins => Dedup.connectedComponents(pins.hold(
+        Dedup.ngramJaccardPairs(docs, "doc_id", "text")
+          .filter(col("jaccard") >= 0.5))))
+      .withColumnRenamed("id", "doc_id")
     docs.select("doc_id").join(cc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster_id"))
@@ -2707,9 +2709,11 @@ object Queries {
     * of the weight relation at any corpus size. Output = the kept docs
     * with their weight and the running spend — the loader's manifest. */
   val q_dsir_select: Q = (s, d) => {
-    val w = q_dsir_hashed(s, d) // (doc_id, n_tokens, weight_pico)
-    val cum = operators.Analytics.globalRunningSum(
-      w, Seq(col("weight_pico").desc, col("doc_id")), "n_tokens", "cum")
+    // (doc_id, n_tokens, weight_pico); its token pin is released once
+    // the running sum has pinned its sorted input
+    val cum = Checkpoints.scoped(s)(pins => operators.Analytics.globalRunningSum(
+      pins.hold(q_dsir_hashed(s, d)), Seq(col("weight_pico").desc, col("doc_id")),
+      "n_tokens", "cum"))
     // budget = half the corpus's total tokens. The prefix sum's LAST
     // value over the total order IS sum(n_tokens), so max(cum) div 2 ==
     // sum(n_tokens) div 2 exactly (both null on an empty corpus, where
@@ -2930,10 +2934,10 @@ object Queries {
     * oracle's `ntile(5) OVER (ORDER BY …)` is reproduced by the exact
     * ntile arithmetic (spec'd law: ntileOfRank == SQL ntile). All three
     * orderings are tie-broken to total orders by o_custkey. */
-  val q_rfm: Q = (s, d) => {
+  val q_rfm: Q = (s, d) => Checkpoints.scoped(s) { pin =>
     val o = Tables.orders(s, d)
     val ref = o.agg(max(col("o_orderdate")).as("ref_date"))
-    val base = o.groupBy("o_custkey")
+    val base = pin(o.groupBy("o_custkey")
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("frequency"),
         round(sum(col("o_totalprice")), 2).as("monetary"))
@@ -2944,7 +2948,7 @@ object Queries {
       // consumed by the first rank pass AND the n_total count — one
       // materialization of the customer-sized triple instead of two
       // orders scans
-      .localCheckpoint(true)
+      )
     // r18: the customer count is a SCALAR off the pinned base — fold it
     // on the driver once (one map-only job over the checkpoint) instead
     // of crossJoin(broadcast(agg)) in each of the three bucket plans,
@@ -2956,10 +2960,12 @@ object Queries {
         .withColumn(out,
           operators.Analytics.ntileOfRank(col(rankCol), nTotal, 5))
         .drop(rankCol)
-    val r = bucket(base, Seq(col("recency_days"), col("o_custkey")),
-      "r_rank", "r_bucket")
-    val f = bucket(r, Seq(desc("frequency"), col("o_custkey")),
-      "f_rank", "f_bucket")
+    // each rank pass pins its input; the superseded passes are released
+    // with the base once the last one has pinned
+    val r = pin.hold(bucket(base, Seq(col("recency_days"), col("o_custkey")),
+      "r_rank", "r_bucket"))
+    val f = pin.hold(bucket(r, Seq(desc("frequency"), col("o_custkey")),
+      "f_rank", "f_bucket"))
     val m = bucket(f, Seq(desc("monetary"), col("o_custkey")),
       "m_rank", "m_bucket")
     m.select("o_custkey", "recency_days", "frequency", "monetary",
@@ -3237,16 +3243,16 @@ object Queries {
     // the (type × day) pre-aggregate and the cumulative-sum relation are
     // both summary-sized and each feed two consumers — one
     // materialization each takes the plan from four events scans to one
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(round(avg(col("value")), 4).as("m"))
-      .localCheckpoint(true)
-    val st = daily.groupBy("event_type").agg(round(avg(col("m")), 4).as("mu"))
     val w = Window.partitionBy("event_type").orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cs = daily.join(broadcast(st), Seq("event_type"))
-      .withColumn("s", round(sum(col("m") - col("mu")).over(w), 4))
-      .localCheckpoint(true)
+    val cs = Checkpoints.scoped(s) { pin =>
+      val daily = pin(Tables.events(s, d)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(round(avg(col("value")), 4).as("m")))
+      val st = daily.groupBy("event_type").agg(round(avg(col("m")), 4).as("mu"))
+      Checkpoints.pin(daily.join(broadcast(st), Seq("event_type"))
+        .withColumn("s", round(sum(col("m") - col("mu")).over(w), 4)))
+    }
     val mx = cs.groupBy("event_type").agg(max(abs(col("s"))).as("max_cusum"))
     cs.join(mx, Seq("event_type"))
       .filter(abs(col("s")) === col("max_cusum"))
@@ -5173,12 +5179,15 @@ object Queries {
     * back onto the edges (the q_theil/q_abc discipline — the registry
     * never blocks the driver mid-plan for a scalar). */
   val q_graph_ktruss: Q = (s, d) => {
-    val e = nationTradeEdges(s, d).localCheckpoint(eager = true)
-    val meanDf = e.agg((sum(col("wc")) / count(lit(1))).as("__mean_wc"))
-    val strong = e.crossJoin(broadcast(meanDf))
-      .where(col("wc").cast("double") > col("__mean_wc"))
-      .drop("__mean_wc")
-    val truss = operators.Graph.ktruss(strong, "src", "dst", "wc", k = 4)
+    // the edge pin is released once the truss has pinned its edge list
+    val truss = Checkpoints.scoped(s) { pin =>
+      val e = pin(nationTradeEdges(s, d))
+      val meanDf = e.agg((sum(col("wc")) / count(lit(1))).as("__mean_wc"))
+      val strong = e.crossJoin(broadcast(meanDf))
+        .where(col("wc").cast("double") > col("__mean_wc"))
+        .drop("__mean_wc")
+      operators.Graph.ktruss(strong, "src", "dst", "wc", k = 4)
+    }
     val names = Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))
     truss
       .join(broadcast(names.select(col("n_nationkey").as("ka"),
@@ -5631,9 +5640,10 @@ object Queries {
     * the cluster id's survivor count — both pinned in LawsSpec. */
   val q_dup_cluster_histogram: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    val cc = Dedup.connectedComponents(
-        Dedup.minhashConfirmedPairs(docs, "doc_id", "text", threshold = 0.5),
-        "id_a", "id_b")
+    // the signature pin is released once the clustering pins its edges
+    val cc = Checkpoints.scoped(s)(pins => Dedup.connectedComponents(pins.hold(
+        Dedup.minhashConfirmedPairs(docs, "doc_id", "text", threshold = 0.5)),
+        "id_a", "id_b"))
       .withColumnRenamed("id", "doc_id")
     docs.select("doc_id").join(cc, Seq("doc_id"), "left")
       .select(coalesce(col("label"), col("doc_id")).as("label"))
@@ -5825,16 +5835,20 @@ object Queries {
     * maxima) — no argmax tie logic to diverge between engines. */
   val q_containment_cluster: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    val pairs = Dedup.ngramContainmentPairs(docs, "doc_id", "text")
-      .select(least(col("id_in"), col("id_of")).as("id_a"),
-        greatest(col("id_in"), col("id_of")).as("id_b"))
-      .distinct()
-    val cc = Dedup.connectedComponents(pairs).withColumnRenamed("id", "doc_id")
-    val labeled = docs.select(col("doc_id"), col("n_chars"))
-      .join(cc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_chars"),
-        coalesce(col("label"), col("doc_id")).as("cluster_id"))
-      .localCheckpoint(eager = true) // feeds the max-length fold + output
+    // feeds the max-length fold + output; the shingle and clustering
+    // pins are released once it is pinned
+    val labeled = Checkpoints.scoped(s) { pins =>
+      val cc = Dedup.connectedComponents(pins.hold(
+          Dedup.ngramContainmentPairs(docs, "doc_id", "text")
+            .select(least(col("id_in"), col("id_of")).as("id_a"),
+              greatest(col("id_in"), col("id_of")).as("id_b"))
+            .distinct()))
+        .withColumnRenamed("id", "doc_id")
+      Checkpoints.pin(pins.hold(docs.select(col("doc_id"), col("n_chars"))
+        .join(cc, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_chars"),
+          coalesce(col("label"), col("doc_id")).as("cluster_id"))))
+    }
     val mx = labeled.groupBy("cluster_id").agg(max(col("n_chars")).as("mc"))
     val keep = labeled.join(mx, Seq("cluster_id"))
       .filter(col("n_chars") === col("mc"))
@@ -6062,9 +6076,11 @@ object Queries {
     * engines. */
   val q_dedup_keep_best: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
-      .filter(col("jaccard") >= 0.5)
-    val cc = Dedup.connectedComponents(pairs).withColumnRenamed("id", "doc_id")
+    // the shingle pins are released once the clustering pins its edges
+    val cc = Checkpoints.scoped(s)(pins => Dedup.connectedComponents(pins.hold(
+        Dedup.ngramJaccardPairs(docs, "doc_id", "text")
+          .filter(col("jaccard") >= 0.5))))
+      .withColumnRenamed("id", "doc_id")
     val clustered = docs.select("doc_id", "n_chars")
       .join(cc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_chars"),
@@ -6267,17 +6283,18 @@ object Queries {
   val q_attribution_decay: Q = (s, d) => {
     val ev = Tables.events(s, d)
     val wp = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val firstPurchase = ev.filter(col("event_type") === "purchase")
-      .withColumn("rn", row_number().over(wp)).filter(col("rn") === 1)
-      .select(col("user_id"), col("ts").as("pts"), col("value").as("pval"))
-      .localCheckpoint(true)
-    val tw = ev.filter(col("event_type") =!= "purchase")
-      .join(firstPurchase, Seq("user_id"))
-      .filter(col("ts") < col("pts"))
-      .withColumn("w", pow(lit(2.0),
-        -expr("(unix_millis(pts) - unix_millis(ts)) div 604800000")
-          .cast("double")))
-      .localCheckpoint(true) // feeds the per-user normalizer AND credits
+    // tw feeds the per-user normalizer AND credits
+    val tw = Checkpoints.scoped(s) { pin =>
+      val firstPurchase = pin(ev.filter(col("event_type") === "purchase")
+        .withColumn("rn", row_number().over(wp)).filter(col("rn") === 1)
+        .select(col("user_id"), col("ts").as("pts"), col("value").as("pval")))
+      Checkpoints.pin(ev.filter(col("event_type") =!= "purchase")
+        .join(firstPurchase, Seq("user_id"))
+        .filter(col("ts") < col("pts"))
+        .withColumn("w", pow(lit(2.0),
+          -expr("(unix_millis(pts) - unix_millis(ts)) div 604800000")
+            .cast("double"))))
+    }
     val sw = tw.groupBy("user_id").agg(sum(col("w")).as("sw"))
     tw.join(sw, Seq("user_id"))
       .groupBy("event_type")
@@ -6328,10 +6345,10 @@ object Queries {
     * counters integer; vacuous recall (no truth pairs) reads 1000000. */
   val q_lsh_recall_eval: Q = (s, d) => {
     val sample = Tables.documents(s, d).filter(col("doc_id") % 20 === 0)
-    val sigs = Dedup.minhashSignatures(sample, "doc_id", "text")
-      .localCheckpoint(eager = true)
-    val cand = Dedup.minhashCandidateIds(sigs, "doc_id")
-      .localCheckpoint(eager = true)
+    // the signature pin is released once the candidates are pinned
+    val cand = Checkpoints.scoped(s)(pin => Checkpoints.pin(
+      Dedup.minhashCandidateIds(pin(Dedup.minhashSignatures(sample, "doc_id", "text")),
+        "doc_id")))
     val truth = Dedup.ngramJaccardPairs(sample, "doc_id", "text")
     val flagged = truth
       .join(cand.withColumn("in_cand", lit(1L)), Seq("id_a", "id_b"), "left")

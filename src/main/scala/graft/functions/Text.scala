@@ -329,53 +329,55 @@ object Text {
     // the persisted tokenizer left off, and only k - initial.size new
     // rounds run. Returns ONLY the newly learned merges.
     val toSyms = udf { (w: String) => bpeEncodeWord(w, initial) }
-    val (pinned, nWords) = graft.operators.Checkpoints.pinCounted(words
-      .select(toSyms(col(wordCol)).as("syms"),
-        col(freqCol).cast("long").as("freq")))
-    var state = pinned
-    // measured-size strategy pick (r17 — the Graph.LocalFixpointMaxEdges
-    // discipline): every registry caller trains on a bounded vocabulary
-    // head (≤4096 words), where each of the k rounds' census + argmax +
-    // merge-map is pure scheduling overhead (~12 driver-round jobs over
-    // ~4k rows). At or below the gate the whole fixpoint runs inside ONE
-    // executor task with operation-identical arithmetic (exact long
-    // sums, UTF-8-binary tie order — Spark's own string comparator) and
-    // only the ≤k merge rows come back to the driver; above it, the
-    // distributed per-round loop runs unchanged. Parity pinned in
-    // FunctionsSpec (gate forced off ↔ on).
-    if (nWords <= localMaxWords)
-      return bpeTrainMergesOneTask(state, k, minCount, initial.size)
-    var lastCkpt = state
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var round = initial.size
-    var done = false
-    while (round < k && !done) {
-      round += 1
-      // adjacent pairs with multiplicity, weighted by word frequency;
-      // the argmax is a bounded TakeOrdered — one row to the driver
-      val best = state
-        .select(col("freq"), explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("a"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("b"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(desc("cnt"), col("a"), col("b"))
-        .limit(1).collect()
-      if (best.isEmpty || best(0).getLong(2) < minCount) done = true
-      else {
-        val (a, b) = (best(0).getString(0), best(0).getString(1))
-        merges += ((a, b))
-        val applyMerge = udf { (syms: Seq[String]) => mergePair(syms, a, b) }
-        state = state.select(applyMerge(col("syms")).as("syms"), col("freq"))
-        if (round % checkpointEvery == 0) {
-          state = state.localCheckpoint(eager = true)
-          // the new checkpoint supersedes the previous one's blocks
-          graft.operators.Checkpoints.drop(lastCkpt)
-          lastCkpt = state
+    graft.operators.Checkpoints.scoped(words.sparkSession) { pins =>
+      val (pinned, nWords) = pins.counted(words
+        .select(toSyms(col(wordCol)).as("syms"),
+          col(freqCol).cast("long").as("freq")))
+      var state = pinned
+      // measured-size strategy pick (r17 — the Graph.LocalFixpointMaxEdges
+      // discipline): every registry caller trains on a bounded vocabulary
+      // head (≤4096 words), where each of the k rounds' census + argmax +
+      // merge-map is pure scheduling overhead (~12 driver-round jobs over
+      // ~4k rows). At or below the gate the whole fixpoint runs inside ONE
+      // executor task with operation-identical arithmetic (exact long
+      // sums, UTF-8-binary tie order — Spark's own string comparator) and
+      // only the ≤k merge rows come back to the driver; above it, the
+      // distributed per-round loop runs unchanged. Parity pinned in
+      // FunctionsSpec (gate forced off ↔ on).
+      if (nWords <= localMaxWords)
+        return bpeTrainMergesOneTask(state, k, minCount, initial.size)
+      var lastCkpt = state
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      var round = initial.size
+      var done = false
+      while (round < k && !done) {
+        round += 1
+        // adjacent pairs with multiplicity, weighted by word frequency;
+        // the argmax is a bounded TakeOrdered — one row to the driver
+        val best = state
+          .select(col("freq"), explode(arrays_zip(
+            slice(col("syms"), lit(1), size(col("syms")) - 1).as("a"),
+            slice(col("syms"), lit(2), size(col("syms")) - 1).as("b"))).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(desc("cnt"), col("a"), col("b"))
+          .limit(1).collect()
+        if (best.isEmpty || best(0).getLong(2) < minCount) done = true
+        else {
+          val (a, b) = (best(0).getString(0), best(0).getString(1))
+          merges += ((a, b))
+          val applyMerge = udf { (syms: Seq[String]) => mergePair(syms, a, b) }
+          state = state.select(applyMerge(col("syms")).as("syms"), col("freq"))
+          if (round % checkpointEvery == 0) {
+            state = pins(state)
+            // the new checkpoint supersedes the previous one's blocks
+            graft.operators.Checkpoints.drop(lastCkpt)
+            lastCkpt = state
+          }
         }
       }
+      merges.toSeq
     }
-    merges.toSeq
   }
 
   /** Word-count gate for [[bpeTrainMerges]]' single-task fixpoint: at or
@@ -559,15 +561,13 @@ object Text {
     // `v.isEmpty` runs the FULL corpus vocabulary fold once and the
     // write below runs it again (r17 — measured double fold in
     // q_oov_artifact; guide §1.4's double-eval trap, action form)
-    val v = vocabTopK(docs, textCol, k).localCheckpoint(eager = true)
-    // unpersist when done (ADVICE r17): a long-lived session invoking
+    // released when done (ADVICE r17): a long-lived session invoking
     // this seeder repeatedly must not accumulate ≤k-row storage blocks
-    try {
-      if (v.isEmpty) {
-        graft.sources.IO.deleteDir(docs.sparkSession, dir); return
-      }
-      v.coalesce(1).write.mode("overwrite").parquet(dir)
-    } finally graft.operators.Checkpoints.drop(v)
+    graft.operators.Checkpoints.scoped(docs.sparkSession) { pin =>
+      val v = pin(vocabTopK(docs, textCol, k))
+      if (v.isEmpty) graft.sources.IO.deleteDir(docs.sparkSession, dir)
+      else v.coalesce(1).write.mode("overwrite").parquet(dir)
+    }
   }
 
   /** Load a persisted vocabulary. ≤ k rows — broadcast-sized at any
@@ -594,16 +594,18 @@ object Text {
     val nOld = existing.count()
     require(k > nOld,
       s"extendVocab: target $k must exceed the $nOld entries present")
-    val full = vocabTopK(docs, textCol, k).localCheckpoint(eager = true)
     // one computation feeds prefix check + append
-    val drifted = full.filter(col("vocab_rank") <= nOld)
-      .join(existing,
-        Seq("vocab_rank", "w", "cw"), "left_anti").count()
-    require(drifted == 0L,
-      s"extendVocab: $drifted prefix ranks differ from the stored " +
-        "vocabulary — the corpus has changed; retrain with writeVocab")
-    full.filter(col("vocab_rank") > nOld)
-      .coalesce(1).write.mode("append").parquet(dir)
+    graft.operators.Checkpoints.scoped(spark) { pin =>
+      val full = pin(vocabTopK(docs, textCol, k))
+      val drifted = full.filter(col("vocab_rank") <= nOld)
+        .join(existing,
+          Seq("vocab_rank", "w", "cw"), "left_anti").count()
+      require(drifted == 0L,
+        s"extendVocab: $drifted prefix ranks differ from the stored " +
+          "vocabulary — the corpus has changed; retrain with writeVocab")
+      full.filter(col("vocab_rank") > nOld)
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
   }
 
   /** Per-doc OOV fold against a PERSISTED vocabulary — the q_oov_rate

@@ -124,9 +124,8 @@ object Analytics {
     requireLongCols(df, cols.map(_._1))
     val vIdx = cols.map { case (v, _) => df.schema.fieldIndex(v) }.toArray
     val k = vIdx.length
-    val sorted = df.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint(eager = true)
+    val sorted = Checkpoints.pin(df.repartitionByRange(nPart, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*))
     // totals pass over InternalRows (toRdd): the checkpoint's unsafe rows
     // are read in place — no external-Row converter for this full scan
     val sums = sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
@@ -226,9 +225,8 @@ object Analytics {
     val vIdx = valueCols.map(df.schema.fieldIndex).toArray
     val k = vIdx.length
     val sortCols = groupCols.map(col) ++ orderCols
-    val sorted = df.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint(eager = true)
+    val sorted = Checkpoints.pin(df.repartitionByRange(nPart, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*))
     val partGroupSums = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
       val buf = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], Array[Long])]
       var cur: Array[Any] = null
@@ -550,14 +548,12 @@ object Analytics {
     // the events source is scanned exactly once per stage filter (the
     // floor: the three scans carry three different pushed predicates)
     // instead of re-deriving earlier stages per consumer
-    val t1 = ev.filter(col("et") === stages._1)
-      .groupBy("user_id").agg(min("ts").as("t1"))
-      .localCheckpoint(true)
-    val t2 = ev.filter(col("et") === stages._2)
+    val t1 = Checkpoints.pin(ev.filter(col("et") === stages._1)
+      .groupBy("user_id").agg(min("ts").as("t1")))
+    val t2 = Checkpoints.pin(ev.filter(col("et") === stages._2)
       .join(t1, Seq("user_id"))
       .filter(col("ts") >= col("t1"))
-      .groupBy("user_id", "t1").agg(min("ts").as("t2"))
-      .localCheckpoint(true)
+      .groupBy("user_id", "t1").agg(min("ts").as("t2")))
     val t3 = ev.filter(col("et") === stages._3)
       .join(t2, Seq("user_id"))
       .filter(col("ts") >= col("t2") &&

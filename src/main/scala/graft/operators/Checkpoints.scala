@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, lit, when}
@@ -21,12 +22,38 @@ import org.apache.spark.sql.functions.{col, count, lit, when}
   * it releases EVERY checkpoint embedded in the plan, so dropping a
   * composite that still feeds live lineage would strand downstream
   * consumers (a localCheckpoint cannot recompute: its lineage is
-  * truncated by construction). */
+  * truncated by construction).
+  *
+  * Every pin the operator, stream, source and function layers take goes
+  * through this object and has one owner: a [[scoped]] unit that
+  * releases it when the unit ends, the round loop that supersedes it
+  * ([[fixpoint]], or a [[drop]] of the previous round's pin), or, for
+  * a pin riding in a returned plan ([[pin]]), the caller, whose scope
+  * [[Pins.hold]]s that plan. */
 object Checkpoints {
   def drop(df: DataFrame): Unit = rddsOf(df).foreach(_.unpersist(blocking = false))
 
-  private def rddsOf(df: DataFrame) =
-    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+  /** The checkpoint RDDs `df`'s plan embeds: every RDD scan's own RDD,
+    * and the materialized checkpoints an RDD-built relation (a running
+    * sum's per-partition fold) reads through its lineage. A
+    * checkpoint's lineage ends at its blocks, so the walk stops there. */
+  private def rddsOf(df: DataFrame): Seq[RDD[_]] = {
+    val seen = scala.collection.mutable.LinkedHashSet.empty[RDD[_]]
+    def walk(r: RDD[_]): Unit = r.dependencies.map(_.rdd).foreach { p =>
+      if (seen.add(p) && !p.isCheckpointed) walk(p)
+    }
+    val scans = df.queryExecution.analyzed.collectWithSubqueries {
+      case lr: LogicalRDD => lr.rdd
+    }
+    scans.foreach(walk)
+    (scans ++ seen.filter(_.isCheckpointed)).distinct
+  }
+
+  /** Pin `df` eagerly for a caller who owns the release: the pin rides
+    * in the plan an operator returns, and the caller's scope frees it by
+    * holding that plan ([[Pins.hold]]); a round loop drops the pin a
+    * later round supersedes. */
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
   /** Pin `df` eagerly and return the pin with its row count, read off
     * the pin's own job: an observed `count(1)` rides the checkpoint, so
@@ -38,9 +65,8 @@ object Checkpoints {
     * is recounted over the pin, never read as 0. */
   private def pinCounting(df: DataFrame, p: Column): (DataFrame, Long) = {
     val seen = Observation()
-    val pin = df.observe(seen, count(when(p, 1)).as("n"))
-      .localCheckpoint(eager = true)
-    (pin, seen.get.get("n").fold(pin.where(p).count())(_.asInstanceOf[Long]))
+    val pinned = pin(df.observe(seen, count(when(p, 1)).as("n")))
+    (pinned, seen.get.get("n").fold(pinned.where(p).count())(_.asInstanceOf[Long]))
   }
 
   /** The observe-changed convergence loop: each round pins `step(state)`
@@ -80,9 +106,13 @@ object Checkpoints {
   final class Pins(spark: SparkSession) extends (DataFrame => DataFrame) {
     private val floor = spark.sparkContext.emptyRDD[Unit].id
     private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def apply(df: DataFrame): DataFrame = hold(hold(df).localCheckpoint(eager = true))
+    def apply(df: DataFrame): DataFrame = hold(pin(hold(df)))
     /** Release, with the unit, the checkpoints `df`'s plan embeds. */
     def hold(df: DataFrame): DataFrame = { held += df; df }
+    /** [[pinCounted]], released with the unit. */
+    def counted(df: DataFrame): (DataFrame, Long) = {
+      val (p, n) = pinCounted(hold(df)); (hold(p), n)
+    }
     def release(): Unit =
       held.flatMap(rddsOf).filter(_.id > floor).distinct
         .foreach(_.unpersist(blocking = false))

@@ -169,172 +169,170 @@ object CorpusBuild {
                   diversityEmb: Option[DataFrame] = None,
                   diversityCap: Int = 3,
                   diversityIndexDir: Option[String] = None): CorpusLedger = {
-    // stage 1: exact content dedup — min-id keeper per md5 fingerprint
-    // (the q_dedup_doc policy), then seed the fingerprint index from
-    // the SURVIVORS (index == admitted content). The RAW corpus is
-    // deliberately NOT materialized (at 100 TB that would copy the
-    // input): it is scanned exactly twice — keeper aggregation and the
-    // keeper semi-join — and the raw row count folds off the
-    // keeper relation's per-content copy counts (distinct-content-
-    // sized), not a third corpus scan.
-    val keepers = docs
-      .groupBy(Text.fingerprint(col(textCol)).as("__fp"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("__copies"))
-      .localCheckpoint(eager = true) // feeds the raw count + the semi-join
-    // coalesce: sum over ZERO rows is null — an empty input corpus is
-    // a legal build (raw = 0, every artifact seeds "no index yet")
-    val rawCount = keepers
-      .agg(coalesce(sum(col("__copies")), lit(0L)).as("n"))
-      .head().getLong(0)
-    val exact = docs.join(keepers.select(idCol), Seq(idCol), "left_semi")
-      .localCheckpoint(eager = true) // feeds the index write + 3 near-dup scans
-    Dedup.writeFingerprintIndex(exact, textCol, fpIndexDir)
-    // stage 2: near-dup collapse (MinHash+LSH candidates → exact
-    // Jaccard confirm → min-id canonical — the q_dedup_cluster_minhash
-    // recipe), then seed the band index from the survivors
-    val near = Dedup.clusterByMinhash(exact, idCol, textCol, nearDupThreshold)
-      .localCheckpoint(eager = true) // feeds the index write + the final pass
-    Dedup.writeNearDupIndex(near, idCol, textCol, bandIndexDir)
-    // optional stage 2½: winnow (substring-family) collapse — the MOSS
-    // local-guarantee pass catching the extract-of relationships
-    // Jaccard misses (a 20-token verbatim lift inside an otherwise
-    // fresh doc never clears a whole-doc similarity threshold). ONE
-    // winnow pass (one positional explode) serves the pair step AND the
-    // index seed — the winnowIngestSink discipline; the index reflects
-    // SURVIVORS only (admitted content, the ingest-gate contract), so
-    // the build hands the streaming gate exactly the state it needs.
-    val winnowed = winnowIndexDir match {
-      case Some(dir) =>
-        // fps feed the pairs and the index seed; the survivors feed the
-        // seed and the final pass
-        val w = winnowStage(near, idCol, textCol, winnowMinShared,
-          _.localCheckpoint(eager = true))
-        Dedup.writeWinnowFps(
-          w.fps.join(w.kept.select(col(idCol).as("id")), Seq("id"), "left_semi"),
-          dir)
-        w.kept
-      case None => near
+    Checkpoints.scoped(docs.sparkSession) { pin =>
+      // stage 1: exact content dedup — min-id keeper per md5 fingerprint
+      // (the q_dedup_doc policy), then seed the fingerprint index from
+      // the SURVIVORS (index == admitted content). The RAW corpus is
+      // deliberately NOT materialized (at 100 TB that would copy the
+      // input): it is scanned exactly twice — keeper aggregation and the
+      // keeper semi-join — and the raw row count folds off the
+      // keeper relation's per-content copy counts (distinct-content-
+      // sized), not a third corpus scan.
+      val keepers = pin(docs // feeds the raw count + the semi-join
+        .groupBy(Text.fingerprint(col(textCol)).as("__fp"))
+        .agg(min(col(idCol)).as(idCol), count(lit(1)).as("__copies")))
+      // coalesce: sum over ZERO rows is null — an empty input corpus is
+      // a legal build (raw = 0, every artifact seeds "no index yet")
+      val rawCount = keepers
+        .agg(coalesce(sum(col("__copies")), lit(0L)).as("n"))
+        .head().getLong(0)
+      // feeds the index write + 3 near-dup scans
+      val exact = pin(docs.join(keepers.select(idCol), Seq(idCol), "left_semi"))
+      Dedup.writeFingerprintIndex(exact, textCol, fpIndexDir)
+      // stage 2: near-dup collapse (MinHash+LSH candidates → exact
+      // Jaccard confirm → min-id canonical — the q_dedup_cluster_minhash
+      // recipe), then seed the band index from the survivors
+      // feeds the index write + the final pass
+      val near = pin(Dedup.clusterByMinhash(exact, idCol, textCol, nearDupThreshold))
+      Dedup.writeNearDupIndex(near, idCol, textCol, bandIndexDir)
+      // optional stage 2½: winnow (substring-family) collapse — the MOSS
+      // local-guarantee pass catching the extract-of relationships
+      // Jaccard misses (a 20-token verbatim lift inside an otherwise
+      // fresh doc never clears a whole-doc similarity threshold). ONE
+      // winnow pass (one positional explode) serves the pair step AND the
+      // index seed — the winnowIngestSink discipline; the index reflects
+      // SURVIVORS only (admitted content, the ingest-gate contract), so
+      // the build hands the streaming gate exactly the state it needs.
+      val winnowed = winnowIndexDir match {
+        case Some(dir) =>
+          // fps feed the pairs and the index seed; the survivors feed the
+          // seed and the final pass
+          val w = winnowStage(near, idCol, textCol, winnowMinShared, pin)
+          Dedup.writeWinnowFps(
+            w.fps.join(w.kept.select(col(idCol).as("id")), Seq("id"), "left_semi"),
+            dir)
+          w.kept
+        case None => near
+      }
+      // optional stage 2¾: exact duplicated-SPAN removal (Lee et al.
+      // 2022's sub-document treatment — the alternative to winnow's
+      // doc-level collapse: keep both docs, excise the shared run from
+      // every occurrence; [[Dedup.removeDuplicatedSpans]] over the
+      // doc-dedup survivors, so spans are measured against ADMITTED
+      // content). Docs emptied by the excision (their whole text was
+      // duplicated) are dropped. Runs BEFORE decontamination
+      // deliberately: the probe gate must judge the text that SHIPS.
+      // `spanTokensRemoved` counts every excised token, including those
+      // of subsequently-dropped empty docs (the full excision bill).
+      val (spanned, spanToks) = spanRemovalWindowLen match {
+        case Some(l) =>
+          // feeds the ledger agg + the kept filter (and the shard
+          // write's range sampler downstream)
+          val rewritten = pin(winnowed.drop(textCol)
+            .join(Dedup.removeDuplicatedSpans(winnowed, idCol, textCol, l)
+              .withColumnRenamed("id", idCol), Seq(idCol)))
+          val toks = rewritten
+            .agg(coalesce(sum(col("n_removed")), lit(0L)).as("t"))
+            .head().getLong(0)
+          (rewritten.filter(col("clean_text") =!= "")
+            .withColumnRenamed("clean_text", textCol)
+            .drop("n_tokens", "n_removed"), toks)
+        case None => (winnowed, 0L)
+      }
+      // optional stage 2⅞: DSIR quality selection — the live quality
+      // gate's own decision ([[qualityStage]], which IO.dsirGateSink and
+      // the chain run too, so a doc admitted here is the doc the gate
+      // would admit). The score pass is one narrow explode + broadcast LM
+      // join over the dedup survivors; the keep is a semi-join on the
+      // kept ids, and only the kept rows are pinned.
+      val qualified = qualityLm match {
+        case Some(lm) =>
+          pin(qualityStage(spanned, lm, idCol, textCol, qualityThresholdPico,
+              identity).kept) // feeds the observed pass below
+        case None => spanned
+      }
+      // optional stage 2⁹⁄₁₀: the DIVERSITY cap — the composed form of
+      // q_diversity_sample (the SAME Sampling.diversityCapRanked
+      // selection): each semantic LSH bucket keeps at most `diversityCap`
+      // of the surviving docs in deterministic md5 order; docs without an
+      // embedding row pass through. The kept-id relation is
+      // bucket-bounded (≤ cap·256 rows — broadcast at any corpus size).
+      // (no checkpoint: the stage feeds only the single observed pass
+      // below, which `pinned` already executes exactly once — EXCEPT when
+      // the gate-index seed is requested, which adds its own pass over
+      // the stage's embedded survivors)
+      val diverse = diversityEmb match {
+        case Some(emb) =>
+          Sampling.diversityCapSample(qualified, idCol, emb,
+            "embedding", diversityCap)
+        case None => qualified
+      }
+      // stages 3–5, ONE observed pass: Bloom decontamination and the
+      // domain mix are bare predicates, so both ride the shard write's
+      // scan with observedFilter counters — per-stage accounting at zero
+      // extra executions
+      val (clean, deconObs) = Analytics.observedFilter(diverse,
+        Dedup.bloomKeepPredicate(probe, textCol, shingleN),
+        "corpus_decontaminate")
+      val (mixed, mixObs) = Analytics.observedFilter(clean,
+        Sampling.mixKeepPredicate(stratumCol, idCol, mixRates, defaultMixRate),
+        "corpus_mix")
+      // pin the final corpus BEFORE the sorted-shard write: the range
+      // partitioner runs a sampling pass over its input, which would
+      // execute the observed predicates a second time (doubling the
+      // counters) and re-run the Bloom/mix work; the checkpoint runs the
+      // observed plan exactly once and both write passes read the pinned
+      // rows
+      val pinned = pin(mixed)
+      Sampling.writeSortedShards(pinned, sortCol, shardDir, numShards)
+      // seed the live diversity gate's BUCKET-MEMBERSHIP index from the
+      // embedded docs present in the FINAL shard output — not the
+      // diversity stage's survivors (ADVICE r16): docs the later
+      // decontamination/mix stages drop must not permanently bill their
+      // semantic bucket's budget, or a gate started on this seed rejects
+      // fresh arrivals in regions the shipped corpus doesn't hold.
+      // index == SHIPPED content, the fp/band/winnow ingest-gate contract
+      // at its strictest reading.
+      for (emb <- diversityEmb; dir <- diversityIndexDir)
+        Sampling.writeBucketMembershipIndex(
+          emb.join(pinned.select(idCol), Seq(idCol), "left_semi"),
+          idCol, "embedding", dir)
+      val d = deconObs.get; val m = mixObs.get
+      def asLong(x: Any): Long = x match {
+        case null => 0L
+        case l: Long => l
+        case n: Number => n.longValue()
+      }
+      val nearCount = near.count()
+      // ledger cascade: the observed pass's rows_in is the row count at
+      // the LAST enabled pre-observed stage (free — collected on the one
+      // shard-write execution); every earlier optional stage whose count
+      // rows_in no longer witnesses reads its own (checkpointed) relation
+      val laterOn = Seq(spanRemovalWindowLen.nonEmpty, qualityLm.nonEmpty,
+        diversityEmb.nonEmpty)
+      val winnowCount =
+        if (!laterOn.exists(identity)) asLong(d("rows_in"))
+        else if (winnowIndexDir.isEmpty) nearCount
+        else winnowed.count()
+      val spanCount =
+        if (!laterOn.drop(1).exists(identity)) asLong(d("rows_in"))
+        else spanned.count()
+      val qualityCount =
+        if (qualityLm.isEmpty) -1L
+        else if (diversityEmb.isEmpty) asLong(d("rows_in"))
+        else qualified.count()
+      CorpusLedger(
+        raw = rawCount,
+        afterExactDedup = exact.count(),
+        afterNearDup = nearCount,
+        afterWinnow = winnowCount,
+        afterDecontaminate = asLong(d("rows_kept")),
+        afterMix = asLong(m("rows_kept")),
+        afterSpanRemoval = spanCount,
+        spanTokensRemoved = spanToks,
+        afterQuality = qualityCount,
+        afterDiversity = if (diversityEmb.isEmpty) -1L else asLong(d("rows_in")))
     }
-    // optional stage 2¾: exact duplicated-SPAN removal (Lee et al.
-    // 2022's sub-document treatment — the alternative to winnow's
-    // doc-level collapse: keep both docs, excise the shared run from
-    // every occurrence; [[Dedup.removeDuplicatedSpans]] over the
-    // doc-dedup survivors, so spans are measured against ADMITTED
-    // content). Docs emptied by the excision (their whole text was
-    // duplicated) are dropped. Runs BEFORE decontamination
-    // deliberately: the probe gate must judge the text that SHIPS.
-    // `spanTokensRemoved` counts every excised token, including those
-    // of subsequently-dropped empty docs (the full excision bill).
-    val (spanned, spanToks) = spanRemovalWindowLen match {
-      case Some(l) =>
-        val rewritten = winnowed.drop(textCol)
-          .join(Dedup.removeDuplicatedSpans(winnowed, idCol, textCol, l)
-            .withColumnRenamed("id", idCol), Seq(idCol))
-          .localCheckpoint(eager = true) // feeds the ledger agg + the kept
-                                         // filter (and the shard write's
-                                         // range sampler downstream)
-        val toks = rewritten
-          .agg(coalesce(sum(col("n_removed")), lit(0L)).as("t"))
-          .head().getLong(0)
-        (rewritten.filter(col("clean_text") =!= "")
-          .withColumnRenamed("clean_text", textCol)
-          .drop("n_tokens", "n_removed"), toks)
-      case None => (winnowed, 0L)
-    }
-    // optional stage 2⅞: DSIR quality selection — the live quality
-    // gate's own decision ([[qualityStage]], which IO.dsirGateSink and
-    // the chain run too, so a doc admitted here is the doc the gate
-    // would admit). The score pass is one narrow explode + broadcast LM
-    // join over the dedup survivors; the keep is a semi-join on the
-    // kept ids, and only the kept rows are pinned.
-    val qualified = qualityLm match {
-      case Some(lm) =>
-        qualityStage(spanned, lm, idCol, textCol, qualityThresholdPico,
-            identity).kept
-          .localCheckpoint(eager = true) // feeds the observed pass below
-      case None => spanned
-    }
-    // optional stage 2⁹⁄₁₀: the DIVERSITY cap — the composed form of
-    // q_diversity_sample (the SAME Sampling.diversityCapRanked
-    // selection): each semantic LSH bucket keeps at most `diversityCap`
-    // of the surviving docs in deterministic md5 order; docs without an
-    // embedding row pass through. The kept-id relation is
-    // bucket-bounded (≤ cap·256 rows — broadcast at any corpus size).
-    // (no checkpoint: the stage feeds only the single observed pass
-    // below, which `pinned` already executes exactly once — EXCEPT when
-    // the gate-index seed is requested, which adds its own pass over
-    // the stage's embedded survivors)
-    val diverse = diversityEmb match {
-      case Some(emb) =>
-        Sampling.diversityCapSample(qualified, idCol, emb,
-          "embedding", diversityCap)
-      case None => qualified
-    }
-    // stages 3–5, ONE observed pass: Bloom decontamination and the
-    // domain mix are bare predicates, so both ride the shard write's
-    // scan with observedFilter counters — per-stage accounting at zero
-    // extra executions
-    val (clean, deconObs) = Analytics.observedFilter(diverse,
-      Dedup.bloomKeepPredicate(probe, textCol, shingleN),
-      "corpus_decontaminate")
-    val (mixed, mixObs) = Analytics.observedFilter(clean,
-      Sampling.mixKeepPredicate(stratumCol, idCol, mixRates, defaultMixRate),
-      "corpus_mix")
-    // pin the final corpus BEFORE the sorted-shard write: the range
-    // partitioner runs a sampling pass over its input, which would
-    // execute the observed predicates a second time (doubling the
-    // counters) and re-run the Bloom/mix work; the checkpoint runs the
-    // observed plan exactly once and both write passes read the pinned
-    // rows
-    val pinned = mixed.localCheckpoint(eager = true)
-    Sampling.writeSortedShards(pinned, sortCol, shardDir, numShards)
-    // seed the live diversity gate's BUCKET-MEMBERSHIP index from the
-    // embedded docs present in the FINAL shard output — not the
-    // diversity stage's survivors (ADVICE r16): docs the later
-    // decontamination/mix stages drop must not permanently bill their
-    // semantic bucket's budget, or a gate started on this seed rejects
-    // fresh arrivals in regions the shipped corpus doesn't hold.
-    // index == SHIPPED content, the fp/band/winnow ingest-gate contract
-    // at its strictest reading.
-    for (emb <- diversityEmb; dir <- diversityIndexDir)
-      Sampling.writeBucketMembershipIndex(
-        emb.join(pinned.select(idCol), Seq(idCol), "left_semi"),
-        idCol, "embedding", dir)
-    val d = deconObs.get; val m = mixObs.get
-    def asLong(x: Any): Long = x match {
-      case null => 0L
-      case l: Long => l
-      case n: Number => n.longValue()
-    }
-    val nearCount = near.count()
-    // ledger cascade: the observed pass's rows_in is the row count at
-    // the LAST enabled pre-observed stage (free — collected on the one
-    // shard-write execution); every earlier optional stage whose count
-    // rows_in no longer witnesses reads its own (checkpointed) relation
-    val laterOn = Seq(spanRemovalWindowLen.nonEmpty, qualityLm.nonEmpty,
-      diversityEmb.nonEmpty)
-    val winnowCount =
-      if (!laterOn.exists(identity)) asLong(d("rows_in"))
-      else if (winnowIndexDir.isEmpty) nearCount
-      else winnowed.count()
-    val spanCount =
-      if (!laterOn.drop(1).exists(identity)) asLong(d("rows_in"))
-      else spanned.count()
-    val qualityCount =
-      if (qualityLm.isEmpty) -1L
-      else if (diversityEmb.isEmpty) asLong(d("rows_in"))
-      else qualified.count()
-    CorpusLedger(
-      raw = rawCount,
-      afterExactDedup = exact.count(),
-      afterNearDup = nearCount,
-      afterWinnow = winnowCount,
-      afterDecontaminate = asLong(d("rows_kept")),
-      afterMix = asLong(m("rows_kept")),
-      afterSpanRemoval = spanCount,
-      spanTokensRemoved = spanToks,
-      afterQuality = qualityCount,
-      afterDiversity = if (diversityEmb.isEmpty) -1L else asLong(d("rows_in")))
   }
 
   // ---- the composed LIVE ingest chain (VERDICT r16 #1/#2) ------------
@@ -381,19 +379,17 @@ object CorpusBuild {
     * throughout: every index gate is the standalone sink's probe shape
     * (batch-keyed joins against bucketed indexes, broadcast
     * probe/LM/census). `batch` must already be pinned: its one consume
-    * feeds every stage. */
-  def chainDecide(batch: DataFrame, cfg: ChainConfig): DataFrame =
-    chainDecide(batch, cfg, _.localCheckpoint(eager = true))
-
-  /** [[chainDecide]] taking its pins through `pin`: the composed sink
-    * passes its batch's [[Checkpoints.Pins]] and releases them once the
-    * WAL write has read them. The decision is a fold over the enabled
+    * feeds every stage.
+    *
+    * The stages pin through `pin`, whose scope owns their release: the
+    * composed sink passes its batch's [[Checkpoints.Pins]] and releases
+    * them once the WAL write has read them. The decision is a fold over the enabled
     * stages in [[ChainOutcomes]] order: each stage maps its input to
     * its pinned survivors plus the WAL columns it records per doc, a
     * doc's outcome is the stage it did not survive, and the WAL's audit
     * columns are the enabled stages' columns, null-typed for the rest. */
-  private[graft] def chainDecide(batch: DataFrame, cfg: ChainConfig,
-                                 pin: DataFrame => DataFrame): DataFrame = {
+  def chainDecide(batch: DataFrame, cfg: ChainConfig,
+                  pin: Checkpoints.Pins): DataFrame = {
     val spark = batch.sparkSession
     val id = cfg.idCol; val txt = cfg.textCol
     type Stage = DataFrame => (DataFrame, Option[DataFrame])

@@ -302,8 +302,8 @@ object Dedup {
   def minhashConfirmedPairs(docs: DataFrame, idCol: String, textCol: String,
                             threshold: Double, shingleN: Int = 3,
                             numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    val sigs = minhashSignatures(docs, idCol, textCol, shingleN, numHashes, bands)
-      .localCheckpoint(eager = true)
+    val sigs = Checkpoints.pin(
+      minhashSignatures(docs, idCol, textCol, shingleN, numHashes, bands))
     val cand = minhashCandidateIds(sigs, idCol)
     val toks = docs.select(col(idCol), Text.tokens(col(textCol)).as("__toks"))
     cand
@@ -327,9 +327,8 @@ object Dedup {
     // sides via `blocked` and the final outer join): materialize the
     // 16-byte-per-doc signatures once instead of recomputing the
     // tokenize+simhash scan per branch (census: was x3)
-    val sigs = docs.select(col(idCol),
-      Text.simhash64(Text.tokens(col(textCol))).as("simhash"))
-      .localCheckpoint(true)
+    val sigs = Checkpoints.pin(docs.select(col(idCol),
+      Text.simhash64(Text.tokens(col(textCol))).as("simhash")))
     val blocked = sigs.select(col(idCol), col("simhash"),
       posexplode(array((0 until 4).map(b =>
         shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
@@ -378,12 +377,8 @@ object Dedup {
     // signature relation): the corpus is scanned and shingled exactly
     // once, where the unmaterialized plan re-ran the explode+hash up to
     // eight times (census-caught).
-    val shRaw = fanOut(docs.select(col(idCol).as("id"), col(textCol)), col("id"))
-      .select(col("id"),
-        explode(shingleSet(n)(Text.tokens(col(textCol)))).as("sh_str"))
-      .select(col("id"), xxhash64(col("sh_str")).as("sh"))
-      .localCheckpoint(eager = true)
-    val sh =
+    val sh = Checkpoints.scoped(docs.sparkSession) { pins =>
+      val shRaw = shingleIndex(docs, idCol, textCol, n)
       if (maxDocFreq == Long.MaxValue) shRaw // already materialized
       else {
         // the census is the cap contract and must always run; its RESULT
@@ -393,13 +388,9 @@ object Dedup {
         // outright, which is behavior-identical (anti-join against an
         // empty build side is the identity). Measured r17: saves one
         // full pass + checkpoint of the shingle relation per query.
-        val hot = shRaw.groupBy("sh").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDocFreq).select("sh")
-          .localCheckpoint(eager = true)
-        if (hot.isEmpty) shRaw
-        else shRaw.join(broadcast(hot), Seq("sh"), "left_anti")
-          .localCheckpoint(eager = true)
+        capHot(pins, shRaw, maxDocFreq)
       }
+    }
     // set sizes must count the SAME shingle universe as the intersection:
     // uncapped → straight from the array (narrow, no shuffle); capped →
     // from the filtered inverted index, else Jaccard of docs containing
@@ -422,6 +413,27 @@ object Dedup {
         (col("common").cast("double") /
           (col("sa.set_size") + col("sb.set_size") - col("common")).cast("double"))
           .as("jaccard"))
+  }
+
+  /** The pinned (id, sh) inverted index of `docs`' distinct n-gram
+    * shingles, one scan of the corpus; the caller owns the pin. */
+  private def shingleIndex(docs: DataFrame, idCol: String, textCol: String,
+                           n: Int): DataFrame =
+    Checkpoints.pin(fanOut(docs.select(col(idCol).as("id"), col(textCol)), col("id"))
+      .select(col("id"),
+        explode(shingleSet(n)(Text.tokens(col(textCol)))).as("sh_str"))
+      .select(col("id"), xxhash64(col("sh_str")).as("sh")))
+
+  /** `shRaw` without the shingles in more than `maxDocFreq` docs: the
+    * census is pinned and released with `pins`; an empty census returns
+    * `shRaw` itself, else the capped index is pinned for the caller and
+    * `shRaw`, superseded, is released with `pins`. */
+  private def capHot(pins: Checkpoints.Pins, shRaw: DataFrame,
+                     maxDocFreq: Long): DataFrame = {
+    val hot = pins.hold(Checkpoints.pin(shRaw.groupBy("sh")
+      .agg(count(lit(1)).as("df")).filter(col("df") > maxDocFreq).select("sh")))
+    if (hot.isEmpty) shRaw
+    else Checkpoints.pin(pins.hold(shRaw).join(broadcast(hot), Seq("sh"), "left_anti"))
   }
 
   /** Directed n-gram CONTAINMENT pairs — near-superset detection, the
@@ -455,21 +467,10 @@ object Dedup {
   def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
                             n: Int = 3, maxDocFreq: Long = 1000L,
                             minContainment: Double = 0.8): DataFrame = {
-    val shRaw = fanOut(docs.select(col(idCol).as("id"), col(textCol)), col("id"))
-      .select(col("id"),
-        explode(shingleSet(n)(Text.tokens(col(textCol)))).as("sh_str"))
-      .select(col("id"), xxhash64(col("sh_str")).as("sh"))
-      .localCheckpoint(eager = true)
-    val sh = {
-      // same census-checkpoint + empty-census shortcut as
-      // [[ngramJaccardPairs]] (r17): identical relation either way
-      val hot = shRaw.groupBy("sh").agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDocFreq).select("sh")
-        .localCheckpoint(eager = true)
-      if (hot.isEmpty) shRaw
-      else shRaw.join(broadcast(hot), Seq("sh"), "left_anti")
-        .localCheckpoint(eager = true)
-    }
+    // same census-checkpoint + empty-census shortcut as
+    // [[ngramJaccardPairs]] (r17): identical relation either way
+    val sh = Checkpoints.scoped(docs.sparkSession)(pins =>
+      capHot(pins, shingleIndex(docs, idCol, textCol, n), maxDocFreq))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("set_size"))
     val common = sh.as("a").join(sh.as("b"), Seq("sh"))
       .filter(col("a.id") < col("b.id"))
@@ -562,8 +563,8 @@ object Dedup {
                   maxDocFreq: Long = 1000L,
                   minShared: Long = 2L): DataFrame =
     winnowPairsFromFps(
-      winnowFingerprints(docs, idCol, textCol)
-        .localCheckpoint(eager = true), // feeds df cap, sizes and the join
+      // feeds df cap, sizes and the join
+      Checkpoints.pin(winnowFingerprints(docs, idCol, textCol)),
       maxDocFreq, minShared)
 
   /** [[winnowPairs]] from a PRECOMPUTED distinct (id, fh) selection —
@@ -676,8 +677,8 @@ object Dedup {
                               maxDocFreq: Long = 1000L,
                               minShared: Long = 2L): DataFrame =
     matchFpsAgainstWinnowIndex(
-      winnowFingerprints(batch, idCol, textCol)
-        .localCheckpoint(eager = true), // feeds sizes + the match join
+      // feeds sizes + the match join
+      Checkpoints.pin(winnowFingerprints(batch, idCol, textCol)),
       idCol, indexDir, maxDocFreq, minShared)
 
   /** [[matchAgainstWinnowIndex]] from a PRECOMPUTED distinct (id, fh)
@@ -797,12 +798,11 @@ object Dedup {
     * membership test. */
   def bloomKeepPredicate(probe: DataFrame, textCol: String,
                          n: Int = 5): org.apache.spark.sql.Column = {
-    val probeSh = probe
-      .select(explode(shingleSet(n)(Text.tokens(col(textCol)))).as("sh_str"))
-      .distinct()
-      .localCheckpoint(eager = true) // two actions (count + bit fold)
     val (m, words) =
-      try {
+      Checkpoints.scoped(probe.sparkSession) { pin =>
+        val probeSh = pin(probe // two actions (count + bit fold)
+          .select(explode(shingleSet(n)(Text.tokens(col(textCol)))).as("sh_str"))
+          .distinct())
         val nSh = probeSh.count() // benchmark-suite distinct shingles
         val mBits = BloomBitsPerKey * math.max(nSh, 1L)
         val nWords = ((mBits + 63) / 64).toInt
@@ -824,7 +824,7 @@ object Dedup {
             var i = 0; while (i < nWords) { x(i) |= y(i); i += 1 }; x
           }, depth = 2)
         (mBits, bits)
-      } finally Checkpoints.drop(probeSh)
+      }
     val bc = probe.sparkSession.sparkContext.broadcast(words)
     val shingle = shingleSet(n)
     val hasLeak = udf { (shs: Seq[String]) =>
@@ -982,9 +982,9 @@ object Dedup {
     // token projection, final left-anti) — without it the whole
     // intra-batch LSH clustering subtree re-evaluates per consumer; the
     // clustering's own pins are released once it is pinned.
-    val intra = Checkpoints.scoped(spark)(pins => pins.hold(clusterByMinhash(
-      batch, idCol, textCol, threshold, shingleN, numHashes, bands))
-      .localCheckpoint(true))
+    val intra = Checkpoints.scoped(spark)(pins => Checkpoints.pin(pins.hold(
+      clusterByMinhash(batch, idCol, textCol, threshold, shingleN, numHashes,
+        bands))))
     val sigs = minhashSignatures(intra, idCol, textCol, shingleN, numHashes, bands)
     val batchBands = sigs.select(col(idCol).as("__bid"),
       posexplode(col("buckets")).as(Seq("band", "bucket")))
@@ -1252,11 +1252,11 @@ object Dedup {
     val touched = graft.sources.IO.readArtifact(spark, indexDir)
       .select(col("__bucket").cast("long").as("__bucket")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= buckets ids
-    val merged = liveGramIndexCounted(spark, indexDir)
-      .withColumn("__bucket", pmod(col("sh"), lit(b.toLong)))
-      .localCheckpoint(eager = true) // pin before overwriting the source path
-    try BucketedIndex.rewrite(GramIndex, merged, indexDir, touched)
-    finally Checkpoints.drop(merged)
+    // pin before overwriting the source path
+    Checkpoints.scoped(spark)(pin => BucketedIndex.rewrite(GramIndex,
+      pin(liveGramIndexCounted(spark, indexDir)
+        .withColumn("__bucket", pmod(col("sh"), lit(b.toLong)))),
+      indexDir, touched))
   }
 
   /** Connected components over an undirected pair list: every vertex gets
@@ -1297,11 +1297,10 @@ object Dedup {
     // propagation is exactly label = min(id, min neighbor id), which one
     // keyed agg over the edge list computes without the join — saves a
     // full join+agg+checkpoint round every run
-    var labels = edges.groupBy("src")
+    var labels = Checkpoints.pin(edges.groupBy("src")
       .agg(min("dst").as("nbr_min"))
       .select(col("src").as("id"),
-        least(col("src"), col("nbr_min")).as("label"))
-      .localCheckpoint(eager = true)
+        least(col("src"), col("nbr_min")).as("label")))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -1325,7 +1324,7 @@ object Dedup {
           least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
         .observe(obs, sum(when(col("label") =!= col("old_label"), 1L)
           .otherwise(0L)).as("changed"))
-        .localCheckpoint(eager = true)
+        .transform(Checkpoints.pin)
       // sum over an empty relation is null → treat as converged
       converged = Option(obs.get("changed"))
         .forall(_.asInstanceOf[Long] == 0L)
@@ -1338,10 +1337,10 @@ object Dedup {
         // that halves chain depth every round, keeping the loop
         // O(log diameter) on long-chain graphs.
         val par = propagated.select(col("id").as("pid"), col("label").as("plabel"))
-        val updated = propagated.join(par, propagated("label") === par("pid"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("plabel"), col("label"))).as("label"))
-          .localCheckpoint(eager = true)
+        val updated = Checkpoints.pin(
+          propagated.join(par, propagated("label") === par("pid"), "left")
+            .select(col("id"),
+              least(col("label"), coalesce(col("plabel"), col("label"))).as("label")))
         Checkpoints.drop(propagated)
         labels = updated
       }
@@ -1422,15 +1421,14 @@ object Dedup {
                                    maxIter: Int = 50): DataFrame = {
     val e0 = pairs.select(col(idA).cast("long").as("src"),
       col(idB).cast("long").as("dst"))
-    val vertices = e0.select(col("src").as("id"))
-      .union(e0.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(eager = true)
+    val vertices = Checkpoints.pin(e0.select(col("src").as("id"))
+      .union(e0.select(col("dst").as("id"))).distinct())
     // canonical orientation (src > dst), self-loops dropped; both star
     // ops preserve the orientation so rounds compare set-to-set
-    var edges = e0.filter(col("src") =!= col("dst"))
+    var edges = Checkpoints.pin(e0.filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
-      .distinct().localCheckpoint(eager = true)
+      .distinct())
 
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -1459,9 +1457,8 @@ object Dedup {
     var edgeCount = edges.count()
     while (!converged && iter < maxIter) {
       val obs = org.apache.spark.sql.Observation(s"graft_ccls_round_$iter")
-      val next = smallStar(largeStar(edges))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(eager = true)
+      val next = Checkpoints.pin(smallStar(largeStar(edges))
+        .observe(obs, count(lit(1)).as("n")))
       val nextCount = Option(obs.get("n"))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       // fixpoint test: both relations are DISTINCT sets in the same
@@ -1485,9 +1482,9 @@ object Dedup {
     // pin the labeling BEFORE releasing its inputs: the main path also
     // returns a checkpointed relation, and a real block drop under a
     // lazy result would strand it (localCheckpoint lineage is truncated)
-    val out = vertices.join(leafLabels, vertices("id") === leafLabels("lid"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-      .localCheckpoint(eager = true)
+    val out = Checkpoints.pin(
+      vertices.join(leafLabels, vertices("id") === leafLabels("lid"), "left")
+        .select(col("id"), coalesce(col("label"), col("id")).as("label")))
     Checkpoints.drop(edges)
     Checkpoints.drop(vertices)
     out
@@ -1523,7 +1520,11 @@ object Dedup {
                       idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     val lab = labels.select(col("id").cast("long").as("id"),
       col("label").cast("long").as("label"))
-    mergeDelta(lab, batch, idA, idB, _.localCheckpoint(eager = true))._2(lab)
+    // the contraction and remap pins ride in the result (the caller
+    // owns them); the clustering's own pins are released once the remap
+    // is pinned
+    Checkpoints.scoped(batch.sparkSession)(pins => mergeDelta(lab, batch,
+      idA, idB, df => Checkpoints.pin(pins.hold(df)))._2(lab))
   }
 
   /** A merge's change to the labeling `lab`, in the form
@@ -1858,10 +1859,9 @@ object Dedup {
     // cost on near-unique names; the key expansion is OUTPUT-sized.
     // Measured at sf0.1: 3.4 s direct → ~1 s dictionary (8M pair
     // scores → the distinct-name pair count).
-    val base = df.select(
+    val base = Checkpoints.pin(df.select( // one scan feeds dictionary + both expansions
       Seq(col(idCol).as("__id"), col(strCol).as("__str")) ++
-        blockCols.map(col): _*)
-      .localCheckpoint(eager = true) // one scan feeds dictionary + both expansions
+        blockCols.map(col): _*))
     val names = base
       .select(blockCols.map(col) :+ col("__str").as("__n"): _*).distinct()
     val nb = names.select(blockCols.map(col) :+ col("__n").as("__str_b"): _*)
@@ -1956,8 +1956,8 @@ object Dedup {
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                       windowLen: Int = 8): DataFrame = {
     require(windowLen >= 2, s"windowLen must be >= 2, got $windowLen")
-    val win = positionalWindows(docs, idCol, textCol, windowLen)
-      .localCheckpoint(eager = true) // feeds the occurrence census + join-back
+    // feeds the occurrence census + join-back
+    val win = Checkpoints.pin(positionalWindows(docs, idCol, textCol, windowLen))
     val dup = win.groupBy("sh").agg(count(lit(1)).as("occ"))
       .filter(col("occ") >= 2).select("sh")
     maximalSpans(win.join(dup, Seq("sh"), "left_semi"), windowLen)

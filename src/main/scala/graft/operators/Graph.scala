@@ -87,7 +87,7 @@ object Graph {
   private def incidence(und: DataFrame): DataFrame =
     und.select(col("a").as("n"), col("b").as("m"), col("wc"))
       .union(und.select(col("b").as("n"), col("a").as("m"), col("wc")))
-      .localCheckpoint(true)
+      .transform(Checkpoints.pin)
 
   /** Weighted PageRank by power iteration: `iters` rounds of
     *
@@ -125,30 +125,36 @@ object Graph {
     val (e, m) = Checkpoints.pinCounted(e0.join(outw, Seq("src")))
     // measured-size strategy pick (see LocalFixpointMaxEdges)
     if (m <= localMaxEdges) return pagerankOneTask(e, damping, iters)
-    val (nodes, n) = Checkpoints.pinCounted(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val base = (1.0 - damping) / n
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    for (i <- 1 to iters) {
-      val contribs = e.join(ranks, col("src") === col("node"))
-        .select(col("dst").as("node"),
-          round(col("rank") * col("w") / col("outw") * lit(1e12))
-            .cast("long").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("in"))
-      // left join: nodes with no in-edges keep the teleport floor
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          round(lit(base) + lit(damping) *
-            (coalesce(col("in"), lit(0L)).cast("double") / lit(1e12)), 12)
-            .as("rank"))
-      // checkpoint on a CADENCE, not per round: the loop count is FIXED
-      // (unlike connectedComponents' data-dependent convergence loop, which
-      // must materialize per round to read its observe metric), so lineage
-      // only ever nests a bounded handful of join rounds between cuts —
-      // one materialization job per cadence instead of one per round
-      if (i % 5 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
+    // the edge and node pins and the superseded cadence pins are
+    // released once the final ranks are pinned; those are the caller's
+    Checkpoints.scoped(e.sparkSession) { pins =>
+      pins.hold(e)
+      val (nodes, n) = pins.counted(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val base = (1.0 - damping) / n
+      var ranks = nodes.withColumn("rank", lit(1.0 / n))
+      for (i <- 1 to iters) {
+        val contribs = e.join(ranks, col("src") === col("node"))
+          .select(col("dst").as("node"),
+            round(col("rank") * col("w") / col("outw") * lit(1e12))
+              .cast("long").as("c"))
+          .groupBy("node").agg(sum(col("c")).as("in"))
+        // left join: nodes with no in-edges keep the teleport floor
+        ranks = nodes.join(contribs, Seq("node"), "left")
+          .select(col("node"),
+            round(lit(base) + lit(damping) *
+              (coalesce(col("in"), lit(0L)).cast("double") / lit(1e12)), 12)
+              .as("rank"))
+        // checkpoint on a CADENCE, not per round: the loop count is FIXED
+        // (unlike connectedComponents' data-dependent convergence loop, which
+        // must materialize per round to read its observe metric), so lineage
+        // only ever nests a bounded handful of join rounds between cuts —
+        // one materialization job per cadence instead of one per round
+        if (i == iters) ranks = Checkpoints.pin(ranks)
+        else if (i % 5 == 0) ranks = pins(ranks)
+      }
+      ranks
     }
-    ranks
   }
 
   /** The single-task fixpoint path of [[pagerank]]: the joined
@@ -367,7 +373,7 @@ object Graph {
           .otherwise(struct(col("b").as("lo"), col("a").as("hi"),
             col("da").as("dhi"))).as("e"))
       .select(col("e.lo").as("lo"), col("e.hi").as("hi"), col("e.dhi").as("dhi"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.pin)
     (und, deg, oriented)
   }
 
@@ -447,24 +453,26 @@ object Graph {
     // measured-size strategy pick (see LocalFixpointMaxEdges); exact
     // integer h-index folds, so path parity is trivial (GraphSpec law)
     if (m <= localMaxEdges) return corenessOneTask(und, maxIter, failure)
-    val inc = incidence(und)
-    val seed = inc.groupBy("n").agg(count(lit(1)).as("est"))
-      .localCheckpoint(true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("n").orderBy(col("em").desc, col("m"))
-    val est = try Checkpoints.fixpoint(seed, maxIter, failure)(
-      est => {
-        val h = inc
-          .join(est.select(col("n").as("m"), col("est").as("em")), Seq("m"))
-          .withColumn("rnk", row_number().over(w))
-          .groupBy("n").agg(max(least(col("em"), col("rnk"))).as("h"))
-        est.join(h, Seq("n"))
-          .select(col("n"), col("est").as("old"),
-            least(col("est"), col("h")).as("est"))
-      },
-      col("est") < col("old"))
-    finally Checkpoints.drop(inc)
-    est.select(col("n").as("node"), col("est").as("coreness"))
+    // the edge and incidence pins are released once the fixpoint is
+    // pinned; the fixpoint is the caller's
+    Checkpoints.scoped(und.sparkSession) { pins =>
+      val inc = pins.hold(incidence(pins.hold(und)))
+      val seed = Checkpoints.pin(inc.groupBy("n").agg(count(lit(1)).as("est")))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("n").orderBy(col("em").desc, col("m"))
+      val est = Checkpoints.fixpoint(seed, maxIter, failure)(
+        est => {
+          val h = inc
+            .join(est.select(col("n").as("m"), col("est").as("em")), Seq("m"))
+            .withColumn("rnk", row_number().over(w))
+            .groupBy("n").agg(max(least(col("em"), col("rnk"))).as("h"))
+          est.join(h, Seq("n"))
+            .select(col("n"), col("est").as("old"),
+              least(col("est"), col("h")).as("est"))
+        },
+        col("est") < col("old"))
+      est.select(col("n").as("node"), col("est").as("coreness"))
+    }
   }
 
   /** The single-task fixpoint path of [[coreness]]: the same synchronous
@@ -596,9 +604,8 @@ object Graph {
     def distances: DataFrame =
       if (local) multiSourceDistancesOneTask(und, srcList, maxIter, what)
       else {
-        val incSym = incidence(und)
-        try multiSourceDistances(incSym, srcDf, maxIter, what)
-        finally Checkpoints.drop(incSym)
+        Checkpoints.scoped(und.sparkSession)(pins =>
+          multiSourceDistances(pins.hold(incidence(und)), srcDf, maxIter, what))
       }
   }
 
@@ -627,8 +634,8 @@ object Graph {
   private[graft] def multiSourceDistances(incSym: DataFrame, srcDf: DataFrame,
                                           maxIter: Int,
                                           opName: String): DataFrame = {
-    val seed = srcDf.select(col("s").as("src"), col("s").as("n"),
-      lit(0L).as("dist")).localCheckpoint(true)
+    val seed = Checkpoints.pin(srcDf.select(col("s").as("src"), col("s").as("n"),
+      lit(0L).as("dist")))
     Checkpoints.fixpoint(seed, maxIter, truncated(opName, maxIter))(
       dist => {
         val offers = incSym
@@ -776,46 +783,46 @@ object Graph {
     val s = new Sweep(edges, srcCol, dstCol, weightCol, sources, landmarkK,
       maxIter, localMaxEdges, "betweenness", None)
     if (s.local) return brandesOneTask(s, maxDepth = Some(maxIter))
-    val incSym = incidence(s.und)
-    val (visited, d) = brandesForwardState(incSym, s.srcDf, maxIter)
-    // ---- backward sweep by descending level ----
-    // deltaPico(src, n): accumulated dependency, 1e-12-grain longs
-    val maxDist = d - 1 // deepest level that holds nodes
-    var delta = visited.select(col("src"), col("n"), lit(0L).as("dp"))
-      .localCheckpoint(true)
-    var lvl = maxDist
-    while (lvl >= 1) {
-      // successors at `lvl` push contributions to predecessors at lvl-1
-      val wNodes = visited.where(col("dist") === lvl)
-        .join(delta, Seq("src", "n"))
-        .select(col("src"), col("n").as("w"), col("sigma").as("sw"),
-          col("dp").as("dw"))
-      val contribs = wNodes
-        .join(incSym.select(col("n").as("w"), col("m").as("n")), Seq("w"))
-        .join(visited.where(col("dist") === lvl - 1)
-            .select(col("src"), col("n"), col("sigma").as("sv")),
-          Seq("src", "n"))
-        .select(col("src"), col("n"),
-          round(col("sv").cast("double") / col("sw").cast("double") *
-            (lit(1e12) + col("dw").cast("double"))).cast("long").as("c"))
-        .groupBy("src", "n").agg(sum(col("c")).as("cd"))
-      val prevDelta = delta
-      delta = delta.join(contribs, Seq("src", "n"), "left")
-        .select(col("src"), col("n"),
-          (col("dp") + coalesce(col("cd"), lit(0L))).as("dp"))
-        .localCheckpoint(true)
-      // same discipline as the forward wave: the new level's checkpoint
-      // is eager, so the superseded δ state (also src × node) drops now
-      // instead of accumulating one copy per level
-      Checkpoints.drop(prevDelta)
-      lvl -= 1
+    // the final δ pin truncates lineage, so the BFS state and the
+    // symmetric incidence list are released with the scope (δ and the
+    // sweep's edge pin ride in the result: the node-domain fold below
+    // derives from them)
+    Checkpoints.scoped(edges.sparkSession) { pins =>
+      val incSym = pins.hold(incidence(s.und))
+      val (visited, d) = brandesForwardState(incSym, s.srcDf, maxIter)
+      pins.hold(visited)
+      // ---- backward sweep by descending level ----
+      // deltaPico(src, n): accumulated dependency, 1e-12-grain longs
+      val maxDist = d - 1 // deepest level that holds nodes
+      var delta = Checkpoints.pin(visited.select(col("src"), col("n"), lit(0L).as("dp")))
+      var lvl = maxDist
+      while (lvl >= 1) {
+        // successors at `lvl` push contributions to predecessors at lvl-1
+        val wNodes = visited.where(col("dist") === lvl)
+          .join(delta, Seq("src", "n"))
+          .select(col("src"), col("n").as("w"), col("sigma").as("sw"),
+            col("dp").as("dw"))
+        val contribs = wNodes
+          .join(incSym.select(col("n").as("w"), col("m").as("n")), Seq("w"))
+          .join(visited.where(col("dist") === lvl - 1)
+              .select(col("src"), col("n"), col("sigma").as("sv")),
+            Seq("src", "n"))
+          .select(col("src"), col("n"),
+            round(col("sv").cast("double") / col("sw").cast("double") *
+              (lit(1e12) + col("dw").cast("double"))).cast("long").as("c"))
+          .groupBy("src", "n").agg(sum(col("c")).as("cd"))
+        val prevDelta = delta
+        delta = Checkpoints.pin(delta.join(contribs, Seq("src", "n"), "left")
+          .select(col("src"), col("n"),
+            (col("dp") + coalesce(col("cd"), lit(0L))).as("dp")))
+        // same discipline as the forward wave: the new level's checkpoint
+        // is eager, so the superseded δ state (also src × node) drops now
+        // instead of accumulating one copy per level
+        Checkpoints.drop(prevDelta)
+        lvl -= 1
+      }
+      betweennessFold(delta, s)
     }
-    // the final δ checkpoint truncates lineage, so the BFS state and the
-    // symmetric incidence list are dead weight from here — release them
-    // (the pin stays: the node-domain fold below derives from it)
-    Checkpoints.drop(visited)
-    Checkpoints.drop(incSym)
-    betweennessFold(delta, s)
   }
 
   /** betweenness(v) = scale · Σ_{src ≠ v} δ_src(v) / 2 (each unordered
@@ -862,7 +869,7 @@ object Graph {
       // largest relation in the job, and leaking one copy per BFS round
       // would hold O(diameter) copies of it in the block manager
       val prevVisited = visited
-      visited = visited.union(nextFrontier).localCheckpoint(true)
+      visited = Checkpoints.pin(visited.union(nextFrontier))
       Checkpoints.drop(prevVisited)
       Checkpoints.drop(frontier)
       frontier = nextFrontier
@@ -984,69 +991,68 @@ object Graph {
       Some((1L, "betweennessWeighted requires strictly " +
         "positive weights (zero collapses SP-DAG ranks)")))
     if (s.local) return brandesOneTask(s, maxDepth = None)
-    val incSym = incidence(s.und)
-    // ---- fixpoint 1: exact weighted distances (src, n, dist) ----
-    val dist = multiSourceDistances(incSym, s.srcDf, maxIter, s.what)
-    // ---- the per-source shortest-path DAG: dist(v) + w = dist(n) ----
-    val dag = incSym.select(col("n").as("v"), col("m").as("w_node"),
-        col("wc"))
-      .join(dist.select(col("src"), col("n").as("v"), col("dist").as("dv")),
-        Seq("v"))
-      .join(dist.select(col("src"), col("n").as("w_node"),
-        col("dist").as("dw")), Seq("src", "w_node"))
-      .where(col("dv") + col("wc") === col("dw"))
-      .select(col("src"), col("v"), col("w_node"))
-      .localCheckpoint(true)
-    // ---- fixpoint 2: σ along the DAG ----
-    val sigma = Checkpoints.fixpoint(
-      dist.select(col("src"), col("n"),
-          when(col("n") === col("src"), 1L).otherwise(0L).as("sigma"))
-        .localCheckpoint(true),
-      maxIter, new IllegalStateException(
-        s"betweennessWeighted σ did not converge within $maxIter rounds — " +
-          "raise maxIter for this graph"))(
-      sigma => {
-        val inSum = dag
-          .join(sigma.select(col("src"), col("n").as("v"),
-            col("sigma").as("sv")), Seq("src", "v"))
-          .groupBy(col("src"), col("w_node").as("n"))
-          .agg(sum(col("sv")).as("insum"))
-        sigma.select(col("src"), col("n"), col("sigma").as("old"))
-          .join(inSum, Seq("src", "n"), "left")
-          .select(col("src"), col("n"), col("old"),
-            when(col("n") === col("src"), 1L)
-              .otherwise(coalesce(col("insum"), lit(0L))).as("sigma"))
-      },
-      col("sigma") =!= col("old"))
-    // ---- fixpoint 3: δ recomputed from successor δ until stable ----
-    val delta = Checkpoints.fixpoint(
-      dist.select(col("src"), col("n"), lit(0L).as("dp")).localCheckpoint(true),
-      maxIter, new IllegalStateException(
-        s"betweennessWeighted δ did not converge within $maxIter rounds — " +
-          "raise maxIter for this graph"))(
-      delta => {
-        val contribs = dag
-          .join(sigma.select(col("src"), col("n").as("v"),
-            col("sigma").as("sv")), Seq("src", "v"))
-          .join(sigma.select(col("src"), col("n").as("w_node"),
-            col("sigma").as("sw")), Seq("src", "w_node"))
-          .join(delta.select(col("src"), col("n").as("w_node"),
-            col("dp").as("dpw")), Seq("src", "w_node"))
-          .select(col("src"), col("v").as("n"),
-            round(col("sv").cast("double") / col("sw").cast("double") *
-              (lit(1e12) + col("dpw").cast("double"))).cast("long").as("c"))
-          .groupBy("src", "n").agg(sum(col("c")).as("cd"))
-        delta.select(col("src"), col("n"), col("dp").as("old"))
-          .join(contribs, Seq("src", "n"), "left")
-          .select(col("src"), col("n"), col("old"),
-            coalesce(col("cd"), lit(0L)).as("dp"))
-      },
-      col("dp") =!= col("old"))
-    Checkpoints.drop(dag)
-    Checkpoints.drop(sigma)
-    Checkpoints.drop(dist)
-    Checkpoints.drop(incSym)
-    betweennessFold(delta, s)
+    // the incidence list, the distances, the DAG and σ are released
+    // with the scope; the final δ rides in the result
+    Checkpoints.scoped(edges.sparkSession) { pins =>
+      val incSym = pins.hold(incidence(s.und))
+      // ---- fixpoint 1: exact weighted distances (src, n, dist) ----
+      val dist = pins.hold(multiSourceDistances(incSym, s.srcDf, maxIter, s.what))
+      // ---- the per-source shortest-path DAG: dist(v) + w = dist(n) ----
+      val dag = incSym.select(col("n").as("v"), col("m").as("w_node"),
+          col("wc"))
+        .join(dist.select(col("src"), col("n").as("v"), col("dist").as("dv")),
+          Seq("v"))
+        .join(dist.select(col("src"), col("n").as("w_node"),
+          col("dist").as("dw")), Seq("src", "w_node"))
+        .where(col("dv") + col("wc") === col("dw"))
+        .select(col("src"), col("v"), col("w_node"))
+        .transform(Checkpoints.pin).transform(pins.hold)
+      // ---- fixpoint 2: σ along the DAG ----
+      val sigma = pins.hold(Checkpoints.fixpoint(
+        Checkpoints.pin(dist.select(col("src"), col("n"),
+            when(col("n") === col("src"), 1L).otherwise(0L).as("sigma"))),
+        maxIter, new IllegalStateException(
+          s"betweennessWeighted σ did not converge within $maxIter rounds — " +
+            "raise maxIter for this graph"))(
+        sigma => {
+          val inSum = dag
+            .join(sigma.select(col("src"), col("n").as("v"),
+              col("sigma").as("sv")), Seq("src", "v"))
+            .groupBy(col("src"), col("w_node").as("n"))
+            .agg(sum(col("sv")).as("insum"))
+          sigma.select(col("src"), col("n"), col("sigma").as("old"))
+            .join(inSum, Seq("src", "n"), "left")
+            .select(col("src"), col("n"), col("old"),
+              when(col("n") === col("src"), 1L)
+                .otherwise(coalesce(col("insum"), lit(0L))).as("sigma"))
+        },
+        col("sigma") =!= col("old")))
+      // ---- fixpoint 3: δ recomputed from successor δ until stable ----
+      val delta = Checkpoints.fixpoint(
+        Checkpoints.pin(dist.select(col("src"), col("n"), lit(0L).as("dp"))),
+        maxIter, new IllegalStateException(
+          s"betweennessWeighted δ did not converge within $maxIter rounds — " +
+            "raise maxIter for this graph"))(
+        delta => {
+          val contribs = dag
+            .join(sigma.select(col("src"), col("n").as("v"),
+              col("sigma").as("sv")), Seq("src", "v"))
+            .join(sigma.select(col("src"), col("n").as("w_node"),
+              col("sigma").as("sw")), Seq("src", "w_node"))
+            .join(delta.select(col("src"), col("n").as("w_node"),
+              col("dp").as("dpw")), Seq("src", "w_node"))
+            .select(col("src"), col("v").as("n"),
+              round(col("sv").cast("double") / col("sw").cast("double") *
+                (lit(1e12) + col("dpw").cast("double"))).cast("long").as("c"))
+            .groupBy("src", "n").agg(sum(col("c")).as("cd"))
+          delta.select(col("src"), col("n"), col("dp").as("old"))
+            .join(contribs, Seq("src", "n"), "left")
+            .select(col("src"), col("n"), col("old"),
+              coalesce(col("cd"), lit(0L)).as("dp"))
+        },
+        col("dp") =!= col("old"))
+      betweennessFold(delta, s)
+    }
   }
 
   /** Weighted modularity of a GIVEN node partition over the undirected
@@ -1145,7 +1151,7 @@ object Graph {
           coalesce(col("support"), lit(0L)).as("support"))
         .observe(obs, sum(when(col("support") < k - 2, 1L)
           .otherwise(0L)).as("dropped"))
-        .localCheckpoint(true)
+        .transform(Checkpoints.pin)
       converged =
         Option(obs.get("dropped")).forall(_.asInstanceOf[Long] == 0L)
       Checkpoints.drop(oriented)
@@ -1179,7 +1185,7 @@ object Graph {
           .otherwise(struct(col("b").as("lo"), col("a").as("hi"),
             col("da").as("dhi"))).as("e"))
       .select(col("e.lo").as("lo"), col("e.hi").as("hi"), col("e.dhi").as("dhi"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.pin)
     val x = oriented.select(col("lo").as("anchor"), col("hi").as("u"),
       col("dhi").as("du"))
     val y = oriented.select(col("lo").as("anchor"), col("hi").as("v"),
@@ -1242,20 +1248,25 @@ object Graph {
     // measured-size strategy pick (see LocalFixpointMaxEdges); integer
     // arithmetic end to end, so path parity is trivial (GraphSpec law)
     if (m <= localMaxEdges) return labelPropagationOneTask(und, iters)
-    val inc = incidence(und)
-    var labels = inc.select(col("n")).distinct()
-      .withColumn("label", col("n"))
-    for (i <- 1 to iters) {
-      labels = inc
-        .join(labels.withColumnRenamed("n", "m"), Seq("m"))
-        .groupBy(col("n"), col("label")).agg(sum(col("wc")).as("lw"))
-        .groupBy(col("n"))
-        .agg(max(struct(col("lw"), (-col("label")).as("neg"))).as("best"))
-        .select(col("n"), (-col("best.neg")).as("label"))
-      // fixed round count → cadence checkpointing (see pagerank)
-      if (i % 5 == 0 || i == iters) labels = labels.localCheckpoint(true)
+    // the edge and incidence pins and the superseded cadence pins are
+    // released once the final labels are pinned; those are the caller's
+    Checkpoints.scoped(und.sparkSession) { pins =>
+      val inc = pins.hold(incidence(pins.hold(und)))
+      var labels = inc.select(col("n")).distinct()
+        .withColumn("label", col("n"))
+      for (i <- 1 to iters) {
+        labels = inc
+          .join(labels.withColumnRenamed("n", "m"), Seq("m"))
+          .groupBy(col("n"), col("label")).agg(sum(col("wc")).as("lw"))
+          .groupBy(col("n"))
+          .agg(max(struct(col("lw"), (-col("label")).as("neg"))).as("best"))
+          .select(col("n"), (-col("best.neg")).as("label"))
+        // fixed round count → cadence checkpointing (see pagerank)
+        if (i == iters) labels = Checkpoints.pin(labels)
+        else if (i % 5 == 0) labels = pins(labels)
+      }
+      labels.select(col("n").as("node"), col("label").as("community"))
     }
-    labels.select(col("n").as("node"), col("label").as("community"))
   }
 
   /** The single-task fixpoint path of [[labelPropagation]]: the

@@ -459,13 +459,12 @@ object Sampling {
     * gate decision replays bit-for-bit across engines and restarts. */
   def dsirLm(docs: DataFrame, textCol: String, isTarget: Column,
              buckets: Int = 4096): DataFrame = {
-    val tok = docs
+    val tok = Checkpoints.pin(docs // feeds both LM counts
       .select(isTarget.as("__tgt"),
         explode(graft.functions.Text.tokens(col(textCol))).as("w"))
       .withColumn("b", pmod(
         Dedup.portableHash64(concat(lit("dsir:"), col("w"))),
-        lit(buckets.toLong)))
-      .localCheckpoint(eager = true) // feeds both LM counts
+        lit(buckets.toLong))))
     val raw = tok.groupBy("b").agg(count(lit(1)).as("n_r"))
     val tgt = tok.filter(col("__tgt"))
       .groupBy("b").agg(count(lit(1)).as("n_t"))

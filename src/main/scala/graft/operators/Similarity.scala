@@ -410,9 +410,8 @@ object Similarity {
                                vecCol: String, indexDir: String,
                                centroids: Array[Array[Float]]): Seq[Int] = {
     val spark = newVecs.sparkSession
-    val assigned = ivfAssign(newVecs, vecCol, centroids)
-      .localCheckpoint(eager = true)
-    try {
+    Checkpoints.scoped(spark) { pin =>
+      val assigned = pin(ivfAssign(newVecs, vecCol, centroids))
       val touched = assigned.select("ivf_list").distinct()
         .collect().map(_.getInt(0)).toSeq.sorted // bounded: <= k list ids
       if (touched.nonEmpty) {
@@ -421,14 +420,12 @@ object Similarity {
             .join(assigned.select(col(idCol)), Seq(idCol), "left_anti"))
         // pin the merge before overwriting the path it reads; bounded by
         // the touched lists' size, a few task-units by construction
-        val merged = existing.fold(assigned)(_.unionByName(assigned))
-          .localCheckpoint(eager = true)
-        try BucketedIndex.rewrite(IvfIndex, merged, s"$indexDir/vectors",
-          touched.map(_.toLong))
-        finally Checkpoints.drop(merged)
+        BucketedIndex.rewrite(IvfIndex,
+          pin(existing.fold(assigned)(_.unionByName(assigned))),
+          s"$indexDir/vectors", touched.map(_.toLong))
       }
       touched
-    } finally Checkpoints.drop(assigned)
+    }
   }
 
   /** Delete ids from a persisted IVF index, rewriting ONLY the lists
@@ -655,13 +652,11 @@ object Similarity {
       .select(col(idCol), col(vecCol))
     val bc = spark.sparkContext.broadcast(subs)
     val pick = udf { (v: Seq[Float]) => nearestCentroid(v.toArray, bc.value) }
-    val pinned = rows
-      .withColumn("ivf_list",
-        when(pick(col(vecCol)) === 0, lit(list)).otherwise(lit(newId)))
-      .localCheckpoint(eager = true) // one list's rows; pin before overwriting it
-    try BucketedIndex.rewrite(IvfIndex, pinned, s"$indexDir/vectors",
-      Seq(list.toLong, newId.toLong))
-    finally Checkpoints.drop(pinned)
+    // one list's rows; pin before overwriting it
+    Checkpoints.scoped(spark)(pin => BucketedIndex.rewrite(IvfIndex,
+      pin(rows.withColumn("ivf_list",
+        when(pick(col(vecCol)) === 0, lit(list)).otherwise(lit(newId)))),
+      s"$indexDir/vectors", Seq(list.toLong, newId.toLong)))
   }
 
   private def splitIntentPath(indexDir: String) =
@@ -826,10 +821,9 @@ object Similarity {
     val probeUdf = udf { (v: Seq[Float]) =>
       nearestLists(v.toArray, centroids, nprobe)
     }
-    val probed = batch
+    val probed = Checkpoints.pin(batch // feeds the probe census + the join
       .select(col(idCol).as("__bid"), col(vecCol).as("__bvec"))
-      .withColumn("ivf_list", explode(probeUdf(col("__bvec"))))
-      .localCheckpoint(eager = true) // feeds the probe census + the join
+      .withColumn("ivf_list", explode(probeUdf(col("__bvec")))))
     val lists = probed.select("ivf_list").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted // bounded: <= k list ids
     if (lists.isEmpty)
@@ -886,10 +880,9 @@ object Similarity {
     val probeUdf = udf { (v: Seq[Float]) =>
       nearestLists(v.toArray, centroids, nprobe)
     }
-    val probed = batch
+    val probed = Checkpoints.pin(batch // both self-join sides, one probe pass
       .select(col(idCol).as("__pid"),
-        explode(probeUdf(col(vecCol))).as("ivf_list"))
-      .localCheckpoint(eager = true) // both self-join sides, one probe pass
+        explode(probeUdf(col(vecCol))).as("ivf_list")))
     val cand = probed.as("a")
       .join(probed.as("b"),
         col("a.ivf_list") === col("b.ivf_list") &&
@@ -1256,11 +1249,9 @@ object Similarity {
     val codebooks = codebooksKnown.getOrElse(pqReadCodebooks(spark, indexDir))
     val vecs = IO.readArtifact(spark, s"$indexDir/vectors")
       .filter(col("ivf_list").isin(lists: _*))
-    val pinned = ivfPqEncodeResiduals(vecs, idCol, vecCol, centroids,
-      codebooks).localCheckpoint(eager = true)
-    try BucketedIndex.rewrite(IvfPqIndex, pinned, s"$indexDir/codes",
-      lists.map(_.toLong))
-    finally Checkpoints.drop(pinned)
+    Checkpoints.scoped(spark)(pin => BucketedIndex.rewrite(IvfPqIndex,
+      pin(ivfPqEncodeResiduals(vecs, idCol, vecCol, centroids, codebooks)),
+      s"$indexDir/codes", lists.map(_.toLong)))
   }
 
   /** Build the fused IVF-PQ index: coarse assignment + raw vectors

@@ -49,10 +49,4 @@ object Skew {
       .agg(partials.head, partials.tail: _*)
       .groupBy(col(key))
       .agg(merges.head, merges.tail: _*)
-
-  /** Key-frequency probe: top-`k` heaviest keys with counts — the
-    * diagnostic that decides whether to salt, broadcast, or cap. */
-  def keyHistogram(df: DataFrame, key: String, k: Int = 20): DataFrame =
-    df.groupBy(key).agg(count(lit(1)).as("n"))
-      .orderBy(desc("n")).limit(k)
 }

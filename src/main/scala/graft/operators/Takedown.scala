@@ -85,8 +85,8 @@ object Takedown {
     require(artifacts.componentsStoreDir.isEmpty || componentsEdges.nonEmpty,
       "takedownAll: componentsStoreDir needs the current componentsEdges " +
         "relation (deleting a node can split its component)")
-    val pinned = docs.localCheckpoint(eager = true)
-    try {
+    Checkpoints.scoped(spark) { pin =>
+      val pinned = pin(docs)
       val out = scala.collection.mutable.Map.empty[String, Seq[Long]]
       def run(name: String, dirOpt: Option[String])
              (verb: String => Seq[Long]): Unit =
@@ -132,6 +132,6 @@ object Takedown {
         Seq.empty // the ledger appends; there is no touched-bucket set
       }
       out.toMap
-    } finally Checkpoints.drop(pinned)
+    }
   }
 }

@@ -125,8 +125,8 @@ object BucketedIndex {
     if (!cold) requireLayout(spark, dir, layout)
     val stampedN = IO.readBucketCount(spark, dir)
     val n = stampedN.getOrElse(defaultN)
-    val deltas = rows.map(bucketed(_, layout, n).localCheckpoint(eager = true))
-    try {
+    Checkpoints.scoped(spark) { pin =>
+      val deltas = rows.map(r => pin(bucketed(r, layout, n)))
       if (!deltas.head.isEmpty) {
         layout.rels.zip(deltas).foreach { case (rel, d) =>
           IO.alignToPartitions(d, "__bucket")
@@ -137,7 +137,7 @@ object BucketedIndex {
         if (cold)
           layout.stamp.foreach(s => IO.writeLayoutVersion(spark, dir, s.version))
       }
-    } finally deltas.foreach(Checkpoints.drop)
+    }
   }
 
   /** The touched-partition TAKEDOWN: remove every row matching `keys`
@@ -153,8 +153,8 @@ object BucketedIndex {
     if (!exists(spark, relDir(dir, layout.rels.head))) return Seq.empty
     requireLayout(spark, dir, layout)
     val part = col(layout.part)
-    val k = keys.distinct().localCheckpoint(eager = true)
-    try {
+    Checkpoints.scoped(spark) { pin =>
+      val k = pin(keys.distinct())
       val on = k.columns.toSeq
       val rels = layout.rels.map { rel =>
         rel -> IO.readArtifact(spark, relDir(dir, rel))
@@ -163,14 +163,11 @@ object BucketedIndex {
         .select(part.cast("long")).distinct()
         .collect().map(_.getLong(0)).toSeq.sorted // bounded: <= n ids
       if (touched.nonEmpty) rels.foreach { case (rel, current) =>
-        val remaining = current.filter(part.isin(touched: _*))
-          .join(k, on, "left_anti")
-          .localCheckpoint(eager = true)
-        try rewrite(layout, remaining, relDir(dir, rel), touched)
-        finally Checkpoints.drop(remaining)
+        rewrite(layout, pin(current.filter(part.isin(touched: _*))
+          .join(k, on, "left_anti")), relDir(dir, rel), touched)
       }
       touched
-    } finally Checkpoints.drop(k)
+    }
   }
 
   /** Replace the `touched` partitions of the relation at `dir` with

@@ -96,11 +96,6 @@ object IO {
     spark.readStream.schema(schema).format(format)
       .option("maxFilesPerTrigger", "16").load(dir)
 
-  /** Rate source — deterministic load generator for soak tests. */
-  def rateStream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond.toString).load()
-
   /** Kafka topic source — the cluster-side call site for the reference's
     * topic ingest (reference `pom.xml:153-156`): standard
     * `format("kafka")` option plumbing (bootstrap servers, subscribe
@@ -712,8 +707,8 @@ object IO {
       // validates those commits per batch — skipping the scan entirely
       // fails the replayed query. An eager localCheckpoint is the same
       // full-partition consume the non-skip path performs; the blocks
-      // are dropped immediately.
-      Checkpoints.drop(batch.localCheckpoint(true))
+      // are released immediately.
+      Checkpoints.scoped(batch.sparkSession)(_(batch))
     }
   }
 
@@ -811,8 +806,9 @@ object IO {
     *      versioned merge keys on one column, and the key is a pure
     *      function of the row's own grain, so replays regenerate it;
     *   6. the upsert, then the first-seen append (store before index);
-    *   7. the pinned blocks are dropped, the fold's own pins with them
-    *      (the rows are held by the batch's [[Checkpoints.Pins]]) —
+    *   7. the pinned blocks are dropped, any checkpoint the fold's rows
+    *      embed with them (the rows are held by the batch's
+    *      [[Checkpoints.Pins]]; the folds never pin the batch again) —
     *      unpersist does NOT free localCheckpoint blocks, and a
     *      long-running query would otherwise keep one batch-sized block
     *      set per micro-batch.
@@ -1087,11 +1083,11 @@ object IO {
     val (latest, snap) = latestSnapshot(spark, baseDir, WindowedMetricsSchema)
     if (latest == 0L) return 0L
     // window-count-sized, consumed twice; its count rides the pin's job
-    val (doomed, n) = Checkpoints.pinCounted(
-      graft.streaming.Cdc.liveView(snap).select(col("window_start"))
-        .join(windows.select(col("window_start")).distinct(),
-          Seq("window_start"), "left_semi"))
-    try {
+    Checkpoints.scoped(spark) { pins =>
+      val (doomed, n) = pins.counted(
+        graft.streaming.Cdc.liveView(snap).select(col("window_start"))
+          .join(windows.select(col("window_start")).distinct(),
+            Seq("window_start"), "left_semi"))
       if (n > 0) {
         val tombstones = doomed
           .withColumn("n_pos", lit(null).cast("long"))
@@ -1104,7 +1100,7 @@ object IO {
           WindowedMetricsSchema, retain)
       }
       n
-    } finally Checkpoints.drop(doomed)
+    }
   }
 
   /** Snapshot schema of the [[mixDriftAuditSink]] store: one language-
@@ -1376,10 +1372,9 @@ object IO {
         // pin the merge BEFORE the overwrite: the merged plan reads the
         // path it is about to write; the touched-bucket rows are
         // bounded by design at a few task-units
-        val pinned = merged.withColumn("__bucket", bucketOf)
-          .localCheckpoint(eager = true)
-        try BucketedIndex.rewrite(layout, pinned, snapshotDir, touched)
-        finally Checkpoints.drop(pinned)
+        Checkpoints.scoped(batch.sparkSession)(pin => BucketedIndex.rewrite(
+          layout, pin(merged.withColumn("__bucket", bucketOf)), snapshotDir,
+          touched))
       }
     }
   }
@@ -1812,7 +1807,4 @@ object IO {
 
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
 }

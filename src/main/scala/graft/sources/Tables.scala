@@ -99,10 +99,6 @@ object Tables {
     import s.implicits._
     documents(s, d).as[Rows.Document]
   }
-  def customerTyped(s: SparkSession, d: String): Dataset[Rows.Customer] = {
-    import s.implicits._
-    customer(s, d).as[Rows.Customer]
-  }
 
   /** `events.parquet` has shipped `ts` under THREE parquet physical
     * encodings across driver testdata generations, so the loader
@@ -147,6 +143,4 @@ object Rows {
   case class Document(doc_id: Long, text: String, lang: String,
                       source: String, n_chars: Long)
   case class Embedding(vec_id: Long, embedding: Array[Float], label: Int)
-  case class Customer(c_custkey: Long, c_name: String, c_nationkey: Int,
-                      c_acctbal: Double, c_mktsegment: String)
 }

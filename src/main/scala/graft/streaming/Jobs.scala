@@ -168,18 +168,26 @@ object Jobs {
         sum(when(col(labelCol) === 0, 1L).otherwise(0L)).as("neg")))(
       col("score"), col("pos"), col("neg"))
 
+  /** A finalized batch as a per-window fold reads it: one fresh
+    * RDD-scan leaf over the same rows, so the fold's self-joins resolve
+    * over any input (a memory sink's table is a single relation
+    * instance, which a self-join cannot re-instance). The leaf re-reads
+    * its input per consumer and never pins it: a caller that reads the
+    * batch more than once pins it once (the audit sinks' batch pin). */
+  private def rescanned(batch: DataFrame): DataFrame =
+    batch.sparkSession.createDataFrame(batch.rdd, batch.schema)
+
   /** Per-window ROC-AUC over a FINALIZED [[windowedClassHistogram]]
     * micro-batch — [[graft.operators.Analytics.aucFromHistogram]] keyed
     * by window_start, so the streaming metric is BY CONSTRUCTION the
     * same fold as the batch q_auc registry id (StreamingSpec pins the
     * parity as a law). One-class windows are dropped (AUC undefined),
-    * mirroring the batch filter. The batch is PINNED here (it is
-    * window-domain-sized, so the checkpoint is cheap): the fold reads
-    * it three times, and a sink-view replay would otherwise both
-    * re-scan and trip the self-join's reference dedup. */
+    * mirroring the batch filter. The fold reads the batch three times
+    * and never pins it: a caller that re-reads it pins it once (the
+    * audit sinks' batch pin). */
   def aucPerWindow(batch: DataFrame): DataFrame =
     graft.operators.Analytics.aucFromHistogram(
-      batch.localCheckpoint(true), Seq("window_start"))
+      rescanned(batch), Seq("window_start"))
 
   /** Per-window CALIBRATION over a FINALIZED [[windowedClassHistogram]]
     * micro-batch — the second metric the one histogram pays for:
@@ -205,27 +213,27 @@ object Jobs {
 
   /** Per-window PRECISION/RECALL sweep over a FINALIZED
     * [[windowedClassHistogram]] micro-batch — the q_pr_curve fold keyed
-    * by window_start (the batch is PINNED: the sweep self-joins the
-    * histogram three times). Completes the eval pack's batch/stream
+    * by window_start (the sweep self-joins the histogram three times;
+    * the caller pins, as for [[aucPerWindow]]). Completes the eval pack's batch/stream
     * symmetry: AUC, calibration, PR and AP all ride the ONE histogram
     * both modes share (StreamingSpec parity laws). */
   def prCurvePerWindow(batch: DataFrame): DataFrame =
     graft.operators.Analytics.prCurveFromHistogram(
-      batch.localCheckpoint(true), Seq("window_start"))
+      rescanned(batch), Seq("window_start"))
 
   /** Per-window LIFT / cumulative-gains sweep over a FINALIZED
     * [[windowedClassHistogram]] micro-batch — the q_lift_curve fold
-    * keyed by window_start (batch pinned: read three times). */
+    * keyed by window_start (read three times; the caller pins). */
   def liftPerWindow(batch: DataFrame): DataFrame =
     graft.operators.Analytics.liftFromHistogram(
-      batch.localCheckpoint(true), Seq("window_start"))
+      rescanned(batch), Seq("window_start"))
 
   /** Per-window AVERAGE PRECISION over a FINALIZED
     * [[windowedClassHistogram]] micro-batch — the q_avg_precision fold
-    * keyed by window_start (batch pinned: read three times). */
+    * keyed by window_start (read three times; the caller pins). */
   def apPerWindow(batch: DataFrame): DataFrame =
     graft.operators.Analytics.avgPrecisionFromHistogram(
-      batch.localCheckpoint(true), Seq("window_start"))
+      rescanned(batch), Seq("window_start"))
 
   /** Per-window top-k over a FINALIZED [[hotKeysPerWindow]] micro-batch:
     * a rank window partitioned by window_start (each partition is one
@@ -309,13 +317,12 @@ object Jobs {
     * window: grams appearing in ≥ `minDf` distinct docs WITHIN the
     * window are boilerplate, and the window's row reports total
     * positions, boilerplate positions, and the SAME literal HALF_UP ppm
-    * fold ([[graft.operators.Analytics.halfUpPpm]]). The batch is
-    * PINNED (window-content-sized): the df census and the mass fold
-    * read it twice. A rising boiler_ppm says the crawl just hit a
+    * fold ([[graft.operators.Analytics.halfUpPpm]]). The df census and
+    * the mass fold read the batch twice; the caller pins. A rising boiler_ppm says the crawl just hit a
     * template farm. */
   def boilerplateMassPerWindow(batch: DataFrame,
                                minDf: Long = 4L): DataFrame = {
-    val p = batch.localCheckpoint(true)
+    val p = rescanned(batch)
     val hot = p.groupBy("window_start", "sh")
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
@@ -592,9 +599,8 @@ object Jobs {
     * dropped exactly those rows). `n_docs` is always the FULL window
     * fold, covered or not. */
   def mixDriftPerWindow(batch: DataFrame, baseline: DataFrame): DataFrame = {
-    // dimension-sized micro-batch relation, read twice (the n_s fold and
-    // the term fold) — pinned like boilerplateMassPerWindow's
-    val p = batch.localCheckpoint(true)
+    // read twice (the n_s fold and the term fold)
+    val p = rescanned(batch)
     val ns = p.groupBy("window_start", "source")
       .agg(sum(col("n_sl")).as("n_s"))
     p.join(ns, Seq("window_start", "source"))
@@ -766,9 +772,8 @@ object Jobs {
     * q_bucket_entropy term, summed as exact longs) and occupancy
     * extremes. */
   private def entropyFold(batch: DataFrame, keys: Seq[String]): DataFrame = {
-    // bucket-bounded micro-batch relation, read twice (the total fold
-    // and the term fold) — pinned like mixDriftPerWindow's
-    val p = batch.localCheckpoint(true)
+    // read twice (the total fold and the term fold)
+    val p = rescanned(batch)
     val n = p.groupBy(keys.map(col): _*).agg(sum(col("n_b")).as("n"))
     p.join(n, keys)
       .withColumn("term_pico",
@@ -824,9 +829,8 @@ object Jobs {
     require(refN > 0, "spectralDriftPerWindow: empty reference histogram")
     val sess = batch.sparkSession
     import sess.implicits._
-    // bucket-bounded micro-batch relation, read twice (total fold +
-    // per-bucket ppm fold) — pinned like bucketEntropyPerWindow's
-    val p = batch.localCheckpoint(true)
+    // read twice (total fold + per-bucket ppm fold)
+    val p = rescanned(batch)
     val totals = p.groupBy("window_start")
       .agg(sum("n_b").as("n_vecs"), count(lit(1)).as("n_buckets"),
         max("n_b").as("max_bucket"), min("n_b").as("min_bucket"))

@@ -21,13 +21,6 @@ object Streams {
   def watermarked(df: DataFrame, tsCol: String, delay: String): DataFrame =
     df.withWatermark(tsCol, delay)
 
-  /** Tumbling event-time window aggregate — the DWS signature shape.
-    * `aggs` are standard agg columns (sum/count/…); output carries
-    * the keys and aggregates, then window_start/window_end. */
-  def tumblingAgg(df: DataFrame, tsCol: String, duration: String,
-                  keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    windowed(df, window(col(tsCol), duration), "window", keys, aggs)
-
   /** Sliding (hopping) event-time window aggregate. */
   def slidingAgg(df: DataFrame, tsCol: String, duration: String, slide: String,
                  keys: Seq[String], aggs: Seq[Column]): DataFrame =

@@ -2716,14 +2716,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("composedIngestSink crash recovery: the WAL is the ONE commit point — mid-apply crashes replay to the clean-run state") {
-    import graft.operators.{ChainConfig, CorpusBuild, Dedup, Sampling}
+    import graft.operators.{ChainConfig, Checkpoints, CorpusBuild, Dedup, Sampling}
     val root = java.nio.file.Files.createTempDirectory("chain_crash_")
       .toString
     val batch = chainDocs.localCheckpoint(true)
     // clean twin: decide + one full apply — the oracle state
     val twin = s"$root/twin"; seedChainInputs(twin)
-    val twinDecisions = CorpusBuild.chainDecide(batch, chainCfg(twin))
-      .localCheckpoint(true)
+    val twinDecisions = Checkpoints.scoped(spark)(pins =>
+      CorpusBuild.chainDecide(batch, chainCfg(twin), pins).localCheckpoint(true))
     CorpusBuild.chainApply(batch, twinDecisions, s"$twin/out",
       chainCfg(twin), 0L, isReplay = false)
     def state(base: String): (Set[Long], Set[String], Set[Long], Set[Long],
@@ -2744,8 +2744,8 @@ class StreamingSpec extends SparkSpec {
     // crash window 1: WAL committed, fp index advanced, CRASH — the
     // VERDICT #2 hazard window (corpus has nothing yet, fp has content)
     val c1 = s"$root/c1"; seedChainInputs(c1)
-    val d1 = CorpusBuild.chainDecide(batch, chainCfg(c1))
-      .localCheckpoint(true)
+    val d1 = Checkpoints.scoped(spark)(pins =>
+      CorpusBuild.chainDecide(batch, chainCfg(c1), pins).localCheckpoint(true))
     d1.write.mode("overwrite").parquet(s"$c1/out/_decisions/__batch=0")
     Dedup.writeFingerprintIndex(
       batch.join(d1.filter(col("outcome") =!= "exact_dup")
@@ -2754,8 +2754,9 @@ class StreamingSpec extends SparkSpec {
     // ... the hazard, demonstrated: recomputing decisions NOW (against
     // the half-advanced state) would drop EVERYTHING at the fp gate —
     // the WAL is what makes the replay converge instead
-    val drifted = CorpusBuild.chainDecide(batch, chainCfg(c1))
-      .filter(col("outcome") === "exact_dup").count()
+    val drifted = Checkpoints.scoped(spark)(pins =>
+      CorpusBuild.chainDecide(batch, chainCfg(c1), pins)
+        .filter(col("outcome") === "exact_dup").count())
     assert(drifted == batch.count(),
       s"hazard sanity: post-advance recompute self-matches all: $drifted")
     // the replay path: re-apply FROM the WAL
@@ -2766,8 +2767,8 @@ class StreamingSpec extends SparkSpec {
     // crash window 2: EVERYTHING applied, crash before the marker —
     // the replay must not duplicate a single index row
     val c2 = s"$root/c2"; seedChainInputs(c2)
-    val d2 = CorpusBuild.chainDecide(batch, chainCfg(c2))
-      .localCheckpoint(true)
+    val d2 = Checkpoints.scoped(spark)(pins =>
+      CorpusBuild.chainDecide(batch, chainCfg(c2), pins).localCheckpoint(true))
     d2.write.mode("overwrite").parquet(s"$c2/out/_decisions/__batch=0")
     CorpusBuild.chainApply(batch,
       spark.read.parquet(s"$c2/out/_decisions/__batch=0"), s"$c2/out",
@@ -2779,14 +2780,15 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("composedIngestSink: the WAL pins decisions — a probe grown mid-crash cannot rewrite a batch's excisions on replay") {
-    import graft.operators.CorpusBuild
+    import graft.operators.{Checkpoints, CorpusBuild}
     val root = java.nio.file.Files.createTempDirectory("chain_wal_")
       .toString
     val base = s"$root/b"; seedChainInputs(base)
     val cfg = chainCfg(base).copy(decontaminateSpans = true,
       embCol = None, diversityIndexDir = None, lmDir = None)
     val batch = chainDocs.drop("embedding").localCheckpoint(true)
-    val d = CorpusBuild.chainDecide(batch, cfg).localCheckpoint(true)
+    val d = Checkpoints.scoped(spark)(pins =>
+      CorpusBuild.chainDecide(batch, cfg, pins).localCheckpoint(true))
     d.write.mode("overwrite").parquet(s"$base/out/_decisions/__batch=0")
     // span mode: the contaminated doc 20 ships EXCISED, not dropped
     val shipText = d.filter(col("id") === 20L)
@@ -2802,8 +2804,9 @@ class StreamingSpec extends SparkSpec {
     // (a decide against the grown probe WOULD excise more — the gate
     // tightened for the future; measured BEFORE any apply advances the
     // indexes, which would shadow this at the fp gate)
-    val fresh = CorpusBuild.chainDecide(batch, cfg)
-      .filter(col("id") === 20L).select("ship_text").as[String].head()
+    val fresh = Checkpoints.scoped(spark)(pins =>
+      CorpusBuild.chainDecide(batch, cfg, pins)
+        .filter(col("id") === 20L).select("ship_text").as[String].head())
     assert(fresh == (311 to 330).map(i => s"z$i").mkString(" "),
       s"grown probe tightens future batches: $fresh")
     CorpusBuild.chainApply(batch,
@@ -2934,6 +2937,40 @@ class StreamingSpec extends SparkSpec {
     assert(left.isEmpty, left.mkString("checkpoint RDDs left registered:\n", "\n", ""))
     // the runs did their work: both batches shipped through every sink
     assert(spark.read.parquet(s"$root/c_out/_ledger").count() == 2L)
+  }
+
+  test("the per-window folds never pin their input: the caller's one pin is the only one") {
+    import graft.streaming.Jobs
+    val (w1, w2) = (ts("2024-01-01 10:00:00"), ts("2024-01-01 10:20:00"))
+    val hist = Seq((w1, 3.0, 1L, 0L), (w1, 1.0, 1L, 0L), (w1, 2.0, 1L, 1L),
+      (w2, 5.0, 1L, 0L), (w2, 1.0, 0L, 1L))
+      .toDF("window_start", "score", "pos", "neg")
+    val grams = Seq((w1, 7L, 1L, 2L), (w1, 7L, 2L, 1L), (w2, 9L, 3L, 4L))
+      .toDF("window_start", "sh", "doc_id", "n_pos")
+    val langs = Seq((w1, "srcA", "en", 1L), (w1, "srcA", "de", 1L),
+      (w2, "srcB", "fr", 2L)).toDF("window_start", "source", "lang", "n_sl")
+    val baseline = Seq(("en", 5L, 10L), ("de", 5L, 10L))
+      .toDF("lang", "n_l", "n_total")
+    val buckets = Seq((w1, 0L, 3L), (w1, 1L, 1L), (w2, 0L, 2L))
+      .toDF("window_start", "bucket", "n_b")
+    val folds: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "aucPerWindow" -> (() => Jobs.aucPerWindow(hist)),
+      "apPerWindow" -> (() => Jobs.apPerWindow(hist)),
+      "prCurvePerWindow" -> (() => Jobs.prCurvePerWindow(hist)),
+      "liftPerWindow" -> (() => Jobs.liftPerWindow(hist)),
+      "boilerplateMassPerWindow" -> (() => Jobs.boilerplateMassPerWindow(grams, 2L)),
+      "mixDriftPerWindow" -> (() => Jobs.mixDriftPerWindow(langs, baseline)),
+      "bucketEntropyPerWindow" -> (() => Jobs.bucketEntropyPerWindow(buckets)),
+      "spectralDriftPerWindow" -> (() =>
+        Jobs.spectralDriftPerWindow(buckets, Map(0L -> 1L, 1L -> 1L), 2L)))
+    val pinned = folds.flatMap { case (name, fold) =>
+      val before = spark.sparkContext.getPersistentRDDs
+      val rows = fold().collect()
+      assert(rows.nonEmpty, s"$name folded no window")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before.keySet
+      if (left.isEmpty) None else Some(s"$name: ${left.size}")
+    }
+    assert(pinned.isEmpty, pinned.mkString("folds that pinned their input: ", ", ", ""))
   }
 
   test("the audit sinks whose folds pin their batch release those pins, replay included") {
